@@ -4,6 +4,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
+import graft.tools.Measure
+import graft.tools.Measure.{median, timeProbe}
+
 /** Benchmark entry point. Runs the headline queries from
   * [[SparkEntry.benchQueries]] against `SPARK_GRAFT_SF_DIR` and prints ONE
   * JSON line `{"metric","value","unit","queries","sf",...}`.
@@ -47,14 +50,6 @@ import org.apache.spark.sql.SparkSession
   * corpus-sized single-partition sort.
   */
 object Bench {
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    val n = s.size
-    // True median: average the two middle elements for even n
-    // (SPARK_GRAFT_BENCH_ITERS is user-settable).
-    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-  }
-
   /** The committed anchor (BENCH_BASELINE.json in the working directory):
     * per-query cold medians plus the calibration probe's seconds on the
     * anchor epoch. Three rounds of bench grading needed manual epoch
@@ -91,26 +86,6 @@ object Bench {
       System.err.println(s"[bench] baseline load failed: $e"); None
     }
 
-  /** Host-epoch calibration probe: constant CPU-bound work with ZERO
-    * dependence on the corpus (a codegen'd hash+sum over a generated
-    * range), timed like a query. Both r10 and r11 bench adjudications
-    * hinged on distinguishing "uniform host slowdown" from "plan
-    * regression" across sessions — the probe settles it in-artifact:
-    * if total/probe is stable across epochs the engine didn't regress,
-    * whatever the wall-clock says. Timed at session start AND end so
-    * within-run drift is visible too.
-    */
-  private def timeProbe(spark: SparkSession, iters: Int): Seq[Double] =
-    (1 to iters).map { _ =>
-      val t0 = System.nanoTime()
-      // collect() the sum VALUE: a count() over the 1-row aggregate
-      // lets Catalyst drop the sum itself (measured: 4x the rows,
-      // same wall time), which would calibrate nothing.
-      spark.range(1L << 29).selectExpr("xxhash64(id) % 1024 AS h")
-        .selectExpr("sum(h) AS s").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-
   /** Time `iters` runs of a query; -1.0 entries mark failed runs. */
   private def timeQuery(spark: SparkSession, sfDir: String, name: String,
                         iters: Int): Seq[Double] = {
@@ -128,21 +103,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Fresh warehouse per session (same as Verify): the streaming gates
-      // create catalog tables, and a PERSISTENT ./spark-warehouse from a
-      // previous JVM + a fresh metastore = LOCATION_ALREADY_EXISTS on the
-      // first saveAsTable (bit the first cross-session streaming bench).
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_bench_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session(Measure.cpus(32))
     // Local-iteration subset (comma-separated names); the driver never
     // sets this, so the graded run always times the full headline list.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.pipeline.Runner
 import graft.sources.Tables
+import graft.tools.Measure
 
 /** CLI entry point (SURVEY §7.2 item 8 — the stand-in for the
   * reference's per-module argparse mains and its smoke-test notebook).
@@ -21,15 +22,8 @@ import graft.sources.Tables
 object Main {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Spark's default ./spark-warehouse: the pipeline's tables are its output.
+    val spark = Measure.session(Measure.cpus(32), tempWarehouse = false)
     try {
       val rc = args.toList match {
         case "pipeline" :: rawDir :: db :: Nil => pipeline(spark, rawDir, db)

@@ -1,24 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.tools.Measure
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val warehouse = Files.createTempDirectory("graft_warehouse").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", warehouse)
-      // driver testdata events.parquet carries TIMESTAMP(NANOS) which the
-      // Parquet reader rejects; read as nanos-since-epoch LongType.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // events.parquet may carry TIMESTAMP(NANOS), which the session reads
+    // as nanos-since-epoch longs (Measure.session).
+    val spark = Measure.session(Measure.cpus(4))
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated name filter for fast local iteration.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

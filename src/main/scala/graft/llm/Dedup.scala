@@ -452,10 +452,9 @@ object Dedup {
       .repartition(col("src"))
       .persist()
     // Labels stay localCheckpoint'ed per round: the checkpoint forgets
-    // output partitioning (so the label-side joins re-exchange — this
-    // round's Scratch experiment re-confirmed Spark 4.1 localCheckpoint
-    // drops outputPartitioning), but it is the only lineage CUT — a
-    // persist()-based variant was tried in r14 and OOM'd the driver,
+    // output partitioning (so the label-side joins re-exchange), but it
+    // is the only lineage CUT — a persist()-based variant was tried in
+    // r14 and OOM'd the driver (OPTIMIZATION_r14.md §3),
     // because the fold+jump steps reference the previous labels twice
     // and an InMemoryRelation keeps its child plan, so the logical tree
     // doubles per round exactly as the original design note warned.

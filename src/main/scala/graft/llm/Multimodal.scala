@@ -209,7 +209,7 @@ object Multimodal {
     * past the JIT's huge-method compilation limit, so the hot loop runs
     * INTERPRETED — and when a decode mapPartitions follows in the same
     * stage, the whole encode+deserialize stage degrades together.
-    * Measured at sf0.1 (OptProbe, median-of-3 under count()):
+    * Measured at sf0.1 (OPTIMIZATION_r14.md §1, median-of-3 under count()):
     * decodeWavPcm∘encodeWavPcm 1.76 s as expressions vs 0.19 s with
     * this builder (9.3×), payloads byte-identical (join-compare: 0
     * mismatches over 5000 docs). Same narrow, shuffle-free shape —

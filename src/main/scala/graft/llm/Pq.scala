@@ -143,6 +143,11 @@ object Pq {
       .select(Similarity.asDoubleVec(col(vecCol)).as("vv"))
       .collect().map(_.getSeq[Double](0).toIndexedSeq)
     require(initRows.nonEmpty, "Pq.codebooks: empty training corpus")
+    // Every centroid starts as a distinct training vector, and an empty
+    // cluster keeps its previous centroid — so fewer than k rows leaves
+    // centroids with no starting point at all.
+    require(initRows.length == k,
+      s"Pq.codebooks: k=$k centroids need at least k training vectors, got ${initRows.length}")
     initRows.foreach(v => require(v.size == m * subDim,
       s"Pq: expected dim ${m * subDim} but init vector has ${v.size} elements"))
     // cid = rank of the vector's id among the k smallest (the collect

@@ -75,29 +75,42 @@ object Similarity {
 
   /** Append `cluster_id` — the max-cosine centroid id — to every row of
     * `df`, keeping all existing columns, as a pure PROJECTION: the
-    * centroid set (O(k) rows, a model artifact at any corpus scale)
-    * collapses into ONE array cell that broadcasts, and the argmax runs
-    * per row as `array_max` over struct(csim, −cid, cid) — exactly the
-    * total key of the r14 `max_by` spelling (equal csim → smallest cid;
-    * a NaN csim sorts greatest in both), so assignments are
-    * bit-identical. What disappears versus the r14 shape: the n-row
-    * groupBy exchange inside the assign AND the assign→corpus join by
-    * id every caller paid to get the cluster next to its payload — the
-    * corpus is now touched by one narrow map (guide §2.4). Callers with
-    * an empty centroid frame get a NULL cluster_id (the old shape
-    * dropped the rows); no in-repo caller constructs one. */
-  def withClusterId(df: DataFrame, centroids: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val carr = centroids
-      .select(struct(col(idCol).as("cid"), asDoubleVec(col(vecCol)).as("cv")).as("c"))
-      .agg(collect_list(col("c")).as("_carr"))
-    val vv = asDoubleVec(col(vecCol))
-    df.crossJoin(broadcast(carr))
-      .withColumn("cluster_id",
-        array_max(transform(col("_carr"), c =>
-          struct(cosine(vv, c.getField("cv")).as("csim"),
-            negate(c.getField("cid")).as("ncid"),
-            c.getField("cid").as("cid")))).getField("cid"))
-      .drop("_carr")
+    * centroid set (O(k) rows, a model artifact at any corpus scale) is
+    * collected to the driver and shipped into the plan as ONE array
+    * literal — the same model-as-literal shape as [[Pq.collectCodebook]]
+    * — and the argmax runs per row as `array_max` over struct(csim,
+    * −cid, cid): exactly the total key of the r14 `max_by` spelling
+    * (equal csim → smallest cid; a NaN csim sorts greatest in both), so
+    * assignments are bit-identical. The plan has no join node: the
+    * corpus is touched by one narrow map (guide §2.4). An EMPTY centroid
+    * frame yields a NULL cluster_id on every row (`array_max` of an
+    * empty array); no in-repo caller constructs one. */
+  def withClusterId(df: DataFrame, centroids: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.withColumn("cluster_id",
+      nearestCentroid(col(vecCol), collectCentroids(centroids, idCol, vecCol)))
+
+  /** The centroid frame collected to the driver as ONE array literal of
+    * struct(cid, cv) — O(k) rows by construction. Collect once and reuse
+    * it when several projections assign against the same centroids. */
+  private def collectCentroids(centroids: DataFrame, idCol: String, vecCol: String): Column = {
+    import org.apache.spark.sql.GraftSqlBridge
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
+    val cents = centroids.select(col(idCol).as("cid"), asDoubleVec(col(vecCol)).as("cv"))
+    val elem = StructType(Seq(
+      StructField("cid", cents.schema("cid").dataType),
+      StructField("cv", ArrayType(DoubleType))))
+    GraftSqlBridge.column(Literal.create(cents.collect().toSeq, ArrayType(elem)))
+  }
+
+  /** The max-cosine centroid id of `vec` against a [[collectCentroids]]
+    * literal (see [[withClusterId]] for the tie and NaN order). */
+  private def nearestCentroid(vec: Column, carr: Column): Column = {
+    val vv = asDoubleVec(vec)
+    array_max(transform(carr, c =>
+      struct(cosine(vv, c.getField("cv")).as("csim"),
+        negate(c.getField("cid")).as("ncid"),
+        c.getField("cid").as("cid")))).getField("cid")
   }
 
   /** Multi-probe assignment: each vector's `nprobe` NEAREST centroids in
@@ -129,10 +142,11 @@ object Similarity {
     // cluster_id rides each side as a projection (withClusterId) — the
     // r14 shape joined a separate ivfAssign output back by id, paying
     // an exchange per side for a value that is a pure row function.
-    val c = withClusterId(corpus.select(col(idCol), col(vecCol)), centroids, idCol, vecCol)
-      .select(col(idCol).as("corpus_id"), col("cluster_id"), asDoubleVec(col(vecCol)).as("cv"))
-    val q = withClusterId(queries.select(col(idCol), col(vecCol)), centroids, idCol, vecCol)
-      .select(col(idCol).as("query_id"), col("cluster_id"), asDoubleVec(col(vecCol)).as("qv"))
+    val carr = collectCentroids(centroids, idCol, vecCol)
+    val c = corpus.select(col(idCol).as("corpus_id"),
+      nearestCentroid(col(vecCol), carr).as("cluster_id"), asDoubleVec(col(vecCol)).as("cv"))
+    val q = queries.select(col(idCol).as("query_id"),
+      nearestCentroid(col(vecCol), carr).as("cluster_id"), asDoubleVec(col(vecCol)).as("qv"))
     val sims = c.join(broadcast(q), "cluster_id")
       .filter(col("corpus_id") =!= col("query_id"))
       .select(col("query_id"), col("corpus_id"), col("cluster_id"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extension installing graft's custom expressions and optimizer
   * rules, for use via `spark.sql.extensions=graft.plans.GraftExtensions`
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)` — the
+  * or a session builder's `withExtensions(new GraftExtensions)` — the
   * standard plug-in route for engine extensions. SURVEY §4 concludes
   * PARITY needs no custom rules; the two rules injected here
   * ([[RangeJoinRewrite]], [[DistinctThresholdRewrite]]) are

@@ -3908,7 +3908,7 @@ object LlmQueries {
       // The shingle-array frame feeds THREE consumers (the MinHash
       // signatures and both attach sides of the Jaccard verify) — an
       // eager checkpoint stops each consumer re-running the
-      // tokenize→shingle scan (guide §1.2 step 1; QueryMetrics read
+      // tokenize→shingle scan (guide §1.2 step 1; the r14 counters read
       // 7.7 executor-CPU-s for this gate, mostly repeated regexp+split
       // passes).
       val sh = Dedup.shingleArray(qualDocs, "doc_id", "text", 3)

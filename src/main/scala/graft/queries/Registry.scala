@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.graftbus.LocalProperties
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One driver-gradable query: a Spark implementation plus (usually) an
@@ -69,8 +70,8 @@ object Registry {
     * writes M×R shuffle files (bypass-merge writer at local R), and on
     * this sandbox each file costs ~4–5 ms of CPU — the same bucket
     * aggregation measured 11.8 executor-CPU-s at M=64 vs 1.9 s at M=8
-    * over identical 5000-doc data (LshProbe; guide §2.2 "fewer, larger
-    * map tasks feeding the shuffle").
+    * over identical 5000-doc data (OPTIMIZATION_r14.md §2; guide §2.2
+    * "fewer, larger map tasks feeding the shuffle").
     *
     * The target is therefore derived from the INPUT SIZE — the
     * optimizer's size estimate (file bytes scaled by column pruning) at
@@ -93,17 +94,44 @@ object Registry {
     * jobs at once inside one application — the multimodal gates' chains
     * were sequential only because each ends in an eager
     * `localCheckpoint` and the driver called them one after another.
-    * Each thunk runs in its own thread (job descriptions/groups are
-    * thread-local, so labeling stays correct); the call returns when
-    * every thunk has finished, preserving order. Determinism is
-    * untouched — each chain's result is a pure function of its input,
-    * only the materialization overlaps. */
+    * The call returns when every thunk has finished, preserving order.
+    * Determinism is untouched — each chain's result is a pure function
+    * of its input, only the materialization overlaps.
+    *
+    * Each thunk runs on its own thread of a pool owned by this call (so
+    * a thunk may itself call `inParallel` without starving a shared
+    * pool) with the CALLER's job properties (group, description,
+    * scheduler pool) installed: they are thread-local, and a recycled
+    * pool thread would otherwise label the thunk's jobs with whatever
+    * its previous user left behind. */
   def inParallel[A](fs: (() => A)*): IndexedSeq[A] = {
+    import java.util.concurrent.Executors
     import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val futs = fs.toIndexedSeq.map(f => Future(f()))
-    futs.map(Await.result(_, Duration.Inf))
+    val caller = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(s => s.sparkContext -> LocalProperties.get(s.sparkContext))
+    val pool = Executors.newFixedThreadPool(math.max(1, fs.size))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val futs = fs.toIndexedSeq.map { f =>
+        Future {
+          caller.foreach { case (sc, p) => LocalProperties.set(sc, cloneProps(p)) }
+          f()
+        }
+      }
+      futs.map(Await.result(_, InParallelWait))
+    } finally pool.shutdownNow()
+  }
+
+  /** Upper bound on one [[inParallel]] call. The chains it overlaps take
+    * seconds at bench scale and minutes at stress scale; a chain still
+    * running after an hour is wedged, and failing the gate with a
+    * TimeoutException beats hanging a bench or Verify run forever. */
+  private val InParallelWait = scala.concurrent.duration.Duration(1, "hour")
+
+  private def cloneProps(p: java.util.Properties): java.util.Properties = {
+    val c = new java.util.Properties()
+    p.stringPropertyNames.forEach(k => c.setProperty(k, p.getProperty(k)))
+    c
   }
 
   /** Cast every DECIMAL column of a terminal gate projection to DOUBLE.

@@ -118,8 +118,10 @@ object Tables {
         case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
         case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
-      // Drop the cached file listing so readers (including other sessions
-      // holding this table's relation cache) re-list after the rewrite.
+      // Drop THIS session's cached file listing so its later reads re-list
+      // after the rewrite. Other sessions keep their own relation cache: a
+      // caller that applies from a cloned session (a streaming
+      // `foreachBatch`) must refresh the table in its own session too.
       spark.catalog.refreshTable(table)
     } finally merged.unpersist()
   }

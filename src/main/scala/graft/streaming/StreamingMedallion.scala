@@ -62,5 +62,11 @@ object StreamingMedallion {
       }
       .start()
     q.awaitTermination()
+    // foreachBatch ran in a cloned session, so its refreshes cleared only
+    // the clone's relation cache; re-list the rewritten tables here so
+    // the caller's next read does not hit files the merge replaced. A run
+    // whose every batch was empty created none of them.
+    Seq("bronze_policies", "silver_policies", "dim_policy").map(t => s"$db.$t")
+      .filter(spark.catalog.tableExists).foreach(spark.catalog.refreshTable)
   }
 }

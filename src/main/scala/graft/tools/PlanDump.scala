@@ -3,31 +3,19 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Batch plan dump for the optimization rounds: `runMain
   * graft.tools.PlanDump <sfDir> <outDir> <suffix> <name>...` writes each
   * registry gate's executed plan (`explain("formatted")` content, after
   * running the query so AQE's final plan is what prints) to
-  * `<outDir>/<name>_<suffix>.txt` — one Spark session for the whole
-  * list, unlike ExplainGate's one-JVM-per-query loop.
+  * `<outDir>/<name>_<suffix>.txt`, one Spark session for the whole
+  * list.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "usage: PlanDump <sfDir> <outDir> <suffix> <name>...")
     val Array(sfDir, outDir, suffix) = args.take(3)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_plandump_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Measure.session(Measure.cpus(32))
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import Measure.median
 
 /** A/B wall-time evidence for the salted join on ACTUALLY-SKEWED data —
   * the r12 verdict's gap 4: the skew octave proved `j17` CORRECT on the
@@ -32,24 +34,11 @@ import org.apache.spark.sql.functions._
   * `iters` times; prints one JSON line of medians for STRESS_r13.md.
   */
 object SkewAb {
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: SkewAb <skewSfDir> [iters]")
     val sfDir = args(0)
     val iters = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session(Measure.cpus(32))
 
     def fact: DataFrame =
       spark.read.parquet(s"$sfDir/lineitem.parquet")

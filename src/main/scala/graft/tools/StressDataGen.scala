@@ -72,14 +72,7 @@ object StressDataGen {
           case p  => p.toInt
         }
       else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session(Measure.cpus(32))
     generate(spark, outDir, sf, skewPct)
     spark.stop()
   }

@@ -2,66 +2,70 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Time arbitrary registry gates (Bench times only the headline
-  * `benchQueries` list): `runMain graft.tools.TimeQueries <sfDir>
-  * <iters> <name>...` prints one JSON line with the per-query
-  * median-of-iters under `count()` (same measurement convention as
-  * Bench — Catalyst elides the verify-only terminal sort under count,
-  * so this times the operator, not the harness ordering). Used for
-  * plan-evidence comparisons in PLANS.md (e.g. window-rank o5 vs
-  * heap-aggregate o8 at stress scale).
+/** Time and count arbitrary registry gates (Bench times only the
+  * headline `benchQueries` list): `runMain graft.tools.TimeQueries
+  * <sfDir> <iters> <name>...`.
+  *
+  * Each gate gets one untimed warm-up, then `iters` timed runs under
+  * `count()` (same measurement convention as Bench — Catalyst elides the
+  * verify-only terminal sort under count, so this times the operator,
+  * not the harness ordering). Every timed run carries Spark's counters
+  * ([[Measure.counted]]); the gate reports the median wall time and the
+  * counters of its median run. The calibration probe brackets the list,
+  * so a subset timing on a drifting host epoch can be normalized against
+  * another session's probe before a per-query ratio is read.
+  *
+  * Prints ONE JSON object: a key per gate plus the underscore-prefixed
+  * probe readings, which cannot collide with a gate name.
   */
 object TimeQueries {
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+
+  /** One gate's median wall time, every run's time, and the counters of
+    * the median run. */
+  final case class Timed(name: String, wall: Double, runs: Seq[Double],
+      counters: Measure.Counters)
+
+  def measure(spark: SparkSession, sfDir: String, name: String, iters: Int): Timed = {
+    val fn = graft.SparkEntry.queries(name)
+    try fn(spark, sfDir).count() catch { case _: Throwable => } // warm-up
+    // The clock stops before the counters' bus drain.
+    val runs = (1 to iters).map(_ => Measure.counted(spark) {
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).count()
+      (System.nanoTime() - t0) / 1e9
+    })
+    val medianRun = runs.sortBy(_._1).apply((runs.size - 1) / 2)
+    Timed(name, Measure.median(runs.map(_._1)), runs.map(_._1), medianRun._2)
+  }
+
+  /** The output object, built from one fragment list so that any number
+    * of gates, zero included, yields valid JSON. */
+  def render(gates: Seq[Timed], probeStart: Double, probeEnd: Double): String = {
+    val perGate = gates.map { g =>
+      f""""${g.name}":{"wall":${g.wall}%.3f,""" +
+        s""""runs":${g.runs.map(t => f"$t%.3f").mkString("[", ",", "]")},""" +
+        g.counters.json + "}"
+    }
+    (perGate ++ Seq(f""""_probe_start":$probeStart%.3f""", f""""_probe_end":$probeEnd%.3f"""))
+      .mkString("{", ",", "}")
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: TimeQueries <sfDir> <iters> <name>...")
+    require(args.length >= 2, "usage: TimeQueries <sfDir> <iters> <name>...")
     val sfDir = args(0)
     val iters = args(1).toInt
+    require(iters >= 1, s"iters must be >= 1, got $iters")
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown gate(s): ${unknown.mkString(", ")}")
+    val spark = Measure.session(Measure.cpus(32))
     try spark.range(1000).count() catch { case _: Throwable => }
-    // Same corpus-independent calibration probe as Bench.timeProbe, so a
-    // subset timing on a drifting host epoch can be normalized against
-    // another session's probe before reading a per-query ratio.
-    def probe(): Double = {
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        spark.range(1L << 29).selectExpr("xxhash64(id) % 1024 AS h")
-          .selectExpr("sum(h) AS s").collect()
-        (System.nanoTime() - t0) / 1e9
-      }
-      median(runs)
-    }
-    val probeStart = try { probe() } catch { case _: Throwable => -1.0 }
-    val timed = names.map { name =>
-      val fn = graft.SparkEntry.queries(name)
-      val runs = (1 to iters).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      name -> median(runs)
-    }
-    val probeEnd = try { probe() } catch { case _: Throwable => -1.0 }
-    // One PURE JSON line: the probe values ride inside the object
-    // (underscore-prefixed so they cannot collide with a gate name) —
-    // appending `key=value` text after the closing brace broke any
-    // consumer that parsed the stdout line as JSON (r14 ADVICE).
-    println(timed.map { case (n, s) => f""""$n":$s%.3f""" }
-      .mkString("{", ",", ",") +
-      f""""_probe_start":$probeStart%.3f,"_probe_end":$probeEnd%.3f}""")
+    def probe(): Double =
+      try Measure.median(Measure.timeProbe(spark, 3)) catch { case _: Throwable => -1.0 }
+    val probeStart = probe()
+    val gates = names.map(measure(spark, sfDir, _, iters))
+    val probeEnd = probe()
+    println(render(gates, probeStart, probeEnd))
     spark.stop()
   }
 }

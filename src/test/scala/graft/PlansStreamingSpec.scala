@@ -248,9 +248,6 @@ class PlansStreamingSpec extends SparkTestBase {
         row("POL-003", "ACTIVE", "2024-06-01T00:00:00")).mkString("\n"))
     StreamingMedallion.runPoliciesStream(spark, landing, chk, db, batchId = 2L)
 
-    // foreachBatch ran in a cloned session; this session's relation cache
-    // still points at the pre-rewrite file listing.
-    spark.catalog.refreshTable(s"$db.dim_policy")
     val dim = spark.read.table(s"$db.dim_policy").cache()
     // POL-001 closed + new version, POL-002 untouched, POL-003 inserted
     assert(dim.count() === 4)
@@ -260,5 +257,14 @@ class PlansStreamingSpec extends SparkTestBase {
     assert(p1(1).getAs[Boolean]("is_current") && p1(1).getAs[String]("status") === "CANCELLED")
     // exactly-once: bronze has 2 + 2 rows, not reprocessed
     assert(spark.read.table(s"$db.bronze_policies").count() === 4)
+  }
+
+  test("streaming medallion: an empty landing dir creates no tables and does not fail") {
+    val base = Files.createTempDirectory("graft_smed_empty").toString
+    Files.createDirectories(Paths.get(s"$base/landing"))
+    val db = "graft_smed_empty"
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    StreamingMedallion.runPoliciesStream(spark, s"$base/landing", s"$base/chk", db, batchId = 1L)
+    assert(!spark.catalog.tableExists(s"$db.dim_policy"))
   }
 }

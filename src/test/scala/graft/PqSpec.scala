@@ -233,4 +233,26 @@ class PqSpec extends SparkTestBase {
     }
     assert(ex.getMessage != null)
   }
+
+  test("codebooks: fewer training vectors than k fails with a clear message") {
+    val ex = intercept[IllegalArgumentException] {
+      Pq.codebooks(vecs.filter(col("vec_id") < 2), "vec_id", "embedding",
+        m, subDim, k = 3, iters = 1)
+    }
+    assert(ex.getMessage.contains("k=3 centroids need at least k training vectors, got 2"))
+  }
+
+  test("withClusterId: an empty centroid set yields a NULL cluster_id, rows kept") {
+    val none = vecs.filter(lit(false))
+    val out = graft.llm.Similarity.withClusterId(vecs, none, "vec_id", "embedding")
+    assert(out.columns.toSeq === Seq("vec_id", "embedding", "cluster_id"))
+    val rows = out.select("cluster_id").collect()
+    assert(rows.length === 12 && rows.forall(_.isNullAt(0)))
+  }
+
+  test("withClusterId plans no join: the centroids ride the projection as a literal") {
+    val plan = graft.llm.Similarity.withClusterId(vecs, vecs.filter(col("vec_id") < 3),
+      "vec_id", "embedding").queryExecution.executedPlan.toString
+    assert(!plan.contains("Join"), plan)
+  }
 }

@@ -99,4 +99,42 @@ class RegistrySpec extends SparkTestBase {
     assert(n > 1 && n <= cap, s"expected (1, $cap] partitions, got $n")
     assert(big.count() === 200000L)
   }
+
+  test("inParallel runs every thunk with the caller's job properties, in order") {
+    val sc = spark.sparkContext
+    val key = "graft.test.inParallel"
+    try {
+      // Two calls with different values: a thunk on a recycled thread
+      // must not see the earlier caller's value.
+      for (v <- Seq("first", "second")) {
+        sc.setLocalProperty(key, v)
+        sc.setJobGroup(s"group-$v", "inParallel spec")
+        val seen = Registry.inParallel(
+          (1 to 4).map(i => () => (i, sc.getLocalProperty(key),
+            sc.getLocalProperty("spark.jobGroup.id"))): _*)
+        assert(seen === (1 to 4).map(i => (i, v, s"group-$v")))
+      }
+      // A thunk's own property changes stay on its thread.
+      Registry.inParallel(() => sc.setLocalProperty(key, "thunk"))
+      assert(sc.getLocalProperty(key) === "second")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.clearJobGroup()
+    }
+  }
+
+  test("inParallel nests: inner calls finish and see the outer caller's properties") {
+    val sc = spark.sparkContext
+    val key = "graft.test.inParallel.nested"
+    sc.setLocalProperty(key, "outer")
+    try {
+      val out = Registry.inParallel((1 to 3).map(i => () =>
+        Registry.inParallel((1 to 3).map(j => () =>
+          (i * 10 + j, sc.getLocalProperty(key))): _*)): _*)
+      assert(out.flatten === (for (i <- 1 to 3; j <- 1 to 3) yield (i * 10 + j, "outer")))
+      // Jobs run from nested thunks complete and return their values.
+      assert(Registry.inParallel(() =>
+        Registry.inParallel(() => spark.range(7).count()).head) === IndexedSeq(7L))
+    } finally sc.setLocalProperty(key, null)
+  }
 }

@@ -8,20 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * codes, a NULL policy_id row, an empty-string closed_date).
   */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft_tests")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_test_wh").toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.tools.Measure.session(cpus = 2)
 }
 
 abstract class SparkTestBase extends AnyFunSuite {
