@@ -1,7 +1,10 @@
 package graft.queries
 
-import org.apache.spark.graftbus.LocalProperties
+import scala.concurrent.Future
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.tools.Overlap
 
 /** One driver-gradable query: a Spark implementation plus (usually) an
   * equivalent DuckDB oracle SQL over the same parquet tables.
@@ -98,41 +101,12 @@ object Registry {
     * Determinism is untouched — each chain's result is a pure function
     * of its input, only the materialization overlaps.
     *
-    * Each thunk runs on its own thread of a pool owned by this call (so
-    * a thunk may itself call `inParallel` without starving a shared
-    * pool) with the CALLER's job properties (group, description,
-    * scheduler pool) installed: they are thread-local, and a recycled
-    * pool thread would otherwise label the thunk's jobs with whatever
-    * its previous user left behind. */
-  def inParallel[A](fs: (() => A)*): IndexedSeq[A] = {
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val caller = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .map(s => s.sparkContext -> LocalProperties.get(s.sparkContext))
-    val pool = Executors.newFixedThreadPool(math.max(1, fs.size))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val futs = fs.toIndexedSeq.map { f =>
-        Future {
-          caller.foreach { case (sc, p) => LocalProperties.set(sc, cloneProps(p)) }
-          f()
-        }
-      }
-      futs.map(Await.result(_, InParallelWait))
-    } finally pool.shutdownNow()
-  }
-
-  /** Upper bound on one [[inParallel]] call. The chains it overlaps take
-    * seconds at bench scale and minutes at stress scale; a chain still
-    * running after an hour is wedged, and failing the gate with a
-    * TimeoutException beats hanging a bench or Verify run forever. */
-  private val InParallelWait = scala.concurrent.duration.Duration(1, "hour")
-
-  private def cloneProps(p: java.util.Properties): java.util.Properties = {
-    val c = new java.util.Properties()
-    p.stringPropertyNames.forEach(k => c.setProperty(k, p.getProperty(k)))
-    c
-  }
+    * Each thunk runs on its own thread with the CALLER's job properties
+    * installed, and the wait is bounded ([[graft.tools.Overlap.await]]). */
+  def inParallel[A](fs: (() => A)*): IndexedSeq[A] =
+    Overlap.await(fs.size) { implicit ec =>
+      Future.traverse(fs.toIndexedSeq)(f => Future(f()))
+    }
 
   /** Cast every DECIMAL column of a terminal gate projection to DOUBLE.
     *

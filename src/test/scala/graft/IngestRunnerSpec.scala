@@ -267,6 +267,82 @@ class IngestRunnerSpec extends SparkTestBase {
     assert(!results("c").ok && results("c").error.get.contains("skipped"))
   }
 
+  test("runner overlaps stages with no dependencies") {
+    val met = new java.util.concurrent.CountDownLatch(2)
+    def meet(s: org.apache.spark.sql.SparkSession): Unit = {
+      met.countDown()
+      require(met.await(30, java.util.concurrent.TimeUnit.SECONDS), "the other stage never started")
+    }
+    val results = Runner.run(spark, Seq(Runner.Stage("x", Nil, meet), Runner.Stage("y", Nil, meet)))
+    assert(results.forall(_.ok), results.flatMap(_.error).mkString("; "))
+  }
+
+  test("runner starts a stage only after its last dependency ends; results keep declaration order") {
+    val spans = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+    def timed(name: String, deps: Seq[String], sleepMs: Long) = Runner.Stage(name, deps, _ => {
+      val t0 = System.nanoTime(); Thread.sleep(sleepMs); spans.put(name, (t0, System.nanoTime()))
+    })
+    val results = Runner.run(spark, Seq(
+      timed("join", Seq("slow", "fast"), 0),
+      timed("slow", Nil, 300),
+      timed("fast", Nil, 10),
+      timed("after_fast", Seq("fast"), 10)))
+    assert(results.map(_.name) === Seq("join", "slow", "fast", "after_fast"))
+    assert(results.forall(_.ok))
+    assert(spans.get("join")._1 >= spans.get("slow")._2)
+    assert(spans.get("join")._1 >= spans.get("fast")._2)
+    assert(spans.get("after_fast")._1 >= spans.get("fast")._2)
+  }
+
+  test("runner rejects a dependency cycle, naming it, before running any stage") {
+    var ran = false
+    val e = intercept[IllegalArgumentException](Runner.run(spark, Seq(
+      Runner.Stage("free", Nil, _ => ran = true),
+      Runner.Stage("a", Seq("b"), _ => ran = true),
+      Runner.Stage("b", Seq("c"), _ => ran = true),
+      Runner.Stage("c", Seq("a"), _ => ran = true))))
+    assert(e.getMessage.contains("stage dependency cycle: a -> b -> c -> a"))
+    assert(!ran)
+    val self = intercept[IllegalArgumentException](
+      Runner.run(spark, Seq(Runner.Stage("s", Seq("s"), _ => ()))))
+    assert(self.getMessage.contains("stage dependency cycle: s -> s"))
+  }
+
+  test("runner labels stage jobs with the stage name and keeps the caller's job group") {
+    import org.apache.spark.graftbus.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(
+        (e.properties.getProperty("spark.job.description"), e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("caller-group", "runner spec")
+    try {
+      val results = Runner.run(spark, Seq(
+        Runner.Stage("count_stage", Nil, s => assert(s.range(5).count() === 5L))))
+      assert(results.forall(_.ok), results.flatMap(_.error).mkString("; "))
+      ListenerBusDrain.drain(sc)
+      assert(jobs.contains(("count_stage", "caller-group")), jobs.toString)
+      assert(sc.getLocalProperty("spark.job.description") === "runner spec")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("gold_dim_date alone creates its database") {
+    val db = "graft_dim_date_alone"
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    val stages = Runner.medallionStages("unused", db).filter(_.name == "gold_dim_date")
+    val results = Runner.run(spark, stages)
+    assert(results.map(_.name) === Seq("gold_dim_date"))
+    assert(results.forall(_.ok), results.flatMap(_.error).mkString("; "))
+    assert(spark.read.table(s"$db.dim_date").count() === 4018)
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+  }
+
   test("end-to-end medallion pipeline on sample CSVs reaches a green DQ gate") {
     val dir = Files.createTempDirectory("graft_e2e").toString
     writePoliciesCsv(dir, policyRows)
