@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Scd2
@@ -43,12 +43,12 @@ object Tables {
     val existing = spark.read.table(table).schema
     val newFields = df.schema.fields.filterNot(f =>
       existing.fieldNames.exists(_.equalsIgnoreCase(f.name)))
-    if (newFields.nonEmpty) {
+    val target = if (newFields.isEmpty) existing else {
       val colsDdl = newFields
         .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
       spark.sql(s"ALTER TABLE $table ADD COLUMNS ($colsDdl)")
+      spark.read.table(table).schema
     }
-    val target = spark.read.table(table).schema
     val aligned = df.select(target.fields.map { f =>
       if (df.schema.fieldNames.exists(_.equalsIgnoreCase(f.name))) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)
@@ -65,19 +65,23 @@ object Tables {
   /** SCD2 apply with a first-load path (reference handles the missing
     * target at `dim_policy.py:108-112`) and a partition-aware rewrite.
     *
-    * The table is partitioned by `is_current`, so the closed-out history
-    * partition is APPEND-only (closed rows are added, existing history
-    * files are never rewritten) and only the small `is_current=true`
-    * partition is rewritten per merge — at 100 TB the ever-growing
-    * history never gets copied. Uses dynamic partition overwrite so the
-    * history partition is untouched by the current-partition rewrite.
+    * The table is partitioned by `is_current`. A merge reads the
+    * `is_current=true` partition, merges `source` into it, and reads the
+    * closed-out history only to leave out closed rows it already holds.
+    * It writes two things, in this order: the newly closed rows, appended
+    * to the history partition (existing history files are never
+    * rewritten), then the `is_current=true` partition, replaced by a
+    * static-partition `INSERT OVERWRITE`. At 100 TB the ever-growing
+    * history is never copied, and other partitions (a row with a NULL
+    * `is_current` included) are never touched.
     *
     * Crash window (documented, same non-atomicity class as the
     * reference's non-Delta paths): history-append commits before the
     * current-partition overwrite; a crash between them leaves a closed
     * copy in history while the old current row still exists — re-running
     * the merge is idempotent-by-key for the current partition, and the
-    * duplicate closed row is detectable via (key, effective_end_date). */
+    * closed copy is not appended twice: the re-run leaves out every
+    * closed row whose (key, effective_end_date) history already holds. */
   def scd2Apply(spark: SparkSession, table: String, source: DataFrame,
       keyCols: Seq[String], trackedCols: Seq[String]): Unit = {
     if (!spark.catalog.tableExists(table)) {
@@ -86,44 +90,37 @@ object Tables {
       return
     }
     val target = spark.read.table(table)
+    val isCur = coalesce(col("is_current"), lit(false))
     // localCheckpoint truncates lineage: the merged plan no longer
     // references the target table, so Spark permits rewriting it
     // (UNSUPPORTED_OVERWRITE is an analysis-time plan check that caching
     // alone does not satisfy).
-    val merged = Scd2.merge(target, source, keyCols, trackedCols)
+    val merged = Scd2.merge(target.filter(isCur), source, keyCols, trackedCols)
       .localCheckpoint(true)
+    val view = s"graft_scd2_current_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     try {
-      val history = merged.filter(!coalesce(col("is_current"), lit(false)))
-      val current = merged.filter(coalesce(col("is_current"), lit(false)))
-      // Append only the NEWLY closed rows (left_anti vs existing history).
-      val existingHistory = target.filter(!coalesce(col("is_current"), lit(false)))
-      val h = history.alias("h"); val e = existingHistory.alias("e")
-      val newHistory = h.join(e,
+      val h = merged.filter(!isCur).alias("h")
+      val e = target.filter(!isCur).alias("e")
+      h.join(e,
         keyCols.map(k => col(s"h.$k") === col(s"e.$k")).reduce(_ && _) &&
           (col("h.effective_end_date") <=> col("e.effective_end_date")),
-        "left_anti").localCheckpoint(true)
-      newHistory.write.mode("append").format("parquet")
+        "left_anti")
+        .write.mode("append").format("parquet")
         .partitionBy("is_current").saveAsTable(table)
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      // insertInto (not saveAsTable): saveAsTable-overwrite drops and
-      // recreates the whole table, ignoring dynamic partition overwrite.
-      // insertInto is position-based, so project into the table's
-      // catalog column order (partition column last).
-      val tableCols = spark.read.table(table).columns
-      try
-        current.select(tableCols.map(col): _*)
-          .write.mode("overwrite").insertInto(table)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      // Drop THIS session's cached file listing so its later reads re-list
-      // after the rewrite. Other sessions keep their own relation cache: a
-      // caller that applies from a cloned session (a streaming
-      // `foreachBatch`) must refresh the table in its own session too.
+      // A static partition spec replaces exactly that partition, whatever
+      // the session's partitionOverwriteMode. INSERT is positional: select
+      // the table's data columns in catalog order.
+      merged.filter(isCur).createOrReplaceTempView(view)
+      val dataCols = target.columns.filterNot(_ == "is_current").map(c => s"`$c`")
+      spark.sql(s"INSERT OVERWRITE TABLE $table PARTITION (is_current = true) " +
+        s"SELECT ${dataCols.mkString(", ")} FROM $view")
+      // Drop this session's cached file listing so its later reads re-list
+      // after the rewrite.
       spark.catalog.refreshTable(table)
-    } finally merged.unpersist()
+    } finally {
+      spark.catalog.dropTempView(view)
+      GraftSqlBridge.releaseCheckpoint(merged)
+    }
   }
 
   /** SCD2 apply with an ATOMIC commit: the full merged state is written

@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Future
+import scala.util.{Failure, Success}
+
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -8,6 +11,7 @@ import org.apache.spark.sql.types._
 import graft.model.Schemas
 import graft.operators.{GoldDims, Scd2, SilverTransforms}
 import graft.sources.{Ingest, Tables}
+import graft.tools.Overlap
 
 /** Streaming medallion: incremental bronze pickup chained through the
   * silver transform into an SCD2 dimension upsert per micro-batch.
@@ -18,21 +22,35 @@ import graft.sources.{Ingest, Tables}
   * batch transform (one code path for batch and streaming) and merged
   * into the dimension with the partition-aware SCD2 apply, so history
   * accumulates correctly across restarts (checkpoint + AvailableNow).
+  *
+  * Each micro-batch's CSV is parsed once, into a local checkpoint. Its
+  * three writes (bronze append, silver append, SCD2 apply) then read that
+  * checkpoint, run at the same time, and run in the session that called
+  * [[runPoliciesStream]], not in the query's cloned session: the caller's
+  * next read sees the rewritten tables without a refresh, and the code
+  * Spark generates for one drop is reused by the next (its compiled-code
+  * cache is keyed by class loader, and each query's clone has its own).
   */
 object StreamingMedallion {
 
   /** Empty premium frame with the columns buildPremiumSummary needs —
     * streaming policy upserts carry no payment aggregates (they arrive on
     * the premiums feed); COALESCE defaults fill zeros, as in the batch
-    * dim builder. */
+    * dim builder. A local relation, so the optimizer sees it is empty and
+    * plans neither the premium aggregate nor the join. */
   private def emptyPremiums(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    spark.createDataFrame(java.util.Collections.emptyList[Row](),
       StructType(Seq(
         StructField("policy_id", StringType),
         StructField("amount", DecimalType(12, 2)),
         StructField("payment_status", StringType),
         StructField("payment_date", DateType),
         StructField("due_date", DateType))))
+
+  /** The dim_policy rows of one micro-batch's silver policies. */
+  private[graft] def dimPolicy(silver: DataFrame): DataFrame =
+    GoldDims.buildDimPolicy(silver,
+      GoldDims.buildPremiumSummary(emptyPremiums(silver.sparkSession)))
 
   /** Stream raw policy CSVs from `landingDir` into `db`: bronze append,
     * silver append, SCD2 upsert of dim_policy. Processes the current
@@ -50,23 +68,33 @@ object StreamingMedallion {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          Tables.append(batch, s"$db.bronze_policies")
-          val silver = SilverTransforms.transformPolicies(batch)
-          Tables.append(silver, s"$db.silver_policies")
-          val dim = GoldDims.buildDimPolicy(silver, GoldDims.buildPremiumSummary(
-            emptyPremiums(batch.sparkSession)))
-          Tables.scd2Apply(batch.sparkSession, s"$db.dim_policy",
-            dim, Seq("policy_id"), Scd2.policyTrackedCols)
-        }
+        val parsed = batch.localCheckpoint(true)
+        try {
+          val bronze = GraftSqlBridge.inSession(spark, parsed)
+          if (!bronze.isEmpty) writeBatch(bronze, db)
+        } finally GraftSqlBridge.releaseCheckpoint(parsed)
       }
       .start()
     q.awaitTermination()
-    // foreachBatch ran in a cloned session, so its refreshes cleared only
-    // the clone's relation cache; re-list the rewritten tables here so
-    // the caller's next read does not hit files the merge replaced. A run
-    // whose every batch was empty created none of them.
-    Seq("bronze_policies", "silver_policies", "dim_policy").map(t => s"$db.$t")
-      .filter(spark.catalog.tableExists).foreach(spark.catalog.refreshTable)
+  }
+
+  /** The three writes of one parsed micro-batch, overlapped. All of them
+    * finish before the first failure is rethrown (the others attached as
+    * suppressed), so none is interrupted mid-commit. */
+  private def writeBatch(bronze: DataFrame, db: String): Unit = {
+    val silver = SilverTransforms.transformPolicies(bronze)
+    val writes: Seq[() => Unit] = Seq(
+      () => Tables.append(bronze, s"$db.bronze_policies"),
+      () => Tables.append(silver, s"$db.silver_policies"),
+      () => Tables.scd2Apply(bronze.sparkSession, s"$db.dim_policy",
+        dimPolicy(silver), Seq("policy_id"), Scd2.policyTrackedCols))
+    val outcomes = Overlap.await(writes.size) { implicit ec =>
+      Future.traverse(writes)(w => Future(w()).transform(Success(_)))
+    }
+    val failures = outcomes.collect { case Failure(e) => e }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 }

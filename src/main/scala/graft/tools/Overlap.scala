@@ -11,10 +11,11 @@ import org.apache.spark.sql.SparkSession
 /** Overlap independent Spark work submitted from one call. Spark's
   * scheduler runs several jobs of one application at once and shares out
   * the task slots between them; the caller only has to submit them from
-  * different threads. `Registry.inParallel` (independent gate chains) and
-  * `pipeline.Runner` (independent medallion stages) both go through
-  * [[await]], so the per-call pool, the copy of the caller's job
-  * properties and the bounded wait exist once.
+  * different threads. `Registry.inParallel` (independent gate chains),
+  * `pipeline.Runner` (independent medallion stages) and
+  * `streaming.StreamingMedallion` (a micro-batch's three table writes) all
+  * go through [[await]], so the per-call pool, the copy of the caller's
+  * job properties and the bounded wait exist once.
   */
 object Overlap {
 

@@ -25,4 +25,27 @@ object GraftSqlBridge {
     * it are resolved, so custom nodes built on them pass analysis). */
   def analyzedPlan(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
+
+  /** A `localCheckpoint`ed frame re-homed into `spark`: the same
+    * checkpointed `RDD[InternalRow]` under a `LogicalRDD` bound to another
+    * session, with no per-row conversion. A streaming `foreachBatch`
+    * hands its batch over in the query's cloned session; this lets the
+    * batch's writes run in the session that started the query. */
+  def inSession(spark: SparkSession, checkpointed: DataFrame): DataFrame = {
+    val r = logicalRdd(checkpointed)
+    dataFrame(spark, execution.LogicalRDD(r.output, r.rdd, r.outputPartitioning, r.outputOrdering)(
+      spark.asInstanceOf[classic.SparkSession], Some(r.computeStats()), Some(r.constraints)))
+  }
+
+  /** Drop the blocks of a `localCheckpoint`ed frame. `unpersist` does not:
+    * a checkpoint is not an entry of the cache manager. */
+  def releaseCheckpoint(checkpointed: DataFrame): Unit =
+    logicalRdd(checkpointed).rdd.unpersist(blocking = false)
+
+  private def logicalRdd(df: DataFrame): execution.LogicalRDD =
+    df.queryExecution.analyzed match {
+      case r: execution.LogicalRDD => r
+      case p => throw new IllegalArgumentException(
+        s"expected a localCheckpoint'ed frame, got a ${p.nodeName} plan")
+    }
 }

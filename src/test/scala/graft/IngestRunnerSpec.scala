@@ -112,81 +112,82 @@ class IngestRunnerSpec extends SparkTestBase {
     import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
     import graft.operators.Scd2
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_scd2_crash").toString
-    val src = s"$base/in"; val chk = s"$base/chk"
-    Tables.ensureDatabase(spark, "graft_test")
-    Tables.dropTable(spark, "graft_test.dim_crash")
-    def shape(rows: Seq[(String, String, String)]): DataFrame =
-      rows.toDF("id", "status", "esd")
-        .select(col("id"), col("status"),
-          to_timestamp(col("esd")).as("effective_start_date"),
-          lit(null).cast("timestamp").as("effective_end_date"),
-          lit(true).as("is_current"))
-    def applyBatch(batch: DataFrame): Unit = {
-      val sp = batch.sparkSession
-      val merged =
-        if (sp.catalog.tableExists("graft_test.dim_crash"))
-          Scd2.merge(sp.read.table("graft_test.dim_crash"), batch,
-            Seq("id"), Seq("status")).localCheckpoint(true)
-        else batch
-      merged.write.mode("overwrite").saveAsTable("graft_test.dim_crash")
-      // The injected crash aborts the stream BEFORE Spark's usual
-      // post-batch invalidation; drop the stale file listing so the
-      // replayed batch (and the assertions) see the rewritten table.
-      sp.catalog.refreshTable("graft_test.dim_crash")
-    }
-    def run(crashAfterApply: Boolean): Unit = {
-      val q = spark.readStream
-        .schema("id STRING, status STRING, effective_start_date TIMESTAMP, " +
-          "effective_end_date TIMESTAMP, is_current BOOLEAN")
-        .parquet(src)
-        .writeStream
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          if (!b.isEmpty) {
-            applyBatch(b)
-            if (crashAfterApply)
-              throw new RuntimeException("injected crash after state mutation")
+    withTempDir("graft_scd2_crash") { base =>
+      val src = s"$base/in"; val chk = s"$base/chk"
+      Tables.ensureDatabase(spark, "graft_test")
+      Tables.dropTable(spark, "graft_test.dim_crash")
+      def shape(rows: Seq[(String, String, String)]): DataFrame =
+        rows.toDF("id", "status", "esd")
+          .select(col("id"), col("status"),
+            to_timestamp(col("esd")).as("effective_start_date"),
+            lit(null).cast("timestamp").as("effective_end_date"),
+            lit(true).as("is_current"))
+      def applyBatch(batch: DataFrame): Unit = {
+        val sp = batch.sparkSession
+        val merged =
+          if (sp.catalog.tableExists("graft_test.dim_crash"))
+            Scd2.merge(sp.read.table("graft_test.dim_crash"), batch,
+              Seq("id"), Seq("status")).localCheckpoint(true)
+          else batch
+        merged.write.mode("overwrite").saveAsTable("graft_test.dim_crash")
+        // The injected crash aborts the stream BEFORE Spark's usual
+        // post-batch invalidation; drop the stale file listing so the
+        // replayed batch (and the assertions) see the rewritten table.
+        sp.catalog.refreshTable("graft_test.dim_crash")
+      }
+      def run(crashAfterApply: Boolean): Unit = {
+        val q = spark.readStream
+          .schema("id STRING, status STRING, effective_start_date TIMESTAMP, " +
+            "effective_end_date TIMESTAMP, is_current BOOLEAN")
+          .parquet(src)
+          .writeStream
+          .option("checkpointLocation", chk)
+          .outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .foreachBatch { (b: DataFrame, _: Long) =>
+            if (!b.isEmpty) {
+              applyBatch(b)
+              if (crashAfterApply)
+                throw new RuntimeException("injected crash after state mutation")
+            }
           }
-        }
-        .start()
-      q.awaitTermination()
+          .start()
+        q.awaitTermination()
+      }
+      // Batch A: three current rows.
+      shape(Seq(("k1", "A", "2024-01-01"), ("k2", "A", "2024-01-01"),
+        ("k3", "A", "2024-01-01"))).write.mode("append").parquet(src)
+      run(crashAfterApply = false)
+      // Batch B: k1/k3 change status; the stream crashes AFTER the merge
+      // landed but before the epoch commit.
+      shape(Seq(("k1", "X", "2024-01-11"), ("k3", "X", "2024-01-11")))
+        .write.mode("append").parquet(src)
+      intercept[StreamingQueryException] { run(crashAfterApply = true) }
+      // The foreachBatch clone session shares the JVM-wide file-status
+      // cache; refresh from the parent session before reading past the
+      // overwrite (test-only concern — the production path always reads
+      // through a fresh batch's session).
+      spark.catalog.refreshTable("graft_test.dim_crash")
+      // The partial apply is real: the table already holds the merged state.
+      assert(spark.read.table("graft_test.dim_crash").count() === 5)
+      // Restart from the same checkpoint: batch B replays, merge re-applies.
+      run(crashAfterApply = false)
+      spark.catalog.refreshTable("graft_test.dim_crash")
+      val dim = spark.read.table("graft_test.dim_crash")
+      assert(dim.count() === 5, "replayed merge must be idempotent, not duplicate versions")
+      val k1 = dim.filter(col("id") === "k1").orderBy("is_current").collect()
+      assert(k1.length === 2)
+      assert(!k1(0).getAs[Boolean]("is_current") &&
+        k1(0).getAs[String]("status") === "A" &&
+        k1(0).getAs[java.sql.Timestamp]("effective_end_date") ===
+          java.sql.Timestamp.valueOf("2024-01-11 00:00:00"))
+      assert(k1(1).getAs[Boolean]("is_current") &&
+        k1(1).getAs[String]("status") === "X" &&
+        k1(1).isNullAt(k1(1).fieldIndex("effective_end_date")))
+      val k2 = dim.filter(col("id") === "k2").collect()
+      assert(k2.length === 1 && k2(0).getAs[Boolean]("is_current") &&
+        k2(0).getAs[String]("status") === "A")
     }
-    // Batch A: three current rows.
-    shape(Seq(("k1", "A", "2024-01-01"), ("k2", "A", "2024-01-01"),
-      ("k3", "A", "2024-01-01"))).write.mode("append").parquet(src)
-    run(crashAfterApply = false)
-    // Batch B: k1/k3 change status; the stream crashes AFTER the merge
-    // landed but before the epoch commit.
-    shape(Seq(("k1", "X", "2024-01-11"), ("k3", "X", "2024-01-11")))
-      .write.mode("append").parquet(src)
-    intercept[StreamingQueryException] { run(crashAfterApply = true) }
-    // The foreachBatch clone session shares the JVM-wide file-status
-    // cache; refresh from the parent session before reading past the
-    // overwrite (test-only concern — the production path always reads
-    // through a fresh batch's session).
-    spark.catalog.refreshTable("graft_test.dim_crash")
-    // The partial apply is real: the table already holds the merged state.
-    assert(spark.read.table("graft_test.dim_crash").count() === 5)
-    // Restart from the same checkpoint: batch B replays, merge re-applies.
-    run(crashAfterApply = false)
-    spark.catalog.refreshTable("graft_test.dim_crash")
-    val dim = spark.read.table("graft_test.dim_crash")
-    assert(dim.count() === 5, "replayed merge must be idempotent, not duplicate versions")
-    val k1 = dim.filter(col("id") === "k1").orderBy("is_current").collect()
-    assert(k1.length === 2)
-    assert(!k1(0).getAs[Boolean]("is_current") &&
-      k1(0).getAs[String]("status") === "A" &&
-      k1(0).getAs[java.sql.Timestamp]("effective_end_date") ===
-        java.sql.Timestamp.valueOf("2024-01-11 00:00:00"))
-    assert(k1(1).getAs[Boolean]("is_current") &&
-      k1(1).getAs[String]("status") === "X" &&
-      k1(1).isNullAt(k1(1).fieldIndex("effective_end_date")))
-    val k2 = dim.filter(col("id") === "k2").collect()
-    assert(k2.length === 1 && k2(0).getAs[Boolean]("is_current") &&
-      k2(0).getAs[String]("status") === "A")
   }
 
   test("ingestStreaming: AvailableNow processes backlog exactly once per checkpoint") {

@@ -222,49 +222,120 @@ class PlansStreamingSpec extends SparkTestBase {
     assert(bad.getMessage.toLowerCase.contains("array"))
   }
 
+  private val policyHeader = "policy_id,policyholder_first_name,policyholder_last_name," +
+    "policyholder_email,property_id,coverage_type_code,effective_date," +
+    "expiration_date,status,annual_premium,deductible,coverage_limit," +
+    "agent_id,channel,created_at,updated_at"
+  private def policyRow(id: String, status: String, updated: String) =
+    s"$id,Jo,Smith,j@t.co,PROP-1,HO3,2024-01-01,2025-01-01,$status," +
+      s"1200.50,1000,300000,AGT-001,ONLINE,2023-12-15T00:00:00,$updated"
+
   test("streaming medallion: bronze→silver→SCD2 upsert across two file batches") {
-    val base = Files.createTempDirectory("graft_smed").toString
-    val landing = s"$base/landing"; val chk = s"$base/chk"
-    Files.createDirectories(Paths.get(landing))
-    val header = "policy_id,policyholder_first_name,policyholder_last_name," +
-      "policyholder_email,property_id,coverage_type_code,effective_date," +
-      "expiration_date,status,annual_premium,deductible,coverage_limit," +
-      "agent_id,channel,created_at,updated_at"
-    def row(id: String, status: String, updated: String) =
-      s"$id,Jo,Smith,j@t.co,PROP-1,HO3,2024-01-01,2025-01-01,$status," +
-        s"1200.50,1000,300000,AGT-001,ONLINE,2023-12-15T00:00:00,$updated"
-    val db = "graft_smed"
-    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    withTempDir("graft_smed") { base =>
+      val landing = s"$base/landing"; val chk = s"$base/chk"
+      Files.createDirectories(Paths.get(landing))
+      val db = "graft_smed"
+      spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
 
-    Files.writeString(Paths.get(s"$landing/b1.csv"),
-      Seq(header, row("POL-001", "ACTIVE", "2024-01-01T00:00:00"),
-        row("POL-002", "ACTIVE", "2024-01-01T00:00:00")).mkString("\n"))
-    StreamingMedallion.runPoliciesStream(spark, landing, chk, db, batchId = 1L)
-    assert(spark.read.table(s"$db.dim_policy").count() === 2)
+      Files.writeString(Paths.get(s"$landing/b1.csv"),
+        Seq(policyHeader, policyRow("POL-001", "ACTIVE", "2024-01-01T00:00:00"),
+          policyRow("POL-002", "ACTIVE", "2024-01-01T00:00:00")).mkString("\n"))
+      StreamingMedallion.runPoliciesStream(spark, landing, chk, db, batchId = 1L)
+      assert(spark.read.table(s"$db.dim_policy").count() === 2)
 
-    // batch 2: POL-001 cancelled (tracked change), POL-003 brand new
-    Files.writeString(Paths.get(s"$landing/b2.csv"),
-      Seq(header, row("POL-001", "CANCELLED", "2024-06-01T00:00:00"),
-        row("POL-003", "ACTIVE", "2024-06-01T00:00:00")).mkString("\n"))
-    StreamingMedallion.runPoliciesStream(spark, landing, chk, db, batchId = 2L)
+      // batch 2: POL-001 cancelled (tracked change), POL-003 brand new
+      Files.writeString(Paths.get(s"$landing/b2.csv"),
+        Seq(policyHeader, policyRow("POL-001", "CANCELLED", "2024-06-01T00:00:00"),
+          policyRow("POL-003", "ACTIVE", "2024-06-01T00:00:00")).mkString("\n"))
+      StreamingMedallion.runPoliciesStream(spark, landing, chk, db, batchId = 2L)
 
-    val dim = spark.read.table(s"$db.dim_policy").cache()
-    // POL-001 closed + new version, POL-002 untouched, POL-003 inserted
-    assert(dim.count() === 4)
-    val p1 = dim.filter(col("policy_id") === "POL-001").orderBy("is_current").collect()
-    assert(p1.length === 2)
-    assert(!p1(0).getAs[Boolean]("is_current") && p1(0).getAs[String]("status") === "ACTIVE")
-    assert(p1(1).getAs[Boolean]("is_current") && p1(1).getAs[String]("status") === "CANCELLED")
-    // exactly-once: bronze has 2 + 2 rows, not reprocessed
-    assert(spark.read.table(s"$db.bronze_policies").count() === 4)
+      val dim = spark.read.table(s"$db.dim_policy").cache()
+      // POL-001 closed + new version, POL-002 untouched, POL-003 inserted
+      assert(dim.count() === 4)
+      val p1 = dim.filter(col("policy_id") === "POL-001").orderBy("is_current").collect()
+      assert(p1.length === 2)
+      assert(!p1(0).getAs[Boolean]("is_current") && p1(0).getAs[String]("status") === "ACTIVE")
+      assert(p1(1).getAs[Boolean]("is_current") && p1(1).getAs[String]("status") === "CANCELLED")
+      // exactly-once: bronze has 2 + 2 rows, not reprocessed
+      assert(spark.read.table(s"$db.bronze_policies").count() === 4)
+    }
   }
 
   test("streaming medallion: an empty landing dir creates no tables and does not fail") {
-    val base = Files.createTempDirectory("graft_smed_empty").toString
-    Files.createDirectories(Paths.get(s"$base/landing"))
-    val db = "graft_smed_empty"
-    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-    StreamingMedallion.runPoliciesStream(spark, s"$base/landing", s"$base/chk", db, batchId = 1L)
-    assert(!spark.catalog.tableExists(s"$db.dim_policy"))
+    withTempDir("graft_smed_empty") { base =>
+      Files.createDirectories(Paths.get(s"$base/landing"))
+      val db = "graft_smed_empty"
+      spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+      StreamingMedallion.runPoliciesStream(spark, s"$base/landing", s"$base/chk", db, batchId = 1L)
+      assert(!spark.catalog.tableExists(s"$db.dim_policy"))
+    }
+  }
+
+  test("streaming medallion: a drop's writes run as jobs of the calling session") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.graftbus.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    withTempDir("graft_smed_session") { base =>
+      val landing = s"$base/landing"
+      Files.createDirectories(Paths.get(landing))
+      val db = "graft_smed_session"
+      spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+      Files.writeString(Paths.get(s"$landing/b1.csv"),
+        Seq(policyHeader, policyRow("POL-001", "ACTIVE", "2024-01-01T00:00:00")).mkString("\n"))
+      // Every job Spark runs for a session's query carries the session's
+      // `spark-session-<uuid>` tag; the stream's cloned session has its own.
+      def jobTags(body: => Unit): Seq[Set[String]] = {
+        val tags = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]()
+        val listener = new SparkListener {
+          override def onJobStart(e: SparkListenerJobStart): Unit =
+            tags.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+              .map(_.split(",").toSet).getOrElse(Set.empty))
+        }
+        val sc = spark.sparkContext
+        sc.addSparkListener(listener)
+        try { body; ListenerBusDrain.drain(sc) } finally sc.removeSparkListener(listener)
+        tags.asScala.toSeq
+      }
+      val own = jobTags(spark.range(1).count()).flatten
+        .filter(_.matches("spark-session-[0-9a-f-]{36}")).toSet
+      assert(own.size === 1, own)
+      val drop = jobTags(
+        StreamingMedallion.runPoliciesStream(spark, landing, s"$base/chk", db, batchId = 1L))
+      // bronze append, silver append and the dim_policy first load
+      assert(drop.count(_.intersect(own).nonEmpty) >= 3, drop.mkString("\n"))
+      assert(spark.read.table(s"$db.dim_policy").count() === 1)
+    }
+  }
+
+  test("streaming medallion: a failing write fails the drop only after the other writes commit") {
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    withTempDir("graft_smed_fail") { base =>
+      val landing = s"$base/landing"
+      Files.createDirectories(Paths.get(landing))
+      val db = "graft_smed_fail"
+      spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+      spark.sql(s"CREATE DATABASE $db")
+      // silver_policies.policy_id is an INT: the silver append cannot store
+      // the CSV's string ids and fails.
+      spark.sql(s"CREATE TABLE $db.silver_policies (policy_id INT) USING parquet")
+      Files.writeString(Paths.get(s"$landing/b1.csv"),
+        Seq(policyHeader, policyRow("POL-001", "ACTIVE", "2024-01-01T00:00:00")).mkString("\n"))
+      intercept[StreamingQueryException] {
+        StreamingMedallion.runPoliciesStream(spark, landing, s"$base/chk", db, batchId = 1L)
+      }
+      assert(spark.read.table(s"$db.silver_policies").count() === 0)
+      assert(spark.read.table(s"$db.bronze_policies").count() === 1)
+      assert(spark.read.table(s"$db.dim_policy").count() === 1)
+    }
+  }
+
+  test("streaming dim build: the empty premium side plans no aggregate and no join") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import graft.operators.SilverTransforms
+    val dim = StreamingMedallion.dimPolicy(SilverTransforms.transformPolicies(samplePolicies))
+    val plan = dim.queryExecution.optimizedPlan
+    assert(plan.collect { case a: Aggregate => a; case j: Join => j }.isEmpty, plan.treeString)
+    val rows = dim.select("policy_id", "total_premium_payments").as[(String, Long)].collect()
+    assert(rows.toSeq.sorted === Seq(("POL-001", 0L), ("POL-002", 0L)))
   }
 }

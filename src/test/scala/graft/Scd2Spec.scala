@@ -198,6 +198,43 @@ class Scd2Spec extends SparkTestBase {
       .head().getAs[String]("status") === "CANCELLED")
   }
 
+  test("scd2Apply leaves a NULL is_current row and the existing history files untouched") {
+    import java.nio.file.{Files, Paths}
+    val table = "graft_test.scd2_null_current"
+    Tables.ensureDatabase(spark, "graft_test")
+    Tables.dropTable(spark, table)
+    Tables.scd2Apply(spark, table, dim(("P1", "ACTIVE", "2024-01-01", None, true),
+      ("P2", "ACTIVE", "2024-01-01", None, true)), Seq("policy_id"), Seq("status"))
+    // P1 closes: the history partition gets its first file.
+    Tables.scd2Apply(spark, table, dim(("P1", "CANCELLED", "2024-03-01", None, true)),
+      Seq("policy_id"), Seq("status"))
+    dim(("P9", "ACTIVE", "2024-01-01", None, true))
+      .withColumn("is_current", lit(null).cast(BooleanType))
+      .write.mode("append").format("parquet").partitionBy("is_current").saveAsTable(table)
+    spark.catalog.refreshTable(table)
+    def outsideCurrent(): Map[String, Seq[Byte]] =
+      spark.read.table(table).inputFiles.filterNot(_.contains("is_current=true"))
+        .map(f => f -> Files.readAllBytes(Paths.get(new java.net.URI(f))).toSeq).toMap
+    val before = outsideCurrent()
+    assert(before.keys.count(_.contains("is_current=__HIVE_DEFAULT_PARTITION__")) === 1)
+    assert(before.keys.count(_.contains("is_current=false")) === 1)
+
+    // P2 closes, P3 arrives: one new history file, a new current partition.
+    Tables.scd2Apply(spark, table, dim(("P2", "CANCELLED", "2024-06-01", None, true),
+      ("P3", "ACTIVE", "2024-06-01", None, true)), Seq("policy_id"), Seq("status"))
+    val after = outsideCurrent()
+    assert(before.forall { case (f, bytes) => after.get(f).contains(bytes) },
+      "an existing history or NULL-partition file was rewritten or removed")
+    assert(after.size === before.size + 1)
+    val rows = spark.read.table(table)
+    assert(rows.filter(col("is_current").isNull)
+      .select("policy_id").as[String].collect().toSeq === Seq("P9"))
+    assert(rows.filter(!col("is_current")).select("policy_id").as[String]
+      .collect().toSeq.sorted === Seq("P1", "P2"))
+    assert(rows.filter(col("is_current")).select("policy_id", "status").as[(String, String)]
+      .collect().toSeq.sorted === Seq(("P1", "CANCELLED"), ("P2", "CANCELLED"), ("P3", "ACTIVE")))
+  }
+
   test("scd2ApplyAtomic: location-swap commit, correct state, idempotent re-run") {
     val table = "graft_test.scd2_atomic"
     Tables.ensureDatabase(spark, "graft_test")

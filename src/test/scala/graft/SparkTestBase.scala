@@ -13,6 +13,13 @@ object SparkTestBase {
 
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  /** Run `body` on a fresh temp dir, deleted afterwards. */
+  def withTempDir(prefix: String)(body: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString)
+    finally new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+  }
   import org.apache.spark.sql.types._
 
   private def policySchema = StructType(Seq(
