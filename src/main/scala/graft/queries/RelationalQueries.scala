@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Funcs
 import graft.sources.Tables
+import graft.tools.Measure
 import Registry.T
 
 /** Driver-gradable queries for the relational operator inventory
@@ -13,9 +14,6 @@ import Registry.T
   * DuckDB oracle over the same parquet tables.
   */
 object RelationalQueries {
-
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   // Shared with SqlMartQueries (sql_dim_date twin).
   private[queries] val dimDateOracle: String =
@@ -42,7 +40,7 @@ object RelationalQueries {
     // ----- §2.1 scans / sources / sinks ---------------------------------
     "s1_csv_roundtrip" -> Q((s, dir) => {
       // S1 (explicit-schema CSV scan, no inference) + S12 (CSV writer).
-      val out = tmpDir("graft_s1")
+      val out = Measure.tempDir("graft_s1")
       T(s, dir, "nation").coalesce(1).write.mode("overwrite")
         .option("header", "true").csv(out)
       s.read.option("header", "true")
@@ -65,7 +63,7 @@ object RelationalQueries {
       // numPartitions: 4 parallel bounded remote queries, the cluster-
       // scale extract shape) and aggregate. Matching the parquet oracle
       // proves full round-trip fidelity of the JDBC path.
-      val db = tmpDir("graft_s4") + "/legacy_db"
+      val db = Measure.tempDir("graft_s4") + "/legacy_db"
       val cust = T(s, dir, "customer")
       graft.sources.Jdbc.loadTable(db, "legacy_customer", cust)
       val bounds = cust.agg(min("c_custkey"), max("c_custkey")).head()
@@ -87,7 +85,7 @@ object RelationalQueries {
       // AND the verdicts, so a silent JDBC corruption flips a boolean.
       import graft.sources.Jdbc
       import graft.validation.Reconciler
-      val db = tmpDir("graft_s4r") + "/legacy_db"
+      val db = Measure.tempDir("graft_s4r") + "/legacy_db"
       val modern = T(s, dir, "nation")
       Jdbc.loadTable(db, "legacy_nation", modern)
       val legacy = Jdbc.read(s, db, "legacy_nation")
@@ -159,7 +157,7 @@ object RelationalQueries {
     "s13_json_roundtrip" -> Q((s, dir) => {
       // JSON file sink + explicit-schema JSON scan (beyond the reference's
       // CSV-only sources; the natural landing format for event feeds).
-      val out = tmpDir("graft_s13")
+      val out = Measure.tempDir("graft_s13")
       T(s, dir, "nation").coalesce(1).write.mode("overwrite").json(out)
       s.read.schema("n_nationkey INT, n_name STRING, n_regionkey INT")
         .json(out)
@@ -167,7 +165,7 @@ object RelationalQueries {
     }, Some("SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey")),
 
     "s14_orc_roundtrip" -> Q((s, dir) => {
-      val out = tmpDir("graft_s14")
+      val out = Measure.tempDir("graft_s14")
       T(s, dir, "region").write.mode("overwrite").orc(out)
       s.read.orc(out).orderBy("r_regionkey")
     }, Some("SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey")),
@@ -276,7 +274,7 @@ object RelationalQueries {
       // catalog, so a managed CTAS here hits LOCATION_ALREADY_EXISTS on
       // every session after the first; DPP fires identically through
       // the file index.
-      val out = tmpDir("graft_s19")
+      val out = Measure.tempDir("graft_s19")
       T(s, dir, "lineitem")
         .withColumn("ship_mon", month(col("l_shipdate")))
         .select("ship_mon", "l_extendedprice", "l_quantity")
@@ -307,7 +305,7 @@ object RelationalQueries {
       // whole scan at 100 TB. Prices travel as DECIMAL(12,2) text so
       // the round-trip is exact; the aggregate uses the exact-decimal-
       // sum-then-double gate discipline.
-      val out = tmpDir("graft_s20")
+      val out = Measure.tempDir("graft_s20")
       T(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice").cast("decimal(12,2)").as("o_totalprice"))
@@ -342,7 +340,7 @@ object RelationalQueries {
       // scan that drops, double-counts, or mis-quarantines diverges.
       // The aggregate-only read also respects Spark's restriction on
       // querying _corrupt_record without the other columns.
-      val out = tmpDir("graft_s21")
+      val out = Measure.tempDir("graft_s21")
       T(s, dir, "orders").filter(col("o_orderkey") % 20 < 3)
         .select(
           when(col("o_orderkey") % 7 === 0,
@@ -545,7 +543,7 @@ object RelationalQueries {
       // §2.12 ingest_batch: CSV scan S1 + lineage metadata + append S6,
       // exercised through the real bronze path (graft.sources.Ingest).
       import org.apache.spark.sql.types._
-      val out = tmpDir("graft_s3")
+      val out = Measure.tempDir("graft_s3")
       T(s, dir, "region").coalesce(1).write.mode("overwrite")
         .option("header", "true").csv(s"$out/csv")
       graft.sources.Tables.ensureDatabase(s, "graft_w")

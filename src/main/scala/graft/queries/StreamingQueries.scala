@@ -1,19 +1,22 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
+import graft.streaming.AvailableNow
+import graft.tools.Measure
 import Registry.T
 
 /** Structured-Streaming queries (SURVEY §2.9 ST1-ST4 + beyond-parity
   * event-time windowing and custom state): each stages files into a temp
-  * landing dir, runs a bounded `Trigger.AvailableNow` stream, and returns
-  * a deterministic batch view of the sink for the DuckDB compare.
+  * landing dir ([[Measure.tempDir]], removed at JVM exit), drains it
+  * through the one bounded harness, [[AvailableNow]], and returns a
+  * deterministic batch view of the sink for the DuckDB compare. Sink
+  * gates (memory, parquet) use [[AvailableNow.run]]; `foreachBatch`
+  * gates use [[AvailableNow.eachBatch]], so their batch bodies read each
+  * micro-batch once and run in the gate's own session `s`.
   */
 object StreamingQueries {
-
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   // events.ts (nanos) → exact epoch seconds on the DuckDB side.
   private val tsSecSql = "CAST(floor(date_part('epoch', ts)) AS BIGINT)"
@@ -27,7 +30,7 @@ object StreamingQueries {
   private def streamCdcScd2(s: org.apache.spark.sql.SparkSession, dir: String,
       tag: String): org.apache.spark.sql.DataFrame = {
     import graft.operators.Scd2
-    val base = tmp(s"graft_$tag")
+    val base = Measure.tempDir(s"graft_$tag")
     val src = s"$base/in"; val chk = s"$base/chk"
     s.sql(s"CREATE DATABASE IF NOT EXISTS graft_$tag")
     s.sql(s"DROP TABLE IF EXISTS graft_$tag.dim")
@@ -45,28 +48,17 @@ object StreamingQueries {
     shape(o.filter(col("o_orderkey") % 10 < 8),
         col("o_orderstatus"), col("o_orderdate"))
       .write.mode("overwrite").saveAsTable(s"graft_$tag.dim")
-    def runOnce(): Unit = {
-      val q = s.readStream
-        .schema("order_id STRING, status STRING, total DECIMAL(12,2), " +
-          "effective_start_date TIMESTAMP, effective_end_date TIMESTAMP, " +
-          "is_current BOOLEAN")
-        .parquet(src)
-        .writeStream
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            val sp = batch.sparkSession
-            val merged = Scd2.merge(sp.read.table(s"graft_$tag.dim"), batch,
-                Seq("order_id"), Seq("status", "total"))
-              .localCheckpoint(true)
-            merged.write.mode("overwrite").saveAsTable(s"graft_$tag.dim")
-          }
-        }
-        .start()
-      q.awaitTermination()
-    }
+    def runOnce(): Unit =
+      AvailableNow.eachBatch(s.readStream
+          .schema("order_id STRING, status STRING, total DECIMAL(12,2), " +
+            "effective_start_date TIMESTAMP, effective_end_date TIMESTAMP, " +
+            "is_current BOOLEAN")
+          .parquet(src), chk) { (batch, _) =>
+        val merged = Scd2.merge(s.read.table(s"graft_$tag.dim"), batch,
+            Seq("order_id"), Seq("status", "total"))
+          .localCheckpoint(true)
+        merged.write.mode("overwrite").saveAsTable(s"graft_$tag.dim")
+      }
     shape(o.filter(col("o_orderkey") % 2 === 0),
         when(col("o_orderkey") % 6 === 0, lit("X"))
           .otherwise(col("o_orderstatus")),
@@ -153,23 +145,19 @@ object StreamingQueries {
       // ST1-ST4: incremental file pickup, append sink, checkpoint,
       // AvailableNow. Two staged batches with one checkpoint: the second
       // run must process ONLY the new file (exactly-once incremental).
-      val base = tmp("graft_st1")
+      val base = Measure.tempDir("graft_st1")
       val src = s"$base/in"; val out = s"$base/out"; val chk = s"$base/chk"
       val nation = T(s, dir, "nation")
       nation.write.mode("append").parquet(src)
-      def runOnce(): Unit = {
-        val q = s.readStream
+      def runOnce(): Unit =
+        AvailableNow.run(s.readStream
           .schema("n_nationkey INT, n_name STRING, n_regionkey INT")
           .parquet(src)
           .writeStream
           .format("parquet")
           .option("checkpointLocation", chk)
           .option("path", out)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .outputMode("append"))
       runOnce()
       nation.write.mode("append").parquet(src) // second batch lands
       runOnce()
@@ -182,10 +170,10 @@ object StreamingQueries {
       // Beyond-parity ST6: watermark + tumbling event-time window.
       // Complete mode to a memory sink so every window is emitted
       // deterministically regardless of final watermark position.
-      val base = tmp("graft_st2")
+      val base = Measure.tempDir("graft_st2")
       val src = s"$base/in"
       T(s, dir, "events").write.mode("append").parquet(src)
-      val q = s.readStream
+      AvailableNow.run(s.readStream
         .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
         .parquet(src)
         // ts arrives as nanos-since-epoch (nanosAsLong); truncate to micros.
@@ -196,10 +184,7 @@ object StreamingQueries {
         .writeStream
         .format("memory")
         .queryName("graft_st2_counts")
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode("complete"))
       s.table("graft_st2_counts")
         .select(col("window.start").as("window_start"), col("event_type"), col("cnt"))
         .orderBy("window_start", "event_type")
@@ -213,10 +198,10 @@ object StreamingQueries {
       // gap. Complete mode to a memory sink for a deterministic final
       // state; the oracle replays the same gap chaining in SQL over
       // exact integer microseconds.
-      val base = tmp("graft_st4")
+      val base = Measure.tempDir("graft_st4")
       val src = s"$base/in"
       T(s, dir, "events").write.mode("append").parquet(src)
-      val q = s.readStream
+      AvailableNow.run(s.readStream
         .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
         .parquet(src)
         // nanos-since-epoch (nanosAsLong) → micros timestamp.
@@ -227,10 +212,7 @@ object StreamingQueries {
         .writeStream
         .format("memory")
         .queryName("graft_st4_sessions")
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode("complete"))
       s.table("graft_st4_sessions")
         .select(col("user_id"),
           unix_micros(col("session_window.start")).as("session_start_us"),
@@ -260,7 +242,7 @@ object StreamingQueries {
       // state instead of buffering streams forever (the 100 TB
       // requirement for an unbounded join). AvailableNow over one
       // staged batch emits every qualifying pair exactly once.
-      val base = tmp("graft_st5")
+      val base = Measure.tempDir("graft_st5")
       val src = s"$base/in"
       T(s, dir, "events").write.mode("append").parquet(src)
       def stream() = s.readStream
@@ -275,7 +257,7 @@ object StreamingQueries {
         .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
           col("ts").as("v_ts"))
         .withWatermark("v_ts", "1 hour")
-      val q = clicks.join(views,
+      AvailableNow.run(clicks.join(views,
         col("c_user") === col("v_user") &&
           col("v_ts") >= col("c_ts") - expr("INTERVAL 30 MINUTES") &&
           col("v_ts") <= col("c_ts"))
@@ -283,10 +265,7 @@ object StreamingQueries {
         .writeStream
         .format("memory")
         .queryName("graft_st5_pairs")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode("append"))
       s.table("graft_st5_pairs").orderBy("click_id", "view_id")
     }, Some("""SELECT c.event_id AS click_id, v.event_id AS view_id,
               |  c.user_id
@@ -305,12 +284,12 @@ object StreamingQueries {
       // watermark passes an id's event time (at scale the horizon is
       // the real duplicate window, here generous so the bounded run is
       // exact). Output equals the original events exactly once.
-      val base = tmp("graft_st6")
+      val base = Measure.tempDir("graft_st6")
       val src = s"$base/in"
       val ev = T(s, dir, "events")
       ev.write.mode("append").parquet(src)
       ev.write.mode("append").parquet(src) // duplicate copy lands
-      val q = s.readStream
+      AvailableNow.run(s.readStream
         .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
         .parquet(src)
         .withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -322,10 +301,7 @@ object StreamingQueries {
         .writeStream
         .format("memory")
         .queryName("graft_st6_dedup")
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode("complete"))
       s.table("graft_st6_dedup").orderBy("event_type")
     }, Some("""SELECT event_type, count(*) AS cnt,
               |  CAST(SUM(user_id) AS BIGINT) AS user_id_checksum
@@ -340,38 +316,27 @@ object StreamingQueries {
       // latest-per-user into the target via keepLatest and rewrites.
       // Final table = latest event per user over A ∪ B.
       import graft.operators.Windowed
-      val base = tmp("graft_st7")
+      val base = Measure.tempDir("graft_st7")
       val src = s"$base/in"; val chk = s"$base/chk"
       s.sql("CREATE DATABASE IF NOT EXISTS graft_st7")
       s.sql("DROP TABLE IF EXISTS graft_st7.user_latest")
       val ev = T(s, dir, "events")
         .select(col("event_id"), col("user_id"),
           expr("ts div 1000000000").cast("long").as("ts_sec"))
-      def runOnce(): Unit = {
-        val q = s.readStream
-          .schema("event_id BIGINT, user_id BIGINT, ts_sec BIGINT")
-          .parquet(src)
-          .writeStream
-          .option("checkpointLocation", chk)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              val sp = batch.sparkSession
-              val existing =
-                if (sp.catalog.tableExists("graft_st7.user_latest"))
-                  sp.read.table("graft_st7.user_latest")
-                else batch.limit(0)
-              val merged = Windowed.keepLatest(
-                existing.unionByName(batch), Seq("user_id"),
-                col("ts_sec"), tieBreak = Seq(col("event_id")))
-                .localCheckpoint(true) // materialize BEFORE overwriting the source table
-              merged.write.mode("overwrite").saveAsTable("graft_st7.user_latest")
-            }
-          }
-          .start()
-        q.awaitTermination()
-      }
+      def runOnce(): Unit =
+        AvailableNow.eachBatch(s.readStream
+            .schema("event_id BIGINT, user_id BIGINT, ts_sec BIGINT")
+            .parquet(src), chk) { (batch, _) =>
+          val existing =
+            if (s.catalog.tableExists("graft_st7.user_latest"))
+              s.read.table("graft_st7.user_latest")
+            else batch.limit(0)
+          val merged = Windowed.keepLatest(
+            existing.unionByName(batch), Seq("user_id"),
+            col("ts_sec"), tieBreak = Seq(col("event_id")))
+            .localCheckpoint(true) // materialize BEFORE overwriting the source table
+          merged.write.mode("overwrite").saveAsTable("graft_st7.user_latest")
+        }
       ev.write.mode("append").parquet(src) // batch A
       runOnce()
       ev.filter(col("user_id") % 2 === 0)  // batch B: newer events, even users
@@ -399,7 +364,7 @@ object StreamingQueries {
       // Custom per-key state via KeyValueGroupedDataset.mapGroupsWithState:
       // running per-user event counts + value sum (decimal-exact).
       import s.implicits._
-      val base = tmp("graft_st3")
+      val base = Measure.tempDir("graft_st3")
       val src = s"$base/in"
       T(s, dir, "events").write.mode("append").parquet(src)
       val updateFn = (userId: Long, rows: Iterator[(Long, Double)],
@@ -410,7 +375,7 @@ object StreamingQueries {
         state.update((n, cents))
         (userId, n, cents)
       }
-      val q = s.readStream
+      AvailableNow.run(s.readStream
         .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
         .parquet(src)
         .select(col("user_id"), col("event_id"), col("value"))
@@ -422,10 +387,7 @@ object StreamingQueries {
         .writeStream
         .format("memory")
         .queryName("graft_st3_state")
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode("update"))
       s.table("graft_st3_state").orderBy("user_id")
     }, Some("""SELECT user_id, count(*) AS n_events,
               |  CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
@@ -437,7 +399,7 @@ object StreamingQueries {
       // unchanged (same code path as batch — no streaming-specific
       // rewrite). Per-micro-batch the stream scores documents and the
       // sink aggregates keep/drop counts per first failure reason.
-      val base = tmp("graft_st8")
+      val base = Measure.tempDir("graft_st8")
       val src = s"$base/in"
       T(s, dir, "documents").select("doc_id", "text")
         .write.mode("append").parquet(src)
@@ -447,15 +409,12 @@ object StreamingQueries {
         .select(col("keep"),
           coalesce(try_element_at(col("fail_reasons"), lit(1)), lit("none"))
             .as("first_reason"))
-      val q = scored
+      AvailableNow.run(scored
         .groupBy("keep", "first_reason").agg(count(lit(1)).as("cnt"))
         .writeStream
         .format("memory")
         .queryName("graft_st8_counts")
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode("complete"))
       s.table("graft_st8_counts").orderBy("keep", "first_reason")
     }, Some(s"""WITH st AS (SELECT doc_id,
                |    len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
@@ -487,14 +446,14 @@ object StreamingQueries {
       // broadcasts when small), no watermark, no state store — the
       // dimension-enrichment shape of a streaming bronze→silver hop.
       // The profile's money total sums in exact milli-integers.
-      val base = tmp("graft_st9")
+      val base = Measure.tempDir("graft_st9")
       val src = s"$base/in"
       T(s, dir, "events").write.mode("append").parquet(src)
       val profile = T(s, dir, "events")
         .groupBy("user_id")
         .agg(count(lit(1)).as("user_event_count"),
           sum(expr("CAST(round(value * 1000) AS BIGINT)")).as("_vm"))
-      val q = s.readStream
+      AvailableNow.run(s.readStream
         .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
         .parquet(src)
         .filter(col("event_type") === "purchase")
@@ -506,10 +465,7 @@ object StreamingQueries {
         .writeStream
         .format("memory")
         .queryName("graft_st9_enriched")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode("append"))
       s.table("graft_st9_enriched").orderBy("event_id")
     }, Some("""WITH prof AS (SELECT user_id, count(*) AS user_event_count,
               |    SUM(CAST(round(value * 1000) AS BIGINT)) AS vm
@@ -528,10 +484,10 @@ object StreamingQueries {
       // sketch estimate is engine-specific, so the gate joins the
       // streamed result to the BATCH exact per window and emits the
       // within-bound verdict (a22/w10 pattern, streaming edition).
-      val base = tmp("graft_st10")
+      val base = Measure.tempDir("graft_st10")
       val src = s"$base/in"
       T(s, dir, "events").write.mode("append").parquet(src)
-      val q = s.readStream
+      AvailableNow.run(s.readStream
         .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
         .parquet(src)
         .withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -542,10 +498,7 @@ object StreamingQueries {
         .writeStream
         .format("memory")
         .queryName("graft_st10_sketches")
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode("complete"))
       // Window keys as epoch-second longs on both sides: Spark's
       // tumbling window aligns to the epoch, so start = ts div 21600.
       val streamed = s.table("graft_st10_sketches")
@@ -579,7 +532,7 @@ object StreamingQueries {
       // old version (is_current=false, end = new start) AND insert the
       // new one, under the same checkpoint (B processes only B's file).
       import graft.operators.Scd2
-      val base = tmp("graft_st11")
+      val base = Measure.tempDir("graft_st11")
       val src = s"$base/in"; val chk = s"$base/chk"
       s.sql("CREATE DATABASE IF NOT EXISTS graft_st11")
       s.sql("DROP TABLE IF EXISTS graft_st11.dim_order")
@@ -588,33 +541,22 @@ object StreamingQueries {
         col("o_orderstatus").as("status"),
         col("o_totalprice").cast("decimal(12,2)").as("total"),
         col("o_orderdate").cast("date").cast("timestamp").as("effective_start_date"))
-      def runOnce(): Unit = {
-        val q = s.readStream
-          .schema("order_id STRING, status STRING, total DECIMAL(12,2), " +
-            "effective_start_date TIMESTAMP")
-          .parquet(src)
-          .writeStream
-          .option("checkpointLocation", chk)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              val sp = batch.sparkSession
-              val dim = batch
-                .withColumn("effective_end_date", lit(null).cast("timestamp"))
-                .withColumn("is_current", lit(true))
-              val merged =
-                if (sp.catalog.tableExists("graft_st11.dim_order"))
-                  Scd2.merge(sp.read.table("graft_st11.dim_order"), dim,
-                    keyCols = Seq("order_id"), trackedCols = Seq("status"))
-                    .localCheckpoint(true) // materialize BEFORE the overwrite
-                else dim
-              merged.write.mode("overwrite").saveAsTable("graft_st11.dim_order")
-            }
-          }
-          .start()
-        q.awaitTermination()
-      }
+      def runOnce(): Unit =
+        AvailableNow.eachBatch(s.readStream
+            .schema("order_id STRING, status STRING, total DECIMAL(12,2), " +
+              "effective_start_date TIMESTAMP")
+            .parquet(src), chk) { (batch, _) =>
+          val dim = batch
+            .withColumn("effective_end_date", lit(null).cast("timestamp"))
+            .withColumn("is_current", lit(true))
+          val merged =
+            if (s.catalog.tableExists("graft_st11.dim_order"))
+              Scd2.merge(s.read.table("graft_st11.dim_order"), dim,
+                keyCols = Seq("order_id"), trackedCols = Seq("status"))
+                .localCheckpoint(true) // materialize BEFORE the overwrite
+            else dim
+          merged.write.mode("overwrite").saveAsTable("graft_st11.dim_order")
+        }
       dimA.write.mode("append").parquet(src) // batch A: first load
       runOnce()
       dimA.filter(col("order_id").cast("long") % 3 === 0) // batch B: changes
@@ -665,7 +607,7 @@ object StreamingQueries {
       // with the evolved schema, while batch 1's rows read NULL for the
       // new column.
       import org.apache.spark.sql.types._
-      val base = tmp("graft_st12")
+      val base = Measure.tempDir("graft_st12")
       val src = s"$base/in"; val chk = s"$base/chk"
       s.sql("CREATE DATABASE IF NOT EXISTS graft_st12")
       s.sql("DROP TABLE IF EXISTS graft_st12.bronze_nation")
@@ -710,7 +652,7 @@ object StreamingQueries {
       // increment doc fuzzy-duplicates the standing corpus", which is
       // the autoloader-ingest guarantee a curation pipeline needs.
       import graft.llm.Dedup
-      val base = tmp("graft_st13")
+      val base = Measure.tempDir("graft_st13")
       val src = s"$base/in"; val chk = s"$base/chk"
       s.sql("CREATE DATABASE IF NOT EXISTS graft_st13")
       s.sql("DROP TABLE IF EXISTS graft_st13.accepted_docs")
@@ -718,39 +660,28 @@ object StreamingQueries {
       def bandsOf(df: org.apache.spark.sql.DataFrame) =
         Dedup.lshBands(Dedup.minhashSignaturesNative(
           Dedup.shingleArray(df, "doc_id", "text", 3), "doc_id", 8), "doc_id", 8, 2)
-      def runOnce(): Unit = {
-        val q = s.readStream
-          .schema("doc_id BIGINT, text STRING")
-          .parquet(src)
-          .writeStream
-          .option("checkpointLocation", chk)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              val sp = batch.sparkSession
-              val nb = bandsOf(batch).localCheckpoint(true)
-              val collided =
-                if (sp.catalog.tableExists("graft_st13.accepted_bands"))
-                  nb.join(sp.read.table("graft_st13.accepted_bands"),
-                    Seq("band", "band_hash"), "left_semi")
-                    .select("doc_id").distinct()
-                else nb.select("doc_id").limit(0)
-              // Materialize survivors BEFORE appending to the band table
-              // the same plan reads.
-              val kept = batch.join(collided, Seq("doc_id"), "left_anti")
-                .localCheckpoint(true)
-              val keptBands = nb.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-                .localCheckpoint(true)
-              kept.select("doc_id").write.mode("append")
-                .saveAsTable("graft_st13.accepted_docs")
-              keptBands.write.mode("append")
-                .saveAsTable("graft_st13.accepted_bands")
-            }
-          }
-          .start()
-        q.awaitTermination()
-      }
+      def runOnce(): Unit =
+        AvailableNow.eachBatch(s.readStream
+            .schema("doc_id BIGINT, text STRING")
+            .parquet(src), chk) { (batch, _) =>
+          val nb = bandsOf(batch).localCheckpoint(true)
+          val collided =
+            if (s.catalog.tableExists("graft_st13.accepted_bands"))
+              nb.join(s.read.table("graft_st13.accepted_bands"),
+                Seq("band", "band_hash"), "left_semi")
+                .select("doc_id").distinct()
+            else nb.select("doc_id").limit(0)
+          // Materialize survivors BEFORE appending to the band table
+          // the same plan reads.
+          val kept = batch.join(collided, Seq("doc_id"), "left_anti")
+            .localCheckpoint(true)
+          val keptBands = nb.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
+            .localCheckpoint(true)
+          kept.select("doc_id").write.mode("append")
+            .saveAsTable("graft_st13.accepted_docs")
+          keptBands.write.mode("append")
+            .saveAsTable("graft_st13.accepted_bands")
+        }
       // PINNED ASSUMPTION (r12 advice): the oracle is two-increment —
       // it models each increment as ONE accept/filter step. If the file
       // source split an increment across micro-batches (e.g. a global
@@ -792,7 +723,7 @@ object StreamingQueries {
       // contract): the guarantee is "no increment image near-duplicates
       // the standing corpus".
       import graft.llm.Multimodal
-      val base = tmp("graft_st14")
+      val base = Measure.tempDir("graft_st14")
       val src = s"$base/in"; val chk = s"$base/chk"
       s.sql("CREATE DATABASE IF NOT EXISTS graft_st14")
       s.sql("DROP TABLE IF EXISTS graft_st14.accepted_imgs")
@@ -804,41 +735,30 @@ object StreamingQueries {
             explode(expr("sequence(0, 3)")).as("band"))
           .select(col("doc_id"), col("phash"), col("band"),
             expr("shiftright(phash, 14 * band) & 16383").as("band_hash"))
-      def runOnce(): Unit = {
-        val q = s.readStream
-          .schema("doc_id BIGINT")
-          .parquet(src)
-          .writeStream
-          .option("checkpointLocation", chk)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              val sp = batch.sparkSession
-              val nb = bandsOf(batch).localCheckpoint(true)
-              val dropped =
-                if (sp.catalog.tableExists("graft_st14.accepted_bands"))
-                  nb.join(sp.read.table("graft_st14.accepted_bands")
-                      .withColumnRenamed("phash", "acc_phash")
-                      .withColumnRenamed("doc_id", "acc_doc_id"),
-                      Seq("band", "band_hash"))
-                    .filter(bit_count(col("phash")
-                      .bitwiseXOR(col("acc_phash"))) <= 6)
-                    .select("doc_id").distinct()
-                else nb.select("doc_id").limit(0)
-              val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
-                .localCheckpoint(true)
-              val keptBands = nb.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-                .localCheckpoint(true)
-              kept.select("doc_id").write.mode("append")
-                .saveAsTable("graft_st14.accepted_imgs")
-              keptBands.write.mode("append")
-                .saveAsTable("graft_st14.accepted_bands")
-            }
-          }
-          .start()
-        q.awaitTermination()
-      }
+      def runOnce(): Unit =
+        AvailableNow.eachBatch(s.readStream
+            .schema("doc_id BIGINT")
+            .parquet(src), chk) { (batch, _) =>
+          val nb = bandsOf(batch).localCheckpoint(true)
+          val dropped =
+            if (s.catalog.tableExists("graft_st14.accepted_bands"))
+              nb.join(s.read.table("graft_st14.accepted_bands")
+                  .withColumnRenamed("phash", "acc_phash")
+                  .withColumnRenamed("doc_id", "acc_doc_id"),
+                  Seq("band", "band_hash"))
+                .filter(bit_count(col("phash")
+                  .bitwiseXOR(col("acc_phash"))) <= 6)
+                .select("doc_id").distinct()
+            else nb.select("doc_id").limit(0)
+          val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
+            .localCheckpoint(true)
+          val keptBands = nb.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
+            .localCheckpoint(true)
+          kept.select("doc_id").write.mode("append")
+            .saveAsTable("graft_st14.accepted_imgs")
+          keptBands.write.mode("append")
+            .saveAsTable("graft_st14.accepted_bands")
+        }
       // Split so the verify filter DISCRIMINATES: increment 1 takes ids
       // ≡ 0,2 (mod 8), i.e. two members of every EVEN seed quadruple.
       // Increment 2 then carries (a) their same-seed partners — dropped
@@ -888,7 +808,7 @@ object StreamingQueries {
       // never re-encoded or re-decoded. Same one-micro-batch-per-
       // increment pin as st13/st14.
       import graft.llm.Multimodal
-      val base = tmp("graft_st15")
+      val base = Measure.tempDir("graft_st15")
       val src = s"$base/in"; val chk = s"$base/chk"
       s.sql("CREATE DATABASE IF NOT EXISTS graft_st15")
       s.sql("DROP TABLE IF EXISTS graft_st15.accepted_docs")
@@ -904,54 +824,43 @@ object StreamingQueries {
             expr("""md5(concat_ws(',', transform(slice(samples, 8 * band + 1, 8),
                    |  x -> CAST((x + 32768) DIV 1024 AS STRING))))""".stripMargin)
               .as("band_hash"))
-      def runOnce(): Unit = {
-        val q = s.readStream
-          .schema("doc_id BIGINT")
-          .parquet(src)
-          .writeStream
-          .option("checkpointLocation", chk)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              val sp = batch.sparkSession
-              val decoded = decodedOf(batch).localCheckpoint(true)
-              val nb = bandsOf(decoded).localCheckpoint(true)
-              val dropped =
-                if (sp.catalog.tableExists("graft_st15.accepted_bands"))
-                  nb.join(sp.read.table("graft_st15.accepted_bands")
-                      .withColumnRenamed("doc_id", "acc_doc_id"),
-                      Seq("band", "band_hash"))
-                    .select("doc_id", "acc_doc_id").distinct()
-                    .join(decoded.select(col("doc_id"), col("samples").as("sn")),
-                      "doc_id")
-                    .join(sp.read.table("graft_st15.accepted_audio")
-                        .select(col("doc_id").as("acc_doc_id"),
-                          col("samples").as("sa")),
-                      "acc_doc_id")
-                    .filter(expr(
-                      """aggregate(zip_with(sn, sa, (x, y) -> CAST(abs(x - y) AS BIGINT)),
-                        |  CAST(0 AS BIGINT), (a, v) -> a + v) DIV 128 <= 16""".stripMargin))
-                    .select("doc_id").distinct()
-                else nb.select("doc_id").limit(0)
-              val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
-                .localCheckpoint(true)
-              val keptBands = nb.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-                .localCheckpoint(true)
-              val keptAudio = decoded.select("doc_id", "samples")
-                .join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-                .localCheckpoint(true)
-              kept.select("doc_id").write.mode("append")
-                .saveAsTable("graft_st15.accepted_docs")
-              keptBands.write.mode("append")
-                .saveAsTable("graft_st15.accepted_bands")
-              keptAudio.write.mode("append")
-                .saveAsTable("graft_st15.accepted_audio")
-            }
-          }
-          .start()
-        q.awaitTermination()
-      }
+      def runOnce(): Unit =
+        AvailableNow.eachBatch(s.readStream
+            .schema("doc_id BIGINT")
+            .parquet(src), chk) { (batch, _) =>
+          val decoded = decodedOf(batch).localCheckpoint(true)
+          val nb = bandsOf(decoded).localCheckpoint(true)
+          val dropped =
+            if (s.catalog.tableExists("graft_st15.accepted_bands"))
+              nb.join(s.read.table("graft_st15.accepted_bands")
+                  .withColumnRenamed("doc_id", "acc_doc_id"),
+                  Seq("band", "band_hash"))
+                .select("doc_id", "acc_doc_id").distinct()
+                .join(decoded.select(col("doc_id"), col("samples").as("sn")),
+                  "doc_id")
+                .join(s.read.table("graft_st15.accepted_audio")
+                    .select(col("doc_id").as("acc_doc_id"),
+                      col("samples").as("sa")),
+                  "acc_doc_id")
+                .filter(expr(
+                  """aggregate(zip_with(sn, sa, (x, y) -> CAST(abs(x - y) AS BIGINT)),
+                    |  CAST(0 AS BIGINT), (a, v) -> a + v) DIV 128 <= 16""".stripMargin))
+                .select("doc_id").distinct()
+            else nb.select("doc_id").limit(0)
+          val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
+            .localCheckpoint(true)
+          val keptBands = nb.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
+            .localCheckpoint(true)
+          val keptAudio = decoded.select("doc_id", "samples")
+            .join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
+            .localCheckpoint(true)
+          kept.select("doc_id").write.mode("append")
+            .saveAsTable("graft_st15.accepted_docs")
+          keptBands.write.mode("append")
+            .saveAsTable("graft_st15.accepted_bands")
+          keptAudio.write.mode("append")
+            .saveAsTable("graft_st15.accepted_audio")
+        }
       val docs = T(s, dir, "documents").select(col("doc_id"))
       docs.filter(col("doc_id") % 8 === 0 || col("doc_id") % 8 === 2)
         .coalesce(1).write.mode("append").parquet(src)
@@ -997,7 +906,7 @@ object StreamingQueries {
       // per-increment pin as st13-st15 (maxFilesPerTrigger must stay
       // unset on these sources).
       import graft.llm.Multimodal
-      val base = tmp("graft_st16")
+      val base = Measure.tempDir("graft_st16")
       val src = s"$base/in"; val chk = s"$base/chk"
       s.sql("CREATE DATABASE IF NOT EXISTS graft_st16")
       s.sql("DROP TABLE IF EXISTS graft_st16.accepted_docs")
@@ -1013,56 +922,45 @@ object StreamingQueries {
           .select(col("doc_id"),
             (col("frame_idx") * 4 + col("b")).as("band"),
             expr("shiftright(phash, 14 * b) & 16383").as("band_hash"))
-      def runOnce(): Unit = {
-        val q = s.readStream
-          .schema("doc_id BIGINT")
-          .parquet(src)
-          .writeStream
-          .option("checkpointLocation", chk)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              val sp = batch.sparkSession
-              val fh = hashesOf(batch).localCheckpoint(true)
-              val nb = bandsOf(fh).localCheckpoint(true)
-              val dropped =
-                if (sp.catalog.tableExists("graft_st16.accepted_bands"))
-                  nb.join(sp.read.table("graft_st16.accepted_bands")
-                      .withColumnRenamed("doc_id", "acc_doc_id"),
-                      Seq("band", "band_hash"))
-                    .select("doc_id", "acc_doc_id").distinct()
-                    .join(fh.select(col("doc_id"), col("frame_idx"),
-                      col("phash").as("ph_n")), "doc_id")
-                    .join(sp.read.table("graft_st16.accepted_hashes")
-                        .select(col("doc_id").as("acc_doc_id"), col("frame_idx"),
-                          col("phash").as("ph_a")),
-                      Seq("acc_doc_id", "frame_idx"))
-                    .groupBy("doc_id", "acc_doc_id")
-                    .agg(sum(bit_count(col("ph_n").bitwiseXOR(col("ph_a"))))
-                      .as("hamming"))
-                    .filter(col("hamming") <= 6)
-                    .select("doc_id").distinct()
-                else nb.select("doc_id").limit(0)
-              val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
-                .localCheckpoint(true)
-              val keptBands = nb.select("doc_id", "band", "band_hash")
-                .join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-                .localCheckpoint(true)
-              val keptHashes = fh
-                .join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-                .localCheckpoint(true)
-              kept.select("doc_id").write.mode("append")
-                .saveAsTable("graft_st16.accepted_docs")
-              keptBands.write.mode("append")
-                .saveAsTable("graft_st16.accepted_bands")
-              keptHashes.write.mode("append")
-                .saveAsTable("graft_st16.accepted_hashes")
-            }
-          }
-          .start()
-        q.awaitTermination()
-      }
+      def runOnce(): Unit =
+        AvailableNow.eachBatch(s.readStream
+            .schema("doc_id BIGINT")
+            .parquet(src), chk) { (batch, _) =>
+          val fh = hashesOf(batch).localCheckpoint(true)
+          val nb = bandsOf(fh).localCheckpoint(true)
+          val dropped =
+            if (s.catalog.tableExists("graft_st16.accepted_bands"))
+              nb.join(s.read.table("graft_st16.accepted_bands")
+                  .withColumnRenamed("doc_id", "acc_doc_id"),
+                  Seq("band", "band_hash"))
+                .select("doc_id", "acc_doc_id").distinct()
+                .join(fh.select(col("doc_id"), col("frame_idx"),
+                  col("phash").as("ph_n")), "doc_id")
+                .join(s.read.table("graft_st16.accepted_hashes")
+                    .select(col("doc_id").as("acc_doc_id"), col("frame_idx"),
+                      col("phash").as("ph_a")),
+                  Seq("acc_doc_id", "frame_idx"))
+                .groupBy("doc_id", "acc_doc_id")
+                .agg(sum(bit_count(col("ph_n").bitwiseXOR(col("ph_a"))))
+                  .as("hamming"))
+                .filter(col("hamming") <= 6)
+                .select("doc_id").distinct()
+            else nb.select("doc_id").limit(0)
+          val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
+            .localCheckpoint(true)
+          val keptBands = nb.select("doc_id", "band", "band_hash")
+            .join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
+            .localCheckpoint(true)
+          val keptHashes = fh
+            .join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
+            .localCheckpoint(true)
+          kept.select("doc_id").write.mode("append")
+            .saveAsTable("graft_st16.accepted_docs")
+          keptBands.write.mode("append")
+            .saveAsTable("graft_st16.accepted_bands")
+          keptHashes.write.mode("append")
+            .saveAsTable("graft_st16.accepted_hashes")
+        }
       val docs = T(s, dir, "documents").select(col("doc_id"))
       docs.filter(col("doc_id") % 8 === 0 || col("doc_id") % 8 === 2)
         .coalesce(1).write.mode("append").parquet(src)
@@ -1108,7 +1006,7 @@ object StreamingQueries {
       // recomputed. Same one-coalesced-file-per-increment pin as
       // st13–st16 (maxFilesPerTrigger must stay unset on this source).
       import graft.llm.{Dedup, Multimodal}
-      val base = tmp("graft_st17")
+      val base = Measure.tempDir("graft_st17")
       val src = s"$base/in"; val chk = s"$base/chk"
       s.sql("CREATE DATABASE IF NOT EXISTS graft_st17")
       s.sql("DROP TABLE IF EXISTS graft_st17.accepted_docs")
@@ -1124,63 +1022,51 @@ object StreamingQueries {
             explode(expr("sequence(0, 3)")).as("band"))
           .select(col("doc_id"), col("phash"), col("band"),
             expr("shiftright(phash, 14 * band) & 16383").as("band_hash"))
-      def runOnce(): Unit = {
-        val q = s.readStream
-          .schema("doc_id BIGINT, text STRING")
-          .parquet(src)
-          .writeStream
-          .option("checkpointLocation", chk)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              val sp = batch.sparkSession
-              // The two modality band builds are independent — overlap
-              // their eager checkpoints (guide §2.6) per micro-batch.
-              val bandFrames = Registry.inParallel(
-                () => textBandsOf(batch).localCheckpoint(true),
-                () => imageBandsOf(batch).localCheckpoint(true))
-              val tb = bandFrames(0)
-              val ib = bandFrames(1)
-              val droppedText =
-                if (sp.catalog.tableExists("graft_st17.accepted_tbands"))
-                  tb.join(sp.read.table("graft_st17.accepted_tbands"),
-                    Seq("band", "band_hash"), "left_semi")
-                    .select("doc_id")
-                else tb.select("doc_id").limit(0)
-              val droppedImage =
-                if (sp.catalog.tableExists("graft_st17.accepted_ibands"))
-                  ib.join(sp.read.table("graft_st17.accepted_ibands")
-                      .withColumnRenamed("phash", "acc_phash")
-                      .withColumnRenamed("doc_id", "acc_doc_id"),
-                      Seq("band", "band_hash"))
-                    .filter(bit_count(col("phash")
-                      .bitwiseXOR(col("acc_phash"))) <= 6)
-                    .select("doc_id")
-                else ib.select("doc_id").limit(0)
-              val dropped = droppedText.unionByName(droppedImage).distinct()
-              val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
-                .localCheckpoint(true)
-              // keptT/keptI feed exactly one consumer each (the table
-              // append) over already-checkpointed inputs — materializing
-              // them first was one extra eager job per micro-batch.
-              val keptT = tb.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-              val keptI = ib.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-              // Three independent sinks over checkpointed inputs —
-              // overlap the write jobs (guide §2.6).
-              Registry.inParallel(
-                () => kept.select("doc_id").write.mode("append")
-                  .saveAsTable("graft_st17.accepted_docs"),
-                () => keptT.write.mode("append")
-                  .saveAsTable("graft_st17.accepted_tbands"),
-                () => keptI.write.mode("append")
-                  .saveAsTable("graft_st17.accepted_ibands"))
-              ()
-            }
-          }
-          .start()
-        q.awaitTermination()
-      }
+      def runOnce(): Unit =
+        AvailableNow.eachBatch(s.readStream
+            .schema("doc_id BIGINT, text STRING")
+            .parquet(src), chk) { (batch, _) =>
+          // The two modality band builds are independent — overlap
+          // their eager checkpoints (guide §2.6) per micro-batch.
+          val bandFrames = Registry.inParallel(
+            () => textBandsOf(batch).localCheckpoint(true),
+            () => imageBandsOf(batch).localCheckpoint(true))
+          val tb = bandFrames(0)
+          val ib = bandFrames(1)
+          val droppedText =
+            if (s.catalog.tableExists("graft_st17.accepted_tbands"))
+              tb.join(s.read.table("graft_st17.accepted_tbands"),
+                Seq("band", "band_hash"), "left_semi")
+                .select("doc_id")
+            else tb.select("doc_id").limit(0)
+          val droppedImage =
+            if (s.catalog.tableExists("graft_st17.accepted_ibands"))
+              ib.join(s.read.table("graft_st17.accepted_ibands")
+                  .withColumnRenamed("phash", "acc_phash")
+                  .withColumnRenamed("doc_id", "acc_doc_id"),
+                  Seq("band", "band_hash"))
+                .filter(bit_count(col("phash")
+                  .bitwiseXOR(col("acc_phash"))) <= 6)
+                .select("doc_id")
+            else ib.select("doc_id").limit(0)
+          val dropped = droppedText.unionByName(droppedImage).distinct()
+          val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
+            .localCheckpoint(true)
+          // keptT/keptI feed exactly one consumer each (the table
+          // append) over already-checkpointed inputs — materializing
+          // them first was one extra eager job per micro-batch.
+          val keptT = tb.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
+          val keptI = ib.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
+          // Three independent sinks over checkpointed inputs —
+          // overlap the write jobs (guide §2.6).
+          Registry.inParallel(
+            () => kept.select("doc_id").write.mode("append")
+              .saveAsTable("graft_st17.accepted_docs"),
+            () => keptT.write.mode("append")
+              .saveAsTable("graft_st17.accepted_tbands"),
+            () => keptI.write.mode("append")
+              .saveAsTable("graft_st17.accepted_ibands"))
+        }
       val docs = T(s, dir, "documents").select(col("doc_id"), col("text"))
       docs.filter(col("doc_id") % 8 === 0 || col("doc_id") % 8 === 2)
         .coalesce(1).write.mode("append").parquet(src)
@@ -1224,7 +1110,7 @@ object StreamingQueries {
       // re-normalized or re-assigned. Same one-coalesced-file-per-
       // increment pin as st13–st17.
       import graft.llm.Similarity
-      val base = tmp("graft_st18")
+      val base = Measure.tempDir("graft_st18")
       val src = s"$base/in"; val chk = s"$base/chk"
       s.sql("CREATE DATABASE IF NOT EXISTS graft_st18")
       s.sql("DROP TABLE IF EXISTS graft_st18.accepted_docs")
@@ -1239,44 +1125,32 @@ object StreamingQueries {
           .withColumn("nrm", sqrt(graft.plans.DotProduct(col("vv"), col("vv"))))
           .select(col("vec_id"), col("cluster_id"),
             expr("transform(vv, e -> e / nrm)").as("uv"))
-      def runOnce(): Unit = {
-        val q = s.readStream
-          .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-          .parquet(src)
-          .writeStream
-          .option("checkpointLocation", chk)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              val sp = batch.sparkSession
-              val nv = unitOf(batch).localCheckpoint(true)
-              val dropped =
-                if (sp.catalog.tableExists("graft_st18.accepted_vecs"))
-                  nv.join(sp.read.table("graft_st18.accepted_vecs")
-                      .select(col("cluster_id"), col("uv").as("acc_uv")),
-                      Seq("cluster_id"))
-                    .filter(graft.plans.DotProduct(col("uv"), col("acc_uv"))
-                      >= 0.35)
-                    .select("vec_id").distinct()
-                else nv.select("vec_id").limit(0)
-              val kept = batch.select("vec_id")
-                .join(dropped, Seq("vec_id"), "left_anti")
-                .localCheckpoint(true)
-              val keptVecs = nv.join(kept, Seq("vec_id"), "left_semi")
-              // Two independent sinks over checkpointed inputs —
-              // overlap the write jobs (guide §2.6).
-              Registry.inParallel(
-                () => kept.write.mode("append")
-                  .saveAsTable("graft_st18.accepted_docs"),
-                () => keptVecs.write.mode("append")
-                  .saveAsTable("graft_st18.accepted_vecs"))
-              ()
-            }
-          }
-          .start()
-        q.awaitTermination()
-      }
+      def runOnce(): Unit =
+        AvailableNow.eachBatch(s.readStream
+            .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
+            .parquet(src), chk) { (batch, _) =>
+          val nv = unitOf(batch).localCheckpoint(true)
+          val dropped =
+            if (s.catalog.tableExists("graft_st18.accepted_vecs"))
+              nv.join(s.read.table("graft_st18.accepted_vecs")
+                  .select(col("cluster_id"), col("uv").as("acc_uv")),
+                  Seq("cluster_id"))
+                .filter(graft.plans.DotProduct(col("uv"), col("acc_uv"))
+                  >= 0.35)
+                .select("vec_id").distinct()
+            else nv.select("vec_id").limit(0)
+          val kept = batch.select("vec_id")
+            .join(dropped, Seq("vec_id"), "left_anti")
+            .localCheckpoint(true)
+          val keptVecs = nv.join(kept, Seq("vec_id"), "left_semi")
+          // Two independent sinks over checkpointed inputs —
+          // overlap the write jobs (guide §2.6).
+          Registry.inParallel(
+            () => kept.write.mode("append")
+              .saveAsTable("graft_st18.accepted_docs"),
+            () => keptVecs.write.mode("append")
+              .saveAsTable("graft_st18.accepted_vecs"))
+        }
       val emb = T(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       emb.filter(col("vec_id") % 8 === 0 || col("vec_id") % 8 === 2)
         .coalesce(1).write.mode("append").parquet(src)
@@ -1330,7 +1204,7 @@ object StreamingQueries {
       // coalesced-file-per-increment pin as st13–st18 (maxFilesPerTrigger
       // must stay unset on this source).
       import graft.llm.Multimodal
-      val base = tmp("graft_st19")
+      val base = Measure.tempDir("graft_st19")
       val src = s"$base/in"; val chk = s"$base/chk"
       s.sql("CREATE DATABASE IF NOT EXISTS graft_st19")
       s.sql("DROP TABLE IF EXISTS graft_st19.video_frames")
@@ -1342,37 +1216,26 @@ object StreamingQueries {
         .filter(col("doc_id") % 4 === 0 && col("frame_idx").isin(1, 2))
         .select(lit("c").as("kind"), col("doc_id").as("id"),
           (col("frame_idx") - 1).as("idx"), col("phash"))
-      def runOnce(): Unit = {
-        val q = s.readStream
-          .schema("kind STRING, id BIGINT, idx INT, phash BIGINT")
-          .parquet(src)
-          .writeStream
-          .option("checkpointLocation", chk)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              val sp = batch.sparkSession
-              val vids = batch.filter(col("kind") === "v")
-                .select(col("id").as("doc_id"), col("idx").as("frame_idx"),
-                  col("phash"))
-              if (!vids.isEmpty)
-                vids.write.mode("append")
-                  .saveAsTable("graft_st19.video_frames")
-              val clips = batch.filter(col("kind") === "c")
-                .select(col("id").as("clip_id"), col("idx").as("p"),
-                  col("phash"))
-              if (!clips.isEmpty) {
-                val idx = sp.read.table("graft_st19.video_frames")
-                Multimodal.clipContainment(clips, idx, nClipFrames = 2, tau = 6)
-                  .write.mode("append")
-                  .saveAsTable("graft_st19.placements")
-              }
-            }
+      def runOnce(): Unit =
+        AvailableNow.eachBatch(s.readStream
+            .schema("kind STRING, id BIGINT, idx INT, phash BIGINT")
+            .parquet(src), chk) { (batch, _) =>
+          val vids = batch.filter(col("kind") === "v")
+            .select(col("id").as("doc_id"), col("idx").as("frame_idx"),
+              col("phash"))
+          if (!vids.isEmpty)
+            vids.write.mode("append")
+              .saveAsTable("graft_st19.video_frames")
+          val clips = batch.filter(col("kind") === "c")
+            .select(col("id").as("clip_id"), col("idx").as("p"),
+              col("phash"))
+          if (!clips.isEmpty) {
+            val idx = s.read.table("graft_st19.video_frames")
+            Multimodal.clipContainment(clips, idx, nClipFrames = 2, tau = 6)
+              .write.mode("append")
+              .saveAsTable("graft_st19.placements")
           }
-          .start()
-        q.awaitTermination()
-      }
+        }
       vidRows.filter(col("id") % 2 === 0)
         .coalesce(1).write.mode("append").parquet(src)
       runOnce() // increment 1: register the even half of the corpus
@@ -1451,7 +1314,7 @@ object StreamingQueries {
       // the dist-4 decoy must survive BOTH the length pre-filter and
       // the verify). Same one-coalesced-file-per-increment pin as
       // st13–st20.
-      val base = tmp("graft_st21")
+      val base = Measure.tempDir("graft_st21")
       val src = s"$base/in"; val chk = s"$base/chk"
       s.sql("CREATE DATABASE IF NOT EXISTS graft_st21")
       s.sql("DROP TABLE IF EXISTS graft_st21.accepted")
@@ -1463,34 +1326,23 @@ object StreamingQueries {
                |  WHEN 2 THEN concat(substring(md5(CAST(c_custkey DIV 4 AS STRING)), 1, 8), '7')
                |  ELSE concat(substring(md5(CAST(c_custkey DIV 4 AS STRING)), 1, 8), 'zzzz')
                |END""".stripMargin).as("name"))
-      def runOnce(): Unit = {
-        val q = s.readStream
-          .schema("rec_id BIGINT, name STRING")
-          .parquet(src)
-          .writeStream
-          .option("checkpointLocation", chk)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              val sp = batch.sparkSession
-              val nb = batch.select(col("rec_id"), col("name"),
-                substring(col("name"), 1, 6).as("blk"))
-              val dropped =
-                if (sp.catalog.tableExists("graft_st21.accepted"))
-                  nb.join(sp.read.table("graft_st21.accepted")
-                      .select(col("blk"), col("name").as("acc_name")), Seq("blk"))
-                    .filter(abs(length(col("name")) - length(col("acc_name"))) <= 2 &&
-                      levenshtein(col("name"), col("acc_name"), 2) >= 0)
-                    .select("rec_id").distinct()
-                else nb.select("rec_id").limit(0)
-              nb.join(dropped, Seq("rec_id"), "left_anti")
-                .write.mode("append").saveAsTable("graft_st21.accepted")
-            }
-          }
-          .start()
-        q.awaitTermination()
-      }
+      def runOnce(): Unit =
+        AvailableNow.eachBatch(s.readStream
+            .schema("rec_id BIGINT, name STRING")
+            .parquet(src), chk) { (batch, _) =>
+          val nb = batch.select(col("rec_id"), col("name"),
+            substring(col("name"), 1, 6).as("blk"))
+          val dropped =
+            if (s.catalog.tableExists("graft_st21.accepted"))
+              nb.join(s.read.table("graft_st21.accepted")
+                  .select(col("blk"), col("name").as("acc_name")), Seq("blk"))
+                .filter(abs(length(col("name")) - length(col("acc_name"))) <= 2 &&
+                  levenshtein(col("name"), col("acc_name"), 2) >= 0)
+                .select("rec_id").distinct()
+            else nb.select("rec_id").limit(0)
+          nb.join(dropped, Seq("rec_id"), "left_anti")
+            .write.mode("append").saveAsTable("graft_st21.accepted")
+        }
       recs.filter(col("rec_id") % 2 === 0)
         .coalesce(1).write.mode("append").parquet(src)
       runOnce() // increment 1: canonical + append-variant seed the index
@@ -1589,7 +1441,7 @@ object StreamingQueries {
       // not judged (st13's pinned contract); each increment is one
       // coalesced file and maxFilesPerTrigger stays unset.
       import graft.llm.{Dedup, TextOps}
-      val base = tmp("graft_st23")
+      val base = Measure.tempDir("graft_st23")
       val src = s"$base/in"; val chk = s"$base/chk"
       s.sql("CREATE DATABASE IF NOT EXISTS graft_st23")
       Seq("outcomes", "accepted_urls", "accepted_bands").foreach(t =>
@@ -1606,70 +1458,58 @@ object StreamingQueries {
       def bandsOf(df: org.apache.spark.sql.DataFrame) =
         Dedup.lshBands(Dedup.minhashSignaturesNative(
           Dedup.shingleArray(df, "doc_id", "text", 3), "doc_id", 8), "doc_id", 8, 2)
-      def runOnce(): Unit = {
-        val q = s.readStream
-          .schema("doc_id BIGINT, text STRING")
-          .parquet(src)
-          .writeStream
-          .option("checkpointLocation", chk)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            if (!batch.isEmpty) {
-              val sp = batch.sparkSession
-              val inc = lit(batchId + 1).cast("int")
-              val withUrl = withUrlNorm(batch).localCheckpoint(true)
-              val urlDrop =
-                if (sp.catalog.tableExists("graft_st23.accepted_urls"))
-                  withUrl.join(sp.read.table("graft_st23.accepted_urls"),
-                      Seq("url_norm"), "left_semi")
-                    .select("doc_id").localCheckpoint(true)
-                else batch.select("doc_id").limit(0)
-              val u = batch.join(urlDrop, Seq("doc_id"), "left_anti")
-              val qualFlags = TextOps.qualityFilter(u,
-                  minTokens = 20, maxTokens = 100000,
-                  maxPunctRatio = 0.06, minStopwordRatio = 0.05)
-              val qualDrop = qualFlags.filter(!col("keep"))
+      def runOnce(): Unit =
+        AvailableNow.eachBatch(s.readStream
+            .schema("doc_id BIGINT, text STRING")
+            .parquet(src), chk) { (batch, batchId) =>
+          val inc = lit(batchId + 1).cast("int")
+          val withUrl = withUrlNorm(batch).localCheckpoint(true)
+          val urlDrop =
+            if (s.catalog.tableExists("graft_st23.accepted_urls"))
+              withUrl.join(s.read.table("graft_st23.accepted_urls"),
+                  Seq("url_norm"), "left_semi")
                 .select("doc_id").localCheckpoint(true)
-              val q2 = u.join(qualDrop, Seq("doc_id"), "left_anti")
-                .localCheckpoint(true)
-              val nb = bandsOf(q2).localCheckpoint(true)
-              val fuzzyDrop =
-                if (sp.catalog.tableExists("graft_st23.accepted_bands"))
-                  nb.join(sp.read.table("graft_st23.accepted_bands"),
-                      Seq("band", "band_hash"), "left_semi")
-                    .select("doc_id").distinct().localCheckpoint(true)
-                else batch.select("doc_id").limit(0)
-              val f = q2.join(fuzzyDrop, Seq("doc_id"), "left_anti")
-              val evalDocs = Registry.T(sp, dir, "documents")
-                .filter(col("doc_id") < 10).select("doc_id", "text")
-              val d = Dedup.decontaminate(f, evalDocs, "doc_id", "text", 5)
-                .localCheckpoint(true)
-              val contamDrop = f.join(d.select("doc_id"), Seq("doc_id"), "left_anti")
-                .select("doc_id")
-              def tag(ids: org.apache.spark.sql.DataFrame, o: String) =
-                ids.select(col("doc_id"), inc.as("increment"), lit(o).as("outcome"))
-              // Three independent sinks over already-checkpointed
-              // frames: overlap the writes (guide §2.6) instead of
-              // paying three sequential write-job latencies per batch.
-              Registry.inParallel(
-                () => tag(d.select("doc_id"), "accepted")
-                  .unionByName(tag(urlDrop, "url_dup"))
-                  .unionByName(tag(qualDrop, "quality"))
-                  .unionByName(tag(fuzzyDrop, "fuzzy_dup"))
-                  .unionByName(tag(contamDrop, "contaminated"))
-                  .write.mode("append").saveAsTable("graft_st23.outcomes"),
-                () => withUrl.join(d.select("doc_id"), Seq("doc_id"), "left_semi")
-                  .select("url_norm")
-                  .write.mode("append").saveAsTable("graft_st23.accepted_urls"),
-                () => nb.join(d.select("doc_id"), Seq("doc_id"), "left_semi")
-                  .write.mode("append").saveAsTable("graft_st23.accepted_bands"))
-              ()
-            }
-          }
-          .start()
-        q.awaitTermination()
-      }
+            else batch.select("doc_id").limit(0)
+          val u = batch.join(urlDrop, Seq("doc_id"), "left_anti")
+          val qualFlags = TextOps.qualityFilter(u,
+              minTokens = 20, maxTokens = 100000,
+              maxPunctRatio = 0.06, minStopwordRatio = 0.05)
+          val qualDrop = qualFlags.filter(!col("keep"))
+            .select("doc_id").localCheckpoint(true)
+          val q2 = u.join(qualDrop, Seq("doc_id"), "left_anti")
+            .localCheckpoint(true)
+          val nb = bandsOf(q2).localCheckpoint(true)
+          val fuzzyDrop =
+            if (s.catalog.tableExists("graft_st23.accepted_bands"))
+              nb.join(s.read.table("graft_st23.accepted_bands"),
+                  Seq("band", "band_hash"), "left_semi")
+                .select("doc_id").distinct().localCheckpoint(true)
+            else batch.select("doc_id").limit(0)
+          val f = q2.join(fuzzyDrop, Seq("doc_id"), "left_anti")
+          val evalDocs = Registry.T(s, dir, "documents")
+            .filter(col("doc_id") < 10).select("doc_id", "text")
+          val d = Dedup.decontaminate(f, evalDocs, "doc_id", "text", 5)
+            .localCheckpoint(true)
+          val contamDrop = f.join(d.select("doc_id"), Seq("doc_id"), "left_anti")
+            .select("doc_id")
+          def tag(ids: org.apache.spark.sql.DataFrame, o: String) =
+            ids.select(col("doc_id"), inc.as("increment"), lit(o).as("outcome"))
+          // Three independent sinks over already-checkpointed
+          // frames: overlap the writes (guide §2.6) instead of
+          // paying three sequential write-job latencies per batch.
+          Registry.inParallel(
+            () => tag(d.select("doc_id"), "accepted")
+              .unionByName(tag(urlDrop, "url_dup"))
+              .unionByName(tag(qualDrop, "quality"))
+              .unionByName(tag(fuzzyDrop, "fuzzy_dup"))
+              .unionByName(tag(contamDrop, "contaminated"))
+              .write.mode("append").saveAsTable("graft_st23.outcomes"),
+            () => withUrl.join(d.select("doc_id"), Seq("doc_id"), "left_semi")
+              .select("url_norm")
+              .write.mode("append").saveAsTable("graft_st23.accepted_urls"),
+            () => nb.join(d.select("doc_id"), Seq("doc_id"), "left_semi")
+              .write.mode("append").saveAsTable("graft_st23.accepted_bands"))
+        }
       val docs = T(s, dir, "documents").select(col("doc_id"), col("text"))
         .filter(col("doc_id") >= 10)
       docs.filter(col("doc_id") % 2 === 0)
@@ -1745,31 +1585,21 @@ object StreamingQueries {
       // checkpoint (evens then odds) prove per-batch operation; the
       // increment column records which batch produced each row.
       import graft.llm.Bpe
-      val base = tmp("graft_st24")
+      val base = Measure.tempDir("graft_st24")
       val src = s"$base/in"; val chk = s"$base/chk"
       s.sql("CREATE DATABASE IF NOT EXISTS graft_st24")
       s.sql("DROP TABLE IF EXISTS graft_st24.encoded")
       val docs = T(s, dir, "documents").select("doc_id", "text")
       val (_, vocab) = Bpe.trainMerges(Bpe.wordCensus(docs), k = 12)
       val vocabCk = vocab.localCheckpoint()
-      def runOnce(): Unit = {
-        val q = s.readStream
-          .schema("doc_id BIGINT, text STRING")
-          .parquet(src)
-          .writeStream
-          .option("checkpointLocation", chk)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            if (!batch.isEmpty) {
-              Bpe.encodeDocs(batch, vocabCk)
-                .withColumn("increment", lit(batchId + 1).cast("int"))
-                .write.mode("append").saveAsTable("graft_st24.encoded")
-            }
-          }
-          .start()
-        q.awaitTermination()
-      }
+      def runOnce(): Unit =
+        AvailableNow.eachBatch(s.readStream
+            .schema("doc_id BIGINT, text STRING")
+            .parquet(src), chk) { (batch, batchId) =>
+          Bpe.encodeDocs(batch, vocabCk)
+            .withColumn("increment", lit(batchId + 1).cast("int"))
+            .write.mode("append").saveAsTable("graft_st24.encoded")
+        }
       docs.filter(col("doc_id") % 2 === 0).coalesce(1)
         .write.mode("append").parquet(src)
       runOnce()

@@ -2,8 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
+
+import graft.streaming.AvailableNow
 
 /** Bronze-layer ingestion: batch CSV → append table, and incremental
   * streaming file pickup.
@@ -48,29 +49,6 @@ object Ingest {
     spark.read.table(table).filter(col("_batch_id") === bid).count()
   }
 
-  /** Incremental streaming ingestion of a landing directory: the OSS
-    * stand-in for Auto Loader (`ingest_policies.py:100-130`). Processes
-    * the current backlog exactly once (`Trigger.AvailableNow`) and stops;
-    * re-running with the same checkpoint picks up only new files. */
-  def ingestStreaming(spark: SparkSession, sourceDir: String, schema: StructType,
-      table: String, checkpointDir: String, format: String = "csv",
-      batchId: Option[Long] = None): Unit = {
-    val reader = spark.readStream.schema(schema).option("header", "true")
-    val raw = format match {
-      case "csv" => reader.csv(sourceDir)
-      case "parquet" => reader.parquet(sourceDir)
-      case other => reader.format(other).load(sourceDir)
-    }
-    val bid = batchId.getOrElse(System.currentTimeMillis() / 1000)
-    val withMeta = addMetadataColumns(raw, lit(bid))
-    val q = withMeta.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .toTable(table)
-    q.awaitTermination()
-  }
-
   /** Union of CSV headers across the newest `sampleFiles` files in the
     * landing dir, in first-seen column order (new columns appear after
     * all previously-known ones, matching cloudFiles `addNewColumns`
@@ -104,7 +82,14 @@ object Ingest {
     if (seen.isEmpty) None else Some(seen.toSeq)
   }
 
-  /** Incremental CSV ingestion WITH schema evolution on restart — the
+  /** Incremental streaming ingestion of a landing directory, the OSS
+    * stand-in for Auto Loader (`ingest_autoloader`,
+    * `ingest_policies.py:100-130`): processes the current backlog exactly
+    * once per checkpoint ([[AvailableNow.run]]) and stops; re-running with
+    * the same checkpoint picks up only new files. With a fixed header it
+    * is plain incremental pickup.
+    *
+    * It evolves the schema on restart — the
     * OSS translation of cloudFiles `schemaEvolutionMode=addNewColumns`
     * (reference `lakehouse_pipelines/bronze/ingest_policies.py:115`,
     * SURVEY ST5). cloudFiles' contract is evolve-on-restart: a new
@@ -171,12 +156,8 @@ object Ingest {
         val target = spark.read.table(table).schema
         withMeta.select(target.fields.map(f => col(f.name)).toIndexedSeq: _*)
       } else withMeta
-    val q = aligned.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .toTable(table)
-    q.awaitTermination()
+    AvailableNow.run(aligned.writeStream.outputMode("append")
+      .option("checkpointLocation", checkpointDir), Some(table))
     evolved
   }
 }

@@ -3,9 +3,8 @@ package graft.streaming
 import scala.concurrent.Future
 import scala.util.{Failure, Success}
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.model.Schemas
@@ -23,13 +22,12 @@ import graft.tools.Overlap
   * into the dimension with the partition-aware SCD2 apply, so history
   * accumulates correctly across restarts (checkpoint + AvailableNow).
   *
-  * Each micro-batch's CSV is parsed once, into a local checkpoint. Its
-  * three writes (bronze append, silver append, SCD2 apply) then read that
-  * checkpoint, run at the same time, and run in the session that called
-  * [[runPoliciesStream]], not in the query's cloned session: the caller's
-  * next read sees the rewritten tables without a refresh, and the code
-  * Spark generates for one drop is reused by the next (its compiled-code
-  * cache is keyed by class loader, and each query's clone has its own).
+  * The stream runs on [[AvailableNow.eachBatch]]: each micro-batch's CSV
+  * is parsed once, into a local checkpoint, and handed over in the
+  * session that called [[runPoliciesStream]]. Its three writes (bronze
+  * append, silver append, SCD2 apply) read that checkpoint and run at the
+  * same time, so the caller's next read sees the rewritten tables without
+  * a refresh.
   */
 object StreamingMedallion {
 
@@ -63,19 +61,7 @@ object StreamingMedallion {
       .option("header", "true")
       .csv(landingDir)
     val withMeta = Ingest.addMetadataColumns(raw, lit(batchId))
-    val q = withMeta.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val parsed = batch.localCheckpoint(true)
-        try {
-          val bronze = GraftSqlBridge.inSession(spark, parsed)
-          if (!bronze.isEmpty) writeBatch(bronze, db)
-        } finally GraftSqlBridge.releaseCheckpoint(parsed)
-      }
-      .start()
-    q.awaitTermination()
+    AvailableNow.eachBatch(withMeta, checkpointDir)((bronze, _) => writeBatch(bronze, db))
   }
 
   /** The three writes of one parsed micro-batch, overlapped. All of them

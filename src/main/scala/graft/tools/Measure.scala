@@ -45,17 +45,25 @@ object Measure {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    if (tempWarehouse) b.config("spark.sql.warehouse.dir", freshWarehouse().toString)
+    if (tempWarehouse) b.config("spark.sql.warehouse.dir", tempDir("graft_wh"))
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel(LogLevel)
     spark
   }
 
-  private def freshWarehouse(): Path = {
-    val dir = Files.createTempDirectory("graft_wh")
-    sys.addShutdownHook(deleteTree(dir))
-    dir
+  /** A fresh temp directory named `prefix<digits>`, deleted with its
+    * contents at JVM exit. Not sooner: gates return lazy frames that
+    * read their landing, output and checkpoint dirs after the gate body
+    * has returned. */
+  def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    atExit.add(dir)
+    deleteAtExit
+    dir.toString
   }
+
+  private val atExit = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+  private lazy val deleteAtExit = sys.addShutdownHook(atExit.forEach(deleteTree(_)))
 
   private def deleteTree(root: Path): Unit =
     try {

@@ -19,7 +19,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Overlap {
 
-  /** Upper bound on one [[await]] call. The work it overlaps takes
+  /** Upper bound on one [[await]] call, and on one AvailableNow query
+    * (`streaming.AvailableNow`). The work it bounds takes
     * seconds at bench scale and minutes at stress or reference scale;
     * work still running after an hour is wedged, and failing with a
     * TimeoutException beats hanging a bench, Verify or pipeline run

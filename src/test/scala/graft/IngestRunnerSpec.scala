@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.model.Schemas
 import graft.pipeline.Runner
 import graft.sources.{Ingest, Tables}
+import graft.streaming.AvailableNow
+import graft.tools.Measure
 
 /** Bronze ingestion (batch + streaming exactly-once), write paths, and
   * the end-to-end medallion runner on generated sample CSVs. */
@@ -26,7 +28,7 @@ class IngestRunnerSpec extends SparkTestBase {
     "POL-002,Jane,Doe,jane@t.co,PROP-002,ho5,2024-03-15,2025-03-15,CANCELLED,2500,2000,500000,AGT-002,AGENT,2024-03-01T00:00:00,2024-06-01T00:00:00")
 
   test("ingestBatch: explicit-schema CSV scan, metadata columns, append, single source read") {
-    val dir = Files.createTempDirectory("graft_ingest").toString
+    val dir = Measure.tempDir("graft_ingest")
     writePoliciesCsv(dir, policyRows)
     Tables.ensureDatabase(spark, "graft_test")
     Tables.dropTable(spark, "graft_test.bronze_policies")
@@ -67,7 +69,7 @@ class IngestRunnerSpec extends SparkTestBase {
 
   test("ingestStreamingEvolving: restart picks up new CSV columns; old rows read NULL (ST5)") {
     import org.apache.spark.sql.types._
-    val base = Files.createTempDirectory("graft_evolve").toString
+    val base = Measure.tempDir("graft_evolve")
     val landing = s"$base/landing"; val chk = s"$base/chk"
     Files.createDirectories(java.nio.file.Paths.get(landing))
     Files.writeString(java.nio.file.Paths.get(s"$landing/b1.csv"),
@@ -109,7 +111,7 @@ class IngestRunnerSpec extends SparkTestBase {
     // the dimension on the SAME history as a clean run, with no
     // duplicate versions.
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+    import org.apache.spark.sql.streaming.StreamingQueryException
     import graft.operators.Scd2
     import spark.implicits._
     withTempDir("graft_scd2_crash") { base =>
@@ -135,25 +137,15 @@ class IngestRunnerSpec extends SparkTestBase {
         // replayed batch (and the assertions) see the rewritten table.
         sp.catalog.refreshTable("graft_test.dim_crash")
       }
-      def run(crashAfterApply: Boolean): Unit = {
-        val q = spark.readStream
-          .schema("id STRING, status STRING, effective_start_date TIMESTAMP, " +
-            "effective_end_date TIMESTAMP, is_current BOOLEAN")
-          .parquet(src)
-          .writeStream
-          .option("checkpointLocation", chk)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            if (!b.isEmpty) {
-              applyBatch(b)
-              if (crashAfterApply)
-                throw new RuntimeException("injected crash after state mutation")
-            }
-          }
-          .start()
-        q.awaitTermination()
-      }
+      def run(crashAfterApply: Boolean): Unit =
+        AvailableNow.eachBatch(spark.readStream
+            .schema("id STRING, status STRING, effective_start_date TIMESTAMP, " +
+              "effective_end_date TIMESTAMP, is_current BOOLEAN")
+            .parquet(src), chk) { (b, _) =>
+          applyBatch(b)
+          if (crashAfterApply)
+            throw new RuntimeException("injected crash after state mutation")
+        }
       // Batch A: three current rows.
       shape(Seq(("k1", "A", "2024-01-01"), ("k2", "A", "2024-01-01"),
         ("k3", "A", "2024-01-01"))).write.mode("append").parquet(src)
@@ -163,10 +155,8 @@ class IngestRunnerSpec extends SparkTestBase {
       shape(Seq(("k1", "X", "2024-01-11"), ("k3", "X", "2024-01-11")))
         .write.mode("append").parquet(src)
       intercept[StreamingQueryException] { run(crashAfterApply = true) }
-      // The foreachBatch clone session shares the JVM-wide file-status
-      // cache; refresh from the parent session before reading past the
-      // overwrite (test-only concern — the production path always reads
-      // through a fresh batch's session).
+      // The batch body ran in this session, but the crash cut the stream
+      // short; refresh before reading past the overwrite.
       spark.catalog.refreshTable("graft_test.dim_crash")
       // The partial apply is real: the table already holds the merged state.
       assert(spark.read.table("graft_test.dim_crash").count() === 5)
@@ -191,26 +181,27 @@ class IngestRunnerSpec extends SparkTestBase {
   }
 
   test("ingestStreaming: AvailableNow processes backlog exactly once per checkpoint") {
-    val base = Files.createTempDirectory("graft_stream").toString
-    val landing = s"$base/landing"; val chk = s"$base/chk"
-    Files.createDirectories(java.nio.file.Paths.get(landing))
-    writePoliciesCsv(landing, policyRows, "batch1.csv")
-    Tables.ensureDatabase(spark, "graft_test")
-    Tables.dropTable(spark, "graft_test.stream_policies")
-    Ingest.ingestStreaming(spark, landing, Schemas.rawPolicies,
-      "graft_test.stream_policies", chk, batchId = Some(1L))
-    assert(spark.read.table("graft_test.stream_policies").count() === 2)
-    // re-run with same checkpoint and no new files: nothing reprocessed
-    Ingest.ingestStreaming(spark, landing, Schemas.rawPolicies,
-      "graft_test.stream_policies", chk, batchId = Some(2L))
-    assert(spark.read.table("graft_test.stream_policies").count() === 2)
-    // new file lands: only it is picked up
-    writePoliciesCsv(landing, policyRows.take(1), "batch2.csv")
-    Ingest.ingestStreaming(spark, landing, Schemas.rawPolicies,
-      "graft_test.stream_policies", chk, batchId = Some(3L))
-    val t = spark.read.table("graft_test.stream_policies")
-    assert(t.count() === 3)
-    assert(t.filter(col("_batch_id") === 3L).count() === 1)
+    withTempDir("graft_stream") { base =>
+      val landing = s"$base/landing"; val chk = s"$base/chk"
+      Files.createDirectories(java.nio.file.Paths.get(landing))
+      writePoliciesCsv(landing, policyRows, "batch1.csv")
+      Tables.ensureDatabase(spark, "graft_test")
+      Tables.dropTable(spark, "graft_test.stream_policies")
+      Ingest.ingestStreamingEvolving(spark, landing, Schemas.rawPolicies,
+        "graft_test.stream_policies", chk, batchId = Some(1L))
+      assert(spark.read.table("graft_test.stream_policies").count() === 2)
+      // re-run with same checkpoint and no new files: nothing reprocessed
+      Ingest.ingestStreamingEvolving(spark, landing, Schemas.rawPolicies,
+        "graft_test.stream_policies", chk, batchId = Some(2L))
+      assert(spark.read.table("graft_test.stream_policies").count() === 2)
+      // new file lands: only it is picked up
+      writePoliciesCsv(landing, policyRows.take(1), "batch2.csv")
+      Ingest.ingestStreamingEvolving(spark, landing, Schemas.rawPolicies,
+        "graft_test.stream_policies", chk, batchId = Some(3L))
+      val t = spark.read.table("graft_test.stream_policies")
+      assert(t.count() === 3)
+      assert(t.filter(col("_batch_id") === 3L).count() === 1)
+    }
   }
 
   test("partitioned write enables partition-pruned scans") {
@@ -245,7 +236,7 @@ class IngestRunnerSpec extends SparkTestBase {
 
   test("stagedOverwritePath swaps atomically and cleans up") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_staged").toString + "/tbl"
+    val path = Measure.tempDir("graft_staged") + "/tbl"
     Tables.stagedOverwritePath(Seq(1, 2, 3).toDF("v"), path)
     assert(spark.read.parquet(path).count() === 3)
     Tables.stagedOverwritePath(Seq(4, 5).toDF("v"), path)
@@ -345,7 +336,7 @@ class IngestRunnerSpec extends SparkTestBase {
   }
 
   test("end-to-end medallion pipeline on sample CSVs reaches a green DQ gate") {
-    val dir = Files.createTempDirectory("graft_e2e").toString
+    val dir = Measure.tempDir("graft_e2e")
     writePoliciesCsv(dir, policyRows)
     val claimsHeader = "claim_id,policy_id,claim_date,reported_date,closed_date," +
       "claim_type,claim_status,claim_amount,approved_amount,deductible_applied," +

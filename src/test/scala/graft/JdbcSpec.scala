@@ -14,7 +14,7 @@ class JdbcSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshDb(): String =
-    java.nio.file.Files.createTempDirectory("graft_jdbc_spec").toString + "/db"
+    graft.tools.Measure.tempDir("graft_jdbc_spec") + "/db"
 
   test("roundtrip preserves ints, longs, doubles, decimals, dates, bools, strings, nulls") {
     import scala.jdk.CollectionConverters._

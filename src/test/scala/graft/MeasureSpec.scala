@@ -67,20 +67,38 @@ class MeasureSpec extends SparkTestBase {
     assert(BusAccess.listenerCount(sc) === before)
   }
 
-  test("source sweep: SparkSession.builder appears in src/main only in the factory") {
+  /** `file:line` of every line under src/main/scala containing `token`. */
+  private def sourceHits(token: String): List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
     val walk = Files.walk(root)
-    val hits = try walk.iterator().asScala
+    try walk.iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains("SparkSession.builder") =>
-            s"${root.relativize(p)}:${i + 1}"
+          case (line, i) if line.contains(token) => s"${root.relativize(p)}:${i + 1}"
         }
       }.toList
     finally walk.close()
+  }
+
+  test("source sweep: SparkSession.builder appears in src/main only in the factory") {
+    val hits = sourceHits("SparkSession.builder")
     assert(hits.size === 1 && hits.head.startsWith("graft/tools/Measure.scala:"),
       s"build sessions through graft.tools.Measure.session, found:\n${hits.mkString("\n")}")
+  }
+
+  test("source sweep: streams are started and awaited in src/main only by the AvailableNow harness") {
+    for (token <- Seq("Trigger.AvailableNow", "awaitTermination")) {
+      val hits = sourceHits(token)
+      assert(hits.nonEmpty && hits.forall(_.startsWith("graft/streaming/AvailableNow.scala:")),
+        s"run streams through graft.streaming.AvailableNow, found $token at:\n${hits.mkString("\n")}")
+    }
+  }
+
+  test("source sweep: temp dirs are created in src/main only by Measure.tempDir") {
+    val hits = sourceHits("createTempDirectory")
+    assert(hits.nonEmpty && hits.forall(_.startsWith("graft/tools/Measure.scala:")),
+      s"create temp dirs through graft.tools.Measure.tempDir, found:\n${hits.mkString("\n")}")
   }
 }

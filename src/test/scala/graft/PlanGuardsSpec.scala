@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Plan-shape regression guards for the scale claims PLANS.md makes:
@@ -13,7 +11,7 @@ class PlanGuardsSpec extends SparkTestBase {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_planguard").toString
+    val d = graft.tools.Measure.tempDir("graft_planguard")
     (1 to 1000).map(i => (i.toLong, s"name$i", i % 7, i * 1.5))
       .toDF("id", "name", "bucket", "amount")
       .write.mode("overwrite").parquet(s"$d/t.parquet")

@@ -272,9 +272,6 @@ class PlansStreamingSpec extends SparkTestBase {
   }
 
   test("streaming medallion: a drop's writes run as jobs of the calling session") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.graftbus.ListenerBusDrain
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     withTempDir("graft_smed_session") { base =>
       val landing = s"$base/landing"
       Files.createDirectories(Paths.get(landing))
@@ -282,23 +279,7 @@ class PlansStreamingSpec extends SparkTestBase {
       spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
       Files.writeString(Paths.get(s"$landing/b1.csv"),
         Seq(policyHeader, policyRow("POL-001", "ACTIVE", "2024-01-01T00:00:00")).mkString("\n"))
-      // Every job Spark runs for a session's query carries the session's
-      // `spark-session-<uuid>` tag; the stream's cloned session has its own.
-      def jobTags(body: => Unit): Seq[Set[String]] = {
-        val tags = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]()
-        val listener = new SparkListener {
-          override def onJobStart(e: SparkListenerJobStart): Unit =
-            tags.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-              .map(_.split(",").toSet).getOrElse(Set.empty))
-        }
-        val sc = spark.sparkContext
-        sc.addSparkListener(listener)
-        try { body; ListenerBusDrain.drain(sc) } finally sc.removeSparkListener(listener)
-        tags.asScala.toSeq
-      }
-      val own = jobTags(spark.range(1).count()).flatten
-        .filter(_.matches("spark-session-[0-9a-f-]{36}")).toSet
-      assert(own.size === 1, own)
+      val own = Set(sessionTag)
       val drop = jobTags(
         StreamingMedallion.runPoliciesStream(spark, landing, s"$base/chk", db, batchId = 1L))
       // bronze append, silver append and the dim_policy first load

@@ -38,7 +38,7 @@ class RegistrySpec extends SparkTestBase {
     // generations (TIMESTAMP(NANOS) → TIMESTAMP(MICROS)); the stress
     // corpus writes raw BIGINT. Gates do integer nanos arithmetic, so T
     // must hand back the identical long whatever the file carries.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ts_norm").toString
+    val dir = graft.tools.Measure.tempDir("graft_ts_norm")
     val micros = 1704067200123456L // 2024-01-01 00:00:00.123456 UTC
     // Micros-timestamp flavor (what the r9 driver data carries).
     Seq((1L, micros)).toDF("event_id", "us")
@@ -78,7 +78,7 @@ class RegistrySpec extends SparkTestBase {
   }
 
   test("spread derives its partition count from input size, clamped, values intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    val dir = graft.tools.Measure.tempDir("graft_spread")
     // Tiny input: the 64 KB-per-partition target must clamp UP to 1,
     // never 0, and must not lose or duplicate rows.
     spark.range(100).selectExpr("id", "CAST(id AS STRING) AS s")

@@ -345,8 +345,8 @@ class ScaleOpsSpec extends SparkTestBase {
   }
 
   test("generator: deterministic, reference-shaped, and pipeline-green end-to-end") {
-    val dir1 = java.nio.file.Files.createTempDirectory("gen1").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("gen2").toString
+    val dir1 = graft.tools.Measure.tempDir("gen1")
+    val dir2 = graft.tools.Measure.tempDir("gen2")
     val counts1 = SampleDataGen.generate(dir1, nPolicies = 200, seed = 42L)
     val counts2 = SampleDataGen.generate(dir2, nPolicies = 200, seed = 42L)
     assert(counts1 === counts2) // same seed → same counts

@@ -20,6 +20,39 @@ abstract class SparkTestBase extends AnyFunSuite {
     try body(dir.toString)
     finally new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
   }
+
+  /** The properties of every job `body` starts, read after the listener
+    * bus drains. */
+  def jobProperties(body: => Unit): Seq[java.util.Properties] = {
+    import scala.jdk.CollectionConverters._
+    val props = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        props.add(Option(e.properties).getOrElse(new java.util.Properties()))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.graftbus.ListenerBusDrain.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    props.asScala.toSeq
+  }
+
+  /** The `spark.job.tags` of a job. */
+  def tagsOf(job: java.util.Properties): Set[String] =
+    Option(job.getProperty("spark.job.tags")).map(_.split(",").toSet).getOrElse(Set.empty)
+
+  /** The `spark.job.tags` of every job `body` starts. */
+  def jobTags(body: => Unit): Seq[Set[String]] = jobProperties(body).map(tagsOf)
+
+  /** Every job Spark runs for a session's query carries the session's
+    * `spark-session-<uuid>` tag; a stream's cloned session has its own.
+    * This is the shared test session's. */
+  def sessionTag: String = {
+    val own = jobTags(spark.range(1).count()).flatten
+      .filter(_.matches("spark-session-[0-9a-f-]{36}")).toSet
+    assert(own.size === 1, own)
+    own.head
+  }
   import org.apache.spark.sql.types._
 
   private def policySchema = StructType(Seq(

@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.operators.Scd2
+import graft.streaming.AvailableNow
 
 /** Checkpoint RECOVERY for the stateful streaming pipelines (r13 verdict
   * item 3): the st13–st21 gates each run one clean AvailableNow pass per
@@ -41,7 +40,10 @@ class StreamingRecoverySpec extends SparkTestBase {
 
   test("SCD2 stream killed between micro-batches resumes from the checkpoint " +
       "and converges to the sequential batch reference (exactly-once)") {
-    val base = Files.createTempDirectory("graft_recover").toString
+    withTempDir("graft_recover")(recover)
+  }
+
+  private def recover(base: String): Unit = {
     val src = s"$base/in"; val chk = s"$base/chk"
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_test")
     spark.sql(s"DROP TABLE IF EXISTS $dimTbl")
@@ -59,37 +61,26 @@ class StreamingRecoverySpec extends SparkTestBase {
     incB.coalesce(1).write.mode("append").parquet(src)
 
     var crashArmed = true
-    def runOnce(): Unit = {
-      val q = spark.readStream
-        .schema("k STRING, status STRING, effective_start_date TIMESTAMP, " +
-          "effective_end_date TIMESTAMP, is_current BOOLEAN")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // Injected crash: batch 1's first attempt dies BEFORE any side
-          // effect — committed batch 0 + planned-uncommitted batch 1 is
-          // the window a real mid-run failure leaves.
-          if (crashArmed && batchId == 1) {
-            crashArmed = false
-            throw new RuntimeException("injected crash before batch 1")
-          }
-          if (!batch.isEmpty) {
-            val sp = batch.sparkSession
-            val merged = Scd2.merge(sp.read.table(dimTbl), batch,
-              Seq("k"), Seq("status")).localCheckpoint(true)
-            merged.write.mode("overwrite").saveAsTable(dimTbl)
-            import sp.implicits._
-            Seq((batchId, batch.count())).toDF("batch_id", "n")
-              .write.mode("append").saveAsTable(logTbl)
-          }
+    def runOnce(): Unit =
+      AvailableNow.eachBatch(spark.readStream
+          .schema("k STRING, status STRING, effective_start_date TIMESTAMP, " +
+            "effective_end_date TIMESTAMP, is_current BOOLEAN")
+          .option("maxFilesPerTrigger", "1")
+          .parquet(src), chk) { (batch, batchId) =>
+        // Injected crash: batch 1's first attempt dies BEFORE any side
+        // effect — committed batch 0 + planned-uncommitted batch 1 is
+        // the window a real mid-run failure leaves.
+        if (crashArmed && batchId == 1) {
+          crashArmed = false
+          throw new RuntimeException("injected crash before batch 1")
         }
-        .start()
-      q.awaitTermination()
-    }
+        val merged = Scd2.merge(spark.read.table(dimTbl), batch,
+          Seq("k"), Seq("status")).localCheckpoint(true)
+        merged.write.mode("overwrite").saveAsTable(dimTbl)
+        import spark.implicits._
+        Seq((batchId, batch.count())).toDF("batch_id", "n")
+          .write.mode("append").saveAsTable(logTbl)
+      }
 
     // First run dies mid-stream on the injected fault.
     val ex = intercept[StreamingQueryException](runOnce())
@@ -107,10 +98,9 @@ class StreamingRecoverySpec extends SparkTestBase {
       === Seq((0L, 40L)))
 
     // Restart under the SAME checkpoint: batch 1 re-executes from its
-    // planned offsets, batch 0 must not. (foreachBatch writes through the
-    // stream's CLONED session, whose catalog cache is separate — the
-    // mid-crash reads above cached this session's file listing, so
-    // refresh before re-reading.)
+    // planned offsets, batch 0 must not. (The batch body writes through
+    // this session, which invalidates its own file listing; the refreshes
+    // keep the reads below from depending on that.)
     runOnce()
     spark.catalog.refreshTable(logTbl)
     spark.catalog.refreshTable(dimTbl)
