@@ -35,4 +35,16 @@ object SparkEntry {
   /** Headline queries timed by [[Bench]] at sf0.1. */
   def benchQueries: Seq[String] =
     registry.collect { case (name, q) if q.bench => name }
+
+  /** `names`, each required to be in `universe` ([[queries]]' keys or
+    * [[benchQueries]]): a mistyped name fails loudly, naming it, instead
+    * of selecting fewer gates. The one check behind Verify's
+    * `SPARK_GRAFT_ONLY`, Bench's `SPARK_GRAFT_BENCH_ONLY` and
+    * `TimeQueries`' arguments. */
+  def knownGates(names: Seq[String], universe: Iterable[String]): Seq[String] = {
+    val known = universe.toSet
+    val unknown = names.filterNot(known.contains)
+    require(unknown.isEmpty, s"unknown gate(s): ${unknown.mkString(", ")}")
+    names
+  }
 }

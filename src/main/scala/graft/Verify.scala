@@ -6,14 +6,18 @@ import graft.tools.Measure
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The gates named by `SPARK_GRAFT_ONLY`'s comma-separated value (a
+    * filter for fast local iteration); None runs every gate. */
+  private[graft] def only(list: Option[String]): Option[Set[String]] =
+    list.map(v => SparkEntry.knownGates(v.split(",").toSeq, SparkEntry.queries.keys).toSet)
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    val only = Verify.only(sys.env.get("SPARK_GRAFT_ONLY"))
     // events.parquet may carry TIMESTAMP(NANOS), which the session reads
     // as nanos-since-epoch longs (Measure.session).
     val spark = Measure.session(Measure.cpus(4))
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated name filter for fast local iteration.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

@@ -283,6 +283,29 @@ object LlmQueries {
        |  FROM toks))""".stripMargin
   }
 
+  /** TextOps.qualityFilter's three per-document statistics;
+    * llm_quality_filter and [[qualKeepCtes]]. */
+  private val qualStatsCols =
+    s"""    len(string_split($normSql, ' ')) AS n_tokens,
+       |    CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) /
+       |      NULLIF(CAST(length(text) AS DOUBLE), 0) AS punct_ratio,
+       |    CAST(len(regexp_extract_all(lower(text),
+       |        '\\b(the|a|an|and|of|to|in|is|it)\\b')) AS DOUBLE) /
+       |      NULLIF(CAST(len(string_split($normSql, ' ')) AS DOUBLE), 0)
+       |      AS stopword_ratio""".stripMargin
+
+  /** Statistics CTE `stats` over `from`, then the `keep(doc_id)` set at the
+    * curation thresholds (the null-safe spelling below); qualKeepAllCtes and
+    * llm_curation_pipeline. */
+  private def qualKeepCtes(stats: String, keep: String, key: String, from: String) =
+    s"""$stats AS (SELECT $key,
+       |$qualStatsCols
+       |  FROM $from),
+       |$keep AS (SELECT doc_id FROM $stats
+       |  WHERE n_tokens >= 20 AND n_tokens <= 100000
+       |    AND (punct_ratio > 0.06) IS NOT TRUE
+       |    AND (stopword_ratio < 0.05) IS NOT TRUE)""".stripMargin
+
   // Quality keep-set over ALL documents at the curation thresholds
   // (TextOps.qualityFilter: minTokens 20, maxTokens 100000,
   // maxPunctRatio 0.06, minStopwordRatio 0.05) — the null-safe
@@ -291,19 +314,7 @@ object LlmQueries {
   // twin and the streaming curation gate (st23) so the threshold
   // spellings can never fork.
   private[queries] val qualKeepAllCtes: String =
-    s"""qstats_all AS (SELECT doc_id,
-       |    len(string_split($normSql, ' ')) AS n_tokens,
-       |    CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) /
-       |      NULLIF(CAST(length(text) AS DOUBLE), 0) AS punct_ratio,
-       |    CAST(len(regexp_extract_all(lower(text),
-       |        '\\b(the|a|an|and|of|to|in|is|it)\\b')) AS DOUBLE) /
-       |      NULLIF(CAST(len(string_split($normSql, ' ')) AS DOUBLE), 0)
-       |      AS stopword_ratio
-       |  FROM documents),
-       |qual_keep_all AS (SELECT doc_id FROM qstats_all
-       |  WHERE n_tokens >= 20 AND n_tokens <= 100000
-       |    AND (punct_ratio > 0.06) IS NOT TRUE
-       |    AND (stopword_ratio < 0.05) IS NOT TRUE)""".stripMargin
+    qualKeepCtes("qstats_all", "qual_keep_all", "doc_id", "documents")
 
   // sigs → bands → lsh_pairs CTE chain shared by the LSH-pair gate and
   // the cluster gate. Mirrors Dedup.windowHash: 8-hex-char (32-bit)
@@ -464,8 +475,224 @@ object LlmQueries {
        |$tail""".stripMargin
   }
 
-  private def l2Sql(a: String, b: String) =
-    s"sqrt(list_reduce(list_transform(range(1, len($a) + 1), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (x, y) -> x + y))"
+  // -- vector-search oracle builders -------------------------------------
+  // Composable CTEs for the DuckDB replay of Similarity's IVF route and
+  // Pq's codebook / encode / ADC chain (m=8 subspaces × 8 dims, k=4
+  // codes, 2 Lloyd iterations). Each gate chains them and keeps only its
+  // own tail.
+
+  /** Squared L2 of two DOUBLE lists: llm_random_projection, llm_rrf_fusion
+    * and the PQ/IVF-PQ gates. */
+  private def d2Sql(a: String, b: String) =
+    s"list_reduce(list_transform(range(1, len($a) + 1), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (x, y) -> x + y)"
+  private def l2Sql(a: String, b: String) = s"sqrt(${d2Sql(a, b)})"
+
+  /** `v(vec_id, vv)`: embeddings as DOUBLE lists; every embedding gate's
+    * first CTE. */
+  private def vCte(table: String = "embeddings") =
+    s"""v AS (SELECT vec_id,
+       |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM $table)""".stripMargin
+
+  /** `assigned(vec_id, cluster_id)`: each `v` row's max-cosine `cent` row
+    * (Similarity.ivfAssign); the IVF, near-dup and IVF-PQ gates. */
+  private def assignedCte(materialized: Boolean = false) =
+    s"""assigned AS${if (materialized) " MATERIALIZED" else ""} (SELECT vec_id, centroid_id AS cluster_id FROM (
+       |  SELECT a.vec_id, c.centroid_id,
+       |    row_number() OVER (PARTITION BY a.vec_id ORDER BY ${simSql("a.vv", "c.cv")} DESC, c.centroid_id) AS rn
+       |  FROM v a CROSS JOIN cent c) WHERE rn = 1)""".stripMargin
+
+  /** Coarse route over the fixed centroids vec_id < 8: llm_ann_ivf_topk,
+    * llm_ann_recall and the four llm_ivfpq_* gates. */
+  private def coarseRouteCtes(materialized: Boolean = false) =
+    s"""cent AS (SELECT vec_id AS centroid_id, vv AS cv FROM v WHERE vec_id < 8),
+       |${assignedCte(materialized)}""".stripMargin
+
+  /** Similarity.nearDupPairs' route to the scaled centroids, ending in unit
+    * vectors `cv(id_, uv, cluster_id)`: llm_embedding_neardup,
+    * llm_semantic_dedup. */
+  private val nearDupRouteCtes =
+    s"""cent AS (SELECT vec_id AS centroid_id, vv AS cv FROM v
+       |  WHERE $scaledCentroidSql),
+       |${assignedCte()},
+       |cv AS (SELECT v.vec_id AS id_,
+       |    list_transform(v.vv, e -> e / sqrt(${dotSql("v.vv", "v.vv")})) AS uv,
+       |    a.cluster_id
+       |  FROM v JOIN assigned a ON v.vec_id = a.vec_id)""".stripMargin
+
+  /** Pq.codebooks + encode over `src`: `sub` subvectors, `c0` seeds, two
+    * decimal-exact Lloyd iterations to `c2`, and `codes0(vec_id, s, cid)`;
+    * llm_pq_ann_topk and the four llm_ivfpq_* gates. */
+  private def pqCodebookCtes(src: String = "v", materialized: Boolean = false): String = {
+    def assignCte(name: String, cents: String) =
+      s"""$name AS (SELECT vec_id, s, sv, cid FROM (
+         |  SELECT b.vec_id, b.s, b.sv, c.cid,
+         |    row_number() OVER (PARTITION BY b.vec_id, b.s
+         |      ORDER BY ${d2Sql("b.sv", "c.cv")} ASC, c.cid) AS rn
+         |  FROM sub b JOIN $cents c ON b.s = c.s) WHERE rn = 1)""".stripMargin
+    def meanCtes(a: String, mm: String, cprev: String, c: String) =
+      s"""$mm AS (SELECT s, cid, i,
+         |    CAST(SUM(CAST(floor(sv[i] * 1073741824.0) AS DECIMAL(38,0))) AS DOUBLE)
+         |      / count(*) / 1073741824.0 AS mu
+         |  FROM $a, LATERAL (SELECT unnest(generate_series(1, len(sv))) AS i) u
+         |  GROUP BY s, cid, i),
+         |$c AS (SELECT p.s, p.cid, coalesce(n.cv, p.cv) AS cv
+         |  FROM $cprev p LEFT JOIN
+         |    (SELECT s, cid, list(mu ORDER BY i) AS cv FROM $mm GROUP BY s, cid) n
+         |  ON p.s = n.s AND p.cid = n.cid)""".stripMargin
+    s"""sub AS${if (materialized) " MATERIALIZED" else ""} (SELECT vec_id, s, list_slice(vv, s * 8 + 1, s * 8 + 8) AS sv
+       |  FROM $src, LATERAL (SELECT unnest(range(0, 8)) AS s) u),
+       |c0 AS (SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS cid,
+       |    sv AS cv FROM sub
+       |  WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 4)),
+       |${assignCte("a1", "c0")},
+       |${meanCtes("a1", "m1", "c0", "c1")},
+       |${assignCte("a2", "c1")},
+       |${meanCtes("a2", "m2", "c1", "c2")},
+       |codes0 AS (SELECT vec_id, s, cid FROM (
+       |  SELECT b.vec_id, b.s, c.cid,
+       |    row_number() OVER (PARTITION BY b.vec_id, b.s
+       |      ORDER BY ${d2Sql("b.sv", "c.cv")} ASC, c.cid) AS rn
+       |  FROM sub b JOIN c2 c ON b.s = c.s) WHERE rn = 1)""".stripMargin
+  }
+
+  /** `codes(corpus_id, codes)`: one code list per raw vector;
+    * llm_pq_ann_topk, llm_ivfpq_topk, llm_ivfpq_recall, llm_ivfpq_rerank. */
+  private val pqCodesCte =
+    """codes AS (SELECT vec_id AS corpus_id, list(cid ORDER BY s) AS codes
+      |  FROM codes0 GROUP BY vec_id)""".stripMargin
+
+  /** Query distance LUT `lut(query_id, luts)` for queries 10..14 (Pq.lutCol);
+    * llm_pq_ann_topk, llm_ivfpq_topk, llm_ivfpq_recall, llm_ivfpq_rerank. */
+  private val pqLutCtes =
+    s"""qsub AS (SELECT vec_id AS query_id, s, sv FROM sub WHERE vec_id BETWEEN 10 AND 14),
+       |lut0 AS (SELECT q.query_id, q.s, c.cid, ${d2Sql("q.sv", "c.cv")} AS dd
+       |  FROM qsub q JOIN c2 c ON q.s = c.s),
+       |lut1 AS (SELECT query_id, s, list(dd ORDER BY cid) AS l FROM lut0 GROUP BY query_id, s),
+       |lut AS (SELECT query_id, list(l ORDER BY s) AS luts FROM lut1 GROUP BY query_id)""".stripMargin
+
+  /** ADC fold of lut `q` over code list `c` (Pq.adcTopK's distance); every PQ
+    * gate's scoring CTE. */
+  private val adcSql =
+    """list_reduce(list_transform(range(1, 9), s -> q.luts[s][c.codes[s] + 1]),
+      |    (x, y) -> x + y)""".stripMargin
+
+  // -- connected-components and shingle-verify oracle builders ------------
+
+  /** Symmetric `edges` over the pair relation `pairs(id_a, id_b)`, then
+    * `reach`/`comps(id, component)`: the recursive min-reachable-id fixpoint
+    * (Dedup.connectedComponents) of every cluster gate. */
+  private def componentsCtes(pairs: String) =
+    s"""edges AS (SELECT id_a AS src, id_b AS dst FROM $pairs
+       |          UNION SELECT id_b, id_a FROM $pairs),
+       |reach AS (SELECT src AS id, src AS comp FROM edges
+       |          UNION
+       |          SELECT e.src, r.comp FROM edges e
+       |          JOIN reach r ON e.dst = r.id),
+       |comps AS (SELECT id, min(comp) AS component FROM reach GROUP BY id)""".stripMargin
+
+  /** Each document's component label `assigned(doc_id, component)` and its
+    * cluster size; llm_dedup_clusters, llm_image_phash_clusters,
+    * llm_crossmodal_clusters, llm_crossmodal_4way. */
+  private val componentSizeCtes =
+    """assigned AS (SELECT d.doc_id,
+      |    coalesce(c.component, d.doc_id) AS component
+      |  FROM documents d LEFT JOIN comps c ON c.id = d.doc_id),
+      |sizes AS (SELECT component, count(*) AS cluster_size
+      |  FROM assigned GROUP BY component)""".stripMargin
+
+  /** Corpus accounting of a dedup run over `corpus`: labels `lbl`, then docs
+    * in, docs kept, clustered docs and multi-doc clusters;
+    * llm_dedup_pipeline, llm_dedup_pipeline_capped. */
+  private def dedupAccountingSql(corpus: String) =
+    s"""lbl AS (SELECT d.doc_id,
+       |    coalesce(c.component, d.doc_id) AS component
+       |  FROM $corpus d LEFT JOIN comps c ON c.id = d.doc_id),
+       |csizes AS (SELECT component, count(*) AS cluster_size
+       |  FROM lbl GROUP BY component)
+       |SELECT count(*) AS n_docs,
+       |  CAST(SUM(CASE WHEN l.doc_id = l.component THEN 1 ELSE 0 END)
+       |    AS BIGINT) AS n_kept,
+       |  CAST(SUM(CASE WHEN s.cluster_size > 1 THEN 1 ELSE 0 END)
+       |    AS BIGINT) AS n_clustered_docs,
+       |  count(DISTINCT CASE WHEN s.cluster_size > 1
+       |    THEN l.component END) AS n_multi_clusters
+       |FROM lbl l JOIN csizes s USING (component)""".stripMargin
+
+  /** The documents table plus 40 clones of its min-doc_id document, through
+    * the LSH chain to the oversized-bucket rep election `rp` (maxBucket 16,
+    * reps 4); llm_lsh_skew_cap, llm_dedup_pipeline_capped. */
+  private val skewedLshCtes =
+    s"""corpus AS (SELECT doc_id, text FROM documents
+       |  UNION ALL
+       |  SELECT CAST(1000000 + r.i AS BIGINT) AS doc_id, b.text
+       |  FROM range(1, 41) r(i) CROSS JOIN
+       |    (SELECT text FROM documents ORDER BY doc_id LIMIT 1) b),
+       |toks AS (SELECT doc_id, string_split($normSql, ' ') AS t FROM corpus), $shCte,
+       |$lshPairsCtes,
+       |bsize AS (SELECT band, band_hash, count(*) AS n
+       |  FROM bands GROUP BY band, band_hash),
+       |bx AS (SELECT b.doc_id, b.band, b.band_hash, s.n > 16 AS oversized
+       |  FROM bands b JOIN bsize s USING (band, band_hash) WHERE s.n > 1),
+       |rp AS (SELECT band, band_hash, doc_id AS rep FROM (
+       |    SELECT band, band_hash, doc_id,
+       |      row_number() OVER (PARTITION BY band, band_hash
+       |        ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
+       |    FROM bx WHERE oversized) z WHERE rk <= 4)""".stripMargin
+
+  /** The derived citation graph's candidate links `cand(src, dst)`;
+    * llm_link_pagerank, llm_link_triangles. */
+  private val linkCandCte =
+    """cand AS (
+      |  SELECT doc_id AS src, (doc_id * 31 + 7) % (SELECT ni FROM nn) AS dst
+      |  FROM docs WHERE doc_id % 11 <> 0
+      |  UNION ALL
+      |  SELECT doc_id, (doc_id * 17 + 3) % (SELECT ni FROM nn)
+      |  FROM docs WHERE doc_id % 11 <> 0 AND doc_id % 2 = 0
+      |  UNION ALL
+      |  SELECT doc_id, (doc_id * 13 + 5) % (SELECT ni FROM nn)
+      |  FROM docs WHERE doc_id % 11 <> 0 AND doc_id % 3 = 0)""".stripMargin
+
+  /** Exact shingle Jaccard of each adjacent document pair (doc_id, doc_id +
+    * 1); the whole oracle of llm_ngram_jaccard and llm_jaccard_arrays. */
+  private val adjacentJaccardSql =
+    s"""WITH $toksCte, $shCte,
+       |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+       |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
+       |  FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1),
+       |inter AS (SELECT p.id_a, p.id_b, count(*) AS n_inter
+       |  FROM pairs p
+       |  JOIN sh x ON x.doc_id = p.id_a
+       |  JOIN sh y ON y.doc_id = p.id_b AND y.shingle = x.shingle
+       |  GROUP BY p.id_a, p.id_b)
+       |SELECT p.id_a, p.id_b,
+       |  CAST(COALESCE(i.n_inter, 0) AS DOUBLE) /
+       |    CAST(sa.n + sb.n - COALESCE(i.n_inter, 0) AS DOUBLE) AS jaccard
+       |FROM pairs p
+       |LEFT JOIN inter i ON i.id_a = p.id_a AND i.id_b = p.id_b
+       |JOIN sizes sa ON sa.doc_id = p.id_a
+       |JOIN sizes sb ON sb.doc_id = p.id_b
+       |ORDER BY p.id_a""".stripMargin
+
+  /** Shingle-set `sizes` and per-pair intersections `inter(id_a, id_b,
+    * n_inter)` over `pairs`: llm_containment_dedup, llm_minhash_est_check and
+    * the dedup/curation pipelines. */
+  private def shingleInterCtes(pairs: String) =
+    s"""sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+       |inter AS (SELECT p.id_a, p.id_b, count(*) AS n_inter
+       |  FROM $pairs p
+       |  JOIN sh x ON x.doc_id = p.id_a
+       |  JOIN sh y ON y.doc_id = p.id_b AND y.shingle = x.shingle
+       |  GROUP BY p.id_a, p.id_b)""".stripMargin
+
+  /** `shingleInterCtes` plus the exact-Jaccard ≥ 0.8 `verified` pairs;
+    * llm_dedup_pipeline, llm_dedup_pipeline_capped, llm_curation_pipeline. */
+  private def verifiedPairCtes(pairs: String) =
+    s"""${shingleInterCtes(pairs)},
+       |verified AS (SELECT i.id_a, i.id_b FROM inter i
+       |  JOIN sizes sa ON sa.doc_id = i.id_a
+       |  JOIN sizes sb ON sb.doc_id = i.id_b
+       |  WHERE CAST(i.n_inter AS DOUBLE) /
+       |    CAST(sa.n + sb.n - i.n_inter AS DOUBLE) >= 0.8)""".stripMargin
 
   /** Oracle for llm_lr_train / llm_lr_score: unrolls the 4 softsign-GD
     * iterations (Classifier.trainSoftsignGD) in chained CTEs. Gradients
@@ -525,8 +752,7 @@ object LlmQueries {
   private val rpsCtes: String = rpsCtesFor("embeddings")
   private def rpsCtesFor(table: String): String = {
     val odd = "('1','3','5','7','9','b','d','f')"
-    s"""v AS (SELECT vec_id,
-       |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM $table),
+    s"""${vCte(table)},
        |hp AS (SELECT k, list_transform(range(0, 64), i ->
        |    CASE WHEN substring(md5(CAST(k AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 1)
        |      IN $odd THEN 1.0 ELSE -1.0 END) AS h
@@ -616,26 +842,7 @@ object LlmQueries {
       Dedup.candidatePairsCapped(bands, "doc_id", maxBucket = 16, reps = 4)
         .orderBy("id_a", "id_b")
     }, Some({
-      val corpusCte =
-        """corpus AS (SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT CAST(1000000 + r.i AS BIGINT) AS doc_id, b.text
-          |  FROM range(1, 41) r(i) CROSS JOIN
-          |    (SELECT text FROM documents ORDER BY doc_id LIMIT 1) b)""".stripMargin
-      val toksCorpus =
-        s"toks AS (SELECT doc_id, string_split($normSql, ' ') AS t FROM corpus)"
-      s"""WITH $corpusCte,
-         |$toksCorpus, $shCte,
-         |$lshPairsCtes,
-         |bsize AS (SELECT band, band_hash, count(*) AS n
-         |  FROM bands GROUP BY band, band_hash),
-         |bx AS (SELECT b.doc_id, b.band, b.band_hash, s.n > 16 AS oversized
-         |  FROM bands b JOIN bsize s USING (band, band_hash) WHERE s.n > 1),
-         |rp AS (SELECT band, band_hash, doc_id AS rep FROM (
-         |    SELECT band, band_hash, doc_id,
-         |      row_number() OVER (PARTITION BY band, band_hash
-         |        ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-         |    FROM bx WHERE oversized) z WHERE rk <= 4),
+      s"""WITH $skewedLshCtes,
          |small_pairs AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b, false AS c
          |  FROM bx x JOIN bx y ON x.band = y.band AND x.band_hash = y.band_hash
          |  WHERE NOT x.oversized AND x.doc_id < y.doc_id),
@@ -671,18 +878,8 @@ object LlmQueries {
         .orderBy("doc_id")
     }, Some(s"""WITH RECURSIVE $toksCte, $shCte,
                |$lshPairsCtes,
-               |edges AS (SELECT id_a AS src, id_b AS dst FROM lsh_pairs
-               |          UNION SELECT id_b, id_a FROM lsh_pairs),
-               |reach AS (SELECT src AS id, src AS comp FROM edges
-               |          UNION
-               |          SELECT e.src, r.comp FROM edges e
-               |          JOIN reach r ON e.dst = r.id),
-               |comps AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
-               |assigned AS (SELECT d.doc_id,
-               |    coalesce(c.component, d.doc_id) AS component
-               |  FROM documents d LEFT JOIN comps c ON c.id = d.doc_id),
-               |sizes AS (SELECT component, count(*) AS cluster_size
-               |  FROM assigned GROUP BY component)
+               |${componentsCtes("lsh_pairs")},
+               |$componentSizeCtes
                |SELECT a.doc_id, a.component,
                |  a.doc_id = a.component AS is_canonical, s.cluster_size
                |FROM assigned a JOIN sizes s USING (component)
@@ -711,13 +908,7 @@ object LlmQueries {
         .orderBy("doc_id")
     }, Some(s"""WITH RECURSIVE $toksCte, $shCte,
                |$lshPairsCtes,
-               |edges AS (SELECT id_a AS src, id_b AS dst FROM lsh_pairs
-               |          UNION SELECT id_b, id_a FROM lsh_pairs),
-               |reach AS (SELECT src AS id, src AS comp FROM edges
-               |          UNION
-               |          SELECT e.src, r.comp FROM edges e
-               |          JOIN reach r ON e.dst = r.id),
-               |comps AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
+               |${componentsCtes("lsh_pairs")},
                |assigned AS (SELECT d.doc_id,
                |    coalesce(c.component, d.doc_id) AS component,
                |    CAST(CASE WHEN d.n_chars >= 300 THEN 1 ELSE 0 END AS INT) AS own_label
@@ -757,13 +948,7 @@ object LlmQueries {
       Splits.assignSplits(clustered, "component").orderBy("doc_id")
     }, Some(s"""WITH RECURSIVE $toksCte, $shCte,
                |$lshPairsCtes,
-               |edges AS (SELECT id_a AS src, id_b AS dst FROM lsh_pairs
-               |          UNION SELECT id_b, id_a FROM lsh_pairs),
-               |reach AS (SELECT src AS id, src AS comp FROM edges
-               |          UNION
-               |          SELECT e.src, r.comp FROM edges e
-               |          JOIN reach r ON e.dst = r.id),
-               |comps AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
+               |${componentsCtes("lsh_pairs")},
                |assigned AS (SELECT d.doc_id,
                |    coalesce(c.component, d.doc_id) AS component
                |  FROM documents d LEFT JOIN comps c ON c.id = d.doc_id)
@@ -853,23 +1038,7 @@ object LlmQueries {
         .join(docs.select(col("doc_id").as("id_b")).alias("b"),
           col("b.id_b") === col("a.id_a") + 1)
       Dedup.jaccardPairs(sh, "doc_id", pairs.select("id_a", "id_b")).orderBy("id_a")
-    }, Some(s"""WITH $toksCte, $shCte,
-               |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-               |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-               |  FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1),
-               |inter AS (SELECT p.id_a, p.id_b, count(*) AS n_inter
-               |  FROM pairs p
-               |  JOIN sh x ON x.doc_id = p.id_a
-               |  JOIN sh y ON y.doc_id = p.id_b AND y.shingle = x.shingle
-               |  GROUP BY p.id_a, p.id_b)
-               |SELECT p.id_a, p.id_b,
-               |  CAST(COALESCE(i.n_inter, 0) AS DOUBLE) /
-               |    CAST(sa.n + sb.n - COALESCE(i.n_inter, 0) AS DOUBLE) AS jaccard
-               |FROM pairs p
-               |LEFT JOIN inter i ON i.id_a = p.id_a AND i.id_b = p.id_b
-               |JOIN sizes sa ON sa.doc_id = p.id_a
-               |JOIN sizes sb ON sb.doc_id = p.id_b
-               |ORDER BY p.id_a""".stripMargin), bench = true),
+    }, Some(adjacentJaccardSql), bench = true),
 
     "llm_jaccard_arrays" -> Q((s, dir) => {
       // Same pairs and same Jaccard as llm_ngram_jaccard, but through the
@@ -884,23 +1053,7 @@ object LlmQueries {
           col("b.id_b") === col("a.id_a") + 1)
       Dedup.jaccardPairsFromArrays(sh, "doc_id", pairs.select("id_a", "id_b"))
         .orderBy("id_a")
-    }, Some(s"""WITH $toksCte, $shCte,
-               |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-               |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-               |  FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1),
-               |inter AS (SELECT p.id_a, p.id_b, count(*) AS n_inter
-               |  FROM pairs p
-               |  JOIN sh x ON x.doc_id = p.id_a
-               |  JOIN sh y ON y.doc_id = p.id_b AND y.shingle = x.shingle
-               |  GROUP BY p.id_a, p.id_b)
-               |SELECT p.id_a, p.id_b,
-               |  CAST(COALESCE(i.n_inter, 0) AS DOUBLE) /
-               |    CAST(sa.n + sb.n - COALESCE(i.n_inter, 0) AS DOUBLE) AS jaccard
-               |FROM pairs p
-               |LEFT JOIN inter i ON i.id_a = p.id_a AND i.id_b = p.id_b
-               |JOIN sizes sa ON sa.doc_id = p.id_a
-               |JOIN sizes sb ON sb.doc_id = p.id_b
-               |ORDER BY p.id_a""".stripMargin), bench = true),
+    }, Some(adjacentJaccardSql), bench = true),
 
     // ----- text analysis -----------------------------------------------
     "llm_text_stats" -> Q((s, dir) =>
@@ -1102,8 +1255,7 @@ object LlmQueries {
         "vec_id", "embedding", 3)
         .orderBy("query_id", "rank")
     }, Some({
-      s"""WITH v AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings),
+      s"""WITH ${vCte()},
          |q AS (SELECT vec_id AS query_id, vv AS qv FROM v WHERE vec_id < 10),
          |pairs AS (
          |  SELECT q.query_id, c.vec_id AS corpus_id, ${simSql("q.qv", "c.vv")} AS sim
@@ -1121,14 +1273,8 @@ object LlmQueries {
         emb.filter(col("vec_id") < 8), "vec_id", "embedding", 3)
         .orderBy("query_id", "rank")
     }, Some({
-      val sim = simSql("a.vv", "c.cv")
-      s"""WITH v AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings),
-         |cent AS (SELECT vec_id AS centroid_id, vv AS cv FROM v WHERE vec_id < 8),
-         |assigned AS (SELECT vec_id, centroid_id AS cluster_id FROM (
-         |  SELECT a.vec_id, c.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id ORDER BY $sim DESC, c.centroid_id) AS rn
-         |  FROM v a CROSS JOIN cent c) WHERE rn = 1),
+      s"""WITH ${vCte()},
+         |${coarseRouteCtes()},
          |corpus AS (SELECT v.vec_id AS corpus_id, v.vv AS cv, a.cluster_id
          |  FROM v JOIN assigned a ON v.vec_id = a.vec_id),
          |queries AS (SELECT v.vec_id AS query_id, v.vv AS qv, a.cluster_id
@@ -1164,9 +1310,7 @@ object LlmQueries {
         .withColumn("recall_at_3", col("n_hits") / 3.0)
         .orderBy("query_id")
     }, Some({
-      val sim = simSql("a.vv", "c.cv")
-      s"""WITH v AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings),
+      s"""WITH ${vCte()},
          |q AS (SELECT vec_id AS query_id, vv AS qv FROM v
          |  WHERE vec_id BETWEEN 10 AND 14),
          |bf_pairs AS (
@@ -1176,11 +1320,7 @@ object LlmQueries {
          |  SELECT query_id, corpus_id,
          |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS rank
          |  FROM bf_pairs) WHERE rank <= 3),
-         |cent AS (SELECT vec_id AS centroid_id, vv AS cv FROM v WHERE vec_id < 8),
-         |assigned AS (SELECT vec_id, centroid_id AS cluster_id FROM (
-         |  SELECT a.vec_id, c.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id ORDER BY $sim DESC, c.centroid_id) AS rn
-         |  FROM v a CROSS JOIN cent c) WHERE rn = 1),
+         |${coarseRouteCtes()},
          |corpus AS (SELECT v.vec_id AS corpus_id, v.vv AS cv, a.cluster_id
          |  FROM v JOIN assigned a ON v.vec_id = a.vec_id),
          |queries2 AS (SELECT v.vec_id AS query_id, v.vv AS qv, a.cluster_id
@@ -1231,8 +1371,7 @@ object LlmQueries {
            |  FROM $a, LATERAL (SELECT unnest(generate_series(1, len(vv))) AS i) u
            |  GROUP BY cid, i),
            |$c AS (SELECT cid, list(m ORDER BY i) AS cv FROM $m GROUP BY cid)""".stripMargin
-      s"""WITH v AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings),
+      s"""WITH ${vCte()},
          |c0 AS (SELECT vec_id AS cid, vv AS cv FROM v ORDER BY vec_id LIMIT 4),
          |${assignCte("a1", "c0")},
          |${meanCtes("a1", "m1", "c1")},
@@ -1253,19 +1392,8 @@ object LlmQueries {
         .select(col("id_a"), col("id_b"), col("cluster_id"))
         .orderBy("id_a", "id_b")
     }, Some({
-      val sim = simSql("a.vv", "c.cv")
-      s"""WITH v AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings),
-         |cent AS (SELECT vec_id AS centroid_id, vv AS cv FROM v
-         |  WHERE $scaledCentroidSql),
-         |assigned AS (SELECT vec_id, centroid_id AS cluster_id FROM (
-         |  SELECT a.vec_id, c.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id ORDER BY $sim DESC, c.centroid_id) AS rn
-         |  FROM v a CROSS JOIN cent c) WHERE rn = 1),
-         |cv AS (SELECT v.vec_id AS id_,
-         |    list_transform(v.vv, e -> e / sqrt(${dotSql("v.vv", "v.vv")})) AS uv,
-         |    a.cluster_id
-         |  FROM v JOIN assigned a ON v.vec_id = a.vec_id)
+      s"""WITH ${vCte()},
+         |$nearDupRouteCtes
          |SELECT x.id_ AS id_a, y.id_ AS id_b, x.cluster_id
          |FROM cv x JOIN cv y ON x.cluster_id = y.cluster_id
          |WHERE x.id_ < y.id_ AND ${dotSql("x.uv", "y.uv")} >= 0.35
@@ -1285,50 +1413,12 @@ object LlmQueries {
         "vec_id", "embedding", m = 8, subDim = 8, kTop = 3)
         .orderBy("query_id", "rank")
     }, Some({
-      def d2(a: String, b: String) =
-        s"list_reduce(list_transform(range(1, len($a) + 1), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (x, y) -> x + y)"
-      def assignCte(name: String, cents: String) =
-        s"""$name AS (SELECT vec_id, s, sv, cid FROM (
-           |  SELECT b.vec_id, b.s, b.sv, c.cid,
-           |    row_number() OVER (PARTITION BY b.vec_id, b.s
-           |      ORDER BY ${d2("b.sv", "c.cv")} ASC, c.cid) AS rn
-           |  FROM sub b JOIN $cents c ON b.s = c.s) WHERE rn = 1)""".stripMargin
-      def meanCtes(a: String, mm: String, cprev: String, c: String) =
-        s"""$mm AS (SELECT s, cid, i,
-           |    CAST(SUM(CAST(floor(sv[i] * 1073741824.0) AS DECIMAL(38,0))) AS DOUBLE)
-           |      / count(*) / 1073741824.0 AS mu
-           |  FROM $a, LATERAL (SELECT unnest(generate_series(1, len(sv))) AS i) u
-           |  GROUP BY s, cid, i),
-           |$c AS (SELECT p.s, p.cid, coalesce(n.cv, p.cv) AS cv
-           |  FROM $cprev p LEFT JOIN
-           |    (SELECT s, cid, list(mu ORDER BY i) AS cv FROM $mm GROUP BY s, cid) n
-           |  ON p.s = n.s AND p.cid = n.cid)""".stripMargin
-      s"""WITH v AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings),
-         |sub AS (SELECT vec_id, s, list_slice(vv, s * 8 + 1, s * 8 + 8) AS sv
-         |  FROM v, LATERAL (SELECT unnest(range(0, 8)) AS s) u),
-         |c0 AS (SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS cid,
-         |    sv AS cv FROM sub
-         |  WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 4)),
-         |${assignCte("a1", "c0")},
-         |${meanCtes("a1", "m1", "c0", "c1")},
-         |${assignCte("a2", "c1")},
-         |${meanCtes("a2", "m2", "c1", "c2")},
-         |codes0 AS (SELECT vec_id, s, cid FROM (
-         |  SELECT b.vec_id, b.s, c.cid,
-         |    row_number() OVER (PARTITION BY b.vec_id, b.s
-         |      ORDER BY ${d2("b.sv", "c.cv")} ASC, c.cid) AS rn
-         |  FROM sub b JOIN c2 c ON b.s = c.s) WHERE rn = 1),
-         |codes AS (SELECT vec_id AS corpus_id, list(cid ORDER BY s) AS codes
-         |  FROM codes0 GROUP BY vec_id),
-         |qsub AS (SELECT vec_id AS query_id, s, sv FROM sub WHERE vec_id BETWEEN 10 AND 14),
-         |lut0 AS (SELECT q.query_id, q.s, c.cid, ${d2("q.sv", "c.cv")} AS dd
-         |  FROM qsub q JOIN c2 c ON q.s = c.s),
-         |lut1 AS (SELECT query_id, s, list(dd ORDER BY cid) AS l FROM lut0 GROUP BY query_id, s),
-         |lut AS (SELECT query_id, list(l ORDER BY s) AS luts FROM lut1 GROUP BY query_id),
+      s"""WITH ${vCte()},
+         |${pqCodebookCtes()},
+         |$pqCodesCte,
+         |$pqLutCtes,
          |scored AS (SELECT q.query_id, c.corpus_id,
-         |  list_reduce(list_transform(range(1, 9), s -> q.luts[s][c.codes[s] + 1]),
-         |    (x, y) -> x + y) AS approx_d2
+         |  $adcSql AS approx_d2
          |  FROM codes c CROSS JOIN lut q WHERE c.corpus_id <> q.query_id)
          |SELECT query_id, corpus_id, approx_d2, rank FROM (
          |  SELECT query_id, corpus_id, approx_d2,
@@ -1350,56 +1440,13 @@ object LlmQueries {
           "vec_id", "embedding", m = 8, subDim = 8, kTop = 3)
         .orderBy("query_id", "rank")
     }, Some({
-      def d2(a: String, b: String) =
-        s"list_reduce(list_transform(range(1, len($a) + 1), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (x, y) -> x + y)"
-      def assignCte(name: String, cents: String) =
-        s"""$name AS (SELECT vec_id, s, sv, cid FROM (
-           |  SELECT b.vec_id, b.s, b.sv, c.cid,
-           |    row_number() OVER (PARTITION BY b.vec_id, b.s
-           |      ORDER BY ${d2("b.sv", "c.cv")} ASC, c.cid) AS rn
-           |  FROM sub b JOIN $cents c ON b.s = c.s) WHERE rn = 1)""".stripMargin
-      def meanCtes(a: String, mm: String, cprev: String, c: String) =
-        s"""$mm AS (SELECT s, cid, i,
-           |    CAST(SUM(CAST(floor(sv[i] * 1073741824.0) AS DECIMAL(38,0))) AS DOUBLE)
-           |      / count(*) / 1073741824.0 AS mu
-           |  FROM $a, LATERAL (SELECT unnest(generate_series(1, len(sv))) AS i) u
-           |  GROUP BY s, cid, i),
-           |$c AS (SELECT p.s, p.cid, coalesce(n.cv, p.cv) AS cv
-           |  FROM $cprev p LEFT JOIN
-           |    (SELECT s, cid, list(mu ORDER BY i) AS cv FROM $mm GROUP BY s, cid) n
-           |  ON p.s = n.s AND p.cid = n.cid)""".stripMargin
-      val sim = simSql("a.vv", "c.cv")
-      s"""WITH v AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings),
-         |sub AS (SELECT vec_id, s, list_slice(vv, s * 8 + 1, s * 8 + 8) AS sv
-         |  FROM v, LATERAL (SELECT unnest(range(0, 8)) AS s) u),
-         |c0 AS (SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS cid,
-         |    sv AS cv FROM sub
-         |  WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 4)),
-         |${assignCte("a1", "c0")},
-         |${meanCtes("a1", "m1", "c0", "c1")},
-         |${assignCte("a2", "c1")},
-         |${meanCtes("a2", "m2", "c1", "c2")},
-         |codes0 AS (SELECT vec_id, s, cid FROM (
-         |  SELECT b.vec_id, b.s, c.cid,
-         |    row_number() OVER (PARTITION BY b.vec_id, b.s
-         |      ORDER BY ${d2("b.sv", "c.cv")} ASC, c.cid) AS rn
-         |  FROM sub b JOIN c2 c ON b.s = c.s) WHERE rn = 1),
-         |codes AS (SELECT vec_id AS corpus_id, list(cid ORDER BY s) AS codes
-         |  FROM codes0 GROUP BY vec_id),
-         |cent AS (SELECT vec_id AS centroid_id, vv AS cv FROM v WHERE vec_id < 8),
-         |assigned AS (SELECT vec_id, centroid_id AS cluster_id FROM (
-         |  SELECT a.vec_id, c.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id ORDER BY $sim DESC, c.centroid_id) AS rn
-         |  FROM v a CROSS JOIN cent c) WHERE rn = 1),
-         |qsub AS (SELECT vec_id AS query_id, s, sv FROM sub WHERE vec_id BETWEEN 10 AND 14),
-         |lut0 AS (SELECT q.query_id, q.s, c.cid, ${d2("q.sv", "c.cv")} AS dd
-         |  FROM qsub q JOIN c2 c ON q.s = c.s),
-         |lut1 AS (SELECT query_id, s, list(dd ORDER BY cid) AS l FROM lut0 GROUP BY query_id, s),
-         |lut AS (SELECT query_id, list(l ORDER BY s) AS luts FROM lut1 GROUP BY query_id),
+      s"""WITH ${vCte()},
+         |${pqCodebookCtes()},
+         |$pqCodesCte,
+         |${coarseRouteCtes()},
+         |$pqLutCtes,
          |scored AS (SELECT q.query_id, c.corpus_id, qa.cluster_id,
-         |  list_reduce(list_transform(range(1, 9), s -> q.luts[s][c.codes[s] + 1]),
-         |    (x, y) -> x + y) AS approx_d2
+         |  $adcSql AS approx_d2
          |  FROM codes c
          |  JOIN assigned ca ON ca.vec_id = c.corpus_id
          |  JOIN lut q ON TRUE
@@ -1449,29 +1496,10 @@ object LlmQueries {
       }
       runs.reduce(_ unionByName _).orderBy("nprobe")
     }, Some({
-      def d2(a: String, b: String) =
-        s"list_reduce(list_transform(range(1, len($a) + 1), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (x, y) -> x + y)"
-      def assignCte(name: String, cents: String) =
-        s"""$name AS (SELECT vec_id, s, sv, cid FROM (
-           |  SELECT b.vec_id, b.s, b.sv, c.cid,
-           |    row_number() OVER (PARTITION BY b.vec_id, b.s
-           |      ORDER BY ${d2("b.sv", "c.cv")} ASC, c.cid) AS rn
-           |  FROM sub b JOIN $cents c ON b.s = c.s) WHERE rn = 1)""".stripMargin
-      def meanCtes(a: String, mm: String, cprev: String, c: String) =
-        s"""$mm AS (SELECT s, cid, i,
-           |    CAST(SUM(CAST(floor(sv[i] * 1073741824.0) AS DECIMAL(38,0))) AS DOUBLE)
-           |      / count(*) / 1073741824.0 AS mu
-           |  FROM $a, LATERAL (SELECT unnest(generate_series(1, len(sv))) AS i) u
-           |  GROUP BY s, cid, i),
-           |$c AS (SELECT p.s, p.cid, coalesce(n.cv, p.cv) AS cv
-           |  FROM $cprev p LEFT JOIN
-           |    (SELECT s, cid, list(mu ORDER BY i) AS cv FROM $mm GROUP BY s, cid) n
-           |  ON p.s = n.s AND p.cid = n.cid)""".stripMargin
       val sim = simSql("a.vv", "c.cv")
       def probeCtes(p: Int) =
         s"""scored$p AS (SELECT q.query_id, c.corpus_id,
-           |  list_reduce(list_transform(range(1, 9), s -> q.luts[s][c.codes[s] + 1]),
-           |    (x, y) -> x + y) AS approx_d2
+           |  $adcSql AS approx_d2
            |  FROM codes c
            |  JOIN assigned ca ON ca.vec_id = c.corpus_id
            |  JOIN qassign qa ON qa.cluster_id = ca.cluster_id AND qa.rn <= $p
@@ -1486,29 +1514,10 @@ object LlmQueries {
            |  CAST(count(t.corpus_id) AS INT) / 15.0 AS recall_at_3
            |  FROM exactl2 e LEFT JOIN top$p t
            |    ON t.query_id = e.query_id AND t.corpus_id = e.corpus_id)""".stripMargin
-      s"""WITH v AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings),
-         |sub AS (SELECT vec_id, s, list_slice(vv, s * 8 + 1, s * 8 + 8) AS sv
-         |  FROM v, LATERAL (SELECT unnest(range(0, 8)) AS s) u),
-         |c0 AS (SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS cid,
-         |    sv AS cv FROM sub
-         |  WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 4)),
-         |${assignCte("a1", "c0")},
-         |${meanCtes("a1", "m1", "c0", "c1")},
-         |${assignCte("a2", "c1")},
-         |${meanCtes("a2", "m2", "c1", "c2")},
-         |codes0 AS (SELECT vec_id, s, cid FROM (
-         |  SELECT b.vec_id, b.s, c.cid,
-         |    row_number() OVER (PARTITION BY b.vec_id, b.s
-         |      ORDER BY ${d2("b.sv", "c.cv")} ASC, c.cid) AS rn
-         |  FROM sub b JOIN c2 c ON b.s = c.s) WHERE rn = 1),
-         |codes AS (SELECT vec_id AS corpus_id, list(cid ORDER BY s) AS codes
-         |  FROM codes0 GROUP BY vec_id),
-         |cent AS (SELECT vec_id AS centroid_id, vv AS cv FROM v WHERE vec_id < 8),
-         |assigned AS (SELECT vec_id, centroid_id AS cluster_id FROM (
-         |  SELECT a.vec_id, c.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id ORDER BY $sim DESC, c.centroid_id) AS rn
-         |  FROM v a CROSS JOIN cent c) WHERE rn = 1),
+      s"""WITH ${vCte()},
+         |${pqCodebookCtes()},
+         |$pqCodesCte,
+         |${coarseRouteCtes()},
          |qassign AS (SELECT query_id, cluster_id, rn FROM (
          |  SELECT a.vec_id AS query_id, c.centroid_id AS cluster_id,
          |    row_number() OVER (PARTITION BY a.vec_id ORDER BY $sim DESC, c.centroid_id) AS rn
@@ -1517,13 +1526,9 @@ object LlmQueries {
          |exactl2 AS (SELECT query_id, corpus_id FROM (
          |  SELECT q.query_id, c.vec_id AS corpus_id,
          |    row_number() OVER (PARTITION BY q.query_id
-         |      ORDER BY ${d2("q.qv", "c.vv")} ASC, c.vec_id) AS rank
+         |      ORDER BY ${d2Sql("q.qv", "c.vv")} ASC, c.vec_id) AS rank
          |  FROM v c CROSS JOIN qv q WHERE c.vec_id <> q.query_id) WHERE rank <= 3),
-         |qsub AS (SELECT vec_id AS query_id, s, sv FROM sub WHERE vec_id BETWEEN 10 AND 14),
-         |lut0 AS (SELECT q.query_id, q.s, c.cid, ${d2("q.sv", "c.cv")} AS dd
-         |  FROM qsub q JOIN c2 c ON q.s = c.s),
-         |lut1 AS (SELECT query_id, s, list(dd ORDER BY cid) AS l FROM lut0 GROUP BY query_id, s),
-         |lut AS (SELECT query_id, list(l ORDER BY s) AS luts FROM lut1 GROUP BY query_id),
+         |$pqLutCtes,
          |${probeCtes(1)},
          |${probeCtes(3)}
          |SELECT * FROM rec1 UNION ALL SELECT * FROM rec3 ORDER BY nprobe""".stripMargin
@@ -1546,50 +1551,13 @@ object LlmQueries {
           "vec_id", "embedding", m = 8, subDim = 8, k = 4, iters = 2, kTop = 3)
         .orderBy("query_id", "rank")
     }, Some({
-      def d2(a: String, b: String) =
-        s"list_reduce(list_transform(range(1, len($a) + 1), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (x, y) -> x + y)"
-      def assignCte(name: String, cents: String) =
-        s"""$name AS (SELECT vec_id, s, sv, cid FROM (
-           |  SELECT b.vec_id, b.s, b.sv, c.cid,
-           |    row_number() OVER (PARTITION BY b.vec_id, b.s
-           |      ORDER BY ${d2("b.sv", "c.cv")} ASC, c.cid) AS rn
-           |  FROM sub b JOIN $cents c ON b.s = c.s) WHERE rn = 1)""".stripMargin
-      def meanCtes(a: String, mm: String, cprev: String, c: String) =
-        s"""$mm AS (SELECT s, cid, i,
-           |    CAST(SUM(CAST(floor(sv[i] * 1073741824.0) AS DECIMAL(38,0))) AS DOUBLE)
-           |      / count(*) / 1073741824.0 AS mu
-           |  FROM $a, LATERAL (SELECT unnest(generate_series(1, len(sv))) AS i) u
-           |  GROUP BY s, cid, i),
-           |$c AS (SELECT p.s, p.cid, coalesce(n.cv, p.cv) AS cv
-           |  FROM $cprev p LEFT JOIN
-           |    (SELECT s, cid, list(mu ORDER BY i) AS cv FROM $mm GROUP BY s, cid) n
-           |  ON p.s = n.s AND p.cid = n.cid)""".stripMargin
-      val sim = simSql("a.vv", "c.cv")
-      s"""WITH v AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings),
-         |cent AS (SELECT vec_id AS centroid_id, vv AS cv FROM v WHERE vec_id < 8),
-         |assigned AS MATERIALIZED (SELECT vec_id, centroid_id AS cluster_id FROM (
-         |  SELECT a.vec_id, c.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id ORDER BY $sim DESC, c.centroid_id) AS rn
-         |  FROM v a CROSS JOIN cent c) WHERE rn = 1),
+      s"""WITH ${vCte()},
+         |${coarseRouteCtes(materialized = true)},
          |rv AS MATERIALIZED (SELECT a.vec_id, a.cluster_id,
          |    list_transform(range(1, len(x.vv) + 1), i -> x.vv[i] - c.cv[i]) AS vv
          |  FROM assigned a JOIN v x ON x.vec_id = a.vec_id
          |  JOIN cent c ON c.centroid_id = a.cluster_id),
-         |sub AS MATERIALIZED (SELECT vec_id, s, list_slice(vv, s * 8 + 1, s * 8 + 8) AS sv
-         |  FROM rv, LATERAL (SELECT unnest(range(0, 8)) AS s) u),
-         |c0 AS (SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS cid,
-         |    sv AS cv FROM sub
-         |  WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 4)),
-         |${assignCte("a1", "c0")},
-         |${meanCtes("a1", "m1", "c0", "c1")},
-         |${assignCte("a2", "c1")},
-         |${meanCtes("a2", "m2", "c1", "c2")},
-         |codes0 AS (SELECT vec_id, s, cid FROM (
-         |  SELECT b.vec_id, b.s, c.cid,
-         |    row_number() OVER (PARTITION BY b.vec_id, b.s
-         |      ORDER BY ${d2("b.sv", "c.cv")} ASC, c.cid) AS rn
-         |  FROM sub b JOIN c2 c ON b.s = c.s) WHERE rn = 1),
+         |${pqCodebookCtes("rv", materialized = true)},
          |codes AS (SELECT z.vec_id AS corpus_id, a.cluster_id,
          |    list(z.cid ORDER BY z.s) AS codes
          |  FROM codes0 z JOIN assigned a ON a.vec_id = z.vec_id
@@ -1603,15 +1571,14 @@ object LlmQueries {
          |    list_slice(qv, s * 8 + 1, s * 8 + 8) AS sv
          |  FROM qrv, LATERAL (SELECT unnest(range(0, 8)) AS s) u),
          |lut0 AS (SELECT q.query_id, q.cluster_id, q.s, c.cid,
-         |    ${d2("q.sv", "c.cv")} AS dd
+         |    ${d2Sql("q.sv", "c.cv")} AS dd
          |  FROM qsub q JOIN c2 c ON q.s = c.s),
          |lut1 AS (SELECT query_id, cluster_id, s, list(dd ORDER BY cid) AS l
          |  FROM lut0 GROUP BY query_id, cluster_id, s),
          |lut AS (SELECT query_id, cluster_id, list(l ORDER BY s) AS luts
          |  FROM lut1 GROUP BY query_id, cluster_id),
          |scored AS (SELECT q.query_id, c.corpus_id, c.cluster_id,
-         |  list_reduce(list_transform(range(1, 9), s -> q.luts[s][c.codes[s] + 1]),
-         |    (x, y) -> x + y) AS approx_d2
+         |  $adcSql AS approx_d2
          |  FROM codes c JOIN lut q ON q.cluster_id = c.cluster_id
          |  WHERE c.corpus_id <> q.query_id)
          |SELECT query_id, corpus_id, cluster_id, approx_d2,
@@ -1641,56 +1608,13 @@ object LlmQueries {
           "vec_id", "embedding", m = 8, subDim = 8, kTop = 3, shortlist = 9)
         .orderBy("query_id", "rank")
     }, Some({
-      def d2(a: String, b: String) =
-        s"list_reduce(list_transform(range(1, len($a) + 1), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (x, y) -> x + y)"
-      def assignCte(name: String, cents: String) =
-        s"""$name AS (SELECT vec_id, s, sv, cid FROM (
-           |  SELECT b.vec_id, b.s, b.sv, c.cid,
-           |    row_number() OVER (PARTITION BY b.vec_id, b.s
-           |      ORDER BY ${d2("b.sv", "c.cv")} ASC, c.cid) AS rn
-           |  FROM sub b JOIN $cents c ON b.s = c.s) WHERE rn = 1)""".stripMargin
-      def meanCtes(a: String, mm: String, cprev: String, c: String) =
-        s"""$mm AS (SELECT s, cid, i,
-           |    CAST(SUM(CAST(floor(sv[i] * 1073741824.0) AS DECIMAL(38,0))) AS DOUBLE)
-           |      / count(*) / 1073741824.0 AS mu
-           |  FROM $a, LATERAL (SELECT unnest(generate_series(1, len(sv))) AS i) u
-           |  GROUP BY s, cid, i),
-           |$c AS (SELECT p.s, p.cid, coalesce(n.cv, p.cv) AS cv
-           |  FROM $cprev p LEFT JOIN
-           |    (SELECT s, cid, list(mu ORDER BY i) AS cv FROM $mm GROUP BY s, cid) n
-           |  ON p.s = n.s AND p.cid = n.cid)""".stripMargin
-      val sim = simSql("a.vv", "c.cv")
-      s"""WITH v AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings),
-         |sub AS (SELECT vec_id, s, list_slice(vv, s * 8 + 1, s * 8 + 8) AS sv
-         |  FROM v, LATERAL (SELECT unnest(range(0, 8)) AS s) u),
-         |c0 AS (SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS cid,
-         |    sv AS cv FROM sub
-         |  WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT 4)),
-         |${assignCte("a1", "c0")},
-         |${meanCtes("a1", "m1", "c0", "c1")},
-         |${assignCte("a2", "c1")},
-         |${meanCtes("a2", "m2", "c1", "c2")},
-         |codes0 AS (SELECT vec_id, s, cid FROM (
-         |  SELECT b.vec_id, b.s, c.cid,
-         |    row_number() OVER (PARTITION BY b.vec_id, b.s
-         |      ORDER BY ${d2("b.sv", "c.cv")} ASC, c.cid) AS rn
-         |  FROM sub b JOIN c2 c ON b.s = c.s) WHERE rn = 1),
-         |codes AS (SELECT vec_id AS corpus_id, list(cid ORDER BY s) AS codes
-         |  FROM codes0 GROUP BY vec_id),
-         |cent AS (SELECT vec_id AS centroid_id, vv AS cv FROM v WHERE vec_id < 8),
-         |assigned AS (SELECT vec_id, centroid_id AS cluster_id FROM (
-         |  SELECT a.vec_id, c.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id ORDER BY $sim DESC, c.centroid_id) AS rn
-         |  FROM v a CROSS JOIN cent c) WHERE rn = 1),
-         |qsub AS (SELECT vec_id AS query_id, s, sv FROM sub WHERE vec_id BETWEEN 10 AND 14),
-         |lut0 AS (SELECT q.query_id, q.s, c.cid, ${d2("q.sv", "c.cv")} AS dd
-         |  FROM qsub q JOIN c2 c ON q.s = c.s),
-         |lut1 AS (SELECT query_id, s, list(dd ORDER BY cid) AS l FROM lut0 GROUP BY query_id, s),
-         |lut AS (SELECT query_id, list(l ORDER BY s) AS luts FROM lut1 GROUP BY query_id),
+      s"""WITH ${vCte()},
+         |${pqCodebookCtes()},
+         |$pqCodesCte,
+         |${coarseRouteCtes()},
+         |$pqLutCtes,
          |scored AS (SELECT q.query_id, c.corpus_id,
-         |  list_reduce(list_transform(range(1, 9), s -> q.luts[s][c.codes[s] + 1]),
-         |    (x, y) -> x + y) AS approx_d2
+         |  $adcSql AS approx_d2
          |  FROM codes c
          |  JOIN assigned ca ON ca.vec_id = c.corpus_id
          |  JOIN lut q ON TRUE
@@ -1703,7 +1627,7 @@ object LlmQueries {
          |  FROM scored) WHERE rank <= 9),
          |qv AS (SELECT vec_id AS query_id, vv AS qv FROM v WHERE vec_id BETWEEN 10 AND 14),
          |rr0 AS (SELECT t.query_id, t.corpus_id, t.approx_rank,
-         |    ${d2("q.qv", "c.vv")} AS exact_d2
+         |    ${d2Sql("q.qv", "c.vv")} AS exact_d2
          |  FROM short t JOIN v c ON c.vec_id = t.corpus_id
          |  JOIN qv q ON q.query_id = t.query_id),
          |rr AS (SELECT query_id, corpus_id, approx_rank, exact_d2,
@@ -1791,15 +1715,7 @@ object LlmQueries {
            |  LEFT JOIN inf$t i ON i.dst = d.doc_id)""".stripMargin
       s"""WITH docs AS (SELECT doc_id FROM documents),
          |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n, count(*) AS ni FROM docs),
-         |cand AS (
-         |  SELECT doc_id AS src, (doc_id * 31 + 7) % (SELECT ni FROM nn) AS dst
-         |  FROM docs WHERE doc_id % 11 <> 0
-         |  UNION ALL
-         |  SELECT doc_id, (doc_id * 17 + 3) % (SELECT ni FROM nn)
-         |  FROM docs WHERE doc_id % 11 <> 0 AND doc_id % 2 = 0
-         |  UNION ALL
-         |  SELECT doc_id, (doc_id * 13 + 5) % (SELECT ni FROM nn)
-         |  FROM docs WHERE doc_id % 11 <> 0 AND doc_id % 3 = 0),
+         |$linkCandCte,
          |edges AS (SELECT DISTINCT src, dst FROM cand WHERE src <> dst),
          |outdeg AS (SELECT src, CAST(count(*) AS DOUBLE) AS deg FROM edges GROUP BY src),
          |r0 AS (SELECT doc_id, 1.0 / (SELECT n FROM nn) AS pr FROM docs),
@@ -1839,15 +1755,7 @@ object LlmQueries {
     }, Some(
       s"""WITH docs AS (SELECT doc_id FROM documents),
          |nn AS (SELECT count(*) AS ni FROM docs),
-         |cand AS (
-         |  SELECT doc_id AS src, (doc_id * 31 + 7) % (SELECT ni FROM nn) AS dst
-         |  FROM docs WHERE doc_id % 11 <> 0
-         |  UNION ALL
-         |  SELECT doc_id, (doc_id * 17 + 3) % (SELECT ni FROM nn)
-         |  FROM docs WHERE doc_id % 11 <> 0 AND doc_id % 2 = 0
-         |  UNION ALL
-         |  SELECT doc_id, (doc_id * 13 + 5) % (SELECT ni FROM nn)
-         |  FROM docs WHERE doc_id % 11 <> 0 AND doc_id % 3 = 0),
+         |$linkCandCte,
          |canon AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
          |  FROM cand WHERE src <> dst),
          |deg AS (SELECT v, count(*) AS deg FROM (
@@ -2147,18 +2055,8 @@ object LlmQueries {
           pairs.select("id_a", "id_b"))
         .orderBy("doc_id")
     }, Some(s"""WITH RECURSIVE $phashPairsCtes,
-               |edges AS (SELECT id_a AS src, id_b AS dst FROM vp
-               |          UNION SELECT id_b, id_a FROM vp),
-               |reach AS (SELECT src AS id, src AS comp FROM edges
-               |          UNION
-               |          SELECT e.src, r.comp FROM edges e
-               |          JOIN reach r ON e.dst = r.id),
-               |comps AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
-               |assigned AS (SELECT d.doc_id,
-               |    coalesce(c.component, d.doc_id) AS component
-               |  FROM documents d LEFT JOIN comps c ON c.id = d.doc_id),
-               |sizes AS (SELECT component, count(*) AS cluster_size
-               |  FROM assigned GROUP BY component)
+               |${componentsCtes("vp")},
+               |$componentSizeCtes
                |SELECT a.doc_id, a.component,
                |  a.doc_id = a.component AS is_canonical, s.cluster_size
                |FROM assigned a JOIN sizes s USING (component)
@@ -2662,18 +2560,8 @@ object LlmQueries {
          |$imageCtes,
          |alledges AS (SELECT id_a, id_b FROM lsh_pairs
          |  UNION SELECT id_a, id_b FROM vp),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM alledges
-         |          UNION SELECT id_b, id_a FROM alledges),
-         |reach AS (SELECT src AS id, src AS comp FROM edges
-         |          UNION
-         |          SELECT e.src, r.comp FROM edges e
-         |          JOIN reach r ON e.dst = r.id),
-         |comps AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
-         |assigned AS (SELECT d.doc_id,
-         |    coalesce(c.component, d.doc_id) AS component
-         |  FROM documents d LEFT JOIN comps c ON c.id = d.doc_id),
-         |sizes AS (SELECT component, count(*) AS cluster_size
-         |  FROM assigned GROUP BY component),
+         |${componentsCtes("alledges")},
+         |$componentSizeCtes,
          |tdeg AS (SELECT doc_id, count(*) AS n FROM (
          |    SELECT id_a AS doc_id FROM lsh_pairs
          |    UNION ALL SELECT id_b FROM lsh_pairs) GROUP BY doc_id),
@@ -2797,18 +2685,8 @@ object LlmQueries {
          |  UNION ALL SELECT id_a, id_b, 'audio' FROM avp
          |  UNION ALL SELECT id_a, id_b, 'video' FROM vvp),
          |uedge AS (SELECT DISTINCT id_a, id_b FROM alledges),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM uedge
-         |          UNION SELECT id_b, id_a FROM uedge),
-         |reach AS (SELECT src AS id, src AS comp FROM edges
-         |          UNION
-         |          SELECT e.src, r.comp FROM edges e
-         |          JOIN reach r ON e.dst = r.id),
-         |comps AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
-         |assigned AS (SELECT d.doc_id,
-         |    coalesce(c.component, d.doc_id) AS component
-         |  FROM documents d LEFT JOIN comps c ON c.id = d.doc_id),
-         |sizes AS (SELECT component, count(*) AS cluster_size
-         |  FROM assigned GROUP BY component),
+         |${componentsCtes("uedge")},
+         |$componentSizeCtes,
          |deg AS (SELECT doc_id, m, count(*) AS n FROM (
          |    SELECT id_a AS doc_id, m FROM alledges
          |    UNION ALL SELECT id_b, m FROM alledges) GROUP BY doc_id, m),
@@ -2892,13 +2770,7 @@ object LlmQueries {
           concat_ws(",", col("fail_reasons")).as("fail_reasons"), col("keep"))
         .orderBy("doc_id"),
       Some(s"""WITH st AS (SELECT doc_id,
-              |    len(string_split($normSql, ' ')) AS n_tokens,
-              |    CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) /
-              |      NULLIF(CAST(length(text) AS DOUBLE), 0) AS punct_ratio,
-              |    CAST(len(regexp_extract_all(lower(text),
-              |        '\\b(the|a|an|and|of|to|in|is|it)\\b')) AS DOUBLE) /
-              |      NULLIF(CAST(len(string_split($normSql, ' ')) AS DOUBLE), 0)
-              |      AS stopword_ratio
+              |$qualStatsCols
               |  FROM documents),
               |r AS (SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
               |    list_filter([
@@ -3167,12 +3039,8 @@ object LlmQueries {
             .otherwise(col("d2_proj") / col("d2_orig")))
         .orderBy("id_a")
     }, Some({
-      def d2Sql(a: String, b: String) =
-        s"list_reduce(list_transform(range(1, len($a) + 1), " +
-          s"i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (x, y) -> x + y)"
       val odd = "('1','3','5','7','9','b','d','f')"
-      s"""WITH v AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings),
+      s"""WITH ${vCte()},
          |nn AS (SELECT count(*) AS n FROM v),
          |rpp AS (SELECT j, list_transform(range(0, 64), i ->
          |    CASE WHEN substring(md5('rp_' || CAST(j AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 1)
@@ -3332,8 +3200,7 @@ object LlmQueries {
       Similarity.rrfFuse(Seq(cos, l2), 60)
         .orderBy("query_id", "fused_rank")
     }, Some({
-      s"""WITH v AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings),
+      s"""WITH ${vCte()},
          |q AS (SELECT vec_id AS query_id, vv AS qv FROM v WHERE vec_id < 10),
          |cos_pairs AS (
          |  SELECT q.query_id, c.vec_id AS corpus_id, ${simSql("q.qv", "c.vv")} AS sim
@@ -3589,12 +3456,7 @@ object LlmQueries {
         .orderBy("id_a", "id_b")
     }, Some(s"""WITH $toksCte, $shCte,
                |$lshPairsCtes,
-               |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-               |inter AS (SELECT p.id_a, p.id_b, count(*) AS n_inter
-               |  FROM lsh_pairs p
-               |  JOIN sh x ON x.doc_id = p.id_a
-               |  JOIN sh y ON y.doc_id = p.id_b AND y.shingle = x.shingle
-               |  GROUP BY p.id_a, p.id_b)
+               |${shingleInterCtes("lsh_pairs")}
                |SELECT p.id_a, p.id_b,
                |  round(CAST(COALESCE(i.n_inter, 0) AS DOUBLE) / sa.n, 4) AS cont_a_in_b,
                |  round(CAST(COALESCE(i.n_inter, 0) AS DOUBLE) / sb.n, 4) AS cont_b_in_a
@@ -3674,12 +3536,7 @@ object LlmQueries {
          |    CAST($agreeSql AS DOUBLE) / 8.0 AS est_jaccard
          |  FROM pairs p JOIN sigs x ON x.doc_id = p.id_a
          |  JOIN sigs y ON y.doc_id = p.id_b),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |inter AS (SELECT p.id_a, p.id_b, count(*) AS n_inter
-         |  FROM pairs p
-         |  JOIN sh x ON x.doc_id = p.id_a
-         |  JOIN sh y ON y.doc_id = p.id_b AND y.shingle = x.shingle
-         |  GROUP BY p.id_a, p.id_b)
+         |${shingleInterCtes("pairs")}
          |SELECT e.id_a, e.id_b, e.est_jaccard,
          |  CAST(COALESCE(i.n_inter, 0) AS DOUBLE) /
          |    CAST(sa.n + sb.n - COALESCE(i.n_inter, 0) AS DOUBLE) AS jaccard
@@ -3716,37 +3573,9 @@ object LlmQueries {
           .as("n_multi_clusters"))
     }, Some(s"""WITH RECURSIVE $toksCte, $shCte,
                |$lshPairsCtes,
-               |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-               |inter AS (SELECT p.id_a, p.id_b, count(*) AS n_inter
-               |  FROM lsh_pairs p
-               |  JOIN sh x ON x.doc_id = p.id_a
-               |  JOIN sh y ON y.doc_id = p.id_b AND y.shingle = x.shingle
-               |  GROUP BY p.id_a, p.id_b),
-               |verified AS (SELECT i.id_a, i.id_b FROM inter i
-               |  JOIN sizes sa ON sa.doc_id = i.id_a
-               |  JOIN sizes sb ON sb.doc_id = i.id_b
-               |  WHERE CAST(i.n_inter AS DOUBLE) /
-               |    CAST(sa.n + sb.n - i.n_inter AS DOUBLE) >= 0.8),
-               |edges AS (SELECT id_a AS src, id_b AS dst FROM verified
-               |          UNION SELECT id_b, id_a FROM verified),
-               |reach AS (SELECT src AS id, src AS comp FROM edges
-               |          UNION
-               |          SELECT e.src, r.comp FROM edges e
-               |          JOIN reach r ON e.dst = r.id),
-               |comps AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
-               |lbl AS (SELECT d.doc_id,
-               |    coalesce(c.component, d.doc_id) AS component
-               |  FROM documents d LEFT JOIN comps c ON c.id = d.doc_id),
-               |csizes AS (SELECT component, count(*) AS cluster_size
-               |  FROM lbl GROUP BY component)
-               |SELECT count(*) AS n_docs,
-               |  CAST(SUM(CASE WHEN l.doc_id = l.component THEN 1 ELSE 0 END)
-               |    AS BIGINT) AS n_kept,
-               |  CAST(SUM(CASE WHEN s.cluster_size > 1 THEN 1 ELSE 0 END)
-               |    AS BIGINT) AS n_clustered_docs,
-               |  count(DISTINCT CASE WHEN s.cluster_size > 1
-               |    THEN l.component END) AS n_multi_clusters
-               |FROM lbl l JOIN csizes s USING (component)""".stripMargin)),
+               |${verifiedPairCtes("lsh_pairs")},
+               |${componentsCtes("verified")},
+               |${dedupAccountingSql("documents")}""".stripMargin)),
 
     "llm_dedup_pipeline_capped" -> Q((s, dir) => {
       // llm_dedup_pipeline routed through the SKEW-CAPPED candidate
@@ -3786,26 +3615,7 @@ object LlmQueries {
         count_distinct(when(col("cluster_size") > 1, col("component")))
           .as("n_multi_clusters"))
     }, Some({
-      val corpusCte =
-        """corpus AS (SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT CAST(1000000 + r.i AS BIGINT) AS doc_id, b.text
-          |  FROM range(1, 41) r(i) CROSS JOIN
-          |    (SELECT text FROM documents ORDER BY doc_id LIMIT 1) b)""".stripMargin
-      val toksCorpus =
-        s"toks AS (SELECT doc_id, string_split($normSql, ' ') AS t FROM corpus)"
-      s"""WITH RECURSIVE $corpusCte,
-         |$toksCorpus, $shCte,
-         |$lshPairsCtes,
-         |bsize AS (SELECT band, band_hash, count(*) AS n
-         |  FROM bands GROUP BY band, band_hash),
-         |bx AS (SELECT b.doc_id, b.band, b.band_hash, s.n > 16 AS oversized
-         |  FROM bands b JOIN bsize s USING (band, band_hash) WHERE s.n > 1),
-         |rp AS (SELECT band, band_hash, doc_id AS rep FROM (
-         |    SELECT band, band_hash, doc_id,
-         |      row_number() OVER (PARTITION BY band, band_hash
-         |        ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-         |    FROM bx WHERE oversized) z WHERE rk <= 4),
+      s"""WITH RECURSIVE $skewedLshCtes,
          |small_pairs AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b
          |  FROM bx x JOIN bx y ON x.band = y.band AND x.band_hash = y.band_hash
          |  WHERE NOT x.oversized AND x.doc_id < y.doc_id),
@@ -3815,37 +3625,9 @@ object LlmQueries {
          |  WHERE m.oversized AND m.doc_id <> r.rep),
          |cp AS (SELECT DISTINCT id_a, id_b FROM
          |  (SELECT * FROM small_pairs UNION ALL SELECT * FROM big_pairs)),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |inter AS (SELECT p.id_a, p.id_b, count(*) AS n_inter
-         |  FROM cp p
-         |  JOIN sh x ON x.doc_id = p.id_a
-         |  JOIN sh y ON y.doc_id = p.id_b AND y.shingle = x.shingle
-         |  GROUP BY p.id_a, p.id_b),
-         |verified AS (SELECT i.id_a, i.id_b FROM inter i
-         |  JOIN sizes sa ON sa.doc_id = i.id_a
-         |  JOIN sizes sb ON sb.doc_id = i.id_b
-         |  WHERE CAST(i.n_inter AS DOUBLE) /
-         |    CAST(sa.n + sb.n - i.n_inter AS DOUBLE) >= 0.8),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM verified
-         |          UNION SELECT id_b, id_a FROM verified),
-         |reach AS (SELECT src AS id, src AS comp FROM edges
-         |          UNION
-         |          SELECT e.src, r.comp FROM edges e
-         |          JOIN reach r ON e.dst = r.id),
-         |comps AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
-         |lbl AS (SELECT d.doc_id,
-         |    coalesce(c.component, d.doc_id) AS component
-         |  FROM corpus d LEFT JOIN comps c ON c.id = d.doc_id),
-         |csizes AS (SELECT component, count(*) AS cluster_size
-         |  FROM lbl GROUP BY component)
-         |SELECT count(*) AS n_docs,
-         |  CAST(SUM(CASE WHEN l.doc_id = l.component THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_kept,
-         |  CAST(SUM(CASE WHEN s.cluster_size > 1 THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_clustered_docs,
-         |  count(DISTINCT CASE WHEN s.cluster_size > 1
-         |    THEN l.component END) AS n_multi_clusters
-         |FROM lbl l JOIN csizes s USING (component)""".stripMargin
+         |${verifiedPairCtes("cp")},
+         |${componentsCtes("verified")},
+         |${dedupAccountingSql("corpus")}""".stripMargin
     })),
 
     "llm_curation_pipeline" -> Q((s, dir) => {
@@ -3964,42 +3746,14 @@ object LlmQueries {
               |      THEN doc_id - 1 ELSE doc_id END AS VARCHAR) AS g FROM corpus)),
               |$urlNormCtes,
               |url_kept AS (SELECT min(rec_id) AS doc_id FROM norm GROUP BY url_norm),
-              |qstats AS (SELECT d.doc_id,
-              |    len(string_split($normSql, ' ')) AS n_tokens,
-              |    CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) /
-              |      NULLIF(CAST(length(text) AS DOUBLE), 0) AS punct_ratio,
-              |    CAST(len(regexp_extract_all(lower(text),
-              |        '\\b(the|a|an|and|of|to|in|is|it)\\b')) AS DOUBLE) /
-              |      NULLIF(CAST(len(string_split($normSql, ' ')) AS DOUBLE), 0)
-              |      AS stopword_ratio
-              |  FROM documents d JOIN url_kept USING (doc_id)),
-              |qual_kept AS (SELECT doc_id FROM qstats
-              |  WHERE n_tokens >= 20 AND n_tokens <= 100000
-              |    AND (punct_ratio > 0.06) IS NOT TRUE
-              |    AND (stopword_ratio < 0.05) IS NOT TRUE),
+              |${qualKeepCtes("qstats", "qual_kept", "d.doc_id", "documents d JOIN url_kept USING (doc_id)")},
               |$shCte,
               |$lshPairsCtes,
               |qp AS (SELECT id_a, id_b FROM lsh_pairs
               |  WHERE id_a IN (SELECT doc_id FROM qual_kept)
               |    AND id_b IN (SELECT doc_id FROM qual_kept)),
-              |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-              |inter AS (SELECT p.id_a, p.id_b, count(*) AS n_inter
-              |  FROM qp p
-              |  JOIN sh x ON x.doc_id = p.id_a
-              |  JOIN sh y ON y.doc_id = p.id_b AND y.shingle = x.shingle
-              |  GROUP BY p.id_a, p.id_b),
-              |verified AS (SELECT i.id_a, i.id_b FROM inter i
-              |  JOIN sizes sa ON sa.doc_id = i.id_a
-              |  JOIN sizes sb ON sb.doc_id = i.id_b
-              |  WHERE CAST(i.n_inter AS DOUBLE) /
-              |    CAST(sa.n + sb.n - i.n_inter AS DOUBLE) >= 0.8),
-              |edges AS (SELECT id_a AS src, id_b AS dst FROM verified
-              |          UNION SELECT id_b, id_a FROM verified),
-              |reach AS (SELECT src AS id, src AS comp FROM edges
-              |          UNION
-              |          SELECT e.src, r.comp FROM edges e
-              |          JOIN reach r ON e.dst = r.id),
-              |comps AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
+              |${verifiedPairCtes("qp")},
+              |${componentsCtes("verified")},
               |lbl AS (SELECT q.doc_id, coalesce(c.component, q.doc_id) AS component
               |  FROM qual_kept q LEFT JOIN comps c ON c.id = q.doc_id),
               |canon AS (SELECT doc_id, component FROM lbl WHERE doc_id = component),
@@ -4094,29 +3848,12 @@ object LlmQueries {
           pairs.select("id_a", "id_b"))
         .orderBy("vec_id")
     }, Some({
-      val sim = simSql("a.vv", "c.cv")
-      s"""WITH RECURSIVE v AS (SELECT vec_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings),
-         |cent AS (SELECT vec_id AS centroid_id, vv AS cv FROM v
-         |  WHERE $scaledCentroidSql),
-         |assigned AS (SELECT vec_id, centroid_id AS cluster_id FROM (
-         |  SELECT a.vec_id, c.centroid_id,
-         |    row_number() OVER (PARTITION BY a.vec_id ORDER BY $sim DESC, c.centroid_id) AS rn
-         |  FROM v a CROSS JOIN cent c) WHERE rn = 1),
-         |cv AS (SELECT v.vec_id AS id_,
-         |    list_transform(v.vv, e -> e / sqrt(${dotSql("v.vv", "v.vv")})) AS uv,
-         |    a.cluster_id
-         |  FROM v JOIN assigned a ON v.vec_id = a.vec_id),
+      s"""WITH RECURSIVE ${vCte()},
+         |$nearDupRouteCtes,
          |nd AS (SELECT x.id_ AS id_a, y.id_ AS id_b
          |  FROM cv x JOIN cv y ON x.cluster_id = y.cluster_id
          |  WHERE x.id_ < y.id_ AND ${dotSql("x.uv", "y.uv")} >= 0.35),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM nd
-         |          UNION SELECT id_b, id_a FROM nd),
-         |reach AS (SELECT src AS id, src AS comp FROM edges
-         |          UNION
-         |          SELECT e.src, r.comp FROM edges e
-         |          JOIN reach r ON e.dst = r.id),
-         |comps AS (SELECT id, min(comp) AS component FROM reach GROUP BY id),
+         |${componentsCtes("nd")},
          |lbl AS (SELECT emb.vec_id,
          |    coalesce(c.component, emb.vec_id) AS component
          |  FROM embeddings emb LEFT JOIN comps c ON c.id = emb.vec_id),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
+import graft.sources.Tables
 import graft.streaming.AvailableNow
 import graft.tools.Measure
 import Registry.T
@@ -24,12 +25,12 @@ object StreamingQueries {
   /** The st20 streaming CDC → SCD2 chain, shared by the dimension gate
     * (st20) and its integrity-audit twin (st22) so the two can never
     * fork: seed the dimension from `orders`, stream two change
-    * increments through a foreachBatch Scd2.merge under one checkpoint,
-    * return the final dimension. `tag` isolates the catalog table and
-    * landing dirs per gate. */
+    * increments through a foreachBatch [[Tables.scd2Apply]] (the
+    * production SCD2 table apply) under one checkpoint, return the final
+    * dimension. `tag` isolates the catalog table and landing dirs per
+    * gate. */
   private def streamCdcScd2(s: org.apache.spark.sql.SparkSession, dir: String,
       tag: String): org.apache.spark.sql.DataFrame = {
-    import graft.operators.Scd2
     val base = Measure.tempDir(s"graft_$tag")
     val src = s"$base/in"; val chk = s"$base/chk"
     s.sql(s"CREATE DATABASE IF NOT EXISTS graft_$tag")
@@ -45,20 +46,16 @@ object StreamingQueries {
         startCol.as("effective_start_date"),
         lit(null).cast("timestamp").as("effective_end_date"),
         lit(true).as("is_current"))
-    shape(o.filter(col("o_orderkey") % 10 < 8),
-        col("o_orderstatus"), col("o_orderdate"))
-      .write.mode("overwrite").saveAsTable(s"graft_$tag.dim")
+    def applyScd2(df: org.apache.spark.sql.DataFrame): Unit =
+      Tables.scd2Apply(s, s"graft_$tag.dim", df, Seq("order_id"), Seq("status", "total"))
+    applyScd2(shape(o.filter(col("o_orderkey") % 10 < 8), // first load
+        col("o_orderstatus"), col("o_orderdate")))
     def runOnce(): Unit =
       AvailableNow.eachBatch(s.readStream
           .schema("order_id STRING, status STRING, total DECIMAL(12,2), " +
             "effective_start_date TIMESTAMP, effective_end_date TIMESTAMP, " +
             "is_current BOOLEAN")
-          .parquet(src), chk) { (batch, _) =>
-        val merged = Scd2.merge(s.read.table(s"graft_$tag.dim"), batch,
-            Seq("order_id"), Seq("status", "total"))
-          .localCheckpoint(true)
-        merged.write.mode("overwrite").saveAsTable(s"graft_$tag.dim")
-      }
+          .parquet(src), chk) { (batch, _) => applyScd2(batch) }
     shape(o.filter(col("o_orderkey") % 2 === 0),
         when(col("o_orderkey") % 6 === 0, lit("X"))
           .otherwise(col("o_orderstatus")),
@@ -525,13 +522,13 @@ object StreamingQueries {
       // Streaming SCD2 — the reference's two flagship patterns composed
       // in ONE pipeline: Auto Loader-style incremental file pickup
       // (st1's shape) feeding MERGE-maintained dimension history
-      // (Scd2.merge in foreachBatch, the OSS mapping of dim_policy.py's
-      // streaming MERGE INTO). Batch A loads every order as a current
-      // dimension row; batch B re-emits keys divisible by 3 with status
-      // 'X' and a start date 10 days later — the merge must close each
-      // old version (is_current=false, end = new start) AND insert the
-      // new one, under the same checkpoint (B processes only B's file).
-      import graft.operators.Scd2
+      // (Tables.scd2Apply in foreachBatch, the OSS mapping of
+      // dim_policy.py's streaming MERGE INTO). Batch A is the first load:
+      // every order as a current dimension row; batch B re-emits keys
+      // divisible by 3 with status 'X' and a start date 10 days later —
+      // the merge must close each old version (is_current=false, end =
+      // new start) AND insert the new one, under the same checkpoint (B
+      // processes only B's file).
       val base = Measure.tempDir("graft_st11")
       val src = s"$base/in"; val chk = s"$base/chk"
       s.sql("CREATE DATABASE IF NOT EXISTS graft_st11")
@@ -546,16 +543,10 @@ object StreamingQueries {
             .schema("order_id STRING, status STRING, total DECIMAL(12,2), " +
               "effective_start_date TIMESTAMP")
             .parquet(src), chk) { (batch, _) =>
-          val dim = batch
-            .withColumn("effective_end_date", lit(null).cast("timestamp"))
-            .withColumn("is_current", lit(true))
-          val merged =
-            if (s.catalog.tableExists("graft_st11.dim_order"))
-              Scd2.merge(s.read.table("graft_st11.dim_order"), dim,
-                keyCols = Seq("order_id"), trackedCols = Seq("status"))
-                .localCheckpoint(true) // materialize BEFORE the overwrite
-            else dim
-          merged.write.mode("overwrite").saveAsTable("graft_st11.dim_order")
+          Tables.scd2Apply(s, "graft_st11.dim_order", batch
+              .withColumn("effective_end_date", lit(null).cast("timestamp"))
+              .withColumn("is_current", lit(true)),
+            keyCols = Seq("order_id"), trackedCols = Seq("status"))
         }
       dimA.write.mode("append").parquet(src) // batch A: first load
       runOnce()
@@ -1276,7 +1267,7 @@ object StreamingQueries {
       // Streaming CDC → SCD2 maintenance — the lakehouse-migration op
       // the reference's whole pipeline exists for, run CONTINUOUSLY:
       // change batches arrive as a stream and each micro-batch applies
-      // Scd2.merge (the same join+union+rewrite algebra as the batch
+      // the SCD2 merge (the same join+union+rewrite algebra as the batch
       // scd2_merge gate) against the standing dimension, so versions
       // CHAIN across increments — a key updated in both increments ends
       // with three rows (original closed at d+1, 'X' closed at d+2,
@@ -1287,9 +1278,10 @@ object StreamingQueries {
       // re-closing rows increment 1 created. The oracle replays BOTH
       // sequential merges in chained CTEs — a fold-into-one-merge
       // implementation diverges on every three-version chain. State is
-      // the dimension table itself (overwrite-per-batch = the Parquet
-      // spelling of MERGE; localCheckpoint breaks the read-overwrite
-      // cycle). Same one-coalesced-file-per-increment pin as st13–st19.
+      // the dimension table itself, partitioned by is_current: each
+      // micro-batch appends its closed rows to history and replaces the
+      // current partition (Tables.scd2Apply, the Parquet spelling of
+      // MERGE). Same one-coalesced-file-per-increment pin as st13–st19.
       // (Chain body shared with st22's integrity audit — streamCdcScd2.)
       Registry.decimalsToDouble(streamCdcScd2(s, dir, "st20"))
         .orderBy("order_id", "effective_start_date", "is_current")

@@ -64,6 +64,9 @@ object Tables {
 
   /** SCD2 apply with a first-load path (reference handles the missing
     * target at `dim_policy.py:108-112`) and a partition-aware rewrite.
+    * The one SCD2 table commit in the library: `Runner`'s dimension
+    * stage, `StreamingMedallion`'s drops and the st11/st20/st22 streaming
+    * gates all write through it.
     *
     * The table is partitioned by `is_current`. A merge reads the
     * `is_current=true` partition, merges `source` into it, and reads the
@@ -123,58 +126,6 @@ object Tables {
     }
   }
 
-  /** SCD2 apply with an ATOMIC commit: the full merged state is written
-    * to a fresh versioned directory and the table is repointed with ONE
-    * `ALTER TABLE .. SET LOCATION` — a single catalog metadata op, so a
-    * reader sees entirely-old or entirely-new state and a crash anywhere
-    * before the swap leaves the live table untouched (the orphaned
-    * staging dir is harmless and re-runs are self-contained).
-    *
-    * This is the other side of [[scd2Apply]]'s tradeoff, the same
-    * tradeoff a table format (Delta/Iceberg) resolves with file-level
-    * manifests: `scd2Apply` writes O(changes) per merge but has a
-    * documented two-phase crash window (convergent on re-run — spec
-    * proven); this variant has NO window but rewrites O(table) per
-    * merge. Use it for dimensions (small relative to facts, where
-    * correctness-under-crash is worth a full rewrite); use `scd2Apply`
-    * when the history partition has grown past rewrite budget. The
-    * table stays UNPARTITIONED (`is_current` is a data column): a
-    * partitioned catalog table would need partition re-registration
-    * after the location swap, reopening the non-atomic window. */
-  def scd2ApplyAtomic(spark: SparkSession, table: String, source: DataFrame,
-      keyCols: Seq[String], trackedCols: Seq[String]): Unit = {
-    if (!spark.catalog.tableExists(table)) {
-      source.write.mode("overwrite").format("parquet").saveAsTable(table)
-      return
-    }
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
-    require(meta.partitionColumnNames.isEmpty,
-      s"scd2ApplyAtomic needs an unpartitioned table; $table is partitioned " +
-        s"by ${meta.partitionColumnNames.mkString(", ")} — use scd2Apply")
-    val oldLoc = new org.apache.hadoop.fs.Path(meta.location)
-    // Versioned sibling dir: strip any prior _v suffix so locations
-    // don't accrete (`dim_v1_v2_...`), then stamp a fresh version.
-    val baseName = oldLoc.getName.replaceAll("_v\\d+$", "")
-    val newLoc = new org.apache.hadoop.fs.Path(oldLoc.getParent,
-      s"${baseName}_v${System.nanoTime()}")
-    val merged = Scd2.merge(spark.read.table(table), source, keyCols, trackedCols)
-    merged.write.mode("overwrite").parquet(newLoc.toString)
-    // THE commit point — one metadata op; everything before this is
-    // invisible to readers, everything after is the new table.
-    spark.sql(s"ALTER TABLE $table SET LOCATION '${newLoc.toString}'")
-    spark.catalog.refreshTable(table)
-    // Best-effort cleanup of the superseded directory; a crash here
-    // leaks a dir but never corrupts the table.
-    try {
-      val fs = oldLoc.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(oldLoc)) fs.delete(oldLoc, true)
-    } catch {
-      case e: Exception =>
-        System.err.println(s"[scd2ApplyAtomic] old location cleanup failed: $e")
-    }
-  }
-
   /** Small-file compaction — the OSS mapping of Delta's
     * optimizeWrite/autoCompact (`databricks.yml:219-220`,
     * `setup_catalog.sql:46-49`; SURVEY §4 "write optimization" row).
@@ -206,25 +157,4 @@ object Tables {
       .bucketBy(numBuckets, bucketCol)
       .sortBy(bucketCol)
       .saveAsTable(table)
-
-  /** Crash-safe path-level overwrite via staging-dir swap (SURVEY §7.4):
-    * write to `<path>.staging`, then swap directories so readers never see
-    * a half-written table. */
-  def stagedOverwritePath(df: DataFrame, path: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val staging = path + ".staging"
-    val backup = path + ".old"
-    df.write.mode("overwrite").parquet(staging)
-    val p = Paths.get(path); val s = Paths.get(staging); val b = Paths.get(backup)
-    if (Files.exists(b)) {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(backup)).deleteRecursively()
-    }
-    if (Files.exists(p)) Files.move(p, b, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(s, p, StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(b)) {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(backup)).deleteRecursively()
-    }
-  }
 }

@@ -62,8 +62,9 @@ object StressDataGen {
     val outDir = if (args.nonEmpty) args(0) else "/tmp/stressdata"
     val sf = if (args.length > 1) args(1).toDouble else 1.0
     // arg 3: "skew" = 1% hot (the r11 octave), "skew<pct>" (e.g. skew25)
-    // = that percentage of orders redirected to customer 0 — used by the
-    // SkewAb crossover sweep, where the salt only pays once the hot key
+    // = that percentage of orders redirected to customer 0 — the corpora
+    // of the salted-join crossover sweep (STRESS_r13 §1, run with the A/B
+    // tool as it stood at dff11ee): the salt only pays once the hot key
     // dominates a shuffle partition (share >> 1/numPartitions).
     val skewPct: Int =
       if (args.length > 2 && args(2).startsWith("skew"))

@@ -55,9 +55,7 @@ object TimeQueries {
     val sfDir = args(0)
     val iters = args(1).toInt
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val names = args.drop(2).toSeq
-    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown gate(s): ${unknown.mkString(", ")}")
+    val names = graft.SparkEntry.knownGates(args.drop(2).toSeq, graft.SparkEntry.queries.keys)
     val spark = Measure.session(Measure.cpus(32))
     try spark.range(1000).count() catch { case _: Throwable => }
     def probe(): Double =

@@ -234,17 +234,6 @@ class IngestRunnerSpec extends SparkTestBase {
     assert(after.filter(col("st") === "FL").count() === 10) // partitions intact
   }
 
-  test("stagedOverwritePath swaps atomically and cleans up") {
-    import spark.implicits._
-    val path = Measure.tempDir("graft_staged") + "/tbl"
-    Tables.stagedOverwritePath(Seq(1, 2, 3).toDF("v"), path)
-    assert(spark.read.parquet(path).count() === 3)
-    Tables.stagedOverwritePath(Seq(4, 5).toDF("v"), path)
-    assert(spark.read.parquet(path).count() === 2)
-    assert(!Files.exists(java.nio.file.Paths.get(path + ".staging")))
-    assert(!Files.exists(java.nio.file.Paths.get(path + ".old")))
-  }
-
   test("runner executes the medallion DAG topologically and skips descendants on failure") {
     var order = Vector[String]()
     val stages = Seq(

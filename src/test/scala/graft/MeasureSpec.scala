@@ -38,6 +38,24 @@ class MeasureSpec extends SparkTestBase {
     assert((gate \ "incomplete") === JBool(false))
   }
 
+  test("gate-name filters reject an unknown name, naming it") {
+    // Verify's SPARK_GRAFT_ONLY, Bench's SPARK_GRAFT_BENCH_ONLY and the
+    // TimeQueries arguments all go through SparkEntry.knownGates.
+    val verify = intercept[IllegalArgumentException](
+      Verify.only(Some("w1_dim_date_spine,no_such_gate")))
+    assert(verify.getMessage.contains("no_such_gate"))
+    // A registry gate that is not a headline gate is unknown to Bench.
+    val bench = intercept[IllegalArgumentException](Bench.only(Some("w1_dim_date_spine")))
+    assert(bench.getMessage.contains("w1_dim_date_spine"))
+    val time = intercept[IllegalArgumentException](
+      TimeQueries.main(Array("", "1", "no_such_gate")))
+    assert(time.getMessage.contains("no_such_gate"))
+    assert(Verify.only(Some("w1_dim_date_spine")) === Some(Set("w1_dim_date_spine")))
+    assert(Verify.only(None) === None)
+    val headline = SparkEntry.benchQueries.head
+    assert(Bench.only(Some(headline)) === Some(Set(headline)))
+  }
+
   test("counted: a drain timeout reports incomplete and still removes the listener") {
     val sc = spark.sparkContext
     val gate = new java.util.concurrent.CountDownLatch(1)
@@ -94,6 +112,13 @@ class MeasureSpec extends SparkTestBase {
       assert(hits.nonEmpty && hits.forall(_.startsWith("graft/streaming/AvailableNow.scala:")),
         s"run streams through graft.streaming.AvailableNow, found $token at:\n${hits.mkString("\n")}")
     }
+  }
+
+  test("source sweep: Scd2.merge is called in src/main only by the table apply and the batch merge gate") {
+    val hits = sourceHits("Scd2.merge")
+    val allowed = Seq("graft/sources/Tables.scala:", "graft/queries/PipelineQueries.scala:")
+    assert(hits.exists(_.startsWith(allowed.head)) && hits.forall(h => allowed.exists(h.startsWith)),
+      s"commit SCD2 merges through graft.sources.Tables.scd2Apply, found:\n${hits.mkString("\n")}")
   }
 
   test("source sweep: temp dirs are created in src/main only by Measure.tempDir") {

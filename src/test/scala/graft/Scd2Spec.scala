@@ -234,66 +234,4 @@ class Scd2Spec extends SparkTestBase {
     assert(rows.filter(col("is_current")).select("policy_id", "status").as[(String, String)]
       .collect().toSeq.sorted === Seq(("P1", "CANCELLED"), ("P2", "CANCELLED"), ("P3", "ACTIVE")))
   }
-
-  test("scd2ApplyAtomic: location-swap commit, correct state, idempotent re-run") {
-    val table = "graft_test.scd2_atomic"
-    Tables.ensureDatabase(spark, "graft_test")
-    Tables.dropTable(spark, table)
-    val v1 = dim(("P1", "ACTIVE", "2024-01-01", None, true),
-      ("P2", "ACTIVE", "2024-01-01", None, true))
-    Tables.scd2ApplyAtomic(spark, table, v1, Seq("policy_id"), Seq("status"))
-    assert(spark.read.table(table).count() === 2)
-    val locBefore = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .location
-    val v2 = dim(("P1", "CANCELLED", "2024-06-01", None, true),
-      ("P2", "ACTIVE", "2024-06-01", None, true),
-      ("P3", "ACTIVE", "2024-06-01", None, true))
-    Tables.scd2ApplyAtomic(spark, table, v2, Seq("policy_id"), Seq("status"))
-    val after = spark.read.table(table).cache()
-    assert(after.count() === 4)
-    assert(after.filter(!col("is_current")).count() === 1)
-    assert(after.filter(col("is_current")).count() === 3)
-    // The commit really was a pointer swap: location changed, and the
-    // superseded directory was cleaned up.
-    val meta = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-    assert(meta.location != locBefore)
-    val fs = new org.apache.hadoop.fs.Path(locBefore)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(locBefore)),
-      "old location should be removed after the swap")
-    // Idempotent re-run: same source → row-identical table.
-    val first = spark.read.table(table).collect().map(_.toString).sorted
-    Tables.scd2ApplyAtomic(spark, table, v2, Seq("policy_id"), Seq("status"))
-    val second = spark.read.table(table).collect().map(_.toString).sorted
-    assert(second === first)
-  }
-
-  test("scd2ApplyAtomic: a crash before the swap leaves the live table untouched") {
-    // Simulate "staged write done, swap never happened": drop a stray
-    // staging dir next to the table, then read — the catalog still
-    // points at the old location, so the staged bytes are invisible.
-    val table = "graft_test.scd2_atomic_crash"
-    Tables.ensureDatabase(spark, "graft_test")
-    Tables.dropTable(spark, table)
-    val v1 = dim(("P1", "ACTIVE", "2024-01-01", None, true))
-    Tables.scd2ApplyAtomic(spark, table, v1, Seq("policy_id"), Seq("status"))
-    val meta = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val staged = new org.apache.hadoop.fs.Path(loc.getParent,
-      s"${loc.getName.replaceAll("_v\\d+$", "")}_v999999999999")
-    dim(("P1", "CANCELLED", "2024-06-01", None, true))
-      .write.mode("overwrite").parquet(staged.toString)
-    spark.catalog.refreshTable(table)
-    val rows = spark.read.table(table).collect()
-    assert(rows.length === 1 && rows.head.getAs[String]("status") === "ACTIVE")
-    // Recovery is just a clean re-run; the orphan dir never interferes.
-    Tables.scd2ApplyAtomic(spark, table,
-      dim(("P1", "CANCELLED", "2024-06-01", None, true)),
-      Seq("policy_id"), Seq("status"))
-    val after = spark.read.table(table)
-    assert(after.filter(col("is_current")).head().getAs[String]("status") === "CANCELLED")
-  }
 }
