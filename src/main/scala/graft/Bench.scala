@@ -107,13 +107,21 @@ object Bench {
   private[graft] def only(list: Option[String]): Option[Set[String]] =
     list.map(v => SparkEntry.knownGates(v.split(",").toSeq, SparkEntry.benchQueries).toSet)
 
+  /** Timed runs per gate from `SPARK_GRAFT_BENCH_ITERS`'s value, 3 by
+    * default; anything below 1 fails before the session starts. */
+  private[graft] def iters(value: Option[String]): Int = {
+    val n = value.getOrElse("3").toInt
+    require(n >= 1, s"SPARK_GRAFT_BENCH_ITERS must be >= 1, got $n")
+    n
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val only = Bench.only(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+    val iters = Bench.iters(sys.env.get("SPARK_GRAFT_BENCH_ITERS"))
     val spark = Measure.session(Measure.cpus(32))
     val names = SparkEntry.benchQueries.filter(SparkEntry.queries.contains)
       .filter(n => only.forall(_.contains(n)))
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     // Reprobe budget scales with the headline list (fixed 5 was sized
     // for 56 queries; the r11 TPC-DS widening to 68 pushed the dedup
     // family out of the isolated re-timing slots).

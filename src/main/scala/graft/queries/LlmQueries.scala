@@ -229,6 +229,32 @@ object LlmQueries {
       |  WHERE l.g % 8 < 7
       |  GROUP BY l.doc_id, l.g // 64)""".stripMargin
 
+  /** The clip-in-video containment oracle up to its tail: the 2-frame
+    * clips of every doc_id % 4 = 0 video, full-hash candidates and every
+    * aligned placement with summed Hamming ≤ 6. llm_video_clip_containment
+    * and its streaming twin st19 each append their own ORDER BY (st19 an
+    * arrival-order filter first). */
+  private[queries] val clipContainmentSql =
+    s"""WITH $videoHashCtes,
+      |clips AS (SELECT doc_id AS clip_id,
+      |    CAST(frame_idx - 1 AS INT) AS p, phash
+      |  FROM vph WHERE doc_id % 4 = 0 AND frame_idx IN (1, 2)),
+      |cand AS (SELECT DISTINCT c.clip_id, v.doc_id AS video_id,
+      |    CAST(v.frame_idx - c.p AS INT) AS loc
+      |  FROM clips c JOIN vph v ON v.phash = c.phash
+      |  WHERE v.frame_idx - c.p >= 0),
+      |ver AS (SELECT d.clip_id, d.video_id, d.loc,
+      |    CAST(SUM(bit_count(xor(c.phash, v.phash))) AS BIGINT)
+      |      AS hamming,
+      |    count(*) AS n_aligned
+      |  FROM cand d
+      |  JOIN clips c ON c.clip_id = d.clip_id
+      |  JOIN vph v ON v.doc_id = d.video_id
+      |    AND v.frame_idx = d.loc + c.p
+      |  GROUP BY d.clip_id, d.video_id, d.loc)
+      |SELECT clip_id, video_id, loc AS "offset", hamming
+      |FROM ver WHERE n_aligned = 2 AND hamming <= 6""".stripMargin
+
   // Oracle sample replay shared by the audio gates: signed LE int16
   // sample i of doc = bytes 2(i%8), 2(i%8)+1 of md5(seed '_' i div 8),
   // +512 mod 2^16 at the doc's one perturbed position — no RIFF parse.
@@ -693,6 +719,34 @@ object LlmQueries {
        |  JOIN sizes sb ON sb.doc_id = i.id_b
        |  WHERE CAST(i.n_inter AS DOUBLE) /
        |    CAST(sa.n + sb.n - i.n_inter AS DOUBLE) >= 0.8)""".stripMargin
+
+  /** The entity-resolution records, four per entity (seed = c_custkey
+    * div 4): the md5-derived base name, one substituted char, one
+    * appended char and one 4-char suffix. llm_entity_resolution and its
+    * streaming twin st21 read these (`rec_id`, `name`); `entityRecsCtes`
+    * is the DuckDB replay, ending at `recs`. */
+  private[queries] def entityRecs(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    T(s, dir, "customer").select(
+      col("c_custkey").as("rec_id"),
+      expr("""CASE CAST(c_custkey % 4 AS INT)
+             |  WHEN 0 THEN substring(md5(CAST(c_custkey DIV 4 AS STRING)), 1, 8)
+             |  WHEN 1 THEN concat(substring(md5(CAST(c_custkey DIV 4 AS STRING)), 1, 7), 'x')
+             |  WHEN 2 THEN concat(substring(md5(CAST(c_custkey DIV 4 AS STRING)), 1, 8), '7')
+             |  ELSE concat(substring(md5(CAST(c_custkey DIV 4 AS STRING)), 1, 8), 'zzzz')
+             |END""".stripMargin).as("name"))
+
+  private[queries] val entityRecsCtes =
+    """h AS (SELECT c_custkey AS rec_id,
+      |    substring(md5(CAST(c_custkey // 4 AS VARCHAR)), 1, 8) AS h8,
+      |    c_custkey % 4 AS v
+      |  FROM customer),
+      |recs AS (SELECT rec_id,
+      |    CASE v WHEN 0 THEN h8
+      |      WHEN 1 THEN substring(h8, 1, 7) || 'x'
+      |      WHEN 2 THEN h8 || '7'
+      |      ELSE h8 || 'zzzz' END AS name
+      |  FROM h)""".stripMargin
 
   /** Oracle for llm_lr_train / llm_lr_score: unrolls the 4 softsign-GD
     * iterations (Classifier.trainSoftsignGD) in chained CTEs. Gradients
@@ -2366,26 +2420,7 @@ object LlmQueries {
           (col("frame_idx") - 1).as("p"), col("phash"))
       Multimodal.clipContainment(clips, fh, nClipFrames = 2, tau = 6)
         .orderBy("clip_id", "video_id", "offset")
-    }, Some(s"""WITH $videoHashCtes,
-              |clips AS (SELECT doc_id AS clip_id,
-              |    CAST(frame_idx - 1 AS INT) AS p, phash
-              |  FROM vph WHERE doc_id % 4 = 0 AND frame_idx IN (1, 2)),
-              |cand AS (SELECT DISTINCT c.clip_id, v.doc_id AS video_id,
-              |    CAST(v.frame_idx - c.p AS INT) AS loc
-              |  FROM clips c JOIN vph v ON v.phash = c.phash
-              |  WHERE v.frame_idx - c.p >= 0),
-              |ver AS (SELECT d.clip_id, d.video_id, d.loc,
-              |    CAST(SUM(bit_count(xor(c.phash, v.phash))) AS BIGINT)
-              |      AS hamming,
-              |    count(*) AS n_aligned
-              |  FROM cand d
-              |  JOIN clips c ON c.clip_id = d.clip_id
-              |  JOIN vph v ON v.doc_id = d.video_id
-              |    AND v.frame_idx = d.loc + c.p
-              |  GROUP BY d.clip_id, d.video_id, d.loc)
-              |SELECT clip_id, video_id, loc AS "offset", hamming
-              |FROM ver WHERE n_aligned = 2 AND hamming <= 6
-              |ORDER BY clip_id, video_id, loc""".stripMargin),
+    }, Some(clipContainmentSql + "\nORDER BY clip_id, video_id, loc"),
       bench = true),
 
     "llm_audio_clip_containment" -> Q((s, dir) => {
@@ -3268,27 +3303,10 @@ object LlmQueries {
       // replays names, blocking, the length filter, and full edit
       // distances — a pre-filter that's too aggressive or a threshold
       // off-by-one diverges.
-      val recs = T(s, dir, "customer").select(
-        col("c_custkey").as("rec_id"),
-        expr("""CASE CAST(c_custkey % 4 AS INT)
-               |  WHEN 0 THEN substring(md5(CAST(c_custkey DIV 4 AS STRING)), 1, 8)
-               |  WHEN 1 THEN concat(substring(md5(CAST(c_custkey DIV 4 AS STRING)), 1, 7), 'x')
-               |  WHEN 2 THEN concat(substring(md5(CAST(c_custkey DIV 4 AS STRING)), 1, 8), '7')
-               |  ELSE concat(substring(md5(CAST(c_custkey DIV 4 AS STRING)), 1, 8), 'zzzz')
-               |END""".stripMargin).as("name"))
-      TextOps.blockedEditDistancePairs(recs, "rec_id", "name",
+      TextOps.blockedEditDistancePairs(entityRecs(s, dir), "rec_id", "name",
           prefixLen = 6, maxDist = 2)
         .orderBy("id_a", "id_b")
-    }, Some("""WITH h AS (SELECT c_custkey AS rec_id,
-              |    substring(md5(CAST(c_custkey // 4 AS VARCHAR)), 1, 8) AS h8,
-              |    c_custkey % 4 AS v
-              |  FROM customer),
-              |recs AS (SELECT rec_id,
-              |    CASE v WHEN 0 THEN h8
-              |      WHEN 1 THEN substring(h8, 1, 7) || 'x'
-              |      WHEN 2 THEN h8 || '7'
-              |      ELSE h8 || 'zzzz' END AS name
-              |  FROM h),
+    }, Some(s"""WITH $entityRecsCtes,
               |cand AS (SELECT x.rec_id AS id_a, y.rec_id AS id_b,
               |    CAST(levenshtein(x.name, y.name) AS INT) AS dist
               |  FROM recs x JOIN recs y

@@ -500,6 +500,33 @@ object PipelineQueries {
               |LEFT JOIN sp p ON pr.policy_id = p.policy_id
               |ORDER BY pr.premium_id""".stripMargin
 
+  /** The tail of the SCD2 integrity-audit oracle: per-key violation
+    * counts `pk` over `r(k, <start>, e, c, prev_e, has_prev)`, then the
+    * seven counters of Checks.scd2IntegrityReport. dq_scd2_integrity and
+    * its streaming twin st22 differ only in the start column's name. */
+  private[queries] def scd2AuditSql(start: String): String =
+    s"""pk AS (SELECT k,
+       |    SUM(CASE WHEN c THEN 1 ELSE 0 END) AS n_cur,
+       |    SUM(CASE WHEN NOT c AND e IS NULL THEN 1 ELSE 0 END) AS n_open,
+       |    SUM(CASE WHEN c AND e IS NOT NULL THEN 1 ELSE 0 END) AS n_cwe,
+       |    SUM(CASE WHEN has_prev AND (prev_e IS NULL OR prev_e > $start)
+       |      THEN 1 ELSE 0 END) AS n_ov,
+       |    SUM(CASE WHEN has_prev AND prev_e IS NOT NULL AND prev_e < $start
+       |      THEN 1 ELSE 0 END) AS n_gap
+       |  FROM r GROUP BY k)
+       |SELECT count(*) AS n_keys,
+       |  CAST(SUM(CASE WHEN n_cur > 1 THEN 1 ELSE 0 END) AS BIGINT)
+       |    AS keys_multi_current,
+       |  CAST(SUM(CASE WHEN n_cur = 0 THEN 1 ELSE 0 END) AS BIGINT)
+       |    AS keys_no_current,
+       |  CAST(SUM(n_open) AS BIGINT) AS rows_open_noncurrent,
+       |  CAST(SUM(n_cwe) AS BIGINT) AS rows_current_with_end,
+       |  CAST(SUM(CASE WHEN n_ov > 0 THEN 1 ELSE 0 END) AS BIGINT)
+       |    AS keys_overlapping,
+       |  CAST(SUM(CASE WHEN n_gap > 0 THEN 1 ELSE 0 END) AS BIGINT)
+       |    AS keys_gapped
+       |FROM pk""".stripMargin
+
   val defs: Seq[(String, Q)] = Seq(
 
     // ----- silver transforms (§2.12) -----------------------------------
@@ -840,7 +867,7 @@ object PipelineQueries {
           expr("o_orderdate + INTERVAL 50 DAY"),
           expr("o_orderdate + INTERVAL 60 DAY"), isCur = true))
       Checks.scd2IntegrityReport(dim, "k")
-    }, Some("""WITH dim AS (
+    }, Some(s"""WITH dim AS (
               |  SELECT o_orderkey AS k, o_orderdate AS s,
               |    CAST(NULL AS TIMESTAMP) AS e, TRUE AS c
               |  FROM orders WHERE o_orderkey % 10 < 8
@@ -872,27 +899,7 @@ object PipelineQueries {
               |    lag(e) OVER w AS prev_e,
               |    lag(s) OVER w IS NOT NULL AS has_prev
               |  FROM dim WINDOW w AS (PARTITION BY k ORDER BY s, c, e NULLS FIRST)),
-              |pk AS (SELECT k,
-              |    SUM(CASE WHEN c THEN 1 ELSE 0 END) AS n_cur,
-              |    SUM(CASE WHEN NOT c AND e IS NULL THEN 1 ELSE 0 END) AS n_open,
-              |    SUM(CASE WHEN c AND e IS NOT NULL THEN 1 ELSE 0 END) AS n_cwe,
-              |    SUM(CASE WHEN has_prev AND (prev_e IS NULL OR prev_e > s)
-              |      THEN 1 ELSE 0 END) AS n_ov,
-              |    SUM(CASE WHEN has_prev AND prev_e IS NOT NULL AND prev_e < s
-              |      THEN 1 ELSE 0 END) AS n_gap
-              |  FROM r GROUP BY k)
-              |SELECT count(*) AS n_keys,
-              |  CAST(SUM(CASE WHEN n_cur > 1 THEN 1 ELSE 0 END) AS BIGINT)
-              |    AS keys_multi_current,
-              |  CAST(SUM(CASE WHEN n_cur = 0 THEN 1 ELSE 0 END) AS BIGINT)
-              |    AS keys_no_current,
-              |  CAST(SUM(n_open) AS BIGINT) AS rows_open_noncurrent,
-              |  CAST(SUM(n_cwe) AS BIGINT) AS rows_current_with_end,
-              |  CAST(SUM(CASE WHEN n_ov > 0 THEN 1 ELSE 0 END) AS BIGINT)
-              |    AS keys_overlapping,
-              |  CAST(SUM(CASE WHEN n_gap > 0 THEN 1 ELSE 0 END) AS BIGINT)
-              |    AS keys_gapped
-              |FROM pk""".stripMargin)),
+              |${scd2AuditSql("s")}""".stripMargin)),
 
     "dq_table_sweep" -> Q((s, dir) => {
       import s.implicits._

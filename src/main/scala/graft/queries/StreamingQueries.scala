@@ -1,8 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
+import graft.llm.{Dedup, Multimodal}
 import graft.sources.Tables
 import graft.streaming.AvailableNow
 import graft.tools.Measure
@@ -12,33 +14,142 @@ import Registry.T
   * event-time windowing and custom state): each stages files into a temp
   * landing dir ([[Measure.tempDir]], removed at JVM exit), drains it
   * through the one bounded harness, [[AvailableNow]], and returns a
-  * deterministic batch view of the sink for the DuckDB compare. Sink
-  * gates (memory, parquet) use [[AvailableNow.run]]; `foreachBatch`
-  * gates use [[AvailableNow.eachBatch]], so their batch bodies read each
-  * micro-batch once and run in the gate's own session `s`.
+  * deterministic batch view of the sink for the DuckDB compare.
+  *
+  * One private fixture holds what the gates share, so each gate keeps
+  * only its own state builders, probe, increments and oracle:
+  *   - [[Gate]]: the gate's `graft_<tag>` database with its tables
+  *     dropped, plus a landing and a checkpoint dir;
+  *   - [[Gate.increments]]: the one land-and-drain loop, and the one
+  *     home of the one-increment-one-micro-batch rule every
+  *     multi-increment oracle replays (the only `eachBatch` call here);
+  *   - [[Gate.acceptedIndex]]: the accepted-index step of the streaming
+  *     dedup gates st13–st18 (probe the standing state, append only the
+  *     survivors);
+  *   - [[events]] and [[memorySink]]: the memory-sink gates' landing and
+  *     drain.
+  * Gates whose bodies would make a shared part branch on its caller
+  * (st12 through `Ingest`, st19's two-kind registry, st23's five-outcome
+  * attribution) keep their own bodies and use only the parts that fit.
+  * So does st21: its index is one projection of the micro-batch written
+  * to one table, and the accepted-index step's checkpoints and key table
+  * would only add jobs to it.
   */
 object StreamingQueries {
 
   // events.ts (nanos) → exact epoch seconds on the DuckDB side.
   private val tsSecSql = "CAST(floor(date_part('epoch', ts)) AS BIGINT)"
 
+  /** One `foreachBatch` gate's working set: the `graft_<tag>` database
+    * with `tables` dropped, and a landing (`src`) and checkpoint (`chk`)
+    * dir under [[Measure.tempDir]]. */
+  private final class Gate(s: SparkSession, tag: String, tables: String*) {
+    private val base = Measure.tempDir(s"graft_$tag")
+    val src = s"$base/in"
+    val chk = s"$base/chk"
+    s.sql(s"CREATE DATABASE IF NOT EXISTS graft_$tag")
+    tables.foreach(t => s.sql(s"DROP TABLE IF EXISTS graft_$tag.$t"))
+
+    /** The qualified name of the gate's table `t`. */
+    def apply(t: String): String = s"graft_$tag.$t"
+    def read(t: String): DataFrame = s.read.table(apply(t))
+
+    /** Land each of `incs` as ONE coalesced parquet file and drain it
+      * through [[AvailableNow.eachBatch]] under the gate's one checkpoint
+      * before the next lands. Each increment is therefore exactly one
+      * micro-batch, and micro-batch `n` is increment `n + 1` (st23 and
+      * st24 record that number). Every multi-increment oracle replays
+      * this: it models each increment as one accept/filter step, and an
+      * increment split across micro-batches would let its early rows
+      * filter its later ones. So `maxFilesPerTrigger` stays unset on the
+      * source. */
+    def increments(incs: DataFrame*)(fn: (DataFrame, Long) => Unit): Unit =
+      incs.foreach { inc =>
+        inc.coalesce(1).write.mode("append").parquet(src)
+        AvailableNow.eachBatch(s.readStream.schema(incs.head.schema).parquet(src), chk)(fn)
+      }
+
+    /** The accepted-index step as a micro-batch body, for a gate whose
+      * first table takes the accepted `key`s and whose other tables take
+      * `state`'s frames, in order. Per micro-batch: build the state
+      * frames once, checkpointed; drop the keys `probe` finds against the
+      * accepted tables (nothing before the first commit); keep the rest
+      * with `left_anti`; append the kept keys and each state frame
+      * semi-joined to them, the appends overlapped. Keys that collide
+      * within one micro-batch are not judged against each other: the
+      * index holds earlier increments only. */
+    def acceptedIndex(key: String)(state: DataFrame => Seq[DataFrame])(
+        probe: Seq[DataFrame] => DataFrame): (DataFrame, Long) => Unit = (batch, _) => {
+      val built = state(batch)
+      require(built.size == tables.size - 1, s"graft_$tag: one state frame per state table")
+      val frames = Registry.inParallel(built.map(f => () => f.localCheckpoint(true)): _*)
+      val ids = batch.select(key)
+      val kept = (if (s.catalog.tableExists(apply(tables.head)))
+        ids.join(probe(frames), Seq(key), "left_anti") else ids).localCheckpoint(true)
+      Registry.inParallel((kept +: frames.map(_.join(kept, Seq(key), "left_semi")))
+        .zip(tables).map { case (f, t) => () => f.write.mode("append").saveAsTable(apply(t)) }: _*)
+    }
+  }
+
+  /** `df` landed `copies` times in a fresh landing dir, as a factory of
+    * streams over it. */
+  private def landed(tag: String, df: DataFrame, copies: Int = 1): () => DataFrame = {
+    val src = s"${Measure.tempDir(s"graft_$tag")}/in"
+    (1 to copies).foreach(_ => df.write.mode("append").parquet(src))
+    () => df.sparkSession.readStream.schema(df.schema).parquet(src)
+  }
+
+  /** `events` landed `copies` times, as a factory of streams over it with
+    * `ts` (nanos since epoch) truncated to a micros timestamp. */
+  private def events(s: SparkSession, dir: String, tag: String,
+      copies: Int = 1): () => DataFrame = {
+    val stream = landed(tag, T(s, dir, "events"), copies)
+    () => stream().withColumn("ts", timestamp_micros(expr("ts div 1000")))
+  }
+
+  /** Drain `df` once into the memory sink `graft_<tag>` in output `mode`
+    * and return the sink's table. */
+  private def memorySink(tag: String, mode: String)(df: DataFrame): DataFrame = {
+    AvailableNow.run(df.writeStream.format("memory").queryName(s"graft_$tag").outputMode(mode))
+    df.sparkSession.table(s"graft_$tag")
+  }
+
+  /** Two increments by `id`: evens, then odds. */
+  private def byParity(df: DataFrame, id: String): Seq[DataFrame] =
+    Seq(df.filter(col(id) % 2 === 0), df.filter(col(id) % 2 =!= 0))
+
+  /** Two increments by `id`: ids ≡ 0, 2 (mod 8), two members of every
+    * even seed quadruple, then the rest. */
+  private def bySeedPair(df: DataFrame, id: String): Seq[DataFrame] = {
+    val first = col(id) % 8 === 0 || col(id) % 8 === 2
+    Seq(df.filter(first), df.filter(!first))
+  }
+
+  /** The batch MinHash-LSH chain's 4 band rows per doc (st13, st17, st23). */
+  private def textBands(df: DataFrame): DataFrame =
+    Dedup.lshBands(Dedup.minhashSignaturesNative(
+      Dedup.shingleArray(df, "doc_id", "text", 3), "doc_id", 8), "doc_id", 8, 2)
+
+  /** The batch phash chain's 4 × 14-bit band rows per image, carrying the
+    * phash for the Hamming verify (st14, st17). */
+  private def imageBands(df: DataFrame): DataFrame =
+    Multimodal.dHash56(Multimodal.decodeBmpGray(df.sparkSession,
+        Multimodal.encodeBmpGray8x8(df.select(col("doc_id")))))
+      .select(col("doc_id"), col("phash"),
+        explode(expr("sequence(0, 3)")).as("band"))
+      .select(col("doc_id"), col("phash"), col("band"),
+        expr("shiftright(phash, 14 * band) & 16383").as("band_hash"))
+
   /** The st20 streaming CDC → SCD2 chain, shared by the dimension gate
     * (st20) and its integrity-audit twin (st22) so the two can never
     * fork: seed the dimension from `orders`, stream two change
     * increments through a foreachBatch [[Tables.scd2Apply]] (the
-    * production SCD2 table apply) under one checkpoint, return the final
-    * dimension. `tag` isolates the catalog table and landing dirs per
-    * gate. */
-  private def streamCdcScd2(s: org.apache.spark.sql.SparkSession, dir: String,
-      tag: String): org.apache.spark.sql.DataFrame = {
-    val base = Measure.tempDir(s"graft_$tag")
-    val src = s"$base/in"; val chk = s"$base/chk"
-    s.sql(s"CREATE DATABASE IF NOT EXISTS graft_$tag")
-    s.sql(s"DROP TABLE IF EXISTS graft_$tag.dim")
+    * production SCD2 table apply), return the final dimension. `tag`
+    * isolates the catalog table and landing dirs per gate. */
+  private def streamCdcScd2(s: SparkSession, dir: String, tag: String): DataFrame = {
+    val g = new Gate(s, tag, "dim")
     val o = T(s, dir, "orders")
-    def shape(df: org.apache.spark.sql.DataFrame,
-        statusCol: org.apache.spark.sql.Column,
-        startCol: org.apache.spark.sql.Column) =
+    def shape(df: DataFrame, statusCol: Column, startCol: Column) =
       df.select(
         col("o_orderkey").cast("string").as("order_id"),
         statusCol.as("status"),
@@ -46,27 +157,19 @@ object StreamingQueries {
         startCol.as("effective_start_date"),
         lit(null).cast("timestamp").as("effective_end_date"),
         lit(true).as("is_current"))
-    def applyScd2(df: org.apache.spark.sql.DataFrame): Unit =
-      Tables.scd2Apply(s, s"graft_$tag.dim", df, Seq("order_id"), Seq("status", "total"))
+    def applyScd2(df: DataFrame): Unit =
+      Tables.scd2Apply(s, g("dim"), df, Seq("order_id"), Seq("status", "total"))
     applyScd2(shape(o.filter(col("o_orderkey") % 10 < 8), // first load
         col("o_orderstatus"), col("o_orderdate")))
-    def runOnce(): Unit =
-      AvailableNow.eachBatch(s.readStream
-          .schema("order_id STRING, status STRING, total DECIMAL(12,2), " +
-            "effective_start_date TIMESTAMP, effective_end_date TIMESTAMP, " +
-            "is_current BOOLEAN")
-          .parquet(src), chk) { (batch, _) => applyScd2(batch) }
-    shape(o.filter(col("o_orderkey") % 2 === 0),
-        when(col("o_orderkey") % 6 === 0, lit("X"))
-          .otherwise(col("o_orderstatus")),
-        expr("o_orderdate + INTERVAL 1 DAY"))
-      .coalesce(1).write.mode("append").parquet(src)
-    runOnce() // increment 1: even-key changes + % 10 = 8 inserts
-    shape(o.filter(col("o_orderkey") % 3 === 0), lit("Y"),
-        expr("o_orderdate + INTERVAL 2 DAY"))
-      .coalesce(1).write.mode("append").parquet(src)
-    runOnce() // increment 2: % 3 = 0 re-updates — versions must chain
-    s.read.table(s"graft_$tag.dim")
+    g.increments(
+      // increment 1: even-key changes + % 10 = 8 inserts
+      shape(o.filter(col("o_orderkey") % 2 === 0),
+        when(col("o_orderkey") % 6 === 0, lit("X")).otherwise(col("o_orderstatus")),
+        expr("o_orderdate + INTERVAL 1 DAY")),
+      // increment 2: % 3 = 0 re-updates — versions must chain
+      shape(o.filter(col("o_orderkey") % 3 === 0), lit("Y"),
+        expr("o_orderdate + INTERVAL 2 DAY"))) { (batch, _) => applyScd2(batch) }
+    g.read("dim")
   }
 
   /** DuckDB replay of the st20 chain — both sequential merges in
@@ -167,22 +270,10 @@ object StreamingQueries {
       // Beyond-parity ST6: watermark + tumbling event-time window.
       // Complete mode to a memory sink so every window is emitted
       // deterministically regardless of final watermark position.
-      val base = Measure.tempDir("graft_st2")
-      val src = s"$base/in"
-      T(s, dir, "events").write.mode("append").parquet(src)
-      AvailableNow.run(s.readStream
-        .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-        .parquet(src)
-        // ts arrives as nanos-since-epoch (nanosAsLong); truncate to micros.
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      memorySink("st2", "complete")(events(s, dir, "st2")()
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-        .writeStream
-        .format("memory")
-        .queryName("graft_st2_counts")
-        .outputMode("complete"))
-      s.table("graft_st2_counts")
+        .agg(count(lit(1)).as("cnt")))
         .select(col("window.start").as("window_start"), col("event_type"), col("cnt"))
         .orderBy("window_start", "event_type")
     }, Some("""SELECT date_trunc('hour', ts) AS window_start, event_type, count(*) AS cnt
@@ -195,22 +286,10 @@ object StreamingQueries {
       // gap. Complete mode to a memory sink for a deterministic final
       // state; the oracle replays the same gap chaining in SQL over
       // exact integer microseconds.
-      val base = Measure.tempDir("graft_st4")
-      val src = s"$base/in"
-      T(s, dir, "events").write.mode("append").parquet(src)
-      AvailableNow.run(s.readStream
-        .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-        .parquet(src)
-        // nanos-since-epoch (nanosAsLong) → micros timestamp.
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      memorySink("st4", "complete")(events(s, dir, "st4")()
         .withWatermark("ts", "1 hour")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .writeStream
-        .format("memory")
-        .queryName("graft_st4_sessions")
-        .outputMode("complete"))
-      s.table("graft_st4_sessions")
+        .agg(count(lit(1)).as("n_events")))
         .select(col("user_id"),
           unix_micros(col("session_window.start")).as("session_start_us"),
           unix_micros(col("session_window.end")).as("session_end_us"),
@@ -239,13 +318,7 @@ object StreamingQueries {
       // state instead of buffering streams forever (the 100 TB
       // requirement for an unbounded join). AvailableNow over one
       // staged batch emits every qualifying pair exactly once.
-      val base = Measure.tempDir("graft_st5")
-      val src = s"$base/in"
-      T(s, dir, "events").write.mode("append").parquet(src)
-      def stream() = s.readStream
-        .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-        .parquet(src)
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      val stream = events(s, dir, "st5")
       val clicks = stream().filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
           col("ts").as("c_ts"))
@@ -254,16 +327,12 @@ object StreamingQueries {
         .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
           col("ts").as("v_ts"))
         .withWatermark("v_ts", "1 hour")
-      AvailableNow.run(clicks.join(views,
+      memorySink("st5", "append")(clicks.join(views,
         col("c_user") === col("v_user") &&
           col("v_ts") >= col("c_ts") - expr("INTERVAL 30 MINUTES") &&
           col("v_ts") <= col("c_ts"))
-        .select(col("click_id"), col("view_id"), col("c_user").as("user_id"))
-        .writeStream
-        .format("memory")
-        .queryName("graft_st5_pairs")
-        .outputMode("append"))
-      s.table("graft_st5_pairs").orderBy("click_id", "view_id")
+        .select(col("click_id"), col("view_id"), col("c_user").as("user_id")))
+        .orderBy("click_id", "view_id")
     }, Some("""SELECT c.event_id AS click_id, v.event_id AS view_id,
               |  c.user_id
               |FROM events c JOIN events v
@@ -281,25 +350,13 @@ object StreamingQueries {
       // watermark passes an id's event time (at scale the horizon is
       // the real duplicate window, here generous so the bounded run is
       // exact). Output equals the original events exactly once.
-      val base = Measure.tempDir("graft_st6")
-      val src = s"$base/in"
-      val ev = T(s, dir, "events")
-      ev.write.mode("append").parquet(src)
-      ev.write.mode("append").parquet(src) // duplicate copy lands
-      AvailableNow.run(s.readStream
-        .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-        .parquet(src)
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      memorySink("st6", "complete")(events(s, dir, "st6", copies = 2)()
         .withWatermark("ts", "7 days")
         .dropDuplicatesWithinWatermark("event_id")
         .groupBy("event_type")
         .agg(count(lit(1)).as("cnt"),
-          sum(col("user_id")).as("user_id_checksum"))
-        .writeStream
-        .format("memory")
-        .queryName("graft_st6_dedup")
-        .outputMode("complete"))
-      s.table("graft_st6_dedup").orderBy("event_type")
+          sum(col("user_id")).as("user_id_checksum")))
+        .orderBy("event_type")
     }, Some("""SELECT event_type, count(*) AS cnt,
               |  CAST(SUM(user_id) AS BIGINT) AS user_id_checksum
               |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
@@ -307,41 +364,30 @@ object StreamingQueries {
     "st7_foreachbatch_upsert" -> Q((s, dir) => {
       // foreachBatch keyed upsert — the OSS mapping of the reference's
       // autoloader→MERGE pattern (streaming sink with row-level merge
-      // semantics Parquet lacks natively). Two incremental runs share
-      // one checkpoint: batch A is the full event set, batch B re-emits
-      // even users with NEWER events; each micro-batch merges
-      // latest-per-user into the target via keepLatest and rewrites.
-      // Final table = latest event per user over A ∪ B.
+      // semantics Parquet lacks natively). Two increments share one
+      // checkpoint: A is the full event set, B re-emits even users with
+      // NEWER events; each micro-batch merges latest-per-user into the
+      // target via keepLatest and rewrites. Final table = latest event
+      // per user over A ∪ B.
       import graft.operators.Windowed
-      val base = Measure.tempDir("graft_st7")
-      val src = s"$base/in"; val chk = s"$base/chk"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_st7")
-      s.sql("DROP TABLE IF EXISTS graft_st7.user_latest")
+      val g = new Gate(s, "st7", "user_latest")
       val ev = T(s, dir, "events")
         .select(col("event_id"), col("user_id"),
           expr("ts div 1000000000").cast("long").as("ts_sec"))
-      def runOnce(): Unit =
-        AvailableNow.eachBatch(s.readStream
-            .schema("event_id BIGINT, user_id BIGINT, ts_sec BIGINT")
-            .parquet(src), chk) { (batch, _) =>
-          val existing =
-            if (s.catalog.tableExists("graft_st7.user_latest"))
-              s.read.table("graft_st7.user_latest")
-            else batch.limit(0)
-          val merged = Windowed.keepLatest(
-            existing.unionByName(batch), Seq("user_id"),
-            col("ts_sec"), tieBreak = Seq(col("event_id")))
-            .localCheckpoint(true) // materialize BEFORE overwriting the source table
-          merged.write.mode("overwrite").saveAsTable("graft_st7.user_latest")
-        }
-      ev.write.mode("append").parquet(src) // batch A
-      runOnce()
-      ev.filter(col("user_id") % 2 === 0)  // batch B: newer events, even users
-        .select((col("event_id") + 1000000L).as("event_id"), col("user_id"),
-          (col("ts_sec") + 3600L).as("ts_sec"))
-        .write.mode("append").parquet(src)
-      runOnce()
-      s.read.table("graft_st7.user_latest")
+      g.increments(ev, // A
+          ev.filter(col("user_id") % 2 === 0) // B: newer events, even users
+            .select((col("event_id") + 1000000L).as("event_id"), col("user_id"),
+              (col("ts_sec") + 3600L).as("ts_sec"))) { (batch, _) =>
+        val existing =
+          if (s.catalog.tableExists(g("user_latest"))) g.read("user_latest")
+          else batch.limit(0)
+        val merged = Windowed.keepLatest(
+          existing.unionByName(batch), Seq("user_id"),
+          col("ts_sec"), tieBreak = Seq(col("event_id")))
+          .localCheckpoint(true) // materialize BEFORE overwriting the source table
+        merged.write.mode("overwrite").saveAsTable(g("user_latest"))
+      }
+      g.read("user_latest")
         .select(col("user_id"), col("event_id").as("latest_event_id"),
           col("ts_sec").as("latest_ts_sec"))
         .orderBy("user_id")
@@ -361,9 +407,6 @@ object StreamingQueries {
       // Custom per-key state via KeyValueGroupedDataset.mapGroupsWithState:
       // running per-user event counts + value sum (decimal-exact).
       import s.implicits._
-      val base = Measure.tempDir("graft_st3")
-      val src = s"$base/in"
-      T(s, dir, "events").write.mode("append").parquet(src)
       val updateFn = (userId: Long, rows: Iterator[(Long, Double)],
           state: GroupState[(Long, Long)]) => {
         val (prevN, prevCents) = state.getOption.getOrElse((0L, 0L))
@@ -372,20 +415,14 @@ object StreamingQueries {
         state.update((n, cents))
         (userId, n, cents)
       }
-      AvailableNow.run(s.readStream
-        .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-        .parquet(src)
+      memorySink("st3", "update")(events(s, dir, "st3")()
         .select(col("user_id"), col("event_id"), col("value"))
         .as[(Long, Long, Double)]
         .groupByKey(_._1)
         .mapValues(r => (r._2, r._3))
         .mapGroupsWithState(GroupStateTimeout.NoTimeout())(updateFn)
-        .toDF("user_id", "n_events", "value_cents")
-        .writeStream
-        .format("memory")
-        .queryName("graft_st3_state")
-        .outputMode("update"))
-      s.table("graft_st3_state").orderBy("user_id")
+        .toDF("user_id", "n_events", "value_cents"))
+        .orderBy("user_id")
     }, Some("""SELECT user_id, count(*) AS n_events,
               |  CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
               |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
@@ -396,23 +433,15 @@ object StreamingQueries {
       // unchanged (same code path as batch — no streaming-specific
       // rewrite). Per-micro-batch the stream scores documents and the
       // sink aggregates keep/drop counts per first failure reason.
-      val base = Measure.tempDir("graft_st8")
-      val src = s"$base/in"
-      T(s, dir, "documents").select("doc_id", "text")
-        .write.mode("append").parquet(src)
       val scored = graft.llm.TextOps.qualityFilter(
-        s.readStream.schema("doc_id BIGINT, text STRING").parquet(src),
+        landed("st8", T(s, dir, "documents").select("doc_id", "text"))(),
         minTokens = 20, maxPunctRatio = 0.06, minStopwordRatio = 0.05)
         .select(col("keep"),
           coalesce(try_element_at(col("fail_reasons"), lit(1)), lit("none"))
             .as("first_reason"))
-      AvailableNow.run(scored
-        .groupBy("keep", "first_reason").agg(count(lit(1)).as("cnt"))
-        .writeStream
-        .format("memory")
-        .queryName("graft_st8_counts")
-        .outputMode("complete"))
-      s.table("graft_st8_counts").orderBy("keep", "first_reason")
+      memorySink("st8", "complete")(scored
+        .groupBy("keep", "first_reason").agg(count(lit(1)).as("cnt")))
+        .orderBy("keep", "first_reason")
     }, Some(s"""WITH st AS (SELECT doc_id,
                |    len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
                |      AS n_tokens,
@@ -443,27 +472,18 @@ object StreamingQueries {
       // broadcasts when small), no watermark, no state store — the
       // dimension-enrichment shape of a streaming bronze→silver hop.
       // The profile's money total sums in exact milli-integers.
-      val base = Measure.tempDir("graft_st9")
-      val src = s"$base/in"
-      T(s, dir, "events").write.mode("append").parquet(src)
       val profile = T(s, dir, "events")
         .groupBy("user_id")
         .agg(count(lit(1)).as("user_event_count"),
           sum(expr("CAST(round(value * 1000) AS BIGINT)")).as("_vm"))
-      AvailableNow.run(s.readStream
-        .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-        .parquet(src)
+      memorySink("st9", "append")(events(s, dir, "st9")()
         .filter(col("event_type") === "purchase")
         .select("event_id", "user_id", "value")
         .join(profile, Seq("user_id"), "left")
         .select(col("event_id"), col("user_id"), col("value"),
           col("user_event_count"),
-          (col("_vm").cast("double") / 1000.0).as("user_value_total"))
-        .writeStream
-        .format("memory")
-        .queryName("graft_st9_enriched")
-        .outputMode("append"))
-      s.table("graft_st9_enriched").orderBy("event_id")
+          (col("_vm").cast("double") / 1000.0).as("user_value_total")))
+        .orderBy("event_id")
     }, Some("""WITH prof AS (SELECT user_id, count(*) AS user_event_count,
               |    SUM(CAST(round(value * 1000) AS BIGINT)) AS vm
               |  FROM events GROUP BY user_id)
@@ -481,24 +501,13 @@ object StreamingQueries {
       // sketch estimate is engine-specific, so the gate joins the
       // streamed result to the BATCH exact per window and emits the
       // within-bound verdict (a22/w10 pattern, streaming edition).
-      val base = Measure.tempDir("graft_st10")
-      val src = s"$base/in"
-      T(s, dir, "events").write.mode("append").parquet(src)
-      AvailableNow.run(s.readStream
-        .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-        .parquet(src)
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      // Window keys are epoch-second longs on both sides: Spark's
+      // tumbling window aligns to the epoch, so start = ts div 21600.
+      val streamed = memorySink("st10", "complete")(events(s, dir, "st10")()
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "6 hours"))
         .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), lit(12)))
-          .as("approx_users"))
-        .writeStream
-        .format("memory")
-        .queryName("graft_st10_sketches")
-        .outputMode("complete"))
-      // Window keys as epoch-second longs on both sides: Spark's
-      // tumbling window aligns to the epoch, so start = ts div 21600.
-      val streamed = s.table("graft_st10_sketches")
+          .as("approx_users")))
         .select(col("window.start").cast("long").as("window_start"),
           col("approx_users"))
       val exact = T(s, dir, "events")
@@ -523,40 +532,29 @@ object StreamingQueries {
       // in ONE pipeline: Auto Loader-style incremental file pickup
       // (st1's shape) feeding MERGE-maintained dimension history
       // (Tables.scd2Apply in foreachBatch, the OSS mapping of
-      // dim_policy.py's streaming MERGE INTO). Batch A is the first load:
-      // every order as a current dimension row; batch B re-emits keys
+      // dim_policy.py's streaming MERGE INTO). Increment A is the first
+      // load: every order as a current dimension row; B re-emits keys
       // divisible by 3 with status 'X' and a start date 10 days later —
       // the merge must close each old version (is_current=false, end =
       // new start) AND insert the new one, under the same checkpoint (B
       // processes only B's file).
-      val base = Measure.tempDir("graft_st11")
-      val src = s"$base/in"; val chk = s"$base/chk"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_st11")
-      s.sql("DROP TABLE IF EXISTS graft_st11.dim_order")
+      val g = new Gate(s, "st11", "dim_order")
       val dimA = T(s, dir, "orders").select(
         col("o_orderkey").cast("string").as("order_id"),
         col("o_orderstatus").as("status"),
         col("o_totalprice").cast("decimal(12,2)").as("total"),
         col("o_orderdate").cast("date").cast("timestamp").as("effective_start_date"))
-      def runOnce(): Unit =
-        AvailableNow.eachBatch(s.readStream
-            .schema("order_id STRING, status STRING, total DECIMAL(12,2), " +
-              "effective_start_date TIMESTAMP")
-            .parquet(src), chk) { (batch, _) =>
-          Tables.scd2Apply(s, "graft_st11.dim_order", batch
-              .withColumn("effective_end_date", lit(null).cast("timestamp"))
-              .withColumn("is_current", lit(true)),
-            keyCols = Seq("order_id"), trackedCols = Seq("status"))
-        }
-      dimA.write.mode("append").parquet(src) // batch A: first load
-      runOnce()
-      dimA.filter(col("order_id").cast("long") % 3 === 0) // batch B: changes
-        .select(col("order_id"), lit("X").as("status"), col("total"),
-          (col("effective_start_date") + expr("INTERVAL 10 DAY"))
-            .as("effective_start_date"))
-        .write.mode("append").parquet(src)
-      runOnce()
-      s.read.table("graft_st11.dim_order")
+      g.increments(dimA, // A: first load
+          dimA.filter(col("order_id").cast("long") % 3 === 0) // B: changes
+            .select(col("order_id"), lit("X").as("status"), col("total"),
+              (col("effective_start_date") + expr("INTERVAL 10 DAY"))
+                .as("effective_start_date"))) { (batch, _) =>
+        Tables.scd2Apply(s, g("dim_order"), batch
+            .withColumn("effective_end_date", lit(null).cast("timestamp"))
+            .withColumn("is_current", lit(true)),
+          keyCols = Seq("order_id"), trackedCols = Seq("status"))
+      }
+      g.read("dim_order")
         .select(col("order_id"), col("status"),
           col("total").cast("double").as("total"),
           col("effective_start_date"), col("effective_end_date"),
@@ -598,25 +596,22 @@ object StreamingQueries {
       // with the evolved schema, while batch 1's rows read NULL for the
       // new column.
       import org.apache.spark.sql.types._
-      val base = Measure.tempDir("graft_st12")
-      val src = s"$base/in"; val chk = s"$base/chk"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_st12")
-      s.sql("DROP TABLE IF EXISTS graft_st12.bronze_nation")
+      val g = new Gate(s, "st12", "bronze_nation")
       val nation = T(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
       val baseSchema = StructType(Seq(
         StructField("n_nationkey", IntegerType),
         StructField("n_name", StringType),
         StructField("n_regionkey", IntegerType)))
-      nation.write.option("header", "true").mode("append").csv(src)
-      graft.sources.Ingest.ingestStreamingEvolving(s, src, baseSchema,
-        "graft_st12.bronze_nation", chk, batchId = Some(1L))
+      nation.write.option("header", "true").mode("append").csv(g.src)
+      graft.sources.Ingest.ingestStreamingEvolving(s, g.src, baseSchema,
+        g("bronze_nation"), g.chk, batchId = Some(1L))
       nation
         .withColumn("n_parity",
           when(col("n_nationkey") % 2 === 0, "even").otherwise("odd"))
-        .write.option("header", "true").mode("append").csv(src)
-      graft.sources.Ingest.ingestStreamingEvolving(s, src, baseSchema,
-        "graft_st12.bronze_nation", chk, batchId = Some(2L))
-      s.read.table("graft_st12.bronze_nation")
+        .write.option("header", "true").mode("append").csv(g.src)
+      graft.sources.Ingest.ingestStreamingEvolving(s, g.src, baseSchema,
+        g("bronze_nation"), g.chk, batchId = Some(2L))
+      g.read("bronze_nation")
         .select(col("n_nationkey"), col("_batch_id").as("batch"), col("n_parity"))
         .orderBy("n_nationkey", "batch")
     }, Some("""SELECT n_nationkey, CAST(1 AS BIGINT) AS batch,
@@ -642,53 +637,15 @@ object StreamingQueries {
       // survives is the nightly batch job's call) — the contract is "no
       // increment doc fuzzy-duplicates the standing corpus", which is
       // the autoloader-ingest guarantee a curation pipeline needs.
-      import graft.llm.Dedup
-      val base = Measure.tempDir("graft_st13")
-      val src = s"$base/in"; val chk = s"$base/chk"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_st13")
-      s.sql("DROP TABLE IF EXISTS graft_st13.accepted_docs")
-      s.sql("DROP TABLE IF EXISTS graft_st13.accepted_bands")
-      def bandsOf(df: org.apache.spark.sql.DataFrame) =
-        Dedup.lshBands(Dedup.minhashSignaturesNative(
-          Dedup.shingleArray(df, "doc_id", "text", 3), "doc_id", 8), "doc_id", 8, 2)
-      def runOnce(): Unit =
-        AvailableNow.eachBatch(s.readStream
-            .schema("doc_id BIGINT, text STRING")
-            .parquet(src), chk) { (batch, _) =>
-          val nb = bandsOf(batch).localCheckpoint(true)
-          val collided =
-            if (s.catalog.tableExists("graft_st13.accepted_bands"))
-              nb.join(s.read.table("graft_st13.accepted_bands"),
-                Seq("band", "band_hash"), "left_semi")
-                .select("doc_id").distinct()
-            else nb.select("doc_id").limit(0)
-          // Materialize survivors BEFORE appending to the band table
-          // the same plan reads.
-          val kept = batch.join(collided, Seq("doc_id"), "left_anti")
-            .localCheckpoint(true)
-          val keptBands = nb.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-            .localCheckpoint(true)
-          kept.select("doc_id").write.mode("append")
-            .saveAsTable("graft_st13.accepted_docs")
-          keptBands.write.mode("append")
-            .saveAsTable("graft_st13.accepted_bands")
-        }
-      // PINNED ASSUMPTION (r12 advice): the oracle is two-increment —
-      // it models each increment as ONE accept/filter step. If the file
-      // source split an increment across micro-batches (e.g. a global
-      // maxFilesPerTrigger, or multiple input files under AvailableNow),
-      // docs accepted in an earlier micro-batch would filter later
-      // members of the SAME increment, diverging from the oracle. Each
-      // increment is therefore coalesced to a single file, and
-      // maxFilesPerTrigger must stay unset on this source.
-      val docs = T(s, dir, "documents").select(col("doc_id"), col("text"))
-      docs.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 1: evens seed the corpus — all accepted
-      docs.filter(col("doc_id") % 2 =!= 0)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 2: odds filtered against the evens' bands
-      s.read.table("graft_st13.accepted_docs").orderBy("doc_id")
+      // Increment 1 (evens) seeds the corpus; increment 2 (odds) is
+      // filtered against the evens' bands.
+      val g = new Gate(s, "st13", "accepted_docs", "accepted_bands")
+      g.increments(byParity(T(s, dir, "documents").select(col("doc_id"), col("text")),
+          "doc_id"): _*)(g.acceptedIndex("doc_id")(b => Seq(textBands(b))) {
+        case Seq(nb) => nb.join(g.read("accepted_bands"), Seq("band", "band_hash"), "left_semi")
+          .select("doc_id")
+      })
+      g.read("accepted_docs").orderBy("doc_id")
     }, Some(s"""WITH ${LlmQueries.toksCte}, ${LlmQueries.shCte},
                |${LlmQueries.lshSigBandsCtes},
                |coll AS (SELECT DISTINCT n.doc_id
@@ -713,65 +670,24 @@ object StreamingQueries {
       // never re-decoded. Intra-increment near-dups both land (st13's
       // contract): the guarantee is "no increment image near-duplicates
       // the standing corpus".
-      import graft.llm.Multimodal
-      val base = Measure.tempDir("graft_st14")
-      val src = s"$base/in"; val chk = s"$base/chk"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_st14")
-      s.sql("DROP TABLE IF EXISTS graft_st14.accepted_imgs")
-      s.sql("DROP TABLE IF EXISTS graft_st14.accepted_bands")
-      def bandsOf(df: org.apache.spark.sql.DataFrame) =
-        Multimodal.dHash56(Multimodal.decodeBmpGray(df.sparkSession,
-            Multimodal.encodeBmpGray8x8(df)))
-          .select(col("doc_id"), col("phash"),
-            explode(expr("sequence(0, 3)")).as("band"))
-          .select(col("doc_id"), col("phash"), col("band"),
-            expr("shiftright(phash, 14 * band) & 16383").as("band_hash"))
-      def runOnce(): Unit =
-        AvailableNow.eachBatch(s.readStream
-            .schema("doc_id BIGINT")
-            .parquet(src), chk) { (batch, _) =>
-          val nb = bandsOf(batch).localCheckpoint(true)
-          val dropped =
-            if (s.catalog.tableExists("graft_st14.accepted_bands"))
-              nb.join(s.read.table("graft_st14.accepted_bands")
-                  .withColumnRenamed("phash", "acc_phash")
-                  .withColumnRenamed("doc_id", "acc_doc_id"),
-                  Seq("band", "band_hash"))
-                .filter(bit_count(col("phash")
-                  .bitwiseXOR(col("acc_phash"))) <= 6)
-                .select("doc_id").distinct()
-            else nb.select("doc_id").limit(0)
-          val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
-            .localCheckpoint(true)
-          val keptBands = nb.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-            .localCheckpoint(true)
-          kept.select("doc_id").write.mode("append")
-            .saveAsTable("graft_st14.accepted_imgs")
-          keptBands.write.mode("append")
-            .saveAsTable("graft_st14.accepted_bands")
-        }
-      // Split so the verify filter DISCRIMINATES: increment 1 takes ids
-      // ≡ 0,2 (mod 8), i.e. two members of every EVEN seed quadruple.
-      // Increment 2 then carries (a) their same-seed partners — dropped
-      // through a verified Hamming ≤ 4 collision — and (b) whole ODD
-      // seed quadruples, which survive: their occasional cross-seed
-      // band collisions with the accepted index verify at Hamming ≫ 6,
-      // so a drop-on-any-collision bug (st13's candidate-level rule,
-      // wrong here) changes this gate's output.
-      // PINNED ASSUMPTION (st13's, r12 advice): each increment must
-      // arrive as ONE micro-batch or same-seed partners accepted in an
-      // earlier micro-batch would drop later members of the same
-      // increment, diverging from the two-increment oracle — so each
-      // increment is one coalesced file and maxFilesPerTrigger stays
-      // unset on this source.
-      val docs = T(s, dir, "documents").select(col("doc_id"))
-      docs.filter(col("doc_id") % 8 === 0 || col("doc_id") % 8 === 2)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 1 seeds the accepted index
-      docs.filter(col("doc_id") % 8 =!= 0 && col("doc_id") % 8 =!= 2)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 2: verified against the accepted hashes
-      s.read.table("graft_st14.accepted_imgs").orderBy("doc_id")
+      // The seed-pair split makes the verify filter DISCRIMINATE:
+      // increment 2 carries (a) the same-seed partners of increment 1's
+      // images — dropped through a verified Hamming ≤ 4 collision — and
+      // (b) whole ODD seed quadruples, which survive: their occasional
+      // cross-seed band collisions with the accepted index verify at
+      // Hamming ≫ 6, so a drop-on-any-collision bug (st13's
+      // candidate-level rule, wrong here) changes this gate's output.
+      val g = new Gate(s, "st14", "accepted_imgs", "accepted_bands")
+      g.increments(bySeedPair(T(s, dir, "documents").select(col("doc_id")), "doc_id"): _*)(
+        g.acceptedIndex("doc_id")(b => Seq(imageBands(b))) {
+          case Seq(nb) => nb.join(g.read("accepted_bands")
+                .withColumnRenamed("phash", "acc_phash")
+                .withColumnRenamed("doc_id", "acc_doc_id"),
+                Seq("band", "band_hash"))
+              .filter(bit_count(col("phash").bitwiseXOR(col("acc_phash"))) <= 6)
+              .select("doc_id")
+        })
+      g.read("accepted_imgs").orderBy("doc_id")
     }, Some(s"""WITH ${LlmQueries.phashHashCtes},
                |coll AS (SELECT DISTINCT n.doc_id
                |  FROM bands n JOIN bands a
@@ -796,70 +712,35 @@ object StreamingQueries {
       // drop-on-any-collision bug changes this gate's output. State per
       // accepted doc: 16 band rows plus ONE decoded 128-sample frame
       // (512 bytes — the exact verify side); the standing corpus is
-      // never re-encoded or re-decoded. Same one-micro-batch-per-
-      // increment pin as st13/st14.
-      import graft.llm.Multimodal
-      val base = Measure.tempDir("graft_st15")
-      val src = s"$base/in"; val chk = s"$base/chk"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_st15")
-      s.sql("DROP TABLE IF EXISTS graft_st15.accepted_docs")
-      s.sql("DROP TABLE IF EXISTS graft_st15.accepted_bands")
-      s.sql("DROP TABLE IF EXISTS graft_st15.accepted_audio")
-      def decodedOf(df: org.apache.spark.sql.DataFrame) =
-        Multimodal.decodeWavPcm(df.sparkSession, Multimodal.encodeWavPcm(df))
-      def bandsOf(decoded: org.apache.spark.sql.DataFrame) =
-        decoded
-          .select(col("doc_id"), explode(expr("sequence(0, 15)")).as("band"),
-            col("samples"))
-          .select(col("doc_id"), col("band"),
-            expr("""md5(concat_ws(',', transform(slice(samples, 8 * band + 1, 8),
-                   |  x -> CAST((x + 32768) DIV 1024 AS STRING))))""".stripMargin)
-              .as("band_hash"))
-      def runOnce(): Unit =
-        AvailableNow.eachBatch(s.readStream
-            .schema("doc_id BIGINT")
-            .parquet(src), chk) { (batch, _) =>
-          val decoded = decodedOf(batch).localCheckpoint(true)
-          val nb = bandsOf(decoded).localCheckpoint(true)
-          val dropped =
-            if (s.catalog.tableExists("graft_st15.accepted_bands"))
-              nb.join(s.read.table("graft_st15.accepted_bands")
-                  .withColumnRenamed("doc_id", "acc_doc_id"),
-                  Seq("band", "band_hash"))
-                .select("doc_id", "acc_doc_id").distinct()
-                .join(decoded.select(col("doc_id"), col("samples").as("sn")),
-                  "doc_id")
-                .join(s.read.table("graft_st15.accepted_audio")
-                    .select(col("doc_id").as("acc_doc_id"),
-                      col("samples").as("sa")),
-                  "acc_doc_id")
-                .filter(expr(
-                  """aggregate(zip_with(sn, sa, (x, y) -> CAST(abs(x - y) AS BIGINT)),
-                    |  CAST(0 AS BIGINT), (a, v) -> a + v) DIV 128 <= 16""".stripMargin))
-                .select("doc_id").distinct()
-            else nb.select("doc_id").limit(0)
-          val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
-            .localCheckpoint(true)
-          val keptBands = nb.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-            .localCheckpoint(true)
-          val keptAudio = decoded.select("doc_id", "samples")
-            .join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-            .localCheckpoint(true)
-          kept.select("doc_id").write.mode("append")
-            .saveAsTable("graft_st15.accepted_docs")
-          keptBands.write.mode("append")
-            .saveAsTable("graft_st15.accepted_bands")
-          keptAudio.write.mode("append")
-            .saveAsTable("graft_st15.accepted_audio")
-        }
-      val docs = T(s, dir, "documents").select(col("doc_id"))
-      docs.filter(col("doc_id") % 8 === 0 || col("doc_id") % 8 === 2)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 1 seeds the accepted index
-      docs.filter(col("doc_id") % 8 =!= 0 && col("doc_id") % 8 =!= 2)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 2: verified against the accepted samples
-      s.read.table("graft_st15.accepted_docs").orderBy("doc_id")
+      // never re-encoded or re-decoded.
+      val g = new Gate(s, "st15", "accepted_docs", "accepted_bands", "accepted_audio")
+      def state(df: DataFrame) = {
+        val decoded = Multimodal.decodeWavPcm(df.sparkSession, Multimodal.encodeWavPcm(df))
+          .localCheckpoint(true)
+        Seq(decoded
+            .select(col("doc_id"), explode(expr("sequence(0, 15)")).as("band"),
+              col("samples"))
+            .select(col("doc_id"), col("band"),
+              expr("""md5(concat_ws(',', transform(slice(samples, 8 * band + 1, 8),
+                     |  x -> CAST((x + 32768) DIV 1024 AS STRING))))""".stripMargin)
+                .as("band_hash")),
+          decoded.select("doc_id", "samples"))
+      }
+      g.increments(bySeedPair(T(s, dir, "documents").select(col("doc_id")), "doc_id"): _*)(
+        g.acceptedIndex("doc_id")(state) { case Seq(nb, audio) =>
+          nb.join(g.read("accepted_bands").withColumnRenamed("doc_id", "acc_doc_id"),
+              Seq("band", "band_hash"))
+            .select("doc_id", "acc_doc_id").distinct()
+            .join(audio.select(col("doc_id"), col("samples").as("sn")), "doc_id")
+            .join(g.read("accepted_audio")
+                .select(col("doc_id").as("acc_doc_id"), col("samples").as("sa")),
+              "acc_doc_id")
+            .filter(expr(
+              """aggregate(zip_with(sn, sa, (x, y) -> CAST(abs(x - y) AS BIGINT)),
+                |  CAST(0 AS BIGINT), (a, v) -> a + v) DIV 128 <= 16""".stripMargin))
+            .select("doc_id")
+        })
+      g.read("accepted_docs").orderBy("doc_id")
     }, Some(s"""WITH ${LlmQueries.wavSampleCtes},
                |bands AS (SELECT doc_id, i // 8 AS band,
                |    md5(string_agg(((s + 32768) // 1024)::VARCHAR, ','
@@ -893,73 +774,37 @@ object StreamingQueries {
       // is load-bearing: a single 14-bit slice collision between
       // unrelated videos (aligned Hamming ~112) must survive. State per
       // accepted doc: 16 band rows + 4 hash rows (32 bytes); the
-      // standing corpus is never re-decoded. Same one-coalesced-file-
-      // per-increment pin as st13-st15 (maxFilesPerTrigger must stay
-      // unset on these sources).
-      import graft.llm.Multimodal
-      val base = Measure.tempDir("graft_st16")
-      val src = s"$base/in"; val chk = s"$base/chk"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_st16")
-      s.sql("DROP TABLE IF EXISTS graft_st16.accepted_docs")
-      s.sql("DROP TABLE IF EXISTS graft_st16.accepted_bands")
-      s.sql("DROP TABLE IF EXISTS graft_st16.accepted_hashes")
-      def hashesOf(df: org.apache.spark.sql.DataFrame) =
-        Multimodal.dHash56(
-          Multimodal.decodeAviFrames(df.sparkSession, Multimodal.encodeAvi(df)),
-          Seq("doc_id", "frame_idx"))
-      def bandsOf(fh: org.apache.spark.sql.DataFrame) =
-        fh.select(col("doc_id"), col("frame_idx"), col("phash"),
-            explode(expr("sequence(0, 3)")).as("b"))
-          .select(col("doc_id"),
-            (col("frame_idx") * 4 + col("b")).as("band"),
-            expr("shiftright(phash, 14 * b) & 16383").as("band_hash"))
-      def runOnce(): Unit =
-        AvailableNow.eachBatch(s.readStream
-            .schema("doc_id BIGINT")
-            .parquet(src), chk) { (batch, _) =>
-          val fh = hashesOf(batch).localCheckpoint(true)
-          val nb = bandsOf(fh).localCheckpoint(true)
-          val dropped =
-            if (s.catalog.tableExists("graft_st16.accepted_bands"))
-              nb.join(s.read.table("graft_st16.accepted_bands")
-                  .withColumnRenamed("doc_id", "acc_doc_id"),
-                  Seq("band", "band_hash"))
-                .select("doc_id", "acc_doc_id").distinct()
-                .join(fh.select(col("doc_id"), col("frame_idx"),
-                  col("phash").as("ph_n")), "doc_id")
-                .join(s.read.table("graft_st16.accepted_hashes")
-                    .select(col("doc_id").as("acc_doc_id"), col("frame_idx"),
-                      col("phash").as("ph_a")),
-                  Seq("acc_doc_id", "frame_idx"))
-                .groupBy("doc_id", "acc_doc_id")
-                .agg(sum(bit_count(col("ph_n").bitwiseXOR(col("ph_a"))))
-                  .as("hamming"))
-                .filter(col("hamming") <= 6)
-                .select("doc_id").distinct()
-            else nb.select("doc_id").limit(0)
-          val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
-            .localCheckpoint(true)
-          val keptBands = nb.select("doc_id", "band", "band_hash")
-            .join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-            .localCheckpoint(true)
-          val keptHashes = fh
-            .join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-            .localCheckpoint(true)
-          kept.select("doc_id").write.mode("append")
-            .saveAsTable("graft_st16.accepted_docs")
-          keptBands.write.mode("append")
-            .saveAsTable("graft_st16.accepted_bands")
-          keptHashes.write.mode("append")
-            .saveAsTable("graft_st16.accepted_hashes")
-        }
-      val docs = T(s, dir, "documents").select(col("doc_id"))
-      docs.filter(col("doc_id") % 8 === 0 || col("doc_id") % 8 === 2)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 1 seeds the accepted index
-      docs.filter(col("doc_id") % 8 =!= 0 && col("doc_id") % 8 =!= 2)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 2: temporal-verified against the accepted hashes
-      s.read.table("graft_st16.accepted_docs").orderBy("doc_id")
+      // standing corpus is never re-decoded.
+      val g = new Gate(s, "st16", "accepted_docs", "accepted_bands", "accepted_hashes")
+      def state(df: DataFrame) = {
+        val fh = Multimodal.dHash56(
+            Multimodal.decodeAviFrames(df.sparkSession, Multimodal.encodeAvi(df)),
+            Seq("doc_id", "frame_idx"))
+          .localCheckpoint(true)
+        Seq(fh.select(col("doc_id"), col("frame_idx"), col("phash"),
+              explode(expr("sequence(0, 3)")).as("b"))
+            .select(col("doc_id"),
+              (col("frame_idx") * 4 + col("b")).as("band"),
+              expr("shiftright(phash, 14 * b) & 16383").as("band_hash")),
+          fh)
+      }
+      g.increments(bySeedPair(T(s, dir, "documents").select(col("doc_id")), "doc_id"): _*)(
+        g.acceptedIndex("doc_id")(state) { case Seq(nb, fh) =>
+          nb.join(g.read("accepted_bands").withColumnRenamed("doc_id", "acc_doc_id"),
+              Seq("band", "band_hash"))
+            .select("doc_id", "acc_doc_id").distinct()
+            .join(fh.select(col("doc_id"), col("frame_idx"),
+              col("phash").as("ph_n")), "doc_id")
+            .join(g.read("accepted_hashes")
+                .select(col("doc_id").as("acc_doc_id"), col("frame_idx"),
+                  col("phash").as("ph_a")),
+              Seq("acc_doc_id", "frame_idx"))
+            .groupBy("doc_id", "acc_doc_id")
+            .agg(sum(bit_count(col("ph_n").bitwiseXOR(col("ph_a")))).as("hamming"))
+            .filter(col("hamming") <= 6)
+            .select("doc_id")
+        })
+      g.read("accepted_docs").orderBy("doc_id")
     }, Some(s"""WITH ${LlmQueries.videoHashCtes},
                |vbands AS (SELECT doc_id, frame_idx * 4 + b.b AS band,
                |    (phash >> CAST(14 * b.b AS INT)) & 16383 AS band_hash
@@ -994,78 +839,21 @@ object StreamingQueries {
       // gate's output. State per accepted doc: 4 text band rows + 4
       // image band rows (the image rows carry the 8-byte phash verify
       // side); neither modality of the standing corpus is ever
-      // recomputed. Same one-coalesced-file-per-increment pin as
-      // st13–st16 (maxFilesPerTrigger must stay unset on this source).
-      import graft.llm.{Dedup, Multimodal}
-      val base = Measure.tempDir("graft_st17")
-      val src = s"$base/in"; val chk = s"$base/chk"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_st17")
-      s.sql("DROP TABLE IF EXISTS graft_st17.accepted_docs")
-      s.sql("DROP TABLE IF EXISTS graft_st17.accepted_tbands")
-      s.sql("DROP TABLE IF EXISTS graft_st17.accepted_ibands")
-      def textBandsOf(df: org.apache.spark.sql.DataFrame) =
-        Dedup.lshBands(Dedup.minhashSignaturesNative(
-          Dedup.shingleArray(df, "doc_id", "text", 3), "doc_id", 8), "doc_id", 8, 2)
-      def imageBandsOf(df: org.apache.spark.sql.DataFrame) =
-        Multimodal.dHash56(Multimodal.decodeBmpGray(df.sparkSession,
-            Multimodal.encodeBmpGray8x8(df.select(col("doc_id")))))
-          .select(col("doc_id"), col("phash"),
-            explode(expr("sequence(0, 3)")).as("band"))
-          .select(col("doc_id"), col("phash"), col("band"),
-            expr("shiftright(phash, 14 * band) & 16383").as("band_hash"))
-      def runOnce(): Unit =
-        AvailableNow.eachBatch(s.readStream
-            .schema("doc_id BIGINT, text STRING")
-            .parquet(src), chk) { (batch, _) =>
-          // The two modality band builds are independent — overlap
-          // their eager checkpoints (guide §2.6) per micro-batch.
-          val bandFrames = Registry.inParallel(
-            () => textBandsOf(batch).localCheckpoint(true),
-            () => imageBandsOf(batch).localCheckpoint(true))
-          val tb = bandFrames(0)
-          val ib = bandFrames(1)
-          val droppedText =
-            if (s.catalog.tableExists("graft_st17.accepted_tbands"))
-              tb.join(s.read.table("graft_st17.accepted_tbands"),
-                Seq("band", "band_hash"), "left_semi")
-                .select("doc_id")
-            else tb.select("doc_id").limit(0)
-          val droppedImage =
-            if (s.catalog.tableExists("graft_st17.accepted_ibands"))
-              ib.join(s.read.table("graft_st17.accepted_ibands")
+      // recomputed.
+      val g = new Gate(s, "st17", "accepted_docs", "accepted_tbands", "accepted_ibands")
+      g.increments(bySeedPair(T(s, dir, "documents").select(col("doc_id"), col("text")),
+          "doc_id"): _*)(g.acceptedIndex("doc_id")(b => Seq(textBands(b), imageBands(b))) {
+        case Seq(tb, ib) =>
+          tb.join(g.read("accepted_tbands"), Seq("band", "band_hash"), "left_semi")
+            .select("doc_id")
+            .unionByName(ib.join(g.read("accepted_ibands")
                   .withColumnRenamed("phash", "acc_phash")
                   .withColumnRenamed("doc_id", "acc_doc_id"),
                   Seq("band", "band_hash"))
-                .filter(bit_count(col("phash")
-                  .bitwiseXOR(col("acc_phash"))) <= 6)
-                .select("doc_id")
-            else ib.select("doc_id").limit(0)
-          val dropped = droppedText.unionByName(droppedImage).distinct()
-          val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
-            .localCheckpoint(true)
-          // keptT/keptI feed exactly one consumer each (the table
-          // append) over already-checkpointed inputs — materializing
-          // them first was one extra eager job per micro-batch.
-          val keptT = tb.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-          val keptI = ib.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-          // Three independent sinks over checkpointed inputs —
-          // overlap the write jobs (guide §2.6).
-          Registry.inParallel(
-            () => kept.select("doc_id").write.mode("append")
-              .saveAsTable("graft_st17.accepted_docs"),
-            () => keptT.write.mode("append")
-              .saveAsTable("graft_st17.accepted_tbands"),
-            () => keptI.write.mode("append")
-              .saveAsTable("graft_st17.accepted_ibands"))
-        }
-      val docs = T(s, dir, "documents").select(col("doc_id"), col("text"))
-      docs.filter(col("doc_id") % 8 === 0 || col("doc_id") % 8 === 2)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 1 seeds both modality indexes
-      docs.filter(col("doc_id") % 8 =!= 0 && col("doc_id") % 8 =!= 2)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 2: text-candidate OR image-verified drops
-      s.read.table("graft_st17.accepted_docs").orderBy("doc_id")
+              .filter(bit_count(col("phash").bitwiseXOR(col("acc_phash"))) <= 6)
+              .select("doc_id"))
+      })
+      g.read("accepted_docs").orderBy("doc_id")
     }, Some(s"""WITH ${LlmQueries.toksCte}, ${LlmQueries.shCte},
                |${LlmQueries.lshSigBandsCtes},
                |${LlmQueries.phashHashCtes.replace("bands", "ibands")},
@@ -1098,58 +886,29 @@ object StreamingQueries {
       // same fused DotProduct expression, so both engines fold
       // identically. State per accepted vector: cluster id + unit
       // vector (the verify side); the standing corpus is never
-      // re-normalized or re-assigned. Same one-coalesced-file-per-
-      // increment pin as st13–st17.
+      // re-normalized or re-assigned.
       import graft.llm.Similarity
-      val base = Measure.tempDir("graft_st18")
-      val src = s"$base/in"; val chk = s"$base/chk"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_st18")
-      s.sql("DROP TABLE IF EXISTS graft_st18.accepted_docs")
-      s.sql("DROP TABLE IF EXISTS graft_st18.accepted_vecs")
+      import graft.plans.DotProduct
+      val g = new Gate(s, "st18", "accepted_docs", "accepted_vecs")
       val cents = LlmQueries.scaledCentroids(T(s, dir, "embeddings"))
         .select(col("vec_id"), col("embedding"))
         .localCheckpoint(true)
-      def unitOf(df: org.apache.spark.sql.DataFrame) =
+      def unitOf(df: DataFrame) =
         Similarity.withClusterId(df, cents, "vec_id", "embedding")
           .select(col("vec_id"), col("cluster_id"),
             Similarity.asDoubleVec(col("embedding")).as("vv"))
-          .withColumn("nrm", sqrt(graft.plans.DotProduct(col("vv"), col("vv"))))
+          .withColumn("nrm", sqrt(DotProduct(col("vv"), col("vv"))))
           .select(col("vec_id"), col("cluster_id"),
             expr("transform(vv, e -> e / nrm)").as("uv"))
-      def runOnce(): Unit =
-        AvailableNow.eachBatch(s.readStream
-            .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-            .parquet(src), chk) { (batch, _) =>
-          val nv = unitOf(batch).localCheckpoint(true)
-          val dropped =
-            if (s.catalog.tableExists("graft_st18.accepted_vecs"))
-              nv.join(s.read.table("graft_st18.accepted_vecs")
-                  .select(col("cluster_id"), col("uv").as("acc_uv")),
-                  Seq("cluster_id"))
-                .filter(graft.plans.DotProduct(col("uv"), col("acc_uv"))
-                  >= 0.35)
-                .select("vec_id").distinct()
-            else nv.select("vec_id").limit(0)
-          val kept = batch.select("vec_id")
-            .join(dropped, Seq("vec_id"), "left_anti")
-            .localCheckpoint(true)
-          val keptVecs = nv.join(kept, Seq("vec_id"), "left_semi")
-          // Two independent sinks over checkpointed inputs —
-          // overlap the write jobs (guide §2.6).
-          Registry.inParallel(
-            () => kept.write.mode("append")
-              .saveAsTable("graft_st18.accepted_docs"),
-            () => keptVecs.write.mode("append")
-              .saveAsTable("graft_st18.accepted_vecs"))
-        }
-      val emb = T(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      emb.filter(col("vec_id") % 8 === 0 || col("vec_id") % 8 === 2)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 1 seeds the accepted index
-      emb.filter(col("vec_id") % 8 =!= 0 && col("vec_id") % 8 =!= 2)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 2: cluster-local unit-dot verify
-      s.read.table("graft_st18.accepted_docs").orderBy("vec_id")
+      g.increments(bySeedPair(T(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
+          "vec_id"): _*)(g.acceptedIndex("vec_id")(b => Seq(unitOf(b))) {
+        case Seq(nv) =>
+          nv.join(g.read("accepted_vecs").select(col("cluster_id"), col("uv").as("acc_uv")),
+              Seq("cluster_id"))
+            .filter(DotProduct(col("uv"), col("acc_uv")) >= 0.35)
+            .select("vec_id")
+      })
+      g.read("accepted_docs").orderBy("vec_id")
     }, Some {
       val sim = LlmQueries.simSql("a.vv", "c.cv")
       def dot(a: String, b: String) = LlmQueries.dotSql(a, b)
@@ -1191,15 +950,8 @@ object StreamingQueries {
       // the probe itself is Multimodal.clipContainment — the same
       // content-addressed full-hash join + aligned-Hamming verify as
       // batch, so the two spellings cannot fork. State is the 8-byte/
-      // frame hash index — pixels never enter the stream. Same one-
-      // coalesced-file-per-increment pin as st13–st18 (maxFilesPerTrigger
-      // must stay unset on this source).
-      import graft.llm.Multimodal
-      val base = Measure.tempDir("graft_st19")
-      val src = s"$base/in"; val chk = s"$base/chk"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_st19")
-      s.sql("DROP TABLE IF EXISTS graft_st19.video_frames")
-      s.sql("DROP TABLE IF EXISTS graft_st19.placements")
+      // frame hash index — pixels never enter the stream.
+      val g = new Gate(s, "st19", "video_frames", "placements")
       val fh = LlmQueries.videoFrameHashes(s, dir)
       val vidRows = fh.select(lit("v").as("kind"), col("doc_id").as("id"),
         col("frame_idx").as("idx"), col("phash"))
@@ -1207,61 +959,24 @@ object StreamingQueries {
         .filter(col("doc_id") % 4 === 0 && col("frame_idx").isin(1, 2))
         .select(lit("c").as("kind"), col("doc_id").as("id"),
           (col("frame_idx") - 1).as("idx"), col("phash"))
-      def runOnce(): Unit =
-        AvailableNow.eachBatch(s.readStream
-            .schema("kind STRING, id BIGINT, idx INT, phash BIGINT")
-            .parquet(src), chk) { (batch, _) =>
-          val vids = batch.filter(col("kind") === "v")
-            .select(col("id").as("doc_id"), col("idx").as("frame_idx"),
-              col("phash"))
-          if (!vids.isEmpty)
-            vids.write.mode("append")
-              .saveAsTable("graft_st19.video_frames")
-          val clips = batch.filter(col("kind") === "c")
-            .select(col("id").as("clip_id"), col("idx").as("p"),
-              col("phash"))
-          if (!clips.isEmpty) {
-            val idx = s.read.table("graft_st19.video_frames")
-            Multimodal.clipContainment(clips, idx, nClipFrames = 2, tau = 6)
-              .write.mode("append")
-              .saveAsTable("graft_st19.placements")
-          }
-        }
-      vidRows.filter(col("id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 1: register the even half of the corpus
-      clipRows.filter(col("id") % 8 === 0)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 2: early clip wave — sees even videos only
-      vidRows.filter(col("id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 3: register the odd half
-      clipRows.filter(col("id") % 8 === 4)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 4: late clip wave — sees the full index
-      s.read.table("graft_st19.placements")
-        .orderBy("clip_id", "video_id", "offset")
-    }, Some(s"""WITH ${LlmQueries.videoHashCtes},
-              |clips AS (SELECT doc_id AS clip_id,
-              |    CAST(frame_idx - 1 AS INT) AS p, phash
-              |  FROM vph WHERE doc_id % 4 = 0 AND frame_idx IN (1, 2)),
-              |cand AS (SELECT DISTINCT c.clip_id, v.doc_id AS video_id,
-              |    CAST(v.frame_idx - c.p AS INT) AS loc
-              |  FROM clips c JOIN vph v ON v.phash = c.phash
-              |  WHERE v.frame_idx - c.p >= 0),
-              |ver AS (SELECT d.clip_id, d.video_id, d.loc,
-              |    CAST(SUM(bit_count(xor(c.phash, v.phash))) AS BIGINT)
-              |      AS hamming,
-              |    count(*) AS n_aligned
-              |  FROM cand d
-              |  JOIN clips c ON c.clip_id = d.clip_id
-              |  JOIN vph v ON v.doc_id = d.video_id
-              |    AND v.frame_idx = d.loc + c.p
-              |  GROUP BY d.clip_id, d.video_id, d.loc)
-              |SELECT clip_id, video_id, loc AS "offset", hamming
-              |FROM ver WHERE n_aligned = 2 AND hamming <= 6
-              |  AND (clip_id % 8 = 4 OR video_id % 2 = 0)
-              |ORDER BY clip_id, video_id, loc""".stripMargin)),
+      g.increments(vidRows.filter(col("id") % 2 === 0), // register the even half
+          clipRows.filter(col("id") % 8 === 0),         // early wave: even videos only
+          vidRows.filter(col("id") % 2 === 1),          // register the odd half
+          clipRows.filter(col("id") % 8 === 4)) { (batch, _) => // late wave: full index
+        val vids = batch.filter(col("kind") === "v")
+          .select(col("id").as("doc_id"), col("idx").as("frame_idx"), col("phash"))
+        if (!vids.isEmpty) vids.write.mode("append").saveAsTable(g("video_frames"))
+        val clips = batch.filter(col("kind") === "c")
+          .select(col("id").as("clip_id"), col("idx").as("p"), col("phash"))
+        if (!clips.isEmpty)
+          Multimodal.clipContainment(clips, g.read("video_frames"), nClipFrames = 2, tau = 6)
+            .write.mode("append").saveAsTable(g("placements"))
+      }
+      g.read("placements").orderBy("clip_id", "video_id", "offset")
+    }, Some(LlmQueries.clipContainmentSql +
+      """
+        |  AND (clip_id % 8 = 4 OR video_id % 2 = 0)
+        |ORDER BY clip_id, video_id, loc""".stripMargin)),
 
     "st20_stream_cdc_scd2" -> Q((s, dir) => {
       // Streaming CDC → SCD2 maintenance — the lakehouse-migration op
@@ -1281,8 +996,8 @@ object StreamingQueries {
       // the dimension table itself, partitioned by is_current: each
       // micro-batch appends its closed rows to history and replaces the
       // current partition (Tables.scd2Apply, the Parquet spelling of
-      // MERGE). Same one-coalesced-file-per-increment pin as st13–st19.
-      // (Chain body shared with st22's integrity audit — streamCdcScd2.)
+      // MERGE). (Chain body shared with st22's integrity audit —
+      // streamCdcScd2.)
       Registry.decimalsToDouble(streamCdcScd2(s, dir, "st20"))
         .orderBy("order_id", "effective_start_date", "is_current")
     }, Some(s"""WITH $cdcScd2Ctes
@@ -1304,54 +1019,24 @@ object StreamingQueries {
       // even rec_ids (canonical + append-variant of every entity),
       // increment 2 = odd (the substituted variant must link and drop;
       // the dist-4 decoy must survive BOTH the length pre-filter and
-      // the verify). Same one-coalesced-file-per-increment pin as
-      // st13–st20.
-      val base = Measure.tempDir("graft_st21")
-      val src = s"$base/in"; val chk = s"$base/chk"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_st21")
-      s.sql("DROP TABLE IF EXISTS graft_st21.accepted")
-      val recs = T(s, dir, "customer").select(
-        col("c_custkey").as("rec_id"),
-        expr("""CASE CAST(c_custkey % 4 AS INT)
-               |  WHEN 0 THEN substring(md5(CAST(c_custkey DIV 4 AS STRING)), 1, 8)
-               |  WHEN 1 THEN concat(substring(md5(CAST(c_custkey DIV 4 AS STRING)), 1, 7), 'x')
-               |  WHEN 2 THEN concat(substring(md5(CAST(c_custkey DIV 4 AS STRING)), 1, 8), '7')
-               |  ELSE concat(substring(md5(CAST(c_custkey DIV 4 AS STRING)), 1, 8), 'zzzz')
-               |END""".stripMargin).as("name"))
-      def runOnce(): Unit =
-        AvailableNow.eachBatch(s.readStream
-            .schema("rec_id BIGINT, name STRING")
-            .parquet(src), chk) { (batch, _) =>
-          val nb = batch.select(col("rec_id"), col("name"),
-            substring(col("name"), 1, 6).as("blk"))
-          val dropped =
-            if (s.catalog.tableExists("graft_st21.accepted"))
-              nb.join(s.read.table("graft_st21.accepted")
-                  .select(col("blk"), col("name").as("acc_name")), Seq("blk"))
-                .filter(abs(length(col("name")) - length(col("acc_name"))) <= 2 &&
-                  levenshtein(col("name"), col("acc_name"), 2) >= 0)
-                .select("rec_id").distinct()
-            else nb.select("rec_id").limit(0)
-          nb.join(dropped, Seq("rec_id"), "left_anti")
-            .write.mode("append").saveAsTable("graft_st21.accepted")
-        }
-      recs.filter(col("rec_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 1: canonical + append-variant seed the index
-      recs.filter(col("rec_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 2: substituted variants link+drop, decoys survive
-      s.read.table("graft_st21.accepted").select("rec_id").orderBy("rec_id")
-    }, Some("""WITH h AS (SELECT c_custkey AS rec_id,
-              |    substring(md5(CAST(c_custkey // 4 AS VARCHAR)), 1, 8) AS h8,
-              |    c_custkey % 4 AS v
-              |  FROM customer),
-              |recs AS (SELECT rec_id,
-              |    CASE v WHEN 0 THEN h8
-              |      WHEN 1 THEN substring(h8, 1, 7) || 'x'
-              |      WHEN 2 THEN h8 || '7'
-              |      ELSE h8 || 'zzzz' END AS name
-              |  FROM h),
+      // the verify).
+      val g = new Gate(s, "st21", "accepted")
+      g.increments(byParity(LlmQueries.entityRecs(s, dir), "rec_id"): _*) { (batch, _) =>
+        val nb = batch.select(col("rec_id"), col("name"),
+          substring(col("name"), 1, 6).as("blk"))
+        val dropped =
+          if (s.catalog.tableExists(g("accepted")))
+            nb.join(g.read("accepted")
+                .select(col("blk"), col("name").as("acc_name")), Seq("blk"))
+              .filter(abs(length(col("name")) - length(col("acc_name"))) <= 2 &&
+                levenshtein(col("name"), col("acc_name"), 2) >= 0)
+              .select("rec_id").distinct()
+          else nb.select("rec_id").limit(0)
+        nb.join(dropped, Seq("rec_id"), "left_anti")
+          .write.mode("append").saveAsTable(g("accepted"))
+      }
+      g.read("accepted").select("rec_id").orderBy("rec_id")
+    }, Some(s"""WITH ${LlmQueries.entityRecsCtes},
               |coll AS (SELECT DISTINCT n.rec_id
               |  FROM recs n JOIN recs a
               |    ON substring(n.name, 1, 6) = substring(a.name, 1, 6)
@@ -1385,27 +1070,7 @@ object StreamingQueries {
               |  FROM m2 WINDOW w AS (PARTITION BY order_id
               |    ORDER BY effective_start_date, is_current,
               |      effective_end_date NULLS FIRST)),
-              |pk AS (SELECT k,
-              |    SUM(CASE WHEN c THEN 1 ELSE 0 END) AS n_cur,
-              |    SUM(CASE WHEN NOT c AND e IS NULL THEN 1 ELSE 0 END) AS n_open,
-              |    SUM(CASE WHEN c AND e IS NOT NULL THEN 1 ELSE 0 END) AS n_cwe,
-              |    SUM(CASE WHEN has_prev AND (prev_e IS NULL OR prev_e > st)
-              |      THEN 1 ELSE 0 END) AS n_ov,
-              |    SUM(CASE WHEN has_prev AND prev_e IS NOT NULL AND prev_e < st
-              |      THEN 1 ELSE 0 END) AS n_gap
-              |  FROM r GROUP BY k)
-              |SELECT count(*) AS n_keys,
-              |  CAST(SUM(CASE WHEN n_cur > 1 THEN 1 ELSE 0 END) AS BIGINT)
-              |    AS keys_multi_current,
-              |  CAST(SUM(CASE WHEN n_cur = 0 THEN 1 ELSE 0 END) AS BIGINT)
-              |    AS keys_no_current,
-              |  CAST(SUM(n_open) AS BIGINT) AS rows_open_noncurrent,
-              |  CAST(SUM(n_cwe) AS BIGINT) AS rows_current_with_end,
-              |  CAST(SUM(CASE WHEN n_ov > 0 THEN 1 ELSE 0 END) AS BIGINT)
-              |    AS keys_overlapping,
-              |  CAST(SUM(CASE WHEN n_gap > 0 THEN 1 ELSE 0 END) AS BIGINT)
-              |    AS keys_gapped
-              |FROM pk""".stripMargin)),
+              |${PipelineQueries.scd2AuditSql("st")}""".stripMargin)),
 
     "st23_stream_curation" -> Q((s, dir) => {
       // Streaming CORPUS CURATION — the batch llm_curation_pipeline's
@@ -1430,87 +1095,70 @@ object StreamingQueries {
       // is load-bearing: an odd %10=7 doc drops at url_dedup ONLY if
       // its even URL-partner survived all of increment 1's stages into
       // the accepted index. Intra-increment collisions are deliberately
-      // not judged (st13's pinned contract); each increment is one
-      // coalesced file and maxFilesPerTrigger stays unset.
-      import graft.llm.{Dedup, TextOps}
-      val base = Measure.tempDir("graft_st23")
-      val src = s"$base/in"; val chk = s"$base/chk"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_st23")
-      Seq("outcomes", "accepted_urls", "accepted_bands").foreach(t =>
-        s.sql(s"DROP TABLE IF EXISTS graft_st23.$t"))
+      // not judged (st13's contract). Increment 1 (evens) meets empty
+      // URL/band indexes, so only quality and decon bite; increment 2
+      // (odds) is probed against increment 1's survivors.
+      import graft.llm.TextOps
+      val g = new Gate(s, "st23", "outcomes", "accepted_urls", "accepted_bands")
       val urlExpr = expr("""CASE CAST(doc_id % 3 AS INT)
         |  WHEN 0 THEN concat('https://Docs.Example.com/d/', g, '?id=', g)
         |  WHEN 1 THEN concat('HTTPS://WWW.DOCS.EXAMPLE.COM:443/d/', g, '?id=', g, '#frag')
         |  ELSE concat('https://docs.example.com/d/', g, '/?id=', g, '&utm_source=x')
         |END""".stripMargin)
-      def withUrlNorm(df: org.apache.spark.sql.DataFrame) =
+      def withUrlNorm(df: DataFrame) =
         df.withColumn("g", expr(
             "CAST(CASE WHEN doc_id % 10 = 7 THEN doc_id - 1 ELSE doc_id END AS STRING)"))
           .withColumn("url_norm", TextOps.normalizeUrl(urlExpr)).drop("g")
-      def bandsOf(df: org.apache.spark.sql.DataFrame) =
-        Dedup.lshBands(Dedup.minhashSignaturesNative(
-          Dedup.shingleArray(df, "doc_id", "text", 3), "doc_id", 8), "doc_id", 8, 2)
-      def runOnce(): Unit =
-        AvailableNow.eachBatch(s.readStream
-            .schema("doc_id BIGINT, text STRING")
-            .parquet(src), chk) { (batch, batchId) =>
-          val inc = lit(batchId + 1).cast("int")
-          val withUrl = withUrlNorm(batch).localCheckpoint(true)
-          val urlDrop =
-            if (s.catalog.tableExists("graft_st23.accepted_urls"))
-              withUrl.join(s.read.table("graft_st23.accepted_urls"),
-                  Seq("url_norm"), "left_semi")
-                .select("doc_id").localCheckpoint(true)
-            else batch.select("doc_id").limit(0)
-          val u = batch.join(urlDrop, Seq("doc_id"), "left_anti")
-          val qualFlags = TextOps.qualityFilter(u,
-              minTokens = 20, maxTokens = 100000,
-              maxPunctRatio = 0.06, minStopwordRatio = 0.05)
-          val qualDrop = qualFlags.filter(!col("keep"))
-            .select("doc_id").localCheckpoint(true)
-          val q2 = u.join(qualDrop, Seq("doc_id"), "left_anti")
-            .localCheckpoint(true)
-          val nb = bandsOf(q2).localCheckpoint(true)
-          val fuzzyDrop =
-            if (s.catalog.tableExists("graft_st23.accepted_bands"))
-              nb.join(s.read.table("graft_st23.accepted_bands"),
-                  Seq("band", "band_hash"), "left_semi")
-                .select("doc_id").distinct().localCheckpoint(true)
-            else batch.select("doc_id").limit(0)
-          val f = q2.join(fuzzyDrop, Seq("doc_id"), "left_anti")
-          val evalDocs = Registry.T(s, dir, "documents")
-            .filter(col("doc_id") < 10).select("doc_id", "text")
-          val d = Dedup.decontaminate(f, evalDocs, "doc_id", "text", 5)
-            .localCheckpoint(true)
-          val contamDrop = f.join(d.select("doc_id"), Seq("doc_id"), "left_anti")
-            .select("doc_id")
-          def tag(ids: org.apache.spark.sql.DataFrame, o: String) =
-            ids.select(col("doc_id"), inc.as("increment"), lit(o).as("outcome"))
-          // Three independent sinks over already-checkpointed
-          // frames: overlap the writes (guide §2.6) instead of
-          // paying three sequential write-job latencies per batch.
-          Registry.inParallel(
-            () => tag(d.select("doc_id"), "accepted")
-              .unionByName(tag(urlDrop, "url_dup"))
-              .unionByName(tag(qualDrop, "quality"))
-              .unionByName(tag(fuzzyDrop, "fuzzy_dup"))
-              .unionByName(tag(contamDrop, "contaminated"))
-              .write.mode("append").saveAsTable("graft_st23.outcomes"),
-            () => withUrl.join(d.select("doc_id"), Seq("doc_id"), "left_semi")
-              .select("url_norm")
-              .write.mode("append").saveAsTable("graft_st23.accepted_urls"),
-            () => nb.join(d.select("doc_id"), Seq("doc_id"), "left_semi")
-              .write.mode("append").saveAsTable("graft_st23.accepted_bands"))
-        }
       val docs = T(s, dir, "documents").select(col("doc_id"), col("text"))
         .filter(col("doc_id") >= 10)
-      docs.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 1: evens — URL/band indexes empty, qual+decon bite
-      docs.filter(col("doc_id") % 2 =!= 0)
-        .coalesce(1).write.mode("append").parquet(src)
-      runOnce() // increment 2: odds — probed against increment 1's survivors
-      s.read.table("graft_st23.outcomes").orderBy("doc_id")
+      g.increments(byParity(docs, "doc_id"): _*) { (batch, batchId) =>
+        val inc = lit(batchId + 1).cast("int")
+        val withUrl = withUrlNorm(batch).localCheckpoint(true)
+        val urlDrop =
+          if (s.catalog.tableExists(g("accepted_urls")))
+            withUrl.join(g.read("accepted_urls"), Seq("url_norm"), "left_semi")
+              .select("doc_id").localCheckpoint(true)
+          else batch.select("doc_id").limit(0)
+        val u = batch.join(urlDrop, Seq("doc_id"), "left_anti")
+        val qualFlags = TextOps.qualityFilter(u,
+            minTokens = 20, maxTokens = 100000,
+            maxPunctRatio = 0.06, minStopwordRatio = 0.05)
+        val qualDrop = qualFlags.filter(!col("keep"))
+          .select("doc_id").localCheckpoint(true)
+        val q2 = u.join(qualDrop, Seq("doc_id"), "left_anti")
+          .localCheckpoint(true)
+        val nb = textBands(q2).localCheckpoint(true)
+        val fuzzyDrop =
+          if (s.catalog.tableExists(g("accepted_bands")))
+            nb.join(g.read("accepted_bands"), Seq("band", "band_hash"), "left_semi")
+              .select("doc_id").distinct().localCheckpoint(true)
+          else batch.select("doc_id").limit(0)
+        val f = q2.join(fuzzyDrop, Seq("doc_id"), "left_anti")
+        val evalDocs = T(s, dir, "documents")
+          .filter(col("doc_id") < 10).select("doc_id", "text")
+        val d = Dedup.decontaminate(f, evalDocs, "doc_id", "text", 5)
+          .localCheckpoint(true)
+        val contamDrop = f.join(d.select("doc_id"), Seq("doc_id"), "left_anti")
+          .select("doc_id")
+        def tag(ids: DataFrame, o: String) =
+          ids.select(col("doc_id"), inc.as("increment"), lit(o).as("outcome"))
+        // Three independent sinks over already-checkpointed
+        // frames: overlap the writes (guide §2.6) instead of
+        // paying three sequential write-job latencies per batch.
+        Registry.inParallel(
+          () => tag(d.select("doc_id"), "accepted")
+            .unionByName(tag(urlDrop, "url_dup"))
+            .unionByName(tag(qualDrop, "quality"))
+            .unionByName(tag(fuzzyDrop, "fuzzy_dup"))
+            .unionByName(tag(contamDrop, "contaminated"))
+            .write.mode("append").saveAsTable(g("outcomes")),
+          () => withUrl.join(d.select("doc_id"), Seq("doc_id"), "left_semi")
+            .select("url_norm")
+            .write.mode("append").saveAsTable(g("accepted_urls")),
+          () => nb.join(d.select("doc_id"), Seq("doc_id"), "left_semi")
+            .write.mode("append").saveAsTable(g("accepted_bands")))
+      }
+      g.read("outcomes").orderBy("doc_id")
     }, Some(s"""WITH ${LlmQueries.toksCte}, ${LlmQueries.shCte},
               |${LlmQueries.lshSigBandsCtes},
               |${LlmQueries.sh5Cte},
@@ -1577,28 +1225,16 @@ object StreamingQueries {
       // checkpoint (evens then odds) prove per-batch operation; the
       // increment column records which batch produced each row.
       import graft.llm.Bpe
-      val base = Measure.tempDir("graft_st24")
-      val src = s"$base/in"; val chk = s"$base/chk"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_st24")
-      s.sql("DROP TABLE IF EXISTS graft_st24.encoded")
+      val g = new Gate(s, "st24", "encoded")
       val docs = T(s, dir, "documents").select("doc_id", "text")
       val (_, vocab) = Bpe.trainMerges(Bpe.wordCensus(docs), k = 12)
       val vocabCk = vocab.localCheckpoint()
-      def runOnce(): Unit =
-        AvailableNow.eachBatch(s.readStream
-            .schema("doc_id BIGINT, text STRING")
-            .parquet(src), chk) { (batch, batchId) =>
-          Bpe.encodeDocs(batch, vocabCk)
-            .withColumn("increment", lit(batchId + 1).cast("int"))
-            .write.mode("append").saveAsTable("graft_st24.encoded")
-        }
-      docs.filter(col("doc_id") % 2 === 0).coalesce(1)
-        .write.mode("append").parquet(src)
-      runOnce()
-      docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-        .write.mode("append").parquet(src)
-      runOnce()
-      s.table("graft_st24.encoded")
+      g.increments(byParity(docs, "doc_id"): _*) { (batch, batchId) =>
+        Bpe.encodeDocs(batch, vocabCk)
+          .withColumn("increment", lit(batchId + 1).cast("int"))
+          .write.mode("append").saveAsTable(g("encoded"))
+      }
+      g.read("encoded")
         .select("doc_id", "increment", "n_words", "n_tokens")
         .orderBy("doc_id")
     }, Some(LlmQueries.bpeOracle(12, encode = true, streamIncrement = true))))

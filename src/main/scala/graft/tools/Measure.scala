@@ -75,6 +75,7 @@ object Measure {
 
   /** True median: the mean of the two middle elements for even n. */
   def median(xs: Seq[Double]): Double = {
+    require(xs.nonEmpty, "median of an empty sequence")
     val s = xs.sorted
     val n = s.size
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0

@@ -19,6 +19,17 @@ class MeasureSpec extends SparkTestBase {
   test("median: middle element for odd n, mean of the middle two for even n") {
     assert(Measure.median(Seq(3.0, 1.0, 2.0)) === 2.0)
     assert(Measure.median(Seq(4.0, 1.0, 3.0, 2.0)) === 2.5)
+    val empty = intercept[IllegalArgumentException](Measure.median(Seq()))
+    assert(empty.getMessage.contains("empty"), empty.getMessage)
+  }
+
+  test("bench iteration count: 3 by default, below 1 fails naming the value") {
+    assert(Bench.iters(None) === 3)
+    assert(Bench.iters(Some("5")) === 5)
+    for (bad <- Seq("0", "-2")) {
+      val e = intercept[IllegalArgumentException](Bench.iters(Some(bad)))
+      assert(e.getMessage.contains(s"SPARK_GRAFT_BENCH_ITERS must be >= 1, got $bad"), e.getMessage)
+    }
   }
 
   test("TimeQueries output is valid JSON with zero gates") {
@@ -112,6 +123,17 @@ class MeasureSpec extends SparkTestBase {
       assert(hits.nonEmpty && hits.forall(_.startsWith("graft/streaming/AvailableNow.scala:")),
         s"run streams through graft.streaming.AvailableNow, found $token at:\n${hits.mkString("\n")}")
     }
+  }
+
+  test("source sweep: the streaming gates drain increments only through their fixture") {
+    val hits = sourceHits("AvailableNow.eachBatch(").filter(_.startsWith("graft/queries/"))
+    val file = "graft/queries/StreamingQueries.scala"
+    val lines = Files.readAllLines(Paths.get("src/main/scala", file)).asScala
+    val from = lines.indexWhere(_.contains("def increments(")) + 1
+    val to = lines.indexWhere(_.contains("def acceptedIndex("))
+    assert(hits.size === 1 && hits.head.startsWith(s"$file:") &&
+      (from + 1 to to).contains(hits.head.stripPrefix(s"$file:").toInt),
+      s"land and drain streaming-gate increments through Gate.increments, found:\n${hits.mkString("\n")}")
   }
 
   test("source sweep: Scd2.merge is called in src/main only by the table apply and the batch merge gate") {

@@ -65,6 +65,22 @@ class AvailableNowSpec extends SparkTestBase {
     }
   }
 
+  test("a thread job tag set before eachBatch reaches every micro-batch job") {
+    withTempDir("graft_an_tag") { base =>
+      spark.range(3).write.parquet(s"$base/in")
+      val sc = spark.sparkContext
+      val tag = s"graft-an-tag-${java.util.UUID.randomUUID()}"
+      sc.addJobTag(tag)
+      val jobs = try jobProperties {
+        AvailableNow.eachBatch(ids(s"$base/in"), s"$base/chk")((batch, _) => batch.count())
+      } finally sc.removeJobTag(tag)
+      // Jobs started on a stream's thread carry its query id.
+      val streamJobs = jobs.filter(_.getProperty("sql.streaming.queryId") != null).map(tagsOf)
+      assert(streamJobs.nonEmpty)
+      assert(streamJobs.forall(_.contains(tag)), streamJobs.mkString("\n"))
+    }
+  }
+
   test("a ported gate's micro-batch jobs run in the caller's session") {
     withTempDir("graft_an_gate") { dir =>
       Seq((1L, 10L, 1700000000000000000L), (2L, 11L, 1700000100000000000L))
