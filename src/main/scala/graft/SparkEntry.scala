@@ -13,10 +13,17 @@ import graft.queries._
   */
 object SparkEntry {
 
-  private def registry: Seq[(String, Q)] =
-    RelationalQueries.defs ++ WindowQueries.defs ++ PipelineQueries.defs ++
+  /** Every gate, in registration order. A reused name fails here, naming
+    * it: [[queries]] and [[oracleSql]] are Maps, so a second entry would
+    * silently shadow the first. */
+  private[graft] def registry: Seq[(String, Q)] = {
+    val all = RelationalQueries.defs ++ WindowQueries.defs ++ PipelineQueries.defs ++
       SqlMartQueries.defs ++ LlmQueries.defs ++ StreamingQueries.defs ++
       GovernanceQueries.defs ++ TpchQueries.defs ++ TpcdsQueries.defs
+    val reused = all.groupBy(_._1).collect { case (name, es) if es.size > 1 => name }
+    require(reused.isEmpty, s"gate name(s) registered twice: ${reused.toSeq.sorted.mkString(", ")}")
+    all
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

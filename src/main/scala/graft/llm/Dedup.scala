@@ -44,16 +44,9 @@ object Dedup {
     * intermediate in the dedup pipeline, ~10× corpus size at 100 TB).
     * `dedup=false` keeps duplicate shingles (multiset semantics). */
   def shingles(df: DataFrame, idCol: String, textCol: String, n: Int = 3,
-      dedup: Boolean = true): DataFrame = {
-    val parts = (1 to n).map(j => s"element_at(toks, i + $j)").mkString(", ")
-    val arrayExpr =
-      s"""CASE WHEN size(toks) >= $n
-         |  THEN transform(sequence(0, size(toks) - $n), i -> concat_ws(' ', $parts))
-         |  ELSE array(array_join(toks, ' ')) END""".stripMargin
-    val wrapped = if (dedup) s"array_distinct($arrayExpr)" else arrayExpr
-    df.select(col(idCol), TextOps.tokens(col(textCol)).as("toks"))
-      .select(col(idCol), explode(expr(wrapped)).as("shingle"))
-  }
+      dedup: Boolean = true): DataFrame =
+    shingleArray(df, idCol, textCol, n, dedup)
+      .select(col(idCol), explode(col("shingles")).as("shingle"))
 
   /** The j-th MinHash hash of one shingle: an 8-hex-char (32-bit) window
     * of md5(shingle) for j<4, of md5('#'+shingle) for j≥4. Two md5
@@ -80,8 +73,8 @@ object Dedup {
     shingleDf.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** The shingle set kept as ONE array column per document (no explode).
-    * Same dedup-via-array_distinct as [[shingles]]. */
+  /** The shingle set kept as ONE array column per document (no explode);
+    * [[shingles]] is its explode. */
   def shingleArray(df: DataFrame, idCol: String, textCol: String, n: Int = 3,
       dedup: Boolean = true): DataFrame = {
     val parts = (1 to n).map(j => s"element_at(toks, i + $j)").mkString(", ")

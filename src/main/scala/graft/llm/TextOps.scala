@@ -171,105 +171,6 @@ object TextOps {
         col("n_required_hits") >= minRequiredHits)
   }
 
-  /** BPE merge-rule LEARNING (Sennrich et al. '16) — the iterative step
-    * after [[charPairCounts]]'s one-shot census: each round counts
-    * adjacent symbol pairs across the word-frequency table (one explode
-    * + one hash aggregate, weighted by word freq so the corpus text is
-    * touched ONCE up front), takes the argmax as the round's merge rule
-    * (ties break on the pair string), and applies the merge corpus-wide.
-    *
-    * Words are DOUBLE-space-joined symbol strings, so "apply the merge"
-    * is a plain string replace of ` p1␣␣p2 ` with ` p1p2 ` on the
-    * single-space-padded string. The double separator matters: adjacent
-    * matches then share no characters, so one left-to-right
-    * non-overlapping replace pass merges EVERY eligible occurrence
-    * (` a␣␣b␣␣a␣␣b ` → both pairs) while overlapping chains stay
-    * greedy-left (` a␣␣a␣␣a ` → `aa␣␣a`) — exactly BPE merge
-    * semantics, and Spark's `replace` and DuckDB's agree on it. The
-    * rule table is model state (one row per round) — the only
-    * driver-side data, like GD weights. State between rounds is the
-    * word-frequency table (vocab-sized, Heaps' law ≪ corpus),
-    * localCheckpoint'd so lineage stays flat. */
-  def bpeMerges(df: DataFrame, textCol: String = "text", rounds: Int = 3): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    require(rounds >= 1 && rounds <= 32, s"rounds=$rounds out of sane range")
-    val wf = df.select(explode(tokens(col(textCol))).as("w"))
-      .filter(length(col("w")) >= 2)
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-    var cur = wf.select(
-      expr("array_join(transform(sequence(1, length(w)), i -> substr(w, i, 1)), '  ')")
-        .as("symstr"), col("freq"))
-      .localCheckpoint(true)
-    val rules = Seq.newBuilder[(Int, String, Long)]
-    for (t <- 1 to rounds) {
-      val top = cur.select(col("freq"), split(col("symstr"), "  ").as("a"))
-        .filter(size(col("a")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(1, size(a) - 1), i -> concat(element_at(a, i), ' ', element_at(a, i + 1)))"))
-          .as("p"))
-        .groupBy("p").agg(sum("freq").cast("bigint").as("cnt"))
-        .orderBy(desc("cnt"), col("p")).limit(1).first()
-      val (pair, cnt) = (top.getString(0), top.getLong(1))
-      rules += ((t, pair, cnt))
-      val merged = pair.replace(" ", "")
-      val findPat = " " + pair.replace(" ", "  ") + " "
-      cur = cur.select(
-        trim(replace(concat(lit(" "), col("symstr"), lit(" ")),
-          lit(findPat), lit(s" $merged "))).as("symstr"),
-        col("freq"))
-        .localCheckpoint(true)
-    }
-    rules.result().toDF("round", "merge_rule", "cnt")
-  }
-
-  /** BPE ENCODING — apply an ordered list of learned merge rules (from
-    * [[bpeMerges]]) to every token and report per-document tokenizer
-    * statistics: subword counts, fertility (subwords per word — the
-    * standard tokenizer-quality metric; lower is better), compression
-    * (chars per subword), and a deterministic preview of the first
-    * `previewLen` subwords.
-    *
-    * The rule list is model state (≤32 tiny strings), baked into the
-    * projection as literals exactly like broadcast GD weights — so the
-    * whole encode is ONE zero-shuffle projection over the corpus: each
-    * token char-splits into the double-space symbol string and folds
-    * through the ordered `replace` chain (the same greedy-left
-    * all-occurrence merge semantics [[bpeMerges]] learns with — see its
-    * doc for why the DOUBLE separator makes one replace pass = one BPE
-    * merge on both engines). No explode, no shuffle; at 100 TB this
-    * runs at scan speed and the per-doc aggregate is a HOF fold, not a
-    * groupBy. */
-  def bpeEncode(df: DataFrame, idCol: String, textCol: String,
-      rules: Seq[String], previewLen: Int = 12): DataFrame = {
-    require(rules.nonEmpty && rules.size <= 64, "rule list must be 1..64 merges")
-    require(rules.forall(_.split(" ", -1).count(_.nonEmpty) == 2),
-      s"each merge rule must be 'left right'; got ${rules.find(_.split(" ", -1).count(_.nonEmpty) != 2)}")
-    val charSplit: Column => Column = w => concat(lit(" "),
-      array_join(transform(sequence(lit(1), length(w)), i => w.substr(i, lit(1))), "  "),
-      lit(" "))
-    val encode: Column => Column = w => split(trim(
-      rules.foldLeft(charSplit(w))((c, r) =>
-        replace(c, lit(" " + r.replace(" ", "  ") + " "),
-          lit(" " + r.replace(" ", "") + " ")))), "  ")
-    df.select(col(idCol), tokens(col(textCol)).as("_t"))
-      .select(col(idCol), col("_t"), transform(col("_t"), encode).as("_sw"))
-      .select(col(idCol),
-        size(col("_t")).cast("long").as("n_tokens"),
-        aggregate(col("_t"), lit(0L), (a, w) => a + length(w)).as("n_chars"),
-        aggregate(col("_sw"), lit(0L), (a, s) => a + size(s)).as("n_subwords"),
-        col("_sw"))
-      .select(col(idCol), col("n_tokens"), col("n_chars"), col("n_subwords"),
-        when(col("n_tokens") > 0,
-          col("n_subwords").cast("double") / col("n_tokens").cast("double"))
-          .as("fertility"),
-        when(col("n_subwords") > 0,
-          col("n_chars").cast("double") / col("n_subwords").cast("double"))
-          .as("chars_per_subword"),
-        array_join(slice(flatten(col("_sw")), 1, previewLen), " ")
-          .as("subword_preview"))
-  }
-
   def repetitionStats(df: DataFrame, idCol: String, textCol: String,
       n: Int = 2, maxTopFrac: Double = 0.2, maxDupFrac: Double = 0.5): DataFrame = {
     val grams = Dedup.shingles(df.select(col(idCol), col(textCol)),
@@ -657,8 +558,7 @@ object TextOps {
     * (bounded by alphabet², a few thousand keys), so map-side partial
     * aggregation collapses the exploded stream to near-nothing before
     * the exchange — the 100 TB-safe shape for corpus-wide symbol
-    * statistics. Iterating merges would re-run this over re-segmented
-    * tokens; the per-iteration plan is identical. */
+    * statistics. The full merge loop is [[Bpe.trainMerges]]. */
   def charPairCounts(df: DataFrame, textCol: String = "text"): DataFrame =
     df.select(explode(tokens(col(textCol))).as("tok"))
       .filter(length(col("tok")) >= 2)

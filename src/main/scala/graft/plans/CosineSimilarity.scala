@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression: cosine similarity over two
   * `array<double>` columns in ONE fused pass.
@@ -24,27 +22,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * oracle's `list_reduce` fold). Zero vectors yield NaN in both.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<double> arguments, " +
-        s"got ${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override def dataType: DataType = DoubleType
+    extends DoublePairKernel {
 
   override def prettyName: String = "cosine_similarity"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+  override protected def fold(x: ArrayData, y: ArrayData, n: Int): Double = {
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
     while (i < n) {
@@ -79,12 +61,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 object CosineSimilarity {
   /** Column API: cosine similarity over two array<double> columns. */
-  def apply(a: Column, b: Column): Column =
-    GraftSqlBridge.column(CosineSimilarity(
-      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+  def apply(a: Column, b: Column): Column = DoublePairKernel.column(a, b)(CosineSimilarity(_, _))
 
   /** Register as the SQL function `cosine_similarity` on the session. */
   def register(spark: SparkSession): Unit =
-    GraftSqlBridge.registerFunction(spark, "cosine_similarity",
-      exprs => CosineSimilarity(exprs(0), exprs(1)))
+    DoublePairKernel.register(spark, "cosine_similarity")(CosineSimilarity(_, _))
 }

@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression: Euclidean (L2) distance over two
   * `array<double>` columns in ONE fused pass.
@@ -32,27 +30,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * containsNull=false embedding columns, which is the supported domain.
   */
 case class EuclideanDistance(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<double> arguments, " +
-        s"got ${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override def dataType: DataType = DoubleType
+    extends DoublePairKernel {
 
   override def prettyName: String = "euclidean_distance"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+  override protected def fold(x: ArrayData, y: ArrayData, n: Int): Double = {
     var acc = 0.0
     var i = 0
     while (i < n) {
@@ -84,12 +66,9 @@ case class EuclideanDistance(left: Expression, right: Expression)
 
 object EuclideanDistance {
   /** Column API: L2 distance over two array<double> columns. */
-  def apply(a: Column, b: Column): Column =
-    GraftSqlBridge.column(EuclideanDistance(
-      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+  def apply(a: Column, b: Column): Column = DoublePairKernel.column(a, b)(EuclideanDistance(_, _))
 
   /** Register as the SQL function `euclidean_distance` on the session. */
   def register(spark: SparkSession): Unit =
-    GraftSqlBridge.registerFunction(spark, "euclidean_distance",
-      exprs => EuclideanDistance(exprs(0), exprs(1)))
+    DoublePairKernel.register(spark, "euclidean_distance")(EuclideanDistance(_, _))
 }

@@ -342,6 +342,17 @@ object LlmQueries {
   private[queries] val qualKeepAllCtes: String =
     qualKeepCtes("qstats_all", "qual_keep_all", "doc_id", "documents")
 
+  /** The quality filter's fail reasons at the curation thresholds, in
+    * TextOps.qualityFilter's order, over columns n_tokens, punct_ratio
+    * and stopword_ratio: llm_quality_filter, llm_dataset_card and st8. */
+  private[queries] val failReasonsSql: String =
+    """list_filter([
+      |      CASE WHEN n_tokens < 20 THEN 'too_short' END,
+      |      CASE WHEN n_tokens > 100000 THEN 'too_long' END,
+      |      CASE WHEN punct_ratio > 0.06 THEN 'punct_heavy' END,
+      |      CASE WHEN stopword_ratio < 0.05 THEN 'low_stopword' END],
+      |      x -> x IS NOT NULL)""".stripMargin
+
   // sigs → bands → lsh_pairs CTE chain shared by the LSH-pair gate and
   // the cluster gate. Mirrors Dedup.windowHash: 8-hex-char (32-bit)
   // windows of two digests give all 8 MinHash functions.
@@ -405,6 +416,19 @@ object LlmQueries {
       |      '^(https?://)www\.', '\1') ||
       |    substr(head, length(sh_host) + 1, 65536) || qs AS url_norm
       |  FROM uparts)""".stripMargin
+
+  /** urls(rec_id, url): each doc_id that `from` reads, under one of three
+    * spellings of its entity's URL (doc_id % 3), %10=7 docs sharing their
+    * predecessor's entity — llm_curation_pipeline and st23. `from`
+    * carries its own leading separator. */
+  private[queries] def urlsCte(from: String): String =
+    s"""urls AS (SELECT doc_id AS rec_id, CASE CAST(doc_id % 3 AS INT)
+       |    WHEN 0 THEN 'https://Docs.Example.com/d/' || g || '?id=' || g
+       |    WHEN 1 THEN 'HTTPS://WWW.DOCS.EXAMPLE.COM:443/d/' || g || '?id=' || g || '#frag'
+       |    ELSE 'https://docs.example.com/d/' || g || '/?id=' || g || '&utm_source=x'
+       |  END AS url
+       |  FROM (SELECT doc_id, CAST(CASE WHEN doc_id % 10 = 7
+       |      THEN doc_id - 1 ELSE doc_id END AS VARCHAR) AS g$from))""".stripMargin
 
   // 16-bit SimHash as chained CTEs ending in sims(doc_id, simhash) —
   // mirrors Dedup.simhash bit-for-bit (odd hex nibble = +1 vote).
@@ -2808,12 +2832,7 @@ object LlmQueries {
               |$qualStatsCols
               |  FROM documents),
               |r AS (SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
-              |    list_filter([
-              |      CASE WHEN n_tokens < 20 THEN 'too_short' END,
-              |      CASE WHEN n_tokens > 100000 THEN 'too_long' END,
-              |      CASE WHEN punct_ratio > 0.06 THEN 'punct_heavy' END,
-              |      CASE WHEN stopword_ratio < 0.05 THEN 'low_stopword' END],
-              |      x -> x IS NOT NULL) AS fail_reasons
+              |    $failReasonsSql AS fail_reasons
               |  FROM st)
               |SELECT doc_id, n_tokens,
               |  coalesce(array_to_string(fail_reasons, ','), '') AS fail_reasons,
@@ -3755,13 +3774,7 @@ object LlmQueries {
     }, Some(s"""WITH RECURSIVE $toksCte,
               |tsz AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS ntok FROM toks),
               |corpus AS (SELECT doc_id FROM documents WHERE doc_id >= 10),
-              |urls AS (SELECT doc_id AS rec_id, CASE CAST(doc_id % 3 AS INT)
-              |    WHEN 0 THEN 'https://Docs.Example.com/d/' || g || '?id=' || g
-              |    WHEN 1 THEN 'HTTPS://WWW.DOCS.EXAMPLE.COM:443/d/' || g || '?id=' || g || '#frag'
-              |    ELSE 'https://docs.example.com/d/' || g || '/?id=' || g || '&utm_source=x'
-              |  END AS url
-              |  FROM (SELECT doc_id, CAST(CASE WHEN doc_id % 10 = 7
-              |      THEN doc_id - 1 ELSE doc_id END AS VARCHAR) AS g FROM corpus)),
+              |${urlsCte(" FROM corpus")},
               |$urlNormCtes,
               |url_kept AS (SELECT min(rec_id) AS doc_id FROM norm GROUP BY url_norm),
               |${qualKeepCtes("qstats", "qual_kept", "d.doc_id", "documents d JOIN url_kept USING (doc_id)")},
@@ -3907,13 +3920,21 @@ object LlmQueries {
               |FROM stats s JOIN pl p USING (term)
               |WHERE s.df >= 10 ORDER BY s.term""".stripMargin), bench = true),
 
-    "llm_bpe_learn_merges" -> Q((s, dir) =>
-      // BPE vocabulary induction, the LEARNING loop (TextOps.bpeMerges):
-      // 3 rounds of count-pairs → argmax → corpus-wide merge. The oracle
-      // unrolls the same 3 rounds, including the greedy string-replace
-      // merge application.
-      TextOps.bpeMerges(T(s, dir, "documents").select("text"), rounds = 3)
-        .orderBy("round"),
+    "llm_bpe_learn_merges" -> Q((s, dir) => {
+      // BPE vocabulary induction, the LEARNING loop (Bpe.trainMerges):
+      // 3 rounds of count-pairs → argmax → vocab-wide merge. The oracle
+      // unrolls the same 3 rounds as a double-space string replace; its
+      // tie order ("l r") equals Bpe's (l, r) while no symbol holds a
+      // character below U+0020.
+      import s.implicits._
+      val (merges, _) =
+        Bpe.trainMerges(Bpe.wordCensus(T(s, dir, "documents")), k = 3)
+      require(merges.size == 3,
+        s"corpus exhausted after ${merges.size} merges — gate expects 3")
+      merges.map(m => (m.rank, s"${m.lhs} ${m.rhs}", m.pairCount))
+        .toDF("round", "merge_rule", "cnt")
+        .orderBy("round")
+    },
       Some({
         def roundCtes(t: Int) =
           s"""pc$t AS (SELECT p AS pair, CAST(SUM(freq) AS BIGINT) AS cnt FROM (
@@ -3937,61 +3958,6 @@ object LlmQueries {
            |UNION ALL SELECT 2, (SELECT pair FROM top2), (SELECT cnt FROM top2)
            |UNION ALL SELECT 3, (SELECT pair FROM top3), (SELECT cnt FROM top3)
            |ORDER BY round""".stripMargin
-      })),
-
-    "llm_bpe_encode" -> Q((s, dir) => {
-      // BPE ENCODING (TextOps.bpeEncode): learn 3 merge rules on the
-      // corpus (bpeMerges — rules are driver-side model state like GD
-      // weights), then encode every token through the ordered replace
-      // chain in ONE zero-shuffle projection. Gate pins per-doc subword
-      // counts, fertility, compression, and a 12-subword preview; the
-      // oracle replays the learning loop AND the encode.
-      val docs = T(s, dir, "documents").select("doc_id", "text")
-      val rules = TextOps.bpeMerges(docs.select("text"), rounds = 3)
-        .orderBy("round").collect().map(_.getString(1)).toSeq
-      TextOps.bpeEncode(docs, "doc_id", "text", rules).orderBy("doc_id")
-    },
-      Some({
-        def roundCtes(t: Int) =
-          s"""pc$t AS (SELECT p AS pair, CAST(SUM(freq) AS BIGINT) AS cnt FROM (
-             |    SELECT unnest(list_transform(range(1, len(a) - 1 + 1),
-             |        i -> a[i] || ' ' || a[i + 1])) AS p, freq
-             |    FROM (SELECT string_split(symstr, '  ') AS a, freq FROM w${t - 1})
-             |    WHERE len(a) >= 2)
-             |  GROUP BY p),
-             |top$t AS (SELECT pair, cnt FROM pc$t ORDER BY cnt DESC, pair LIMIT 1),
-             |w$t AS (SELECT trim(replace(' ' || symstr || ' ',
-             |    ' ' || replace((SELECT pair FROM top$t), ' ', '  ') || ' ',
-             |    ' ' || replace((SELECT pair FROM top$t), ' ', '') || ' ')) AS symstr, freq
-             |  FROM w${t - 1})""".stripMargin
-        s"""WITH $toksCte,
-           |wrd AS (SELECT unnest(t) AS w FROM toks),
-           |wf AS (SELECT w, count(*) AS freq FROM wrd WHERE length(w) >= 2 GROUP BY w),
-           |w0 AS (SELECT array_to_string(list_transform(range(1, length(w) + 1),
-           |    i -> substr(w, i, 1)), '  ') AS symstr, freq FROM wf),
-           |${Seq(1, 2, 3).map(roundCtes).mkString(",\n")},
-           |rules AS (SELECT (SELECT pair FROM top1) AS r1,
-           |    (SELECT pair FROM top2) AS r2, (SELECT pair FROM top3) AS r3),
-           |enc AS (SELECT doc_id, t,
-           |    list_transform(t, w ->
-           |      string_split(trim(replace(replace(replace(
-           |        ' ' || array_to_string(list_transform(range(1, length(w) + 1),
-           |            i -> substr(w, i, 1)), '  ') || ' ',
-           |        ' ' || replace(r1, ' ', '  ') || ' ', ' ' || replace(r1, ' ', '') || ' '),
-           |        ' ' || replace(r2, ' ', '  ') || ' ', ' ' || replace(r2, ' ', '') || ' '),
-           |        ' ' || replace(r3, ' ', '  ') || ' ', ' ' || replace(r3, ' ', '') || ' ')),
-           |      '  ')) AS sw
-           |  FROM toks CROSS JOIN rules)
-           |SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
-           |  CAST(list_sum(list_transform(t, w -> length(w))) AS BIGINT) AS n_chars,
-           |  CAST(list_sum(list_transform(sw, s -> len(s))) AS BIGINT) AS n_subwords,
-           |  CASE WHEN len(t) > 0 THEN CAST(list_sum(list_transform(sw, s -> len(s))) AS DOUBLE)
-           |    / CAST(len(t) AS DOUBLE) END AS fertility,
-           |  CASE WHEN list_sum(list_transform(sw, s -> len(s))) > 0
-           |    THEN CAST(list_sum(list_transform(t, w -> length(w))) AS DOUBLE)
-           |    / CAST(list_sum(list_transform(sw, s -> len(s))) AS DOUBLE) END AS chars_per_subword,
-           |  array_to_string(flatten(sw)[1:12], ' ') AS subword_preview
-           |FROM enc ORDER BY doc_id""".stripMargin
       })),
 
     "llm_zipf_slope" -> Q((s, dir) =>
@@ -4308,12 +4274,7 @@ object LlmQueries {
            |      NULLIF(CAST(len(string_split($normSql, ' ')) AS DOUBLE), 0)
            |      AS stopword_ratio
            |  FROM documents),
-           |q AS (SELECT doc_id, len(list_filter([
-           |      CASE WHEN n_tokens < 20 THEN 'too_short' END,
-           |      CASE WHEN n_tokens > 100000 THEN 'too_long' END,
-           |      CASE WHEN punct_ratio > 0.06 THEN 'punct_heavy' END,
-           |      CASE WHEN stopword_ratio < 0.05 THEN 'low_stopword' END],
-           |      x -> x IS NOT NULL)) = 0 AS keep
+           |q AS (SELECT doc_id, len($failReasonsSql) = 0 AS keep
            |  FROM qst),
            |base AS (SELECT d.doc_id, d.source, d.lang, md5(d.text) AS th,
            |    coalesce(e.n_words, 0) AS n_words,

@@ -452,12 +452,7 @@ object StreamingQueries {
                |      NULLIF(CAST(len(string_split(trim(regexp_replace(lower(text),
                |        '\\s+', ' ', 'g')), ' ')) AS DOUBLE), 0) AS stopword_ratio
                |  FROM documents),
-               |r AS (SELECT doc_id, list_filter([
-               |      CASE WHEN n_tokens < 20 THEN 'too_short' END,
-               |      CASE WHEN n_tokens > 100000 THEN 'too_long' END,
-               |      CASE WHEN punct_ratio > 0.06 THEN 'punct_heavy' END,
-               |      CASE WHEN stopword_ratio < 0.05 THEN 'low_stopword' END],
-               |      x -> x IS NOT NULL) AS fail_reasons
+               |r AS (SELECT doc_id, ${LlmQueries.failReasonsSql} AS fail_reasons
                |  FROM st)
                |SELECT len(fail_reasons) = 0 AS keep,
                |  COALESCE(fail_reasons[1], 'none') AS first_reason,
@@ -1166,14 +1161,7 @@ object StreamingQueries {
               |inc AS (SELECT doc_id,
               |    CAST(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 2 END AS INT) AS increment
               |  FROM documents WHERE doc_id >= 10),
-              |urls AS (SELECT doc_id AS rec_id, CASE CAST(doc_id % 3 AS INT)
-              |    WHEN 0 THEN 'https://Docs.Example.com/d/' || g || '?id=' || g
-              |    WHEN 1 THEN 'HTTPS://WWW.DOCS.EXAMPLE.COM:443/d/' || g || '?id=' || g || '#frag'
-              |    ELSE 'https://docs.example.com/d/' || g || '/?id=' || g || '&utm_source=x'
-              |  END AS url
-              |  FROM (SELECT doc_id, CAST(CASE WHEN doc_id % 10 = 7
-              |      THEN doc_id - 1 ELSE doc_id END AS VARCHAR) AS g
-              |    FROM documents WHERE doc_id >= 10)),
+              |${LlmQueries.urlsCte("\n    FROM documents WHERE doc_id >= 10")},
               |${LlmQueries.urlNormCtes},
               |eval5 AS (SELECT DISTINCT shingle FROM sh5 WHERE doc_id < 10),
               |contam AS (SELECT DISTINCT t.doc_id FROM sh5 t

@@ -4,8 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.llm.{Bpe, TextOps}
 
-/** BPE trainer ([[graft.llm.Bpe]]): leftmost-non-overlap merge
-  * semantics, deterministic tie-breaks, early exhaustion, the
+/** The engine's one BPE tokenizer ([[graft.llm.Bpe]]):
+  * leftmost-non-overlap merge semantics (every non-overlapping site of
+  * a merge fires in one pass), deterministic tie-breaks, early
+  * exhaustion, word-frequency pair weighting from a text corpus, the
   * census-weighting equivalence with TextOps.charPairCounts (the
   * "step one" gate), and encode counts.
   */
@@ -21,6 +23,7 @@ class BpeSpec extends SparkTestBase {
     assert(syms("aaa", "a", "a") == Seq("aa", "a"))
     assert(syms("aaaa", "a", "a") == Seq("aa", "aa"))
     assert(syms("abab", "a", "b") == Seq("ab", "ab"))
+    assert(syms("ababab", "a", "b") == Seq("ab", "ab", "ab"))
     assert(syms("abc", "b", "c") == Seq("a", "bc"))
     assert(syms("abc", "x", "y") == Seq("a", "b", "c"))
     assert(syms("a", "a", "a") == Seq("a"))
@@ -42,6 +45,13 @@ class BpeSpec extends SparkTestBase {
     assert(finalSyms("aaa") == Seq("aaa"))
     assert(finalSyms("ab") == Seq("ab"))
     assert(finalSyms("c") == Seq("c"))
+    // From text: census abab x4, ab x2, aaa x1, xy x1.
+    // iter1: (a,b)=4*2+2=10, (b,a)=4, (a,a)=2 -> (a,b)
+    // iter2: (ab,ab)=4, (a,a)=2, (x,y)=1 -> (ab,ab)
+    val docs = Seq("abab abab abab ab ab aaa", "abab xy").toDF("text")
+    val (fromText, _) = Bpe.trainMerges(Bpe.wordCensus(docs), k = 2)
+    assert(fromText.map(m => (m.lhs, m.rhs, m.pairCount)) ==
+      Seq(("a", "b", 10L), ("ab", "ab", 4L)))
   }
 
   test("rank-1 merge agrees with charPairCounts (the step-one gate)") {

@@ -1350,21 +1350,6 @@ class LlmOpsSpec extends SparkTestBase {
     assert(out === Set((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (1L, 3L), (2L, 3L)))
   }
 
-  test("bpeMerges: learns ab then abab on a constructed corpus, greedy on overlaps") {
-    val docs = Seq(
-      (0L, "abab abab abab ab ab aaa"),
-      (1L, "abab xy")
-    ).toDF("doc_id", "text")
-    val rules = TextOps.bpeMerges(docs, "text", rounds = 2)
-      .orderBy("round").collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-    // 'a b' pairs: abab×4 contributes 2 each = 8, ab×2 contributes 1 each = 2 → 10
-    // ('b a' gets 4, 'a a' gets 2 from aaa — greedy counting is positional)
-    assert(rules(0) == ((1, "a b", 10L)), rules.mkString(", "))
-    // after merging to 'ab', the dominant pair is 'ab ab' (4 occurrences)
-    assert(rules(1) == ((2, "ab ab", 4L)), rules.mkString(", "))
-  }
-
   test("gopherRules: each rule rejects its own pathology, clean text keeps") {
     val docs = Seq(
       (0L, "the cat and the dog have to be with all of that food today"), // clean
@@ -1672,40 +1657,6 @@ class LlmOpsSpec extends SparkTestBase {
     // Fluency ordering: the doc made of the corpus's dominant bigram
     // scores lower (more predictable) than the one with a rare tail.
     assert(out(1L).getAs[Double]("ce2_nats") < out(2L).getAs[Double]("ce2_nats"))
-  }
-
-  test("bpeEncode: ordered merges apply greedy-left with exact fertility math") {
-    // Rules "t h" then "th e": "the" → [the]; "thin" → [th,i,n];
-    // "tot" has no adjacent t-h so stays fully split.
-    val docs = Seq(
-      (1L, "the thin tot"),
-      (2L, "then the")
-    ).toDF("doc_id", "text")
-    val res = graft.llm.TextOps.bpeEncode(docs, "doc_id", "text",
-        Seq("t h", "th e"), previewLen = 5)
-      .collect().map(r => r.getLong(0) -> r).toMap
-    // doc 1: the→1, thin→3, tot→3 ⇒ 7 subwords over 3 tokens, 10 chars
-    assert(res(1L).getAs[Long]("n_tokens") === 3L)
-    assert(res(1L).getAs[Long]("n_chars") === 10L)
-    assert(res(1L).getAs[Long]("n_subwords") === 7L)
-    assert(res(1L).getAs[Double]("fertility") === 7.0 / 3.0)
-    assert(res(1L).getAs[Double]("chars_per_subword") === 10.0 / 7.0)
-    assert(res(1L).getAs[String]("subword_preview") === "the th i n t")
-    // doc 2: then→[the,n] (th merges, then th+e), the→[the]
-    assert(res(2L).getAs[Long]("n_subwords") === 3L)
-    assert(res(2L).getAs[String]("subword_preview") === "the n the")
-  }
-
-  test("bpeEncode: repeated adjacent merge sites all merge in one pass") {
-    // "ababab" with rule "a b": every a-b pair merges (double-separator
-    // semantics), giving [ab, ab, ab] — not greedy-skip [ab, a, b, ...].
-    val docs = Seq((1L, "ababab aaa")).toDF("doc_id", "text")
-    val r = graft.llm.TextOps.bpeEncode(docs, "doc_id", "text",
-        Seq("a b", "a a"), previewLen = 8)
-      .collect().head
-    // ababab → 3 subwords; aaa → [aa, a] greedy-left ⇒ 2 subwords
-    assert(r.getAs[Long]("n_subwords") === 5L)
-    assert(r.getAs[String]("subword_preview") === "ab ab ab aa a")
   }
 
   test("ngramSpanDedup: cross-doc repeated run merges to one maximal span") {

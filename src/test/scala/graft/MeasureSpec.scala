@@ -67,6 +67,15 @@ class MeasureSpec extends SparkTestBase {
     assert(Bench.only(Some(headline)) === Some(Set(headline)))
   }
 
+  test("registry gate names are unique, and every gate has an oracle") {
+    // queries and oracleSql are Maps: a reused name would drop a gate
+    // from both and leave the registry one entry longer than either.
+    val entries = SparkEntry.registry.size
+    assert(SparkEntry.queries.size === entries)
+    assert(SparkEntry.oracleSql.size === entries)
+    assert(entries === 338)
+  }
+
   test("counted: a drain timeout reports incomplete and still removes the listener") {
     val sc = spark.sparkContext
     val gate = new java.util.concurrent.CountDownLatch(1)
