@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: opaque `binary` payloads with typed
@@ -175,25 +175,152 @@ object Multimodal {
     * image; the encoder stores row 1 before row 0 with 2 pad bytes
     * each, which the decoder must undo to reach that digest. */
   def encodeBmp2x2(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    def le(v: Int, bytes: Int): String =
-      (0 until bytes).map(i => "%02X".format((v >> (8 * i)) & 0xff)).mkString
-    // 14-byte file header + 40-byte info header, all dims constant.
-    val headerHex = "424D" + le(70, 4) + le(0, 4) + le(54, 4) + // BM, size, res, offset
-      le(40, 4) + le(2, 4) + le(2, 4) + le(1, 2) + le(24, 2) +  // hdr, w, h, planes, bpp
-      le(0, 4) + le(16, 4) + le(0, 4) + le(0, 4) + le(0, 4) + le(0, 4)
     val id = col(idCol).cast("long")
     def rowHex(r: Int) = concat_ws("", (0 until 6).map { c =>
       lpad(hex((id * 31 + (r * 6 + c)) % 256), 2, "0")
     }: _*)
     // Bottom-up: stored row order is logical row 1, then row 0.
-    df.withColumn("payload",
-      unhex(concat(lit(headerHex), rowHex(1), lit("0000"), rowHex(0), lit("0000"))))
+    df.withColumn("payload", concat(lit(bmpHeader(2, 2)),
+      unhex(concat(rowHex(1), lit("0000"), rowHex(0), lit("0000")))))
   }
 
-  /** Hex string → bytes, for assembling constant payload headers from
-    * the same hex builders the oracle docs quote. */
-  private def hexToBytes(hx: String): Array[Byte] =
-    hx.grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
+  // ------------------------------------------------------------------
+  // Byte-level primitives of the BMP, WAV and AVI codecs: every header
+  // field is little-endian, every container is a RIFF chunk list or a
+  // BMP file header, and every pixel plane is a 24-bit DIB (BGR,
+  // bottom-up rows padded to a 4-byte stride).
+  // ------------------------------------------------------------------
+
+  /** The low `bytes` bytes of `v`, least significant first. */
+  private def le(v: Int, bytes: Int): Array[Byte] =
+    Array.tabulate(bytes)(i => (v >> (8 * i)).toByte)
+
+  private def ascii(s: String): Array[Byte] =
+    s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
+  private def le32(p: Array[Byte], off: Int): Int =
+    (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8) |
+      ((p(off + 2) & 0xff) << 16) | ((p(off + 3) & 0xff) << 24)
+
+  private def le16(p: Array[Byte], off: Int): Int =
+    (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
+
+  /** The four ASCII bytes at `off`: a RIFF chunk id or list type, or a
+    * PNG chunk type. */
+  private def fourcc(p: Array[Byte], off: Int): String = new String(p, off, 4, "US-ASCII")
+
+  /** One RIFF chunk: id, LE32 body size, body. */
+  private def riffChunk(id: String, body: Array[Byte]): Array[Byte] =
+    ascii(id) ++ le(body.length, 4) ++ body
+
+  /** Declared body size of the RIFF chunk at `off`, validated BEFORE the
+    * walker dispatches on it: a size past the buffer would otherwise
+    * throw a raw AIOOBE from the body reads, and a negative size (high
+    * bit set) would make `off += 8 + sz` non-advancing — an infinite
+    * loop in an executor task. */
+  private def riffChunkSize(p: Array[Byte], off: Int): Int = {
+    val sz = le32(p, off + 4)
+    require(sz >= 0 && off + 8 + sz.toLong <= p.length,
+      s"corrupt RIFF chunk '${fourcc(p, off)}' at byte $off: declared size " +
+        s"$sz exceeds payload (${p.length} bytes)")
+    sz
+  }
+
+  /** Row stride of a 24-bit DIB plane, 3 bytes per pixel padded to a
+    * multiple of 4. Long: a fuzzed width near 2^30 overflows the Int
+    * product to a NEGATIVE stride, which would slip the decoders' bounds
+    * `require`s and surface as AIOOBE/NegativeArraySize from the copy
+    * loop instead of a loud reject (CodecFuzzSpec). */
+  private def dibStride(w: Int): Long = ((w.toLong * 3 + 3) / 4) * 4
+
+  /** BITMAPINFOHEADER of a bottom-up 24-bit uncompressed w×h plane. */
+  private def dibInfoHeader(w: Int, h: Int): Array[Byte] =
+    le(40, 4) ++ le(w, 4) ++ le(h, 4) ++ le(1, 2) ++ le(24, 2) ++ // size, w, h, planes, bpp
+      le(0, 4) ++ le(dibStride(w).toInt * h, 4) ++ // BI_RGB, image size
+      new Array[Byte](16) // resolution, palette counts
+
+  /** BITMAPFILEHEADER + BITMAPINFOHEADER: pixel data at byte 54. */
+  private def bmpHeader(w: Int, h: Int): Array[Byte] =
+    ascii("BM") ++ le(54 + dibStride(w).toInt * h, 4) ++ le(0, 4) ++ le(54, 4) ++
+      dibInfoHeader(w, h)
+
+  /** Write a seeded gray w×h image into `out` at `at` as a bottom-up
+    * 24-bit DIB plane: gray of logical (top-down) pixel j is byte j%16 of
+    * `seedBlock(md, seed, firstBlock + j div 16)`, +128 mod 256 at
+    * j == `perturbed`; r=g=b, and the stride pad bytes stay zero. */
+  private def writeSeededDib(md: java.security.MessageDigest, seed: String,
+      firstBlock: Int, perturbed: Int, w: Int, h: Int,
+      out: Array[Byte], at: Int): Unit = {
+    val dig = Array.tabulate((w * h + 15) / 16)(b => seedBlock(md, seed, firstBlock + b))
+    val stride = dibStride(w).toInt
+    var sr = 0
+    while (sr < h) {
+      val r = h - 1 - sr // stored row sr holds logical row h-1-sr
+      var c = 0
+      while (c < w) {
+        val j = r * w + c
+        var v = dig(j / 16)(j % 16) & 0xff
+        if (j == perturbed) v = (v + 128) % 256
+        val o = at + sr * stride + c * 3
+        out(o) = v.toByte; out(o + 1) = v.toByte; out(o + 2) = v.toByte
+        c += 1
+      }
+      sr += 1
+    }
+  }
+
+  /** The w×h 24-bit DIB plane at `p(off)` as packed rows in LOGICAL
+    * top-down order, stride pad stripped. `bottomUp` is the DIB default
+    * (positive height). The caller has checked that the plane fits. */
+  private def dibRowsTopDown(p: Array[Byte], off: Int, w: Int, h: Int,
+      bottomUp: Boolean): Array[Byte] = {
+    val stride = dibStride(w).toInt
+    val pixels = new Array[Byte](w * 3 * h)
+    var row = 0
+    while (row < h) {
+      val srcRow = if (bottomUp) h - 1 - row else row
+      System.arraycopy(p, off + srcRow * stride, pixels, row * w * 3, w * 3)
+      row += 1
+    }
+    pixels
+  }
+
+  /** Integer luma (299·R + 587·G + 114·B) div 1000 of each packed 3-byte
+    * pixel: BGR order for DIB planes (`bgr`), RGB for PNG. */
+  private def lumaPlane(px: Array[Byte], bgr: Boolean): Array[Int] = {
+    val (ri, bi) = if (bgr) (2, 0) else (0, 2)
+    val gray = new Array[Int](px.length / 3)
+    var i = 0
+    while (i < gray.length) {
+      val r = px(3 * i + ri) & 0xff
+      val g = px(3 * i + 1) & 0xff
+      val b = px(3 * i + bi) & 0xff
+      gray(i) = (299 * r + 587 * g + 114 * b) / 1000
+      i += 1
+    }
+    gray
+  }
+
+  /** The one per-partition payload decode driver, the imperative escape
+    * hatch (mapPartitions) the SURVEY reserves for genuine per-partition
+    * logic — a codec is exactly that. `perPartition` runs ONCE per
+    * partition (heavy codec init is amortized over the partition's rows,
+    * asserted in LlmOpsSpec via an accumulator) and returns the row
+    * function, which maps one (doc_id, payload) to its output rows. Rows
+    * stream through the iterator without materializing the partition.
+    * Narrow op: no shuffle, scales with input splits. */
+  private def decodePayloads[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      spark: SparkSession, df: DataFrame, cols: String*)(
+      perPartition: () => (Long, Array[Byte]) => IterableOnce[T]): DataFrame = {
+    import spark.implicits._
+    df.select(col("doc_id").cast("long"), col("payload"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions { rows =>
+        val decode = perPartition()
+        rows.flatMap { case (id, payload) => decode(id, payload) }
+      }
+      .toDF(cols: _*)
+  }
 
   /** Append a `payload` BinaryType column computed by a per-partition
     * JVM builder (one MessageDigest per task, like the decode codecs).
@@ -232,10 +359,11 @@ object Multimodal {
   /** One 16-byte md5 block of the seeded corpora: md5(seed || '_' || b)
     * digest bytes — the DIGEST bytes are exactly the hex pairs the old
     * expression encoders SUBSTRINGed out of md5()'s hex string, so
-    * copying them verbatim reproduces the payload byte-for-byte. */
-  private def seedBlock(md: java.security.MessageDigest, seed: Long, b: Int): Array[Byte] = {
+    * copying them verbatim reproduces the payload byte-for-byte. `seed`
+    * is doc_id div 4, prefixed 'p' for the PNG corpus's own namespace. */
+  private def seedBlock(md: java.security.MessageDigest, seed: String, b: Int): Array[Byte] = {
     md.reset()
-    md.digest((seed.toString + "_" + b).getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+    md.digest(ascii(seed + "_" + b))
   }
 
   /** Build a REAL 8×8 24-bit BMP per row whose grayscale content is a
@@ -253,33 +381,11 @@ object Multimodal {
     * Partition-wise JVM builder (4 md5 digests per row), zero shuffle —
     * see [[appendPayload]] for why this is not an expression tree. */
   def encodeBmpGray8x8(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    def le(v: Int, bytes: Int): String =
-      (0 until bytes).map(i => "%02X".format((v >> (8 * i)) & 0xff)).mkString
-    val headerHex = "424D" + le(54 + 192, 4) + le(0, 4) + le(54, 4) +
-      le(40, 4) + le(8, 4) + le(8, 4) + le(1, 2) + le(24, 2) +
-      le(0, 4) + le(192, 4) + le(0, 4) + le(0, 4) + le(0, 4) + le(0, 4)
-    val header = hexToBytes(headerHex)
+    val header = bmpHeader(8, 8)
     appendPayload(df, idCol) { (md, id) =>
       val out = new Array[Byte](header.length + 192)
       System.arraycopy(header, 0, out, 0, header.length)
-      val dig = Array.tabulate(4)(b => seedBlock(md, id / 4, b))
-      val perturbed = (id % 64).toInt
-      // Storage order: bottom-up rows (stored row sr = logical row 7-sr),
-      // three identical channel bytes per pixel.
-      var sr = 0
-      while (sr < 8) {
-        val r = 7 - sr
-        var c = 0
-        while (c < 8) {
-          val j = r * 8 + c
-          var v = dig(j / 16)(j % 16) & 0xff
-          if (j == perturbed) v = (v + 128) % 256
-          val o = header.length + (sr * 8 + c) * 3
-          out(o) = v.toByte; out(o + 1) = v.toByte; out(o + 2) = v.toByte
-          c += 1
-        }
-        sr += 1
-      }
+      writeSeededDib(md, (id / 4).toString, 0, (id % 64).toInt, 8, 8, out, header.length)
       out
     }
   }
@@ -289,41 +395,25 @@ object Multimodal {
     * stripped. [[BmpCodec]] digests these bytes; [[decodeBmpGray]]
     * projects luma from them. */
   private[llm] def bmpPixelsTopDown(payload: Array[Byte]): (Int, Int, Array[Byte]) = {
-    def le32(b: Array[Byte], off: Int): Int =
-      (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-        ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-    def le16(b: Array[Byte], off: Int): Int =
-      (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
     require(payload.length >= 54 && payload(0) == 'B' && payload(1) == 'M',
       "not a BMP payload")
     val dataOffset = le32(payload, 10)
     val w = le32(payload, 18)
     val rawH = le32(payload, 22)
-    val topDown = rawH < 0
     val h = math.abs(rawH)
     val bpp = le16(payload, 28)
     val compression = le32(payload, 30)
     require(bpp == 24 && compression == 0,
       s"only 24-bit uncompressed BMP supported (bpp=$bpp, compression=$compression)")
     require(w > 0 && h > 0, s"bad BMP dimensions ${w}x$rawH")
-    // All size math in Long: a fuzzed w near 2^30 overflows Int stride to
-    // a NEGATIVE value, which would slip the bounds require and surface
-    // as AIOOBE/NegativeArraySize from the copy loop instead of a loud
-    // reject (CodecFuzzSpec). Once the Long bound holds, every Int cast
-    // below is exact (stride*h <= payload.length <= Int.MaxValue).
+    // Once the Long bound holds, every Int size below is exact
+    // (stride*h <= payload.length <= Int.MaxValue).
     require(dataOffset >= 54, s"bad BMP data offset $dataOffset")
-    val strideL = ((w.toLong * 3 + 3) / 4) * 4
-    require(payload.length >= dataOffset + strideL * h,
-      s"truncated BMP: need ${strideL * h} pixel bytes at offset $dataOffset")
-    val stride = strideL.toInt
-    val pixels = new Array[Byte](w * 3 * h)
-    var row = 0
-    while (row < h) {
-      val srcRow = if (topDown) row else h - 1 - row
-      System.arraycopy(payload, dataOffset + srcRow * stride, pixels, row * w * 3, w * 3)
-      row += 1
-    }
-    (w, h, pixels)
+    val stride = dibStride(w)
+    require(payload.length >= dataOffset + stride * h,
+      s"truncated BMP: need ${stride * h} pixel bytes at offset $dataOffset")
+    // A negative height stores the rows top-down.
+    (w, h, dibRowsTopDown(payload, dataOffset, w, h, bottomUp = rawH > 0))
   }
 
   /** Partition-wise BMP decode to GRAYSCALE: parses the same 24-bit
@@ -333,27 +423,11 @@ object Multimodal {
     * with input splits; the real pixel bytes are the only input, so a
     * decoder bug (row flip, stride, channel order) changes the grays
     * and every downstream perceptual hash. */
-  def decodeBmpGray(spark: SparkSession, df: DataFrame): DataFrame = {
-    import spark.implicits._
-    df.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          val (w, h, px) = bmpPixelsTopDown(payload)
-          val gray = new Array[Int](w * h)
-          var i = 0
-          while (i < gray.length) {
-            val b = px(3 * i) & 0xff
-            val g = px(3 * i + 1) & 0xff
-            val r = px(3 * i + 2) & 0xff
-            gray(i) = (299 * r + 587 * g + 114 * b) / 1000
-            i += 1
-          }
-          (id, w, h, gray)
-        }
-      }
-      .toDF("doc_id", "width", "height", "gray")
-  }
+  def decodeBmpGray(spark: SparkSession, df: DataFrame): DataFrame =
+    decodePayloads(spark, df, "doc_id", "width", "height", "gray") { () => (id, payload) =>
+      val (w, h, px) = bmpPixelsTopDown(payload)
+      Iterator.single((id, w, h, lumaPlane(px, bgr = true)))
+    }
 
   /** Build variable-size 24-bit BMPs (the general-image input for the
     * resample→dHash path): width 13 or 18 BY SEED (both widths force a
@@ -367,46 +441,19 @@ object Multimodal {
     * (13/18 md5 digests per row by width), zero shuffle — see
     * [[appendPayload]] for why this is not an expression tree. */
   def encodeBmpGrayVar(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    def le(v: Int, bytes: Int): String =
-      (0 until bytes).map(i => "%02X".format((v >> (8 * i)) & 0xff)).mkString
-    def headerHex(w: Int, h: Int): String = {
-      val stride = ((w * 3 + 3) / 4) * 4
-      "424D" + le(54 + stride * h, 4) + le(0, 4) + le(54, 4) +
-        le(40, 4) + le(w, 4) + le(h, 4) + le(1, 2) + le(24, 2) +
-        le(0, 4) + le(stride * h, 4) + le(0, 4) + le(0, 4) + le(0, 4) + le(0, 4)
-    }
-    val headerNarrow = hexToBytes(headerHex(13, 16))
-    val headerWide = hexToBytes(headerHex(18, 16))
+    val h = 16
+    val headerNarrow = bmpHeader(13, h)
+    val headerWide = bmpHeader(18, h)
     appendPayload(df, idCol) { (md, id) =>
-      // Width by seed parity (13 narrow / 18 wide), height 16; the
-      // narrow image only needs blocks 0-12 — digest count stays
-      // width-dependent, the r12 md5-count lesson carried over.
+      // Width by seed parity (13 narrow / 18 wide); the narrow image
+      // only needs blocks 0-12 — digest count stays width-dependent,
+      // the r12 md5-count lesson carried over.
       val narrow = (id / 4) % 2 == 0
       val w = if (narrow) 13 else 18
-      val h = 16
       val header = if (narrow) headerNarrow else headerWide
-      val stride = ((w * 3 + 3) / 4) * 4
-      val npix = w * h
-      val nBlocks = (npix + 15) / 16
-      val dig = Array.tabulate(nBlocks)(b => seedBlock(md, id / 4, b))
-      val perturbed = (id % npix).toInt
-      val out = new Array[Byte](header.length + stride * h)
+      val out = new Array[Byte](header.length + dibStride(w).toInt * h)
       System.arraycopy(header, 0, out, 0, header.length)
-      var sr = 0
-      while (sr < h) {
-        val r = h - 1 - sr // bottom-up storage
-        var c = 0
-        while (c < w) {
-          val j = r * w + c
-          var v = dig(j / 16)(j % 16) & 0xff
-          if (j == perturbed) v = (v + 128) % 256
-          val o = header.length + sr * stride + c * 3
-          out(o) = v.toByte; out(o + 1) = v.toByte; out(o + 2) = v.toByte
-          c += 1
-        }
-        // stride pad bytes stay zero (new Array[Byte] zero-fills)
-        sr += 1
-      }
+      writeSeededDib(md, (id / 4).toString, 0, (id % (w * h)).toInt, w, h, out, header.length)
       out
     }
   }
@@ -445,36 +492,26 @@ object Multimodal {
     * codec. Semantics identical to decodeBmpGray ∘ resampleGray
     * (pinned in LlmOpsSpec). */
   def decodeBmpGrayResampled(spark: SparkSession, df: DataFrame,
-      gw: Int = 8, gh: Int = 8): DataFrame = {
-    import spark.implicits._
-    df.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          val (w, h, px) = bmpPixelsTopDown(payload)
-          val sums = new Array[Long](gw * gh)
-          val ns = new Array[Long](gw * gh)
-          var y = 0
-          while (y < h) {
-            val gy = y * gh / h
-            var x = 0
-            while (x < w) {
-              val i = y * w + x
-              val b = px(3 * i) & 0xff
-              val g = px(3 * i + 1) & 0xff
-              val r = px(3 * i + 2) & 0xff
-              val c = gy * gw + x * gw / w
-              sums(c) += (299 * r + 587 * g + 114 * b) / 1000
-              ns(c) += 1
-              x += 1
-            }
-            y += 1
-          }
-          (id, w, h, Array.tabulate(gw * gh)(c => (sums(c) / ns(c)).toInt))
+      gw: Int = 8, gh: Int = 8): DataFrame =
+    decodePayloads(spark, df, "doc_id", "width", "height", "gray") { () => (id, payload) =>
+      val (w, h, px) = bmpPixelsTopDown(payload)
+      val gray = lumaPlane(px, bgr = true)
+      val sums = new Array[Long](gw * gh)
+      val ns = new Array[Long](gw * gh)
+      var y = 0
+      while (y < h) {
+        val gy = y * gh / h
+        var x = 0
+        while (x < w) {
+          val c = gy * gw + x * gw / w
+          sums(c) += gray(y * w + x)
+          ns(c) += 1
+          x += 1
         }
+        y += 1
       }
-      .toDF("doc_id", "width", "height", "gray")
-  }
+      Iterator.single((id, w, h, Array.tabulate(gw * gh)(c => (sums(c) / ns(c)).toInt)))
+    }
 
   /** 56-bit difference hash (dHash) over an 8×8 `gray` grid: bit
     * (r·7 + c) is set when gray(r,c) < gray(r,c+1) — for left pixel j
@@ -493,12 +530,20 @@ object Multimodal {
         |    shiftleft(CAST(1 AS BIGINT), j - j DIV 8), CAST(0 AS BIGINT)))""".stripMargin)
       .as("phash"): _*)
 
-  def dHash56(df: DataFrame): DataFrame =
-    df.select(col("doc_id"), expr(
-      """aggregate(filter(sequence(0, 62), j -> j % 8 < 7), CAST(0 AS BIGINT),
-        |  (acc, j) -> acc + IF(element_at(gray, j + 1) < element_at(gray, j + 2),
-        |    shiftleft(CAST(1 AS BIGINT), j - j DIV 8), CAST(0 AS BIGINT)))""".stripMargin)
-      .as("phash"))
+  def dHash56(df: DataFrame): DataFrame = dHash56(df, Seq("doc_id"))
+
+  /** LSH band key of the phash dedup chains: the 14-bit slice `band`
+    * (0-3) of the 56-bit `phash`. */
+  private[graft] def phashBand(band: String): Column =
+    expr(s"shiftright(phash, 14 * $band) & 16383")
+
+  /** Content-addressed key of 8-sample window `window` of the decoded
+    * `samples`: md5 over the window's samples coarsened to 1024-wide
+    * amplitude cells, (s + 32768) div 1024 — kept non-negative so Spark
+    * DIV and DuckDB // agree. */
+  private[graft] def audioWindowKey(window: String): Column =
+    expr(s"""md5(concat_ws(',', transform(slice(samples, 8 * $window + 1, 8),
+            |  x -> CAST((x + 32768) DIV 1024 AS STRING))))""".stripMargin)
 
   /** Scene segmentation over per-frame perceptual hashes — the video
     * curation stage between decode and dedup: a frame OPENS a new scene
@@ -590,14 +635,11 @@ object Multimodal {
     * (+512 mod 2¹⁶ at position doc_id % 128). An external oracle
     * recomputes every sample from the formula without RIFF parsing. */
   def encodeWavPcm(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    def le(v: Int, bytes: Int): String =
-      (0 until bytes).map(i => "%02X".format((v >> (8 * i)) & 0xff)).mkString
-    def ascii(s: String): String = s.getBytes("US-ASCII").map("%02X".format(_)).mkString
     val dataBytes = 128 * 2
-    val headerHex = ascii("RIFF") + le(36 + dataBytes, 4) + ascii("WAVE") +
-      ascii("fmt ") + le(16, 4) + le(1, 2) + le(1, 2) + le(16000, 4) +
-      le(32000, 4) + le(2, 2) + le(16, 2) + ascii("data") + le(dataBytes, 4)
-    val header = hexToBytes(headerHex)
+    val header = ascii("RIFF") ++ le(36 + dataBytes, 4) ++ ascii("WAVE") ++
+      riffChunk("fmt ", le(1, 2) ++ le(1, 2) ++ le(16000, 4) ++ // PCM, mono, rate
+        le(32000, 4) ++ le(2, 2) ++ le(16, 2)) ++ // byte rate, align, bits
+      ascii("data") ++ le(dataBytes, 4)
     // Partition-wise JVM builder (see [[appendPayload]]): the
     // unperturbed data plane IS the 16 md5 digests back to back —
     // "the payload hex is the md5 hex verbatim" becomes an arraycopy.
@@ -606,7 +648,7 @@ object Multimodal {
       System.arraycopy(header, 0, out, 0, header.length)
       var b = 0
       while (b < 16) {
-        System.arraycopy(seedBlock(md, id / 4, b), 0, out, header.length + 16 * b, 16)
+        System.arraycopy(seedBlock(md, (id / 4).toString, b), 0, out, header.length + 16 * b, 16)
         b += 1
       }
       // Perturbation: v = b0 + 256·b1 (LE), +512 mod 2^16, re-emit LE.
@@ -618,51 +660,31 @@ object Multimodal {
     }
   }
 
-  /** Partition-wise RIFF/WAVE PCM decode — pure JVM, no codec library:
-    * walks the chunk list (ignoring non-fmt/data chunks like LIST),
-    * validates PCM/mono/16-bit, and extracts the signed little-endian
-    * samples. Narrow mapPartitions, no shuffle; the real payload bytes
-    * are the only input, so a header-offset or endianness bug changes
-    * every downstream feature. */
   /** Pure-JVM RIFF/WAVE chunk walk → (sampleRate, PCM samples). Hoisted
     * out of [[decodeWavPcm]]'s closure so the fuzz harness
     * (CodecFuzzSpec) can drive it directly with mutated payloads; every
     * corrupt shape must die in a `require`, never an AIOOBE or a
     * non-advancing loop. */
   private[llm] def wavPcmSamples(p: Array[Byte]): (Int, Array[Int]) = {
-    def le32(off: Int): Int = (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8) |
-      ((p(off + 2) & 0xff) << 16) | ((p(off + 3) & 0xff) << 24)
-    def le16(off: Int): Int = (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
-    def tag(off: Int): String = new String(p, off, 4, "US-ASCII")
-    require(p.length >= 44 && tag(0) == "RIFF" && tag(8) == "WAVE",
+    require(p.length >= 44 && fourcc(p, 0) == "RIFF" && fourcc(p, 8) == "WAVE",
       "not a RIFF/WAVE payload")
     var off = 12
     var sampleRate = -1
     var samples: Array[Int] = null
     while (off + 8 <= p.length && (sampleRate < 0 || samples == null)) {
-      val id4 = tag(off); val sz = le32(off + 4)
-      // Validate the declared chunk size BEFORE dispatching: a
-      // corrupt payload with sz past the buffer would otherwise
-      // throw a raw AIOOBE from the sample extraction, and a
-      // negative sz (high bit set) would make `off += 8 + sz`
-      // non-advancing — an infinite loop in an executor task.
-      // Fail loudly instead, like bmpPixelsTopDown's truncation
-      // check (r12 advice).
-      require(sz >= 0 && off + 8 + sz.toLong <= p.length,
-        s"corrupt RIFF chunk '$id4' at byte $off: declared size $sz " +
-          s"exceeds payload (${p.length} bytes)")
+      val id4 = fourcc(p, off); val sz = riffChunkSize(p, off)
       if (id4 == "fmt ") {
         // The fmt reads below reach off+23; a fuzzed short chunk at the
         // payload tail would AIOOBE without this (CodecFuzzSpec).
         require(sz >= 16, s"short fmt chunk ($sz bytes)")
-        require(le16(off + 8) == 1 && le16(off + 10) == 1 &&
-          le16(off + 22) == 16,
+        require(le16(p, off + 8) == 1 && le16(p, off + 10) == 1 &&
+          le16(p, off + 22) == 16,
           "only PCM mono 16-bit WAV supported")
-        sampleRate = le32(off + 12)
+        sampleRate = le32(p, off + 12)
       } else if (id4 == "data") {
         val n = sz / 2
         samples = Array.tabulate(n) { i =>
-          val v = le16(off + 8 + 2 * i)
+          val v = le16(p, off + 8 + 2 * i)
           if (v >= 32768) v - 65536 else v
         }
       }
@@ -672,18 +694,18 @@ object Multimodal {
     (sampleRate, samples)
   }
 
-  def decodeWavPcm(spark: SparkSession, df: DataFrame): DataFrame = {
-    import spark.implicits._
-    df.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, p) =>
-          val (sampleRate, samples) = wavPcmSamples(p)
-          (id, sampleRate, samples.length, samples)
-        }
-      }
-      .toDF("doc_id", "sample_rate", "n_samples", "samples")
-  }
+  /** Partition-wise RIFF/WAVE PCM decode — pure JVM, no codec library:
+    * walks the chunk list (ignoring non-fmt/data chunks like LIST),
+    * validates PCM/mono/16-bit, and extracts the signed little-endian
+    * samples. Narrow mapPartitions, no shuffle; the real payload bytes
+    * are the only input, so a header-offset or endianness bug changes
+    * every downstream feature. */
+  def decodeWavPcm(spark: SparkSession, df: DataFrame): DataFrame =
+    decodePayloads(spark, df, "doc_id", "sample_rate", "n_samples", "samples") {
+      () => (id, p) =>
+        val (sampleRate, samples) = wavPcmSamples(p)
+        Iterator.single((id, sampleRate, samples.length, samples))
+    }
 
   /** Audio features over decoded samples — pure integer projections,
     * exactly replayable by any engine: peak |amplitude|, mean-square
@@ -765,26 +787,17 @@ object Multimodal {
         sum(col("energy")).as("sum_energy"))
   }
 
-  /** Partition-wise decode: the imperative escape hatch (mapPartitions)
-    * the SURVEY reserves for genuine per-partition logic — a codec is
-    * exactly that. `mkCodec` runs once per partition (asserted in
-    * LlmOpsSpec via an accumulator); rows stream through the iterator
-    * without materializing the partition. Narrow op: no shuffle, scales
-    * with input splits. */
+  /** Partition-wise decode through a pluggable [[MediaCodec]]: `mkCodec`
+    * runs once per partition (see [[decodePayloads]]). */
   def decodeWithCodec(spark: SparkSession, df: DataFrame,
-      mkCodec: () => MediaCodec): DataFrame = {
-    import spark.implicits._
-    df.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        val codec = mkCodec()
-        rows.map { case (id, bytes) =>
-          val d = codec.decode(bytes)
-          (id, d.width, d.height, d.nFrames, d.digest)
-        }
+      mkCodec: () => MediaCodec): DataFrame =
+    decodePayloads(spark, df, "doc_id", "width", "height", "n_frames", "digest") { () =>
+      val codec = mkCodec()
+      (id, bytes) => {
+        val d = codec.decode(bytes)
+        Iterator.single((id, d.width, d.height, d.nFrames, d.digest))
       }
-      .toDF("doc_id", "width", "height", "n_frames", "digest")
-  }
+    }
 
   /** Resize planning: aspect-preserving fit of decoded (width, height)
     * into a (maxW, maxH) box, never upscaling — REAL arithmetic (this is
@@ -820,70 +833,108 @@ object Multimodal {
     * Partition-wise JVM builder (16 md5 digests per row), zero shuffle
     * — see [[appendPayload]] for why this is not an expression tree. */
   def encodeAvi(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    def le(v: Int, bytes: Int): String =
-      (0 until bytes).map(i => "%02X".format((v >> (8 * i)) & 0xff)).mkString
-    def ascii(s: String): String = s.getBytes("US-ASCII").map("%02X".format(_)).mkString
     val frameBytes = 8 * 8 * 3 // 24-byte rows, 4-aligned: no stride pad
     val nFrames = 4
-    // BITMAPINFOHEADER (strf body): 8×8, 24bpp, BI_RGB.
-    val strfHex = ascii("strf") + le(40, 4) +
-      le(40, 4) + le(8, 4) + le(8, 4) + le(1, 2) + le(24, 2) +
-      le(0, 4) + le(frameBytes, 4) + le(0, 4) + le(0, 4) + le(0, 4) + le(0, 4)
     // AVIStreamHeader (strh body): 'vids' handled by 'DIB ', 25 fps
     // (rate/scale), 4 frames, rcFrame = (0,0,8,8) as four int16s.
-    val strhHex = ascii("strh") + le(56, 4) +
-      ascii("vids") + ascii("DIB ") + le(0, 4) + le(0, 2) + le(0, 2) +
-      le(0, 4) + le(1, 4) + le(25, 4) + le(0, 4) + le(nFrames, 4) +
-      le(frameBytes, 4) + le(0, 4) + le(0, 4) +
-      le(0, 2) + le(0, 2) + le(8, 2) + le(8, 2)
-    val strlHex = ascii("LIST") + le(4 + 64 + 48, 4) + ascii("strl") +
-      strhHex + strfHex
+    val strh = riffChunk("strh",
+      ascii("vids") ++ ascii("DIB ") ++ le(0, 4) ++ le(0, 2) ++ le(0, 2) ++
+        le(0, 4) ++ le(1, 4) ++ le(25, 4) ++ le(0, 4) ++ le(nFrames, 4) ++
+        le(frameBytes, 4) ++ le(0, 4) ++ le(0, 4) ++
+        le(0, 2) ++ le(0, 2) ++ le(8, 2) ++ le(8, 2))
     // MainAVIHeader (avih body): 40000 µs/frame (25 fps), 1 stream,
     // dwTotalFrames = 4, 8×8 — the decoder cross-checks this count
     // against the movi chunk walk.
-    val avihHex = ascii("avih") + le(56, 4) +
-      le(40000, 4) + le(frameBytes * 25, 4) + le(0, 4) + le(0, 4) +
-      le(nFrames, 4) + le(0, 4) + le(1, 4) + le(frameBytes, 4) +
-      le(8, 4) + le(8, 4) + le(0, 4) + le(0, 4) + le(0, 4) + le(0, 4)
-    val hdrlHex = ascii("LIST") + le(4 + 64 + 8 + 116, 4) + ascii("hdrl") +
-      avihHex + strlHex
+    val avih = riffChunk("avih",
+      le(40000, 4) ++ le(frameBytes * 25, 4) ++ le(0, 4) ++ le(0, 4) ++
+        le(nFrames, 4) ++ le(0, 4) ++ le(1, 4) ++ le(frameBytes, 4) ++
+        le(8, 4) ++ le(8, 4) ++ new Array[Byte](16))
+    val hdrl = riffChunk("LIST", ascii("hdrl") ++ avih ++
+      riffChunk("LIST", ascii("strl") ++ strh ++ riffChunk("strf", dibInfoHeader(8, 8))))
+    // The movi LIST and the RIFF size cover the frames appended per row.
     val moviSize = 4 + nFrames * (8 + frameBytes)
-    val riffSize = 4 + (8 + 4 + 64 + 8 + 116) + (8 + moviSize)
-    val headerHex = ascii("RIFF") + le(riffSize, 4) + ascii("AVI ") + hdrlHex +
-      ascii("LIST") + le(moviSize, 4) + ascii("movi")
-    val header = hexToBytes(headerHex)
-    val frameChunkHdr = hexToBytes(ascii("00db") + le(frameBytes, 4))
+    val header = ascii("RIFF") ++ le(4 + hdrl.length + 8 + moviSize, 4) ++
+      ascii("AVI ") ++ hdrl ++ ascii("LIST") ++ le(moviSize, 4) ++ ascii("movi")
+    val frameChunkHdr = ascii("00db") ++ le(frameBytes, 4)
+    val chunkBytes = frameChunkHdr.length + frameBytes
     appendPayload(df, idCol) { (md, id) =>
-      val out = new Array[Byte](header.length + nFrames * (frameChunkHdr.length + frameBytes))
+      val out = new Array[Byte](header.length + nFrames * chunkBytes)
       System.arraycopy(header, 0, out, 0, header.length)
-      // 16 md5 digests per row (one per 16-pixel block: 4 frames × 4).
-      val dig = Array.tabulate(16)(b => seedBlock(md, id / 4, b))
-      val perturbed = (id % 256).toInt
       var f = 0
-      var o = header.length
       while (f < nFrames) {
+        val o = header.length + f * chunkBytes
         System.arraycopy(frameChunkHdr, 0, out, o, frameChunkHdr.length)
-        o += frameChunkHdr.length
-        // Each frame stored bottom-up (stored row sr = logical row
-        // 7-sr), three identical channel bytes per pixel.
-        var sr = 0
-        while (sr < 8) {
-          val r = 7 - sr
-          var c = 0
-          while (c < 8) {
-            val g = f * 64 + r * 8 + c
-            var v = dig(g / 16)(g % 16) & 0xff
-            if (g == perturbed) v = (v + 128) % 256
-            out(o) = v.toByte; out(o + 1) = v.toByte; out(o + 2) = v.toByte
-            o += 3
-            c += 1
-          }
-          sr += 1
-        }
+        // Frame f holds global pixels 64f..64f+63: md5 blocks 4f..4f+3.
+        writeSeededDib(md, (id / 4).toString, 4 * f, (id % 256).toInt - 64 * f,
+          8, 8, out, o + frameChunkHdr.length)
         f += 1
       }
       out
     }
+  }
+
+  /** Pure-JVM RIFF/AVI chunk walk → (width, height, grayscale frames).
+    * Hoisted out of [[decodeAviFrames]]'s closure so the fuzz harness
+    * (CodecFuzzSpec) can drive it directly with mutated payloads; every
+    * corrupt shape must die in a `require`, never an AIOOBE or a
+    * non-advancing loop. */
+  private[llm] def aviGrayFrames(p: Array[Byte]): (Int, Int, Seq[Array[Int]]) = {
+    require(p.length >= 12 && fourcc(p, 0) == "RIFF" && fourcc(p, 8) == "AVI ",
+      "not a RIFF/AVI payload")
+    var declaredFrames = -1
+    var w = -1; var h = -1
+    val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+    // walk(from, to): iterate sibling chunks, descending into the LIST
+    // types that matter (hdrl/strl/movi).
+    def walk(from: Int, to: Int): Unit = {
+      var off = from
+      while (off + 8 <= to) {
+        val id4 = fourcc(p, off); val sz = riffChunkSize(p, off)
+        if (id4 == "LIST" && sz >= 4) {
+          fourcc(p, off + 8) match {
+            case "hdrl" | "strl" | "movi" => walk(off + 12, off + 8 + sz)
+            case _ => // INFO etc: opaque
+          }
+        } else id4 match {
+          case "avih" =>
+            require(sz >= 40, s"short avih chunk ($sz bytes)")
+            declaredFrames = le32(p, off + 8 + 16)
+            require(le32(p, off + 8 + 24) == 1,
+              "only single-stream AVI supported")
+          case "strh" =>
+            require(sz >= 8, s"short strh chunk ($sz bytes)")
+            val fcc = fourcc(p, off + 8); val handler = fourcc(p, off + 12)
+            require(fcc == "vids" && (handler == "DIB " || handler == "    "),
+              s"only uncompressed 'vids'/'DIB ' streams supported " +
+                s"(got '$fcc'/'$handler')")
+          case "strf" =>
+            require(sz >= 40, s"short strf chunk ($sz bytes)")
+            w = le32(p, off + 8 + 4); h = le32(p, off + 8 + 8)
+            val bpp = le16(p, off + 8 + 14); val compression = le32(p, off + 8 + 16)
+            require(bpp == 24 && compression == 0,
+              s"only 24-bit uncompressed DIB frames supported " +
+                s"(bpp=$bpp, compression=$compression)")
+            require(w > 0 && h > 0, s"bad frame dimensions ${w}x$h")
+          case "00db" =>
+            require(w > 0 && h > 0, "frame chunk before stream format")
+            // An overflowed Int stride*h could collide with a corrupted
+            // sz and pass; dibStride is Long (CodecFuzzSpec hardening).
+            val stride = dibStride(w)
+            require(sz.toLong == stride * h,
+              s"frame chunk size $sz != ${stride * h} (${w}x$h stride $stride)")
+            frames += java.util.Arrays.copyOfRange(p, off + 8, off + 8 + sz)
+          case _ => // JUNK / idx1 / unknown: opaque
+        }
+        off += 8 + sz + (sz & 1) // chunks are word-aligned
+      }
+    }
+    walk(12, 8 + riffChunkSize(p, 0))
+    require(declaredFrames == frames.length,
+      s"avih declares $declaredFrames frames, movi carries ${frames.length}")
+    val grays = frames.toSeq.map { plane =>
+      lumaPlane(dibRowsTopDown(plane, 0, w, h, bottomUp = true), bgr = true)
+    }
+    (w, h, grays)
   }
 
   /** Partition-wise RIFF AVI decode — pure JVM, no codec library: walks
@@ -898,109 +949,12 @@ object Multimodal {
     * AIOOBE or a non-advancing loop); the avih dwTotalFrames count is
     * cross-checked against the movi walk. Narrow mapPartitions — no
     * shuffle, scales with input splits. */
-  /** Pure-JVM RIFF/AVI chunk walk → (width, height, grayscale frames).
-    * Hoisted out of [[decodeAviFrames]]'s closure so the fuzz harness
-    * (CodecFuzzSpec) can drive it directly with mutated payloads; every
-    * corrupt shape must die in a `require`, never an AIOOBE or a
-    * non-advancing loop. */
-  private[llm] def aviGrayFrames(p: Array[Byte]): (Int, Int, Seq[Array[Int]]) = {
-    def le32(off: Int): Int = (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8) |
-      ((p(off + 2) & 0xff) << 16) | ((p(off + 3) & 0xff) << 24)
-    def le16(off: Int): Int = (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
-    def tag(off: Int): String = new String(p, off, 4, "US-ASCII")
-    require(p.length >= 12 && tag(0) == "RIFF" && tag(8) == "AVI ",
-      "not a RIFF/AVI payload")
-    var declaredFrames = -1
-    var w = -1; var h = -1
-    val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    def checkedSize(off: Int): Int = {
-      val sz = le32(off + 4)
-      require(sz >= 0 && off + 8 + sz.toLong <= p.length,
-        s"corrupt RIFF chunk '${tag(off)}' at byte $off: declared size " +
-          s"$sz exceeds payload (${p.length} bytes)")
-      sz
-    }
-    // walk(from, to): iterate sibling chunks, descending into the LIST
-    // types that matter (hdrl/strl/movi).
-    def walk(from: Int, to: Int): Unit = {
-      var off = from
-      while (off + 8 <= to) {
-        val id4 = tag(off); val sz = checkedSize(off)
-        if (id4 == "LIST" && sz >= 4) {
-          tag(off + 8) match {
-            case "hdrl" | "strl" => walk(off + 12, off + 8 + sz)
-            case "movi" => walk(off + 12, off + 8 + sz)
-            case _ => // INFO etc: opaque
-          }
-        } else id4 match {
-          case "avih" =>
-            require(sz >= 40, s"short avih chunk ($sz bytes)")
-            declaredFrames = le32(off + 8 + 16)
-            require(le32(off + 8 + 24) == 1,
-              "only single-stream AVI supported")
-          case "strh" =>
-            require(sz >= 8, s"short strh chunk ($sz bytes)")
-            val fcc = tag(off + 8); val handler = tag(off + 12)
-            require(fcc == "vids" && (handler == "DIB " || handler == "    "),
-              s"only uncompressed 'vids'/'DIB ' streams supported " +
-                s"(got '$fcc'/'$handler')")
-          case "strf" =>
-            require(sz >= 40, s"short strf chunk ($sz bytes)")
-            w = le32(off + 8 + 4); h = le32(off + 8 + 8)
-            val bpp = le16(off + 8 + 14); val compression = le32(off + 8 + 16)
-            require(bpp == 24 && compression == 0,
-              s"only 24-bit uncompressed DIB frames supported " +
-                s"(bpp=$bpp, compression=$compression)")
-            require(w > 0 && h > 0, s"bad frame dimensions ${w}x$h")
-          case "00db" =>
-            require(w > 0 && h > 0, "frame chunk before stream format")
-            // Long stride: a fuzzed strf width near 2^30 overflows the
-            // Int product, and an overflowed stride*h could collide with
-            // a corrupted sz and pass (CodecFuzzSpec hardening).
-            val stride = ((w.toLong * 3 + 3) / 4) * 4
-            require(sz.toLong == stride * h,
-              s"frame chunk size $sz != ${stride * h} (${w}x$h stride $stride)")
-            frames += java.util.Arrays.copyOfRange(p, off + 8, off + 8 + sz)
-          case _ => // JUNK / idx1 / unknown: opaque
-        }
-        off += 8 + sz + (sz & 1) // chunks are word-aligned
-      }
-    }
-    walk(12, 8 + checkedSize(0))
-    require(declaredFrames == frames.length,
-      s"avih declares $declaredFrames frames, movi carries ${frames.length}")
-    val grays = frames.toSeq.map { plane =>
-      val stride = ((w * 3 + 3) / 4) * 4
-      val gray = new Array[Int](w * h)
-      var y = 0
-      while (y < h) {
-        val srcRow = h - 1 - y // DIB planes are bottom-up
-        var x = 0
-        while (x < w) {
-          val o = srcRow * stride + 3 * x
-          val b = plane(o) & 0xff
-          val g = plane(o + 1) & 0xff
-          val r = plane(o + 2) & 0xff
-          gray(y * w + x) = (299 * r + 587 * g + 114 * b) / 1000
-          x += 1
-        }
-        y += 1
-      }
-      gray
-    }
-    (w, h, grays)
-  }
-
-  def decodeAviFrames(spark: SparkSession, df: DataFrame): DataFrame = {
-    import spark.implicits._
-    df.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, p) =>
+  def decodeAviFrames(spark: SparkSession, df: DataFrame): DataFrame =
+    decodePayloads(spark, df, "doc_id", "frame_idx", "width", "height", "gray") {
+      () => (id, p) =>
         val (w, h, grays) = aviGrayFrames(p)
         grays.iterator.zipWithIndex.map { case (gray, idx) => (id, idx, w, h, gray) }
-      }
-      .toDF("doc_id", "frame_idx", "width", "height", "gray")
-  }
+    }
 
   // ------------------------------------------------------------------
   // PNG — a REAL COMPRESSED codec, pure JVM. zlib ships in the JDK
@@ -1055,17 +1009,8 @@ object Multimodal {
         val md = java.security.MessageDigest.getInstance("MD5")
         val defl = new java.util.zip.Deflater()
         ids.map { id =>
-          val seed = id / 4
-          val gray = new Array[Int](64)
-          var b = 0
-          while (b < 4) {
-            md.reset()
-            val digest = md.digest(s"p${seed}_$b"
-              .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-            var k = 0
-            while (k < 16) { gray(b * 16 + k) = digest(k) & 0xff; k += 1 }
-            b += 1
-          }
+          val gray = (0 until 4).flatMap(b => seedBlock(md, s"p${id / 4}", b))
+            .map(_ & 0xff).toArray
           val perturbed = (id % 64).toInt
           gray(perturbed) = (gray(perturbed) + 128) % 256
           // Scanlines: filter byte + 24 RGB bytes, filtered per spec.
@@ -1131,7 +1076,7 @@ object Multimodal {
     while (!done) {
       require(off + 8 <= p.length, s"truncated PNG chunk header at byte $off")
       val len = be32(off)
-      val tag = new String(p, off + 4, 4, "US-ASCII")
+      val tag = fourcc(p, off + 4)
       require(len >= 0 && off + 12L + len <= p.length,
         s"corrupt PNG chunk '$tag' at byte $off: declared size $len " +
           s"exceeds payload (${p.length} bytes)")
@@ -1207,27 +1152,11 @@ object Multimodal {
     * [[pngPixelsTopDown]], then integer luma (299·R + 587·G + 114·B)
     * div 1000 (PNG stores RGB, not BGR). Narrow mapPartitions, no
     * shuffle; scales with input splits. */
-  def decodePngGray(spark: SparkSession, df: DataFrame): DataFrame = {
-    import spark.implicits._
-    df.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          val (w, h, px) = pngPixelsTopDown(payload)
-          val gray = new Array[Int](w * h)
-          var i = 0
-          while (i < gray.length) {
-            val r = px(3 * i) & 0xff
-            val g = px(3 * i + 1) & 0xff
-            val b = px(3 * i + 2) & 0xff
-            gray(i) = (299 * r + 587 * g + 114 * b) / 1000
-            i += 1
-          }
-          (id, w, h, gray)
-        }
-      }
-      .toDF("doc_id", "width", "height", "gray")
-  }
+  def decodePngGray(spark: SparkSession, df: DataFrame): DataFrame =
+    decodePayloads(spark, df, "doc_id", "width", "height", "gray") { () => (id, payload) =>
+      val (w, h, px) = pngPixelsTopDown(payload)
+      Iterator.single((id, w, h, lumaPlane(px, bgr = false)))
+    }
 
   /** STUB frame sampling: `n` consecutive "frames", each fingerprinted
     * from a slice of the BINARY payload itself — the byte-domain slicing

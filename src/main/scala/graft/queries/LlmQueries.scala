@@ -44,7 +44,7 @@ object LlmQueries {
       .select(col("doc_id"), col("phash"),
         explode(expr("sequence(0, 3)")).as("band"))
       .select(col("doc_id"), col("band"),
-        expr("shiftright(phash, 14 * band) & 16383").as("band_hash"))
+        Multimodal.phashBand("band").as("band_hash"))
     val pairs = Dedup.candidatePairsCapped(bands, "doc_id",
         maxBucket = 64, reps = 8)
       .join(hashed.select(col("doc_id").as("id_a"), col("phash").as("ph_a")), "id_a")
@@ -137,9 +137,7 @@ object LlmQueries {
       .select(col("doc_id"), explode(expr("sequence(0, 15)")).as("band"),
         col("samples"))
       .select(col("doc_id"), col("band"),
-        expr("""md5(concat_ws(',', transform(slice(samples, 8 * band + 1, 8),
-               |  x -> CAST((x + 32768) DIV 1024 AS STRING))))""".stripMargin)
-          .as("band_hash"))
+        Multimodal.audioWindowKey("band").as("band_hash"))
     Dedup.candidatePairsCapped(bands, "doc_id", maxBucket = 64, reps = 8)
       .join(decoded.select(col("doc_id").as("id_a"), col("samples").as("sa")), "id_a")
       .join(decoded.select(col("doc_id").as("id_b"), col("samples").as("sb")), "id_b")
@@ -165,7 +163,7 @@ object LlmQueries {
         explode(expr("sequence(0, 3)")).as("b"))
       .select(col("doc_id"),
         (col("frame_idx") * 4 + col("b")).as("band"),
-        expr("shiftright(phash, 14 * b) & 16383").as("band_hash"))
+        Multimodal.phashBand("b").as("band_hash"))
     Dedup.candidatePairsCapped(bands, "doc_id", maxBucket = 64, reps = 8)
       .join(fh.select(col("doc_id").as("id_a"), col("frame_idx"),
         col("phash").as("ph_a")), "id_a")
@@ -273,6 +271,14 @@ object LlmQueries {
       |        + 256 * ('0x' || substring(p, 3, 2))::INT
       |        + CASE WHEN i = doc_id % 128 THEN 512 ELSE 0 END) % 65536) AS v
       |    FROM pairs16))""".stripMargin
+
+  // Oracle twin of Multimodal.audioWindowKey over `smp`: one key per
+  // 8-sample window. Ends at `name` (doc_id, `window`, `key`).
+  private[queries] def audioWindowKeysCte(name: String, window: String, key: String): String =
+    s"""$name AS (SELECT doc_id, i // 8 AS $window,
+       |    md5(string_agg(((s + 32768) // 1024)::VARCHAR, ','
+       |      ORDER BY i)) AS $key
+       |  FROM smp GROUP BY doc_id, i // 8)""".stripMargin
 
   // -- shared DuckDB fragments ------------------------------------------
   private val normSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -2277,10 +2283,7 @@ object LlmQueries {
       // Decoded frame computed ONCE and localCheckpointed.
       audioVerifiedPairs(s, dir).orderBy("id_a", "id_b")
     }, Some(s"""WITH $wavSampleCtes,
-              |bands AS (SELECT doc_id, i // 8 AS band,
-              |    md5(string_agg(((s + 32768) // 1024)::VARCHAR, ','
-              |      ORDER BY i)) AS band_hash
-              |  FROM smp GROUP BY doc_id, i // 8),
+              |${audioWindowKeysCte("bands", "band", "band_hash")},
               |bsize AS (SELECT band, band_hash, count(*) AS n
               |  FROM bands GROUP BY band, band_hash),
               |bx AS (SELECT b.doc_id, b.band, b.band_hash, z.n > 64 AS oversized
@@ -2470,9 +2473,7 @@ object LlmQueries {
         .select(col("doc_id"), explode(expr("sequence(0, 15)")).as("w"),
           col("samples"))
         .select(col("doc_id"), col("w"),
-          expr("""md5(concat_ws(',', transform(slice(samples, 8 * w + 1, 8),
-                 |  x -> CAST((x + 32768) DIV 1024 AS STRING))))""".stripMargin)
-            .as("key"))
+          Multimodal.audioWindowKey("w").as("key"))
       val cw = aw.filter(col("doc_id") % 4 === 0 && col("w").between(4, 11))
         .select(col("doc_id").as("clip_id"), (col("w") - 4).as("p"), col("key"))
       val cand = cw
@@ -2494,10 +2495,7 @@ object LlmQueries {
         .filter(col("mad") <= 16)
         .orderBy("clip_id", "audio_id", "w_off")
     }, Some(s"""WITH $wavSampleCtes,
-              |aw AS (SELECT doc_id, i // 8 AS w,
-              |    md5(string_agg(((s + 32768) // 1024)::VARCHAR, ','
-              |      ORDER BY i)) AS key
-              |  FROM smp GROUP BY doc_id, i // 8),
+              |${audioWindowKeysCte("aw", "w", "key")},
               |cw AS (SELECT doc_id AS clip_id, CAST(w - 4 AS INT) AS p, key
               |  FROM aw WHERE doc_id % 4 = 0 AND w BETWEEN 4 AND 11),
               |cand AS (SELECT DISTINCT c.clip_id, a.doc_id AS audio_id,
@@ -2718,10 +2716,7 @@ object LlmQueries {
          |  JOIN ph a ON a.doc_id = c.id_a JOIN ph b ON b.doc_id = c.id_b
          |  WHERE bit_count(xor(a.phash, b.phash)) <= 6),
          |$wavSampleCtes,
-         |abands AS (SELECT doc_id, i // 8 AS band,
-         |    md5(string_agg(((s + 32768) // 1024)::VARCHAR, ','
-         |      ORDER BY i)) AS band_hash
-         |  FROM smp GROUP BY doc_id, i // 8),
+         |${audioWindowKeysCte("abands", "band", "band_hash")},
          |${cappedEdgeCtes("a", "abands")},
          |avp AS (SELECT c.id_a, c.id_b
          |  FROM acp c JOIN smp a ON a.doc_id = c.id_a

@@ -138,7 +138,7 @@ object StreamingQueries {
       .select(col("doc_id"), col("phash"),
         explode(expr("sequence(0, 3)")).as("band"))
       .select(col("doc_id"), col("phash"), col("band"),
-        expr("shiftright(phash, 14 * band) & 16383").as("band_hash"))
+        Multimodal.phashBand("band").as("band_hash"))
 
   /** The st20 streaming CDC → SCD2 chain, shared by the dimension gate
     * (st20) and its integrity-audit twin (st22) so the two can never
@@ -716,9 +716,7 @@ object StreamingQueries {
             .select(col("doc_id"), explode(expr("sequence(0, 15)")).as("band"),
               col("samples"))
             .select(col("doc_id"), col("band"),
-              expr("""md5(concat_ws(',', transform(slice(samples, 8 * band + 1, 8),
-                     |  x -> CAST((x + 32768) DIV 1024 AS STRING))))""".stripMargin)
-                .as("band_hash")),
+              Multimodal.audioWindowKey("band").as("band_hash")),
           decoded.select("doc_id", "samples"))
       }
       g.increments(bySeedPair(T(s, dir, "documents").select(col("doc_id")), "doc_id"): _*)(
@@ -737,10 +735,7 @@ object StreamingQueries {
         })
       g.read("accepted_docs").orderBy("doc_id")
     }, Some(s"""WITH ${LlmQueries.wavSampleCtes},
-               |bands AS (SELECT doc_id, i // 8 AS band,
-               |    md5(string_agg(((s + 32768) // 1024)::VARCHAR, ','
-               |      ORDER BY i)) AS band_hash
-               |  FROM smp GROUP BY doc_id, i // 8),
+               |${LlmQueries.audioWindowKeysCte("bands", "band", "band_hash")},
                |cand AS (SELECT DISTINCT n.doc_id, a.doc_id AS acc
                |  FROM bands n JOIN bands a
                |    ON n.band = a.band AND n.band_hash = a.band_hash
@@ -780,7 +775,7 @@ object StreamingQueries {
               explode(expr("sequence(0, 3)")).as("b"))
             .select(col("doc_id"),
               (col("frame_idx") * 4 + col("b")).as("band"),
-              expr("shiftright(phash, 14 * b) & 16383").as("band_hash")),
+              Multimodal.phashBand("b").as("band_hash")),
           fh)
       }
       g.increments(bySeedPair(T(s, dir, "documents").select(col("doc_id")), "doc_id"): _*)(

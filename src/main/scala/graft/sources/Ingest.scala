@@ -119,31 +119,30 @@ object Ingest {
   def ingestStreamingEvolving(spark: SparkSession, sourceDir: String,
       baseSchema: StructType, table: String, checkpointDir: String,
       batchId: Option[Long] = None): StructType = {
-    val tableExists = spark.catalog.tableExists(table)
-    val known: Map[String, org.apache.spark.sql.types.DataType] =
-      (if (tableExists)
-        spark.read.table(table).schema.filterNot(_.name.startsWith("_"))
-      else baseSchema.fields.toSeq)
-        .map(f => f.name.toLowerCase -> f.dataType).toMap
-    val discovered = discoverCsvColumns(spark, sourceDir)
-      .getOrElse(baseSchema.fieldNames.toSeq)
+    // The bronze schema is read once, and again only after an ALTER
+    // widened it (Tables.append's rule).
+    val existing =
+      if (spark.catalog.tableExists(table)) Some(spark.read.table(table).schema) else None
     // Known columns ALWAYS keep their declared order/types — CSV reads
     // are positional, so the known prefix must stay intact even if the
     // header sample happened to miss a file flavor; genuinely new
     // columns append at the end as STRING, in discovery order.
-    val knownOrder: Seq[String] =
-      if (tableExists)
-        spark.read.table(table).schema.filterNot(_.name.startsWith("_")).map(_.name).toSeq
-      else baseSchema.fieldNames.toSeq
+    val knownFields = existing.map(_.fields.toSeq.filterNot(_.name.startsWith("_")))
+      .getOrElse(baseSchema.fields.toSeq)
+    val known = knownFields.map(f => f.name.toLowerCase -> f.dataType).toMap
+    val discovered = discoverCsvColumns(spark, sourceDir)
+      .getOrElse(baseSchema.fieldNames.toSeq)
     val newCols = discovered.filterNot(d => known.contains(d.toLowerCase))
     val evolved = StructType(
-      knownOrder.map(n => org.apache.spark.sql.types.StructField(n,
-        known(n.toLowerCase))) ++
+      knownFields.map(f => org.apache.spark.sql.types.StructField(f.name, f.dataType)) ++
       newCols.map(org.apache.spark.sql.types.StructField(_,
         org.apache.spark.sql.types.StringType)))
-    if (tableExists && newCols.nonEmpty) {
-      val colsDdl = newCols.map(n => s"`$n` STRING").mkString(", ")
-      spark.sql(s"ALTER TABLE $table ADD COLUMNS ($colsDdl)")
+    val target = existing.map { schema =>
+      if (newCols.isEmpty) schema else {
+        val colsDdl = newCols.map(n => s"`$n` STRING").mkString(", ")
+        spark.sql(s"ALTER TABLE $table ADD COLUMNS ($colsDdl)")
+        spark.read.table(table).schema
+      }
     }
     val bid = batchId.getOrElse(System.currentTimeMillis() / 1000)
     val raw = spark.readStream.schema(evolved).option("header", "true").csv(sourceDir)
@@ -151,11 +150,8 @@ object Ingest {
     // Align to the (possibly widened) table column order so the append
     // matches positionally; on first run the table is created from the
     // frame's own order.
-    val aligned =
-      if (tableExists) {
-        val target = spark.read.table(table).schema
-        withMeta.select(target.fields.map(f => col(f.name)).toIndexedSeq: _*)
-      } else withMeta
+    val aligned = target.fold(withMeta)(t =>
+      withMeta.select(t.fields.map(f => col(f.name)).toIndexedSeq: _*))
     AvailableNow.run(aligned.writeStream.outputMode("append")
       .option("checkpointLocation", checkpointDir), Some(table))
     evolved

@@ -152,6 +152,20 @@ class MeasureSpec extends SparkTestBase {
       s"commit SCD2 merges through graft.sources.Tables.scd2Apply, found:\n${hits.mkString("\n")}")
   }
 
+  test("source sweep: media payloads decode through one driver, and luma is written once") {
+    val file = "graft/llm/Multimodal.scala"
+    val lines = Files.readAllLines(Paths.get("src/main/scala", file)).asScala
+    val from = lines.indexWhere(_.contains("def decodePayloads")) + 1
+    val to = lines.indexWhere(_.contains("def "), from)
+    val hits = sourceHits(".as[(Long, Array[Byte])]")
+    assert(hits.size === 1 && hits.head.startsWith(s"$file:") &&
+      (from + 1 to to).contains(hits.head.stripPrefix(s"$file:").toInt),
+      s"decode payloads through Multimodal.decodePayloads, found:\n${hits.mkString("\n")}")
+    val luma = sourceHits("299 * r + 587 * g + 114 * b")
+    assert(luma.size === 1 && luma.head.startsWith(s"$file:"),
+      s"project luma through Multimodal.lumaPlane, found:\n${luma.mkString("\n")}")
+  }
+
   test("source sweep: temp dirs are created in src/main only by Measure.tempDir") {
     val hits = sourceHits("createTempDirectory")
     assert(hits.nonEmpty && hits.forall(_.startsWith("graft/tools/Measure.scala:")),
