@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou et al., "Product Quantization for Nearest
@@ -63,14 +62,27 @@ object Pq {
     * wrong-length vector, so a row-level `assert_true` fails loudly when
     * `size(vec) ≠ m·subDim`. */
   def subspaces(df: DataFrame, idCol: String, vecCol: String, m: Int, subDim: Int): DataFrame = {
-    val guard = assert_true(size(col(vecCol)) === m * subDim,
-      concat(lit(s"Pq: expected dim ${m * subDim} but vector has "),
-        size(col(vecCol)).cast("string"), lit(" elements")))
+    val guard = dimGuard(col(vecCol), m, subDim)
     val vv = Similarity.asDoubleVec(col(vecCol))
     val slices = array((0 until m).map(j => slice(vv, j * subDim + 1, subDim)): _*)
     df.select((col(idCol) + coalesce(guard.cast("long"), lit(0L))).as("vid"),
       posexplode(slices).as(Seq("s", "sv")))
   }
+
+  /** The row-level `size(vec) = m·subDim` check: `zip_with` would
+    * silently null-pad a wrong-length vector, so each caller folds this
+    * NULL-on-success column into a value it emits. */
+  private def dimGuard(vec: Column, m: Int, subDim: Int): Column =
+    assert_true(size(vec) === m * subDim,
+      concat(lit(s"Pq: expected dim ${m * subDim} but vector has "),
+        size(vec).cast("string"), lit(" elements")))
+
+  /** The nearest centroid id of subvector `sv` among one subspace's
+    * literal centroids: `array_min` over struct(d2, cid) — exactly
+    * [[min_by]]'s total key (NaN d2 sorts greatest in both). */
+  private def nearestCode(sv: Column, cents: IndexedSeq[IndexedSeq[Double]]): Column =
+    array_min(transform(typedLit(cents),
+      (cv, cid) => struct(l2sq(sv, cv).as("d2"), cid.as("cid")))).getField("cid")
 
   /** The codebook as the driver-held model artifact it is: `cbv(j)(c)` =
     * centroid `c` of subspace `j` — m·k·subDim doubles, the object FAISS
@@ -101,34 +113,21 @@ object Pq {
   }
 
   /** Codes as ONE per-row expression against the literal codebook: for
-    * each subspace j, the argmin over (d2, cid) of [[l2sq]] between the
-    * row's j-th slice and centroid c — `array_min` over struct(d2, cid)
-    * is exactly [[min_by]]'s total key (NaN d2 sorts greatest in both).
-    * Zero shuffle, no explode, no join; the same `assert_true` guard as
-    * [[subspaces]] rides the first code (zip_with would null-pad a
-    * wrong-length vector silently). */
+    * each subspace j, the [[nearestCode]] of the row's j-th slice. Zero
+    * shuffle, no explode, no join; the [[dimGuard]] rides every code. */
   def encodeCol(vec: Column, cbv: Codebook, m: Int, subDim: Int): Column = {
-    val guard = assert_true(size(vec) === m * subDim,
-      concat(lit(s"Pq: expected dim ${m * subDim} but vector has "),
-        size(vec).cast("string"), lit(" elements")))
+    val guard = coalesce(dimGuard(vec, m, subDim).cast("int"), lit(0))
     val vv = Similarity.asDoubleVec(vec)
-    val code = (j: Int) => {
-      val sv = slice(vv, j * subDim + 1, subDim)
-      array_min(transform(typedLit(cbv(j)),
-        (cv, cid) => struct(l2sq(sv, cv).as("d2"), cid.as("cid"))))
-        .getField("cid")
-    }
     array((0 until m).map(j =>
-      code(j) + coalesce(guard.cast("int"), lit(0))): _*)
+      nearestCode(slice(vv, j * subDim + 1, subDim), cbv(j)) + guard): _*)
   }
 
   /** Per-subspace Lloyd codebooks: (s, cid, cv) with cid dense 0..k−1.
     * Init = subvectors of the k smallest-id vectors (rank order, so ids
     * need not be dense). The centroids live on the DRIVER between
     * iterations (the MLlib shape — they are O(m·k), a model artifact):
-    * each iteration is ONE distributed aggregation job — assign via the
-    * literal-codebook argmin of [[encodeCol]]'s key (array_min over
-    * struct(d2, cid), bit-identical to the previous min_by spelling),
+    * each iteration is ONE distributed aggregation job — assign via
+    * [[nearestCode]] (bit-identical to the previous min_by spelling),
     * then the decimal-exact integer-grid means per (s, cid) collected
     * back. The r14 shape paid a broadcast build + two exchanges + a
     * localCheckpoint job per iteration (≈5 scheduler jobs each); this is
@@ -164,17 +163,11 @@ object Pq {
       // (s, cid, sv) rows via one posexplode with the cid computed
       // INLINE against the literal codebook — no broadcast join, no
       // (vid, s) exchange; the only shuffle is the m·k-group mean.
-      val guard = assert_true(size(col(vecCol)) === m * subDim,
-        concat(lit(s"Pq: expected dim ${m * subDim} but vector has "),
-          size(col(vecCol)).cast("string"), lit(" elements")))
+      val guard = coalesce(dimGuard(col(vecCol), m, subDim).cast("int"), lit(0))
       val vv = Similarity.asDoubleVec(col(vecCol))
       val slices = array((0 until m).map { j =>
         val sv = slice(vv, j * subDim + 1, subDim)
-        val cid = array_min(transform(typedLit(cbv(j)),
-          (cv, c) => struct(l2sq(sv, cv).as("d2"), c.as("cid"))))
-          .getField("cid")
-        struct(lit(j).as("s"), (cid + coalesce(guard.cast("int"), lit(0))).as("cid"),
-          sv.as("sv"))
+        struct(lit(j).as("s"), (nearestCode(sv, cbv(j)) + guard).as("cid"), sv.as("sv"))
       }: _*)
       val means = corpus.select(explode(slices).as("e"))
         .select(col("e.s").as("s"), col("e.cid").as("cid"), col("e.sv").as("sv"))
@@ -232,13 +225,12 @@ object Pq {
     val cbv = collectCodebook(cb, m)
     val codes = corpus.select(col(idCol).as("corpus_id"),
       encodeCol(col(vecCol), cbv, m, subDim).as("codes"))
-    val lut = queryLuts(queries, cbv, idCol, vecCol, m, subDim)
-    val w = Window.partitionBy("query_id").orderBy(col("approx_d2").asc, col("corpus_id"))
-    codes.crossJoin(broadcast(lut))
+    val lut = queries.select(col(idCol).as("query_id"),
+      lutCol(col(vecCol), cbv, m, subDim).as("luts"))
+    Similarity.topKPerQuery(codes.crossJoin(broadcast(lut))
       .filter(col("corpus_id") =!= col("query_id"))
-      .select(col("query_id"), col("corpus_id"), adcScore)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kTop)
+      .select(col("query_id"), col("corpus_id"), adcScore),
+      col("approx_d2").asc, kTop)
   }
 
   /** The ADC lookup table as one per-row expression against the literal
@@ -248,24 +240,13 @@ object Pq {
     * zero shuffle, same values (same [[l2sq]] fold per (s, cid)). The
     * wrong-length guard rides every lut element. */
   private def lutCol(vec: Column, cbv: Codebook, m: Int, subDim: Int): Column = {
-    val guard = assert_true(size(vec) === m * subDim,
-      concat(lit(s"Pq: expected dim ${m * subDim} but vector has "),
-        size(vec).cast("string"), lit(" elements")))
+    val guard = coalesce(dimGuard(vec, m, subDim).cast("double"), lit(0.0))
     val vv = Similarity.asDoubleVec(vec)
     array((0 until m).map { j =>
       val sv = slice(vv, j * subDim + 1, subDim)
-      transform(typedLit(cbv(j)),
-        cv => l2sq(sv, cv) + coalesce(guard.cast("double"), lit(0.0)))
+      transform(typedLit(cbv(j)), cv => l2sq(sv, cv) + guard)
     }: _*)
   }
-
-  /** Per-query ADC lookup tables: (query_id, luts) — m·k doubles per
-    * query, the only query-side state ADC scoring needs (broadcast by
-    * the callers). A zero-shuffle projection ([[lutCol]]). */
-  private def queryLuts(queries: DataFrame, cbv: Codebook,
-      idCol: String, vecCol: String, m: Int, subDim: Int): DataFrame =
-    queries.select(col(idCol).as("query_id"),
-      lutCol(col(vecCol), cbv, m, subDim).as("luts"))
 
   private def adcScore: Column =
     aggregate(zip_with(col("codes"), col("luts"),
@@ -282,11 +263,11 @@ object Pq {
     * never read at query time (they exist only inside the offline
     * encode/assign passes).
     *
-    * Plan shape: encode + assign are offline builds (broadcast joins +
-    * one groupBy each); at query time the (cluster_id, codes) frame
-    * meets the broadcast (query LUT ⋈ query cluster) frame in an
-    * equi-join on cluster_id — never a cross join — followed by the
-    * per-query top-k window on O(candidates-in-cluster) rows.
+    * Plan shape: encode + assign are projections against the literal
+    * codebook and centroid set; the (cluster_id, codes) frame meets the
+    * broadcast (query LUT, probed cluster) frame in an equi-join on
+    * cluster_id — never a cross join — followed by the per-query top-k
+    * window on O(candidates-in-cluster) rows.
     *
     * `nprobe` is the recall knob ([[Similarity.ivfAssignMulti]]): the
     * query side carries its `nprobe` nearest clusters, widening the
@@ -298,23 +279,23 @@ object Pq {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       cb: DataFrame, idCol: String, vecCol: String,
       m: Int, subDim: Int, kTop: Int, nprobe: Int = 1): DataFrame = {
-    // codes + cluster_id in ONE narrow projection over the corpus scan
-    // (literal codebook + withClusterId) — the r14 shape built them as
-    // two separate subtrees and joined them back by id.
+    // codes + cluster_id in ONE narrow projection over the corpus scan,
+    // and LUT + probed clusters in one over the queries — both against
+    // the literal codebook and the literal centroid set, so neither
+    // side joins a model frame back by id.
     val cbv = collectCodebook(cb, m)
-    val codes = Similarity.withClusterId(
-        corpus.select(col(idCol), col(vecCol)), centroids, idCol, vecCol)
-      .select(col(idCol).as("corpus_id"), col("cluster_id"),
-        encodeCol(col(vecCol), cbv, m, subDim).as("codes"))
-    val qside = queryLuts(queries, cbv, idCol, vecCol, m, subDim)
-      .join(Similarity.ivfAssignMulti(queries, centroids, idCol, vecCol, nprobe)
-        .select(col(idCol).as("query_id"), col("cluster_id")), "query_id")
-    val w = Window.partitionBy("query_id").orderBy(col("approx_d2").asc, col("corpus_id"))
-    codes.join(broadcast(qside), "cluster_id")
+    val carr = Similarity.collectCentroids(centroids, idCol, vecCol)
+    val codes = corpus.select(col(idCol).as("corpus_id"),
+      Similarity.nearestCentroid(col(vecCol), carr).getField("cid").as("cluster_id"),
+      encodeCol(col(vecCol), cbv, m, subDim).as("codes"))
+    val qside = queries.select(col(idCol).as("query_id"),
+        lutCol(col(vecCol), cbv, m, subDim).as("luts"),
+        explode(Similarity.nearestCentroids(col(vecCol), carr, nprobe)).as("c"))
+      .select(col("query_id"), col("luts"), col("c.cid").as("cluster_id"))
+    Similarity.topKPerQuery(codes.join(broadcast(qside), "cluster_id")
       .filter(col("corpus_id") =!= col("query_id"))
-      .select(col("query_id"), col("corpus_id"), col("cluster_id"), adcScore)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kTop)
+      .select(col("query_id"), col("corpus_id"), col("cluster_id"), adcScore),
+      col("approx_d2").asc, kTop)
   }
 
   /** Residual-encoded IVF-PQ — the fidelity FAISS's IVFPQ actually
@@ -342,41 +323,37 @@ object Pq {
       centroids: DataFrame, idCol: String, vecCol: String,
       m: Int, subDim: Int, k: Int, iters: Int, kTop: Int,
       nprobe: Int = 1): DataFrame = {
-    val centVec = centroids.select(col(idCol).as("cluster_id"),
-      Similarity.asDoubleVec(col(vecCol)).as("_cv0"))
-    // cluster_id is a projection (withClusterId); the residual subtract
-    // stays the same zip_with. Checkpointed: the training collects
-    // (codebooksLocal) and the encode projection all read it.
-    val resid = Similarity.withClusterId(
-        corpus.select(col(idCol), col(vecCol)), centroids, idCol, vecCol)
-      .join(broadcast(centVec), "cluster_id")
-      .select(col(idCol), col("cluster_id"),
-        zip_with(Similarity.asDoubleVec(col(vecCol)), col("_cv0"),
-          (x, c) => x - c).as("rv"))
+    // Each residual takes its centroid's vector from the same literal
+    // struct that names its cluster — no centroid-vector join on either
+    // side. A NULL nearest centroid (empty centroid set) drops the row,
+    // as the inner join it replaces did. Checkpointed: the training
+    // collects (codebooksLocal) and the encode projection all read it.
+    val carr = Similarity.collectCentroids(centroids, idCol, vecCol)
+    val resid = corpus
+      .select(col(idCol), Similarity.asDoubleVec(col(vecCol)).as("_vv"),
+        Similarity.nearestCentroid(col(vecCol), carr).as("c"))
+      .filter(col("c").isNotNull)
+      .select(col(idCol), col("c.cid").as("cluster_id"),
+        zip_with(col("_vv"), col("c.cv"), (x, c) => x - c).as("rv"))
       .localCheckpoint(true)
     val cbv = codebooksLocal(resid, idCol, "rv", m, subDim, k, iters)
     // codes next to the cluster id in ONE projection — no join back.
     val codes = resid.select(col(idCol).as("corpus_id"), col("cluster_id"),
       encodeCol(col("rv"), cbv, m, subDim).as("codes"))
     val qResid = queries
-      .select(col(idCol).as("query_id"), Similarity.asDoubleVec(col(vecCol)).as("_qv"))
-      .join(Similarity.ivfAssignMulti(queries, centroids, idCol, vecCol, nprobe)
-        .select(col(idCol).as("query_id"), col("cluster_id")), "query_id")
-      .join(broadcast(centVec), "cluster_id")
-      .select(col("query_id"), col("cluster_id"),
-        zip_with(col("_qv"), col("_cv0"), (x, c) => x - c).as("qrv"))
-    // Per-(query, cluster) LUTs — queryLuts keys on the id alone, but
-    // the residual changes with the probed centroid. Same zero-shuffle
-    // lutCol projection (the wrong-length guard rides every element).
+      .select(col(idCol).as("query_id"), Similarity.asDoubleVec(col(vecCol)).as("_qv"),
+        explode(Similarity.nearestCentroids(col(vecCol), carr, nprobe)).as("c"))
+      .select(col("query_id"), col("c.cid").as("cluster_id"),
+        zip_with(col("_qv"), col("c.cv"), (x, c) => x - c).as("qrv"))
+    // Per-(query, cluster) LUTs — the residual changes with the probed
+    // centroid. Same zero-shuffle lutCol projection (the wrong-length
+    // guard rides every element).
     val lut = qResid.select(col("query_id"), col("cluster_id"),
       lutCol(col("qrv"), cbv, m, subDim).as("luts"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("approx_d2").asc, col("corpus_id"))
-    codes.join(broadcast(lut), "cluster_id")
+    Similarity.topKPerQuery(codes.join(broadcast(lut), "cluster_id")
       .filter(col("corpus_id") =!= col("query_id"))
-      .select(col("query_id"), col("corpus_id"), col("cluster_id"), adcScore)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kTop)
+      .select(col("query_id"), col("corpus_id"), col("cluster_id"), adcScore),
+      col("approx_d2").asc, kTop)
   }
 
   /** ADC shortlist → EXACT rerank — the standard production composition
@@ -407,13 +384,10 @@ object Pq {
       Similarity.asDoubleVec(col(vecCol)).as("cv"))
     val qvec = queries.select(col(idCol).as("query_id"),
       Similarity.asDoubleVec(col(vecCol)).as("qv"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("exact_d2").asc, col("corpus_id"))
-    cvec.join(broadcast(short), "corpus_id")
+    Similarity.topKPerQuery(cvec.join(broadcast(short), "corpus_id")
       .join(broadcast(qvec), "query_id")
       .select(col("query_id"), col("corpus_id"), col("approx_rank"),
-        l2sq(col("cv"), col("qv")).as("exact_d2"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kTop)
+        l2sq(col("cv"), col("qv")).as("exact_d2")),
+      col("exact_d2").asc, kTop)
   }
 }

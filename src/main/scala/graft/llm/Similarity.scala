@@ -1,7 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StructField, StructType}
 
 /** Embedding similarity search: brute-force cosine top-k as the exact
   * baseline, and an IVF (inverted-file) bucketed variant as the scale
@@ -9,13 +11,14 @@ import org.apache.spark.sql.functions._
   *
   * All vector math is Catalyst HOFs (`zip_with` + `aggregate`) over
   * `array<double>` — a sequential left fold, so results are deterministic
-  * bit-for-bit. No UDFs, no collect.
+  * bit-for-bit. No UDFs.
   *
   * Scale shape: the query side is broadcast (it is small by construction);
   * the corpus side never shuffles for brute force. IVF assigns each corpus
-  * vector to its nearest centroid once (narrow map against broadcast
-  * centroids), then probes only the query's cluster — candidate count
-  * drops by ~|clusters|×, the standard ANN recall/throughput trade.
+  * vector to its nearest centroid once (narrow map against the centroid
+  * set, shipped into the plan as one literal), then probes only the
+  * query's cluster — candidate count drops by ~|clusters|×, the standard
+  * ANN recall/throughput trade.
   */
 object Similarity {
 
@@ -50,67 +53,66 @@ object Similarity {
     val sims = c.crossJoin(broadcast(q))
       .filter(col("corpus_id") =!= col("query_id"))
       .select(col("query_id"), col("corpus_id"), cosine(col("qv"), col("cv")).as("sim"))
-    rankTopK(sims, k)
+    topKPerQuery(sims, col("sim").desc, k)
   }
 
   /** Assign each vector to its max-cosine centroid (ids from
-    * `centroids`). Narrow map against broadcast centroids, then ONE
-    * hash aggregate per vector — at scale use `k_centroids ≪ n` so the
-    * cross product is `n × k_centroids`.
-    *
-    * The argmax is `max_by` over the TOTAL key (csim, −centroid_id),
-    * not a row_number window: the broadcast join emits a vector's k
-    * candidate rows inside its own input partition, so map-side partial
-    * aggregation collapses them to ONE row before the exchange — the
-    * shuffle carries n rows instead of n·k and the per-partition sort
-    * the window needed disappears (guide §2.3/§2.4). The key is total
-    * (centroid ids are unique per group), so the result is the exact
-    * row the (csim DESC, centroid_id ASC) window ranked first — ties on
-    * csim pick the SMALLEST centroid id via the negated second field,
-    * and an (impossible for unit data, but defensively identical) NaN
-    * csim sorts greatest in both formulations. */
+    * `centroids`): (idCol, cluster_id), a narrow map ([[withClusterId]]). */
   def ivfAssign(vectors: DataFrame, centroids: DataFrame, idCol: String, vecCol: String): DataFrame =
     withClusterId(vectors.select(col(idCol), col(vecCol)), centroids, idCol, vecCol)
       .select(col(idCol), col("cluster_id"))
 
   /** Append `cluster_id` — the max-cosine centroid id — to every row of
-    * `df`, keeping all existing columns, as a pure PROJECTION: the
-    * centroid set (O(k) rows, a model artifact at any corpus scale) is
-    * collected to the driver and shipped into the plan as ONE array
-    * literal — the same model-as-literal shape as [[Pq.collectCodebook]]
-    * — and the argmax runs per row as `array_max` over struct(csim,
-    * −cid, cid): exactly the total key of the r14 `max_by` spelling
-    * (equal csim → smallest cid; a NaN csim sorts greatest in both), so
-    * assignments are bit-identical. The plan has no join node: the
-    * corpus is touched by one narrow map (guide §2.4). An EMPTY centroid
-    * frame yields a NULL cluster_id on every row (`array_max` of an
-    * empty array); no in-repo caller constructs one. */
+    * `df`, keeping all existing columns, as a pure PROJECTION against
+    * the [[collectCentroids]] literal ([[nearestCentroid]], whose key
+    * sends equal csim to the smallest cid and sorts a NaN csim
+    * greatest). The plan has no join node: the corpus is touched by
+    * one narrow map (guide §2.4). An EMPTY centroid frame yields a NULL
+    * cluster_id on every row (`array_max` of an empty array); no in-repo
+    * caller constructs one. */
   def withClusterId(df: DataFrame, centroids: DataFrame, idCol: String, vecCol: String): DataFrame =
     df.withColumn("cluster_id",
-      nearestCentroid(col(vecCol), collectCentroids(centroids, idCol, vecCol)))
+      nearestCentroid(col(vecCol), collectCentroids(centroids, idCol, vecCol)).getField("cid"))
 
-  /** The centroid frame collected to the driver as ONE array literal of
-    * struct(cid, cv) — O(k) rows by construction. Collect once and reuse
-    * it when several projections assign against the same centroids. */
-  private def collectCentroids(centroids: DataFrame, idCol: String, vecCol: String): Column = {
+  /** The centroid set as the driver-held model artifact it is: ONE array
+    * literal of struct(cid, cv) shipped into the plan — O(k) rows at any
+    * corpus scale, the same model-as-literal shape as [[Pq.Codebook]].
+    * `cid` keeps the id column's type. Build it once and reuse it when
+    * several projections score against the same centroids. */
+  private def centroidLiteral(cents: Seq[Row], cidType: DataType): Column = {
     import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
-    val cents = centroids.select(col(idCol).as("cid"), asDoubleVec(col(vecCol)).as("cv"))
-    val elem = StructType(Seq(
-      StructField("cid", cents.schema("cid").dataType),
-      StructField("cv", ArrayType(DoubleType))))
-    GraftSqlBridge.column(Literal.create(cents.collect().toSeq, ArrayType(elem)))
+    val elem = StructType(Seq(StructField("cid", cidType), StructField("cv", ArrayType(DoubleType))))
+    GraftSqlBridge.column(Literal.create(cents, ArrayType(elem)))
   }
 
-  /** The max-cosine centroid id of `vec` against a [[collectCentroids]]
-    * literal (see [[withClusterId]] for the tie and NaN order). */
-  private def nearestCentroid(vec: Column, carr: Column): Column = {
+  /** A centroid frame collected into its [[centroidLiteral]]. */
+  private[llm] def collectCentroids(centroids: DataFrame, idCol: String, vecCol: String): Column = {
+    val cents = centroids.select(col(idCol).as("cid"), asDoubleVec(col(vecCol)).as("cv"))
+    centroidLiteral(cents.collect().toSeq, cents.schema("cid").dataType)
+  }
+
+  /** `vec` scored against every centroid of a [[centroidLiteral]] as
+    * struct(csim, −cid, cid, cv). Its order is the total key of a
+    * `(csim DESC, cid)` ranking: equal csim → smallest cid first, and a
+    * NaN csim sorts greatest. */
+  private def scoredCentroids(vec: Column, carr: Column): Column = {
     val vv = asDoubleVec(vec)
-    array_max(transform(carr, c =>
+    transform(carr, c =>
       struct(cosine(vv, c.getField("cv")).as("csim"),
         negate(c.getField("cid")).as("ncid"),
-        c.getField("cid").as("cid")))).getField("cid")
+        c.getField("cid").as("cid"), c.getField("cv").as("cv")))
+  }
+
+  /** The max-cosine centroid struct(csim, ncid, cid, cv) of `vec` — NULL
+    * against an empty literal. */
+  private[llm] def nearestCentroid(vec: Column, carr: Column): Column =
+    array_max(scoredCentroids(vec, carr))
+
+  /** The `nprobe` nearest centroid structs of `vec`, nearest first. */
+  private[llm] def nearestCentroids(vec: Column, carr: Column, nprobe: Int): Column = {
+    require(nprobe >= 1, s"nprobe=$nprobe must be >= 1")
+    slice(sort_array(scoredCentroids(vec, carr), asc = false), 1, nprobe)
   }
 
   /** Multi-probe assignment: each vector's `nprobe` NEAREST centroids in
@@ -119,20 +121,14 @@ object Similarity {
     * neighbor living just across a Voronoi boundary — is recovered by
     * widening the probed cluster list, at a linear cost multiplier of
     * `nprobe` on the candidate volume (the classic FAISS recall knob).
-    * Same narrow map + per-vector window as [[ivfAssign]]. */
+    * A projection plus `posexplode` against the centroid literal — no
+    * join, no window. */
   def ivfAssignMulti(vectors: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nprobe >= 1, s"nprobe=$nprobe must be >= 1")
-    val v = vectors.select(col(idCol).as("vec_id_"), asDoubleVec(col(vecCol)).as("vv"))
-    val cent = centroids.select(col(idCol).as("centroid_id"), asDoubleVec(col(vecCol)).as("cv"))
-    val w = Window.partitionBy("vec_id_").orderBy(col("csim").desc, col("centroid_id"))
-    v.crossJoin(broadcast(cent))
-      .select(col("vec_id_"), col("centroid_id"), cosine(col("vv"), col("cv")).as("csim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id_").as(idCol), col("centroid_id").as("cluster_id"),
-        col("rn").as("probe_rank"))
+    val carr = collectCentroids(centroids, idCol, vecCol)
+    vectors.select(col(idCol),
+        posexplode(nearestCentroids(col(vecCol), carr, nprobe)).as(Seq("pos_", "c_")))
+      .select(col(idCol), col("c_.cid").as("cluster_id"), (col("pos_") + 1).as("probe_rank"))
   }
 
   /** IVF top-k: probe only the query's own cluster. Returns
@@ -144,63 +140,53 @@ object Similarity {
     // an exchange per side for a value that is a pure row function.
     val carr = collectCentroids(centroids, idCol, vecCol)
     val c = corpus.select(col(idCol).as("corpus_id"),
-      nearestCentroid(col(vecCol), carr).as("cluster_id"), asDoubleVec(col(vecCol)).as("cv"))
+      nearestCentroid(col(vecCol), carr).getField("cid").as("cluster_id"),
+      asDoubleVec(col(vecCol)).as("cv"))
     val q = queries.select(col(idCol).as("query_id"),
-      nearestCentroid(col(vecCol), carr).as("cluster_id"), asDoubleVec(col(vecCol)).as("qv"))
+      nearestCentroid(col(vecCol), carr).getField("cid").as("cluster_id"),
+      asDoubleVec(col(vecCol)).as("qv"))
     val sims = c.join(broadcast(q), "cluster_id")
       .filter(col("corpus_id") =!= col("query_id"))
       .select(col("query_id"), col("corpus_id"), col("cluster_id"),
         cosine(col("qv"), col("cv")).as("sim"))
-    rankTopK(sims, k, extraCols = Seq("cluster_id"))
+    topKPerQuery(sims, col("sim").desc, k)
   }
 
-  /** Lloyd's k-means in pure DataFrame algebra — the IVF INDEX BUILD
-    * step ([[ivfAssign]]/[[ivfTopK]] consume the centroids this
-    * produces). Per iteration: one narrow assign against broadcast
-    * centroids + one mean recompute; cost is iters × (n·k cosines +
-    * one (cluster, dim) shuffle of the exploded members) — linear in
-    * corpus size, standard for index builds.
+  /** Lloyd's k-means — the IVF INDEX BUILD step ([[ivfAssign]]/[[ivfTopK]]
+    * consume the centroids this produces). The centroids live on the
+    * DRIVER between iterations, the [[Pq.codebooksLocal]] shape: each
+    * iteration is ONE distributed aggregation — assign against the
+    * [[centroidLiteral]] ([[nearestCentroid]]), then the per-(cluster,
+    * dimension) mean collected back — linear in corpus size, one
+    * exchange of k·dim groups. The result is a local (cluster_id,
+    * centroid) frame; cluster_id takes the id column's type.
     *
     * Determinism, the part that matters for reproducible index builds:
-    * initial centroids are the `k` smallest-id vectors; assignment ties
-    * break by centroid id; and the per-dimension MEAN sums in
-    * DECIMAL(28,14) — decimal addition is exact and order-independent,
-    * where a double sum would vary with partition merge order and
-    * could flip a borderline assignment between runs. Empty clusters
-    * keep their previous centroid. Centroids are localCheckpoint'd
-    * each iteration (they are k tiny rows; the checkpoint cuts the
-    * otherwise-iteration-deep lineage). */
+    * initial centroids are the `k` smallest-id vectors (so k > n yields
+    * n centroids); assignment ties break by centroid id; and the
+    * per-dimension MEAN sums in DECIMAL(28,14) — decimal addition is
+    * exact and order-independent, where a double sum would vary with
+    * partition merge order and could flip a borderline assignment
+    * between runs. Empty clusters keep their previous centroid. */
   def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val v = corpus.select(col(idCol).as("vid"), asDoubleVec(col(vecCol)).as("vv"))
-    var cent = v.orderBy("vid").limit(k)
-      .select(col("vid").as("cid"), col("vv").as("cv"))
-      .localCheckpoint(true)
+    import scala.jdk.CollectionConverters._
+    val v = corpus.select(col(idCol).as("cid"), asDoubleVec(col(vecCol)).as("cv"))
+    val cidType = v.schema("cid").dataType
+    var cents = v.orderBy("cid").limit(k).collect().toSeq
     for (_ <- 1 to iters) {
-      // Same max_by-over-total-key argmax as [[ivfAssign]] (the window
-      // formulation shuffled and sorted all n·k candidate rows; the
-      // aggregate partial-combines them to n rows before the exchange).
-      val assigned = v.crossJoin(broadcast(cent))
-        .select(col("vid"), col("cid"), col("vv"),
-          cosine(col("vv"), col("cv")).as("csim"))
-        .groupBy(col("vid"))
-        .agg(max_by(struct(col("cid"), col("vv")),
-          struct(col("csim"), negate(col("cid")))).as("a"))
-        .select(col("a.cid").as("cid"), col("a.vv").as("vv"))
-      val means = assigned
-        .select(col("cid"), posexplode(col("vv")).as(Seq("pos", "x")))
+      val means = v
+        .select(nearestCentroid(col("cv"), centroidLiteral(cents, cidType)).getField("cid").as("cid"),
+          posexplode(col("cv")).as(Seq("pos", "x")))
         .groupBy("cid", "pos")
-        .agg((sum(col("x").cast("decimal(28,14)")).cast("double") /
-          count(lit(1))).as("m"))
-        .groupBy("cid")
-        .agg(sort_array(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("cid"), expr("transform(pm, p -> p.m)").as("new_cv"))
-      cent = cent.join(means, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("new_cv"), col("cv")).as("cv"))
-        .localCheckpoint(true)
+        .agg((sum(col("x").cast("decimal(28,14)")).cast("double") / count(lit(1))).as("m"))
+        .collect()
+        .groupBy(_.get(0))
+      cents = cents.map(c => means.get(c.get(0)).fold(c)(ms =>
+        Row(c.get(0), ms.sortBy(_.getInt(1)).map(_.get(2)).toSeq)))
     }
-    cent.select(col("cid").as("cluster_id"), col("cv").as("centroid"))
+    corpus.sparkSession.createDataFrame(cents.asJava, StructType(Seq(
+      StructField("cluster_id", cidType), StructField("centroid", ArrayType(DoubleType)))))
   }
 
   /** Embedding-cosine near-duplicate pairs: candidate pairs are generated
@@ -232,13 +218,15 @@ object Similarity {
       .filter(col("sim") >= threshold)
   }
 
-  private def rankTopK(sims: DataFrame, k: Int, extraCols: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("corpus_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select((Seq("query_id", "corpus_id") ++ extraCols ++ Seq("sim", "rank")).map(col): _*)
-  }
+  /** Number each query's candidates 1, 2, … into `rank` by `score`,
+    * ties broken by corpus id — the one per-query ranking window. */
+  private[llm] def rankPerQuery(df: DataFrame, score: Column, rank: String = "rank"): DataFrame =
+    df.withColumn(rank,
+      row_number().over(Window.partitionBy("query_id").orderBy(score, col("corpus_id"))))
+
+  /** Each query's `k` best candidates by `score` ([[rankPerQuery]]). */
+  private[llm] def topKPerQuery(df: DataFrame, score: Column, k: Int): DataFrame =
+    rankPerQuery(df, score).filter(col("rank") <= k)
 
   /** Euclidean (L2) distance — the native fused expression
     * ([[graft.plans.EuclideanDistance]]): one allocation-free pass in
@@ -259,15 +247,12 @@ object Similarity {
     * corpus never shuffles. Ties break by corpus id. */
   def l2TopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus.select(col(idCol).as("corpus_id"), asDoubleVec(col(vecCol)).as("cv"))
     val q = queries.select(col(idCol).as("query_id"), asDoubleVec(col(vecCol)).as("qv"))
-    val w = Window.partitionBy("query_id").orderBy(col("dist").asc, col("corpus_id"))
-    c.crossJoin(broadcast(q))
+    topKPerQuery(c.crossJoin(broadcast(q))
       .filter(col("corpus_id") =!= col("query_id"))
-      .select(col("query_id"), col("corpus_id"), l2Dist(col("qv"), col("cv")).as("dist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .select(col("query_id"), col("corpus_id"), l2Dist(col("qv"), col("cv")).as("dist")),
+      col("dist").asc, k)
   }
 
   /** Reciprocal-rank fusion of retrieval lists — the standard hybrid-
@@ -283,18 +268,15 @@ object Similarity {
     * rows per query — the lists are top-k prefixes, so this is tiny
     * relative to retrieval itself. */
   def rrfFuse(rankings: Seq[DataFrame], kConst: Int = 60): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(rankings.nonEmpty, "need at least one ranking")
     val contrib = rankings
       .map(_.select(col("query_id"), col("corpus_id"),
         round(lit(1.0) / (lit(kConst.toDouble) + col("rank").cast("double")), 12)
           .cast("decimal(18,12)").as("c")))
       .reduce(_ unionByName _)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("rrf_dec").desc, col("corpus_id"))
-    contrib.groupBy("query_id", "corpus_id")
+    val fused = contrib.groupBy("query_id", "corpus_id")
       .agg(sum(col("c")).as("rrf_dec"), count(lit(1)).cast("int").as("n_lists"))
-      .withColumn("fused_rank", row_number().over(w))
+    rankPerQuery(fused, col("rrf_dec").desc, "fused_rank")
       .select(col("query_id"), col("corpus_id"), col("n_lists"),
         col("rrf_dec").cast("double").as("rrf_score"), col("fused_rank"))
   }

@@ -29,6 +29,23 @@ object LlmQueries {
     emb.filter(col("vec_id") < 8 || col("vec_id") % 2500 === 0)
   private[queries] val scaledCentroidSql = "vec_id < 8 OR vec_id % 2500 = 0"
 
+  // The LSH prologue of the text near-dup gates: 3-shingle arrays and
+  // the 8-hash MinHash signature cut into bands of 2 rows. Returns (sh,
+  // bands). Over the documents table it first projects to the two
+  // columns the chain reads BEFORE the parallelizing exchange (guide
+  // §2.3 "project before the exchange") and sizes that exchange from
+  // the input bytes rather than a local[32] constant (Registry.spread —
+  // guide §2.2; the old 2×cores constant made downstream shuffles write
+  // 2048 files for 5000 docs).
+  private def lshPrologue(s: org.apache.spark.sql.SparkSession,
+      dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+    lshPrologue(Registry.spread(T(s, dir, "documents").select("doc_id", "text")))
+  private def lshPrologue(docs: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val sh = Dedup.shingleArray(docs, "doc_id", "text", 3)
+    (sh, Dedup.lshBands(Dedup.minhashSignaturesNative(sh, "doc_id", 8), "doc_id", 8, 2))
+  }
+
   // Shared image-phash chain (llm_image_phash_dedup + _clusters):
   // encode real 8×8 BMPs → partition-wise decode to luma → 56-bit dHash
   // (checkpointed: 8 bytes/doc, feeds bands and both verify sides) →
@@ -61,7 +78,7 @@ object LlmQueries {
   // from the generation formula (no BMP parse), dHash packed
   // identically. Ends at `bands` — (doc_id, phash, band, band_hash).
   private[queries] val phashHashCtes =
-    """px AS (
+    s"""px AS (
       |  SELECT doc_id, j,
       |    ((('0x' || substring(md5((doc_id // 4)::VARCHAR || '_' ||
       |          (j // 16)::VARCHAR), 2 * (j % 16) + 1, 2))::BIGINT
@@ -77,7 +94,7 @@ object LlmQueries {
       |  GROUP BY l.doc_id),
       |bands AS (
       |  SELECT doc_id, phash, b.b AS band,
-      |    (phash >> CAST(14 * b.b AS INT)) & 16383 AS band_hash
+      |    $phashBandSql AS band_hash
       |  FROM ph, range(4) b(b))""".stripMargin
 
   // Capped candidate + Hamming-verify continuation (md5-order rep
@@ -279,6 +296,18 @@ object LlmQueries {
        |    md5(string_agg(((s + 32768) // 1024)::VARCHAR, ','
        |      ORDER BY i)) AS $key
        |  FROM smp GROUP BY doc_id, i // 8)""".stripMargin
+
+  // Oracle twin of Multimodal.phashBand: the 14-bit slice `b.b` of a
+  // 56-bit dHash `phash`, over a `range(4) b(b)` band source.
+  private[queries] def phashBandSql: String = "(phash >> CAST(14 * b.b AS INT)) & 16383"
+
+  // Temporal video band keys over `vph` (llm_video_framehash_dedup, the
+  // cross-modal union, st16): (frame_idx × 4 + b, slice b of that
+  // frame's dHash). Ends at `vbands` (doc_id, band, band_hash).
+  private[queries] def vbandsCte: String =
+    s"""vbands AS (SELECT doc_id, frame_idx * 4 + b.b AS band,
+       |    $phashBandSql AS band_hash
+       |  FROM vph, range(4) b(b))""".stripMargin
 
   // -- shared DuckDB fragments ------------------------------------------
   private val normSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -887,16 +916,7 @@ object LlmQueries {
       // parquet split, which would otherwise serialize the dominant stage
       // on one task. At real corpus scale the scan has thousands of
       // splits and the same spread comes free from the input format.
-      // Project to the two columns the LSH chain reads BEFORE the
-      // parallelizing exchange (guide §2.3 "project before the
-      // exchange"), and size that exchange from the input bytes rather
-      // than a local[32] constant (Registry.spread — guide §2.2; the
-      // old 2×cores constant made downstream shuffles write 2048 files
-      // for 5000 docs).
-      val docs = Registry.spread(T(s, dir, "documents").select("doc_id", "text"))
-      val sh = Dedup.shingleArray(docs, "doc_id", "text", 3)
-      val sig = Dedup.minhashSignaturesNative(sh, "doc_id", 8)
-      val bands = Dedup.lshBands(sig, "doc_id", 8, 2)
+      val bands = lshPrologue(s, dir)._2
       Dedup.candidatePairs(bands, "doc_id").orderBy("id_a", "id_b")
     }, Some({
       s"""WITH $toksCte, $shCte,
@@ -919,10 +939,7 @@ object LlmQueries {
       val boiler = base.orderBy("doc_id").limit(1)
       val clones = s.range(1, 41).crossJoin(boiler)
         .select((col("id") + lit(1000000L)).as("doc_id"), col("text"))
-      val corpus = Registry.spread(base.unionByName(clones))
-      val sh = Dedup.shingleArray(corpus, "doc_id", "text", 3)
-      val sig = Dedup.minhashSignaturesNative(sh, "doc_id", 8)
-      val bands = Dedup.lshBands(sig, "doc_id", 8, 2)
+      val bands = lshPrologue(Registry.spread(base.unionByName(clones)))._2
       Dedup.candidatePairsCapped(bands, "doc_id", maxBucket = 16, reps = 4)
         .orderBy("id_a", "id_b")
     }, Some({
@@ -947,16 +964,7 @@ object LlmQueries {
       // with its duplicate-cluster id, canonical flag, and cluster size.
       // The oracle recomputes the same components with a recursive CTE —
       // a fully independent fixpoint formulation of min-reachable-id.
-      // Project to the two columns the LSH chain reads BEFORE the
-      // parallelizing exchange (guide §2.3 "project before the
-      // exchange"), and size that exchange from the input bytes rather
-      // than a local[32] constant (Registry.spread — guide §2.2; the
-      // old 2×cores constant made downstream shuffles write 2048 files
-      // for 5000 docs).
-      val docs = Registry.spread(T(s, dir, "documents").select("doc_id", "text"))
-      val sh = Dedup.shingleArray(docs, "doc_id", "text", 3)
-      val sig = Dedup.minhashSignaturesNative(sh, "doc_id", 8)
-      val bands = Dedup.lshBands(sig, "doc_id", 8, 2)
+      val bands = lshPrologue(s, dir)._2
       val pairs = Dedup.candidatePairs(bands, "doc_id")
       Dedup.dedupClusters(T(s, dir, "documents"), "doc_id", pairs)
         .orderBy("doc_id")
@@ -975,16 +983,7 @@ object LlmQueries {
       // long-doc flag); `flipped` marks docs whose own label loses the
       // vote — the annotation-noise audit list. One component-keyed agg
       // + join on top of the cluster build.
-      // Project to the two columns the LSH chain reads BEFORE the
-      // parallelizing exchange (guide §2.3 "project before the
-      // exchange"), and size that exchange from the input bytes rather
-      // than a local[32] constant (Registry.spread — guide §2.2; the
-      // old 2×cores constant made downstream shuffles write 2048 files
-      // for 5000 docs).
-      val docs = Registry.spread(T(s, dir, "documents").select("doc_id", "text"))
-      val sh = Dedup.shingleArray(docs, "doc_id", "text", 3)
-      val sig = Dedup.minhashSignaturesNative(sh, "doc_id", 8)
-      val bands = Dedup.lshBands(sig, "doc_id", 8, 2)
+      val bands = lshPrologue(s, dir)._2
       val pairs = Dedup.candidatePairs(bands, "doc_id")
       Dedup.propagateLabels(
           T(s, dir, "documents").withColumn("is_long", col("n_chars") >= 300),
@@ -1016,16 +1015,7 @@ object LlmQueries {
       // decontamination alone does not close. Pure composition of
       // existing operators (LSH pairs → components → hash-bucket
       // split); the only cost over a plain split is the cluster build.
-      // Project to the two columns the LSH chain reads BEFORE the
-      // parallelizing exchange (guide §2.3 "project before the
-      // exchange"), and size that exchange from the input bytes rather
-      // than a local[32] constant (Registry.spread — guide §2.2; the
-      // old 2×cores constant made downstream shuffles write 2048 files
-      // for 5000 docs).
-      val docs = Registry.spread(T(s, dir, "documents").select("doc_id", "text"))
-      val sh = Dedup.shingleArray(docs, "doc_id", "text", 3)
-      val sig = Dedup.minhashSignaturesNative(sh, "doc_id", 8)
-      val bands = Dedup.lshBands(sig, "doc_id", 8, 2)
+      val bands = lshPrologue(s, dir)._2
       val pairs = Dedup.candidatePairs(bands, "doc_id")
       val clustered = Dedup.dedupClusters(T(s, dir, "documents"), "doc_id", pairs)
         .select("doc_id", "component")
@@ -1066,16 +1056,7 @@ object LlmQueries {
       // corpus's standing band index — only new×corpus collisions are
       // generated, never corpus×corpus. Oracle: the full-corpus pair set
       // filtered to cross-boundary pairs must be identical.
-      // Project to the two columns the LSH chain reads BEFORE the
-      // parallelizing exchange (guide §2.3 "project before the
-      // exchange"), and size that exchange from the input bytes rather
-      // than a local[32] constant (Registry.spread — guide §2.2; the
-      // old 2×cores constant made downstream shuffles write 2048 files
-      // for 5000 docs).
-      val docs = Registry.spread(T(s, dir, "documents").select("doc_id", "text"))
-      val sh = Dedup.shingleArray(docs, "doc_id", "text", 3)
-      val sig = Dedup.minhashSignaturesNative(sh, "doc_id", 8)
-      val bands = Dedup.lshBands(sig, "doc_id", 8, 2)
+      val bands = lshPrologue(s, dir)._2
       Dedup.candidatePairsAcross(
         bands.filter(col("doc_id") >= 250),
         bands.filter(col("doc_id") < 250), "doc_id")
@@ -2350,9 +2331,7 @@ object LlmQueries {
       // 32 bytes/doc); the corpus is never re-decoded for the verify.
       videoVerifiedPairs(s, dir).orderBy("id_a", "id_b")
     }, Some(s"""WITH $videoHashCtes,
-              |vbands AS (SELECT doc_id, frame_idx * 4 + b.b AS band,
-              |    (phash >> CAST(14 * b.b AS INT)) & 16383 AS band_hash
-              |  FROM vph, range(4) b(b)),
+              |$vbandsCte,
               |vbsize AS (SELECT band, band_hash, count(*) AS n
               |  FROM vbands GROUP BY band, band_hash),
               |vbx AS (SELECT v.doc_id, v.band, v.band_hash, s.n > 64 AS oversized
@@ -2568,24 +2547,12 @@ object LlmQueries {
       // doc joined its cluster. Both edge frames are the existing
       // sub-quadratic banded chains; the union is one extra cheap
       // shuffle and Dedup.dedupClusters takes the edge frame as-is.
-      // Project to the two columns the LSH chain reads BEFORE the
-      // parallelizing exchange (guide §2.3 "project before the
-      // exchange"), and size that exchange from the input bytes rather
-      // than a local[32] constant (Registry.spread — guide §2.2; the
-      // old 2×cores constant made downstream shuffles write 2048 files
-      // for 5000 docs).
       // The two modality chains are independent until the union; their
       // eager checkpoints materialize CONCURRENTLY (Registry.inParallel,
       // guide §2.6) instead of back-to-back — the r14 sequence paid
       // text-chain wall + image-chain wall.
       val chains = Registry.inParallel(
-        () => {
-          val docs = Registry.spread(T(s, dir, "documents").select("doc_id", "text"))
-          val sh = Dedup.shingleArray(docs, "doc_id", "text", 3)
-          val sig = Dedup.minhashSignaturesNative(sh, "doc_id", 8)
-          val bands = Dedup.lshBands(sig, "doc_id", 8, 2)
-          Dedup.candidatePairs(bands, "doc_id").localCheckpoint(true)
-        },
+        () => Dedup.candidatePairs(lshPrologue(s, dir)._2, "doc_id").localCheckpoint(true),
         () => phashVerifiedPairs(s, dir)._2
           .select("id_a", "id_b").localCheckpoint(true))
       val textPairs = chains(0)
@@ -2648,12 +2615,6 @@ object LlmQueries {
       // pair granularity); the union adds ONE tagged degree aggregate
       // and one distinct — no modality is recomputed and nothing
       // quadratic appears at any corpus scale.
-      // Project to the two columns the LSH chain reads BEFORE the
-      // parallelizing exchange (guide §2.3 "project before the
-      // exchange"), and size that exchange from the input bytes rather
-      // than a local[32] constant (Registry.spread — guide §2.2; the
-      // old 2×cores constant made downstream shuffles write 2048 files
-      // for 5000 docs).
       // The four modality chains are independent until the union: build
       // them CONCURRENTLY (Registry.inParallel, guide §2.6) so the three
       // eager media checkpoints buried inside the helpers (image dHash,
@@ -2663,13 +2624,7 @@ object LlmQueries {
       // chains in one DAG — AQE schedules those independent stages
       // concurrently already).
       val legs = Registry.inParallel(
-        () => {
-          val docs = Registry.spread(T(s, dir, "documents").select("doc_id", "text"))
-          val sh = Dedup.shingleArray(docs, "doc_id", "text", 3)
-          val sig = Dedup.minhashSignaturesNative(sh, "doc_id", 8)
-          val tbands = Dedup.lshBands(sig, "doc_id", 8, 2)
-          Dedup.candidatePairs(tbands, "doc_id").withColumn("m", lit("text"))
-        },
+        () => Dedup.candidatePairs(lshPrologue(s, dir)._2, "doc_id").withColumn("m", lit("text")),
         () => phashVerifiedPairs(s, dir)._2
           .select("id_a", "id_b").withColumn("m", lit("image")),
         () => audioVerifiedPairs(s, dir)
@@ -2724,9 +2679,7 @@ object LlmQueries {
          |  GROUP BY c.id_a, c.id_b
          |  HAVING SUM(abs(a.s - b.s)) // 128 <= 16),
          |$videoHashCtes,
-         |vbands AS (SELECT doc_id, frame_idx * 4 + b.b AS band,
-         |    (phash >> CAST(14 * b.b AS INT)) & 16383 AS band_hash
-         |  FROM vph, range(4) b(b)),
+         |$vbandsCte,
          |${cappedEdgeCtes("v", "vbands")},
          |vvp AS (SELECT c.id_a, c.id_b
          |  FROM vcp c JOIN vph a ON a.doc_id = c.id_a
@@ -3470,16 +3423,7 @@ object LlmQueries {
       // Jaccard misses. Same LSH chain as llm_minhash_lsh_pairs, then
       // the shingle ARRAYS attach to the (tiny) candidate set — the
       // corpus-sized shingle stream never re-shuffles.
-      // Project to the two columns the LSH chain reads BEFORE the
-      // parallelizing exchange (guide §2.3 "project before the
-      // exchange"), and size that exchange from the input bytes rather
-      // than a local[32] constant (Registry.spread — guide §2.2; the
-      // old 2×cores constant made downstream shuffles write 2048 files
-      // for 5000 docs).
-      val docs = Registry.spread(T(s, dir, "documents").select("doc_id", "text"))
-      val sh = Dedup.shingleArray(docs, "doc_id", "text", 3)
-      val sig = Dedup.minhashSignaturesNative(sh, "doc_id", 8)
-      val bands = Dedup.lshBands(sig, "doc_id", 8, 2)
+      val (sh, bands) = lshPrologue(s, dir)
       val pairs = Dedup.candidatePairs(bands, "doc_id")
       Dedup.containmentPairs(sh, "doc_id", pairs)
         .select(col("id_a"), col("id_b"),
@@ -3590,9 +3534,8 @@ object LlmQueries {
       // full chain independently, ending in a recursive-CTE component
       // fixpoint.
       val docs = T(s, dir, "documents")
-      val sh = Dedup.shingleArray(docs, "doc_id", "text", 3)
-      val sig = Dedup.minhashSignaturesNative(sh, "doc_id", 8)
-      val cands = Dedup.candidatePairs(Dedup.lshBands(sig, "doc_id", 8, 2), "doc_id")
+      val (sh, bands) = lshPrologue(docs)
+      val cands = Dedup.candidatePairs(bands, "doc_id")
       val verified = Dedup.jaccardPairsFromArrays(sh, "doc_id", cands)
         .where(col("jaccard") >= 0.8)
       val clustered = Dedup.dedupClusters(docs.select("doc_id"), "doc_id",
@@ -3630,11 +3573,8 @@ object LlmQueries {
       val clones = s.range(1, 41).crossJoin(boiler)
         .select((col("id") + lit(1000000L)).as("doc_id"), col("text"))
       val docs = Registry.spread(base.unionByName(clones))
-      val sh = Dedup.shingleArray(docs, "doc_id", "text", 3)
-      val sig = Dedup.minhashSignaturesNative(sh, "doc_id", 8)
-      val cands = Dedup.candidatePairsCapped(
-          Dedup.lshBands(sig, "doc_id", 8, 2), "doc_id",
-          maxBucket = 16, reps = 4)
+      val (sh, bands) = lshPrologue(docs)
+      val cands = Dedup.candidatePairsCapped(bands, "doc_id", maxBucket = 16, reps = 4)
         .select("id_a", "id_b")
       val verified = Dedup.jaccardPairsFromArrays(sh, "doc_id", cands)
         .where(col("jaccard") >= 0.8)

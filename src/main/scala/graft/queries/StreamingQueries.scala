@@ -796,9 +796,7 @@ object StreamingQueries {
         })
       g.read("accepted_docs").orderBy("doc_id")
     }, Some(s"""WITH ${LlmQueries.videoHashCtes},
-               |vbands AS (SELECT doc_id, frame_idx * 4 + b.b AS band,
-               |    (phash >> CAST(14 * b.b AS INT)) & 16383 AS band_hash
-               |  FROM vph, range(4) b(b)),
+               |${LlmQueries.vbandsCte},
                |cand AS (SELECT DISTINCT n.doc_id, a.doc_id AS acc
                |  FROM vbands n JOIN vbands a
                |    ON n.band = a.band AND n.band_hash = a.band_hash

@@ -166,6 +166,23 @@ class MeasureSpec extends SparkTestBase {
       s"project luma through Multimodal.lumaPlane, found:\n${luma.mkString("\n")}")
   }
 
+  test("source sweep: the vector models ride the plan as literals, each spelling written once") {
+    val sim = "graft/llm/Similarity.scala:"
+    val pq = "graft/llm/Pq.scala:"
+    val literals = sourceHits("Literal.create").filter(_.startsWith("graft/llm/"))
+    assert(literals.size === 1,
+      s"build model literals through Similarity.centroidLiteral, found:\n${literals.mkString("\n")}")
+    for (token <- Seq("localCheckpoint", "max_by", "crossJoin(broadcast(cent))")) {
+      val hits = sourceHits(token).filter(_.startsWith(sim))
+      assert(hits.isEmpty, s"score centroids against the literal, found $token at:\n${hits.mkString("\n")}")
+    }
+    val guards = sourceHits("assert_true(size(").filter(_.startsWith(pq))
+    assert(guards.size === 1, s"check PQ vector dims through Pq.dimGuard, found:\n${guards.mkString("\n")}")
+    val ranks = sourceHits("row_number().over").filter(h => h.startsWith(sim) || h.startsWith(pq))
+    assert(ranks.size === 1,
+      s"rank per query through Similarity.rankPerQuery, found:\n${ranks.mkString("\n")}")
+  }
+
   test("source sweep: temp dirs are created in src/main only by Measure.tempDir") {
     val hits = sourceHits("createTempDirectory")
     assert(hits.nonEmpty && hits.forall(_.startsWith("graft/tools/Measure.scala:")),

@@ -226,6 +226,35 @@ class PqSpec extends SparkTestBase {
     assert(rawCodes.keySet.exists(id => rawCodes(id) != residCodes(id)))
   }
 
+  test("ivfPqResidualTopK: rows pinned bit for bit at nprobe 1 and 2") {
+    def rows(nprobe: Int, kTop: Int) = {
+      val out = Pq.ivfPqResidualTopK(vecs, vecs.filter(col("vec_id") >= 9),
+        vecs.filter(col("vec_id") < 3), "vec_id", "embedding", m, subDim,
+        k = 3, iters = 2, kTop = kTop, nprobe = nprobe)
+      assert(out.schema.simpleString ===
+        "struct<query_id:bigint,corpus_id:bigint,cluster_id:bigint,approx_d2:double,rank:int>")
+      out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        java.lang.Double.doubleToLongBits(r.getDouble(3)), r.getInt(4))).sorted.toSeq
+    }
+    val own = Seq(
+      (9L, 0L, 0L, 4587830290637771496L, 3), (9L, 3L, 0L, 4586987043195651742L, 2),
+      (9L, 6L, 0L, 4573467328477380171L, 1),
+      (10L, 1L, 1L, 4587830290637771499L, 3), (10L, 4L, 1L, 4586987043195651745L, 2),
+      (10L, 7L, 1L, 4573467328477380179L, 1),
+      (11L, 2L, 2L, 4587830290637771497L, 3), (11L, 5L, 2L, 4586987043195651744L, 2),
+      (11L, 8L, 2L, 4573467328477380175L, 1))
+    assert(rows(1, 3) === own)
+    // The second probe adds the next cluster's candidates; (9, 7) and
+    // (9, 10) tie on approx_d2 and rank by corpus id.
+    assert(rows(2, 6) === (own ++ Seq(
+      (9L, 4L, 1L, 4616193179900199757L, 4), (9L, 7L, 1L, 4616209761322332555L, 5),
+      (9L, 10L, 1L, 4616209761322332555L, 6),
+      (10L, 5L, 2L, 4616012645283957704L, 4), (10L, 8L, 2L, 4616063424079784060L, 5),
+      (10L, 11L, 2L, 4616063424079784060L, 6),
+      (11L, 1L, 1L, 4616244876279244205L, 6), (11L, 7L, 1L, 4616128519078263720L, 4),
+      (11L, 10L, 1L, 4616128519078263720L, 5))).sorted)
+  }
+
   test("subspaces fails loudly on a wrong-length vector") {
     val bad = Seq((0L, Array.fill(dim + 1)(0.5))).toDF("vec_id", "embedding")
     val ex = intercept[Exception] {
