@@ -2,9 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
-import graft.tools.Measure
+import graft.tools.{Measure, TimeQueries}
 import graft.tools.Measure.{median, timeProbe}
 
 /** Benchmark entry point. Runs the headline queries from
@@ -15,10 +13,16 @@ import graft.tools.Measure.{median, timeProbe}
   * contention — 110.8 s for a query that measures 1.2 s in isolation — and
   * a per-query median inside one pass cannot defend against multi-minute
   * host stalls):
+  *   - Every pass times its gates through [[TimeQueries.measure]], the one
+  *     gate timer; only the first pass warms each gate up first.
   *   - `raw` carries every per-iteration time, so a consumer can see the
-  *     spread that produced each median instead of trusting it.
+  *     spread that produced each median instead of trusting it, and
+  *     `metrics` carries the Spark counters of each gate's first-pass
+  *     median run (the full artifact only, not the compact stdout line).
   *   - After the full list, the k slowest queries are re-timed in a second
-  *     isolated pass (`reprobe`); when the two pass medians disagree
+  *     isolated pass (`reprobe`), k = max(5, ⌈n/8⌉) for n timed gates,
+  *     plus every gate reading far above its committed baseline; when the
+  *     two pass medians disagree
   *     materially (>1.25x) a THIRD pass adjudicates and the headline takes
   *     the median of the three pass medians — a stall must span two of
   *     three time-separated windows to reach `value`.
@@ -33,7 +37,7 @@ import graft.tools.Measure.{median, timeProbe}
   *
   * A failed query is reported as `-1` (never as the elapsed time of the
   * failed attempt) and the error goes to stderr, so a broken query can
-  * never masquerade as a fast one.
+  * never masquerade as a fast one: the rule of [[TimeQueries.measure]].
   *
   * The JSON line is also written to `BENCH_LATEST.json` in the working
   * directory, because sbt appends its own `[success]` line after stdout
@@ -86,21 +90,6 @@ object Bench {
       System.err.println(s"[bench] baseline load failed: $e"); None
     }
 
-  /** Time `iters` runs of a query; -1.0 entries mark failed runs. */
-  private def timeQuery(spark: SparkSession, sfDir: String, name: String,
-                        iters: Int): Seq[Double] = {
-    val fn = SparkEntry.queries(name)
-    (1 to iters).map { _ =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-          -1.0
-      }
-    }
-  }
-
   /** The headline gates named by `SPARK_GRAFT_BENCH_ONLY`'s
     * comma-separated value (a local-iteration subset); None, the default,
     * times the full headline list. */
@@ -125,8 +114,7 @@ object Bench {
     // Reprobe budget scales with the headline list (fixed 5 was sized
     // for 56 queries; the r11 TPC-DS widening to 68 pushed the dedup
     // family out of the isolated re-timing slots).
-    val reprobeK = sys.env.get("SPARK_GRAFT_BENCH_REPROBE_K").map(_.toInt)
-      .getOrElse(math.max(5, math.ceil(names.size / 8.0).toInt))
+    val reprobeK = math.max(5, math.ceil(names.size / 8.0).toInt)
     // One tiny warm-up action so JIT/classloading doesn't land on the
     // first measured query.
     try spark.range(1000).count() catch { case _: Throwable => }
@@ -136,19 +124,15 @@ object Bench {
     // Median-of-N per query (r3 verdict: single-run timings on this rig
     // swing ±25%; the median is robust to one contended outlier in
     // either direction, where min hides steady-state regressions).
-    val raw: Seq[(String, Seq[Double])] = names.map { name =>
-      // One untimed warm-up per query: the first execution pays one-off
-      // codegen compilation + JIT of the query's own operators (measured
-      // 3-4× the steady-state time on HOF-heavy queries), which is not
-      // the per-run cost the throughput target models. Data is NOT
-      // cached anywhere (no persist in any operator — guarded by
-      // LlmOpsSpec), so the timed runs still do all I/O and compute.
-      try SparkEntry.queries(name)(spark, sfDir).count() catch { case _: Throwable => }
-      name -> timeQuery(spark, sfDir, name, iters)
+    // One untimed warm-up per query (TimeQueries.warm). Data is NOT
+    // cached anywhere (no persist in any operator — guarded by
+    // LlmOpsSpec), so the timed runs still do all I/O and compute.
+    val raw = names.map { name =>
+      TimeQueries.warm(spark, sfDir, name)
+      TimeQueries.measure(spark, sfDir, name, iters)
     }
-    val firstPass: Seq[(String, Double)] = raw.map { case (name, times) =>
-      name -> (if (times.exists(_ < 0)) -1.0 else median(times))
-    }
+    def walls(pass: Seq[TimeQueries.Timed]) = pass.map(t => t.name -> t.wall)
+    val firstPass = walls(raw)
     val firstMap = firstPass.toMap
 
     val baseline = loadBaseline()
@@ -168,11 +152,8 @@ object Bench {
       }
     }.getOrElse(Seq.empty)
     val reprobeNames = (slowest ++ baselineSuspects).distinct
-    val reprobe: Seq[(String, Seq[Double])] =
-      reprobeNames.map(n => n -> timeQuery(spark, sfDir, n, iters))
-    val reprobeMed: Map[String, Double] = reprobe.map { case (n, ts) =>
-      n -> (if (ts.exists(_ < 0)) -1.0 else median(ts))
-    }.toMap
+    val reprobe = reprobeNames.map(TimeQueries.measure(spark, sfDir, _, iters))
+    val reprobeMed = walls(reprobe).toMap
 
     // Tiebreak pass (r15 measurement fix, documented in
     // OPTIMIZATION_r15.md): taking the reprobe median UNCONDITIONALLY
@@ -194,11 +175,8 @@ object Bench {
       m >= 0 && r >= 0 && math.max(m, r) > 0.2 &&
         math.max(m, r) > 1.25 * math.min(m, r)
     }
-    val tiebreak: Seq[(String, Seq[Double])] =
-      tiebreakNames.map(n => n -> timeQuery(spark, sfDir, n, iters))
-    val tiebreakMed: Map[String, Double] = tiebreak.map { case (n, ts) =>
-      n -> (if (ts.exists(_ < 0)) -1.0 else median(ts))
-    }.toMap
+    val tiebreak = tiebreakNames.map(TimeQueries.measure(spark, sfDir, _, iters))
+    val tiebreakMed = walls(tiebreak).toMap
     val finalPass: Seq[(String, Double)] = firstPass.map { case (name, m) =>
       val r = reprobeMed.getOrElse(name, m)
       val v = tiebreakMed.get(name) match {
@@ -208,8 +186,8 @@ object Bench {
       name -> (if (m < 0 || r < 0) -1.0 else v)
     }
 
-    val spreadSuspect = raw.exists { case (_, ts) =>
-      val ok = ts.filter(_ >= 0)
+    val spreadSuspect = raw.exists { t =>
+      val ok = t.runs.filter(_ >= 0)
       ok.nonEmpty && median(ok) > 0.05 && ok.max / median(ok) > 5.0
     }
     // Symmetric: a reprobe reading FAR ABOVE a clean first pass is the
@@ -228,9 +206,11 @@ object Bench {
     def fmtMap(m: Seq[(String, Double)], dp: Int = 3): String =
       m.map { case (k, v) => "\"" + k + "\":" + s"%.${dp}f".format(v) }
         .mkString("{", ",", "}")
-    def fmtRaw(m: Seq[(String, Seq[Double])]): String =
-      m.map { case (k, ts) => "\"" + k + "\":" + ts.map(t => f"$t%.3f").mkString("[", ",", "]") }
+    def fmtRaw(pass: Seq[TimeQueries.Timed]): String =
+      pass.map(t => "\"" + t.name + "\":" + t.runs.map(r => f"$r%.3f").mkString("[", ",", "]"))
         .mkString("{", ",", "}")
+    def fmtMetrics(pass: Seq[TimeQueries.Timed]): String =
+      pass.map(t => "\"" + t.name + "\":{" + t.counters.json + "}").mkString("{", ",", "}")
     def total(m: Seq[(String, Double)]): Double = {
       val ok = m.filter(_._2 >= 0)
       if (ok.nonEmpty) ok.map(_._2).sum else 0.0
@@ -272,6 +252,7 @@ object Bench {
       f""""queries_firstpass":${fmtMap(firstPass)},""" +
       f""""raw":${fmtRaw(raw)},"reprobe":${fmtRaw(reprobe)},""" +
       f""""tiebreak":${fmtRaw(tiebreak)},""" +
+      f""""metrics":${fmtMetrics(raw)},""" +
       f""""probe_sec":$probeSec%.3f,""" +
       adjudFields._1 + adjudFields._2 +
       f""""probe_start":${probeStart.map(t => f"$t%.3f").mkString("[", ",", "]")},""" +

@@ -39,26 +39,39 @@ object Checks {
   final case class CompositeKeyResult(check: String, columns: Seq[String], passed: Boolean,
       duplicateCount: Long, totalCount: Long) extends CheckResult
 
+  /** The not_null rule, shared by [[checkNotNull]] and [[fusedProfile]]:
+    * passes with no NULLs; the NULL share is a percentage rounded to two
+    * places (0 on an empty frame). */
+  private def notNullResult(column: String, nulls: Long, total: Long): NotNullResult =
+    NotNullResult("not_null", column, nulls == 0, nulls, total,
+      math.round(nulls.toDouble / math.max(total, 1L) * 10000.0) / 100.0)
+
+  /** The unique rule, shared by [[checkUnique]] and [[fusedProfile]]:
+    * count_distinct skips NULLs but the reference's
+    * `select(col).distinct().count()` counts a NULL group, so a column
+    * holding a NULL (`hasNull` 1) has one more distinct value. */
+  private def uniqueResult(column: String, total: Long, distinct: Long,
+      hasNull: Long): UniqueResult = {
+    val d = distinct + hasNull
+    UniqueResult("unique", column, total - d == 0, total - d, total, d)
+  }
+
   /** dbt `not_null` test (`data_quality_checks.py:14-25`). */
   def checkNotNull(df: DataFrame, column: String): NotNullResult = {
     val Row(nulls: Long, total: Long) = df
       .agg(count(when(col(column).isNull, lit(1))).as("nulls"), count(lit(1)).as("total"))
       .head()
-    NotNullResult("not_null", column, nulls == 0, nulls, total,
-      math.round(nulls.toDouble / math.max(total, 1L) * 10000.0) / 100.0)
+    notNullResult(column, nulls, total)
   }
 
-  /** dbt `unique` test (`data_quality_checks.py:28-40`). One job:
-    * count_distinct skips NULLs but the reference's
-    * `select(col).distinct().count()` counts a NULL group, so the same
-    * aggregate also detects null presence. */
+  /** dbt `unique` test (`data_quality_checks.py:28-40`). One job: the
+    * same aggregate counts distinct values and detects null presence. */
   def checkUnique(df: DataFrame, column: String): UniqueResult = {
-    val Row(total: Long, distinct: Long, nullGroups: Int) = df
+    val Row(total: Long, distinct: Long, hasNull: Int) = df
       .agg(count(lit(1)).as("total"), count_distinct(col(column)).as("distinct"),
         coalesce(max(when(col(column).isNull, lit(1)).otherwise(0)), lit(0)).as("hasnull"))
       .head()
-    val d = distinct + nullGroups
-    UniqueResult("unique", column, total - d == 0, total - d, total, d)
+    uniqueResult(column, total, distinct, hasNull)
   }
 
   final case class ApproxDistinctResult(check: String, column: String, passed: Boolean,
@@ -198,19 +211,16 @@ object Checks {
     * invalid-value count) plus the table total computed in a SINGLE
     * aggregate over the data — the 100 TB replacement for the reference's
     * one-job-per-check pattern. Exact distinct counts shuffle by nature;
-    * pass `approxDistinct=true` to use HLL (`approx_count_distinct`) when
-    * a small uniqueness-error tolerance is acceptable at scale.
+    * [[checkApproxDistinct]] is the HLL path when a small
+    * uniqueness-error tolerance is acceptable at scale.
     */
-  def fusedProfile(df: DataFrame, specs: Seq[ColumnSpec], approxDistinct: Boolean = false): Map[String, CheckResult] = {
+  def fusedProfile(df: DataFrame, specs: Seq[ColumnSpec]): Map[String, CheckResult] = {
     val aggs = Seq(count(lit(1)).as("__total")) ++ specs.flatMap { s =>
       val c = col(s.column)
       val n = s.column
       Seq(
         if (s.notNull) Some(count(when(c.isNull, lit(1))).as(s"__nulls__$n")) else None,
-        if (s.unique) {
-          val d = if (approxDistinct) approx_count_distinct(c) else count_distinct(c)
-          Some(d.as(s"__distinct__$n"))
-        } else None,
+        if (s.unique) Some(count_distinct(c).as(s"__distinct__$n")) else None,
         if (s.unique) Some(max(when(c.isNull, lit(1)).otherwise(lit(0))).as(s"__hasnull__$n")) else None,
         s.acceptedValues.map(vs =>
           count(when(!c.isin(vs: _*), lit(1))).as(s"__invalid__$n"))
@@ -223,15 +233,11 @@ object Checks {
     val total = l("__total")
     specs.flatMap { s =>
       val n = s.column
-      val notNullRes = if (s.notNull) {
-        val nulls = l(s"__nulls__$n")
-        Some(s"not_null_$n" -> NotNullResult("not_null", n, nulls == 0, nulls, total,
-          math.round(nulls.toDouble / math.max(total, 1L) * 10000.0) / 100.0))
-      } else None
-      val uniqueRes = if (s.unique) {
-        val d = l(s"__distinct__$n") + l(s"__hasnull__$n")
-        Some(s"unique_$n" -> UniqueResult("unique", n, total - d == 0, total - d, total, d))
-      } else None
+      val notNullRes =
+        if (s.notNull) Some(s"not_null_$n" -> notNullResult(n, l(s"__nulls__$n"), total)) else None
+      val uniqueRes = if (s.unique)
+        Some(s"unique_$n" -> uniqueResult(n, total, l(s"__distinct__$n"), l(s"__hasnull__$n")))
+      else None
       val acceptedRes = s.acceptedValues.map { vs =>
         val inv = l(s"__invalid__$n")
         s"accepted_values_$n" -> AcceptedValuesResult("accepted_values", n, inv == 0,

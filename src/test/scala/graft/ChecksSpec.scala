@@ -1,6 +1,7 @@
 package graft
 
 import graft.quality.Checks
+import graft.tools.Measure
 
 /** Port of `tests/test_data_quality.py:16-69` plus the fused profile and
   * the checks the reference's suite missed (row-count range, composite
@@ -31,6 +32,27 @@ class ChecksSpec extends SparkTestBase {
     // reference counts NULL as one distinct group: 4 rows, distinct {1,2,null} = 3
     val r = Checks.checkUnique(Seq[Option[Int]](Some(1), Some(2), None, None).toDF("id"), "id")
     assert(r.distinctCount === 3 && r.duplicateCount === 1)
+  }
+
+  test("not_null on an empty frame and an all-NULL column: result and job count") {
+    val (empty, emptyC) = Measure.counted(spark)(
+      Checks.checkNotNull(Seq.empty[Option[Int]].toDF("id"), "id"))
+    assert(empty === Checks.NotNullResult("not_null", "id", true, 0L, 0L, 0.0))
+    val (allNull, allNullC) = Measure.counted(spark)(
+      Checks.checkNotNull(Seq[Option[Int]](None, None, None).toDF("id"), "id"))
+    assert(allNull === Checks.NotNullResult("not_null", "id", false, 3L, 3L, 100.0))
+    assert((emptyC.jobs, allNullC.jobs) === ((1, 2)))
+  }
+
+  test("unique on an empty frame and an all-NULL column: result and job count") {
+    val (empty, emptyC) = Measure.counted(spark)(
+      Checks.checkUnique(Seq.empty[Option[Int]].toDF("id"), "id"))
+    assert(empty === Checks.UniqueResult("unique", "id", true, 0L, 0L, 0L))
+    // The NULL group counts as one distinct value, so two of three rows duplicate it.
+    val (allNull, allNullC) = Measure.counted(spark)(
+      Checks.checkUnique(Seq[Option[Int]](None, None, None).toDF("id"), "id"))
+    assert(allNull === Checks.UniqueResult("unique", "id", false, 2L, 3L, 1L))
+    assert((emptyC.jobs, allNullC.jobs) === ((1, 3)))
   }
 
   test("accepted_values passes when all valid") {

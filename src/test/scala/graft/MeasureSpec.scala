@@ -49,6 +49,40 @@ class MeasureSpec extends SparkTestBase {
     assert((gate \ "incomplete") === JBool(false))
   }
 
+  test("measure: a gate that throws on every run reads -1 with every run -1, and does not throw") {
+    // tpch_q1 over a missing corpus dir fails at analysis on every run.
+    val missing = Paths.get(Measure.tempDir("graft_nosf"), "absent").toString
+    val t = TimeQueries.measure(spark, missing, "tpch_q1", iters = 2)
+    assert(t.wall === -1.0 && t.runs === Seq(-1.0, -1.0))
+    // A failed gate carries the counters of its first failed run; this
+    // one throws before it starts a job.
+    assert(t.counters.jobs === 0 && t.counters.tasks === 0 && !t.counters.incomplete)
+  }
+
+  test("TimeQueries.main reports a failing gate as -1 and still times the gates after it") {
+    // main stops its session, so it runs in a JVM of its own.
+    val dir = Measure.tempDir("graft_tq")
+    val missing = Paths.get(dir, "absent").toString
+    val (out, err) = (Paths.get(dir, "stdout.txt"), Paths.get(dir, "stderr.txt"))
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filterNot(_.startsWith("-Xmx")).toSeq
+    val cmd = Seq(Paths.get(System.getProperty("java.home"), "bin", "java").toString) ++
+      jvmArgs ++ Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
+        "graft.tools.TimeQueries", missing, "1", "tpch_q1", "w1_dim_date_spine")
+    val pb = new ProcessBuilder(cmd: _*).redirectOutput(out.toFile).redirectError(err.toFile)
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
+    val proc = pb.start()
+    val exited = proc.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
+    if (!exited) proc.destroyForcibly()
+    def stderrTail = Files.readAllLines(err).asScala.takeRight(20).mkString("\n")
+    assert(exited && proc.exitValue() === 0, stderrTail)
+    val json = JsonMethods.parse(Files.readAllLines(out).asScala.filter(_.startsWith("{")).last)
+    assert((json \ "tpch_q1" \ "wall") === JDouble(-1.0))
+    assert((json \ "tpch_q1" \ "runs") === JArray(List(JDouble(-1.0))))
+    val JDouble(wall) = json \ "w1_dim_date_spine" \ "wall"
+    assert(wall >= 0.0 && (json \ "w1_dim_date_spine" \ "runs").asInstanceOf[JArray].arr.size === 1)
+  }
+
   test("gate-name filters reject an unknown name, naming it") {
     // Verify's SPARK_GRAFT_ONLY, Bench's SPARK_GRAFT_BENCH_ONLY and the
     // TimeQueries arguments all go through SparkEntry.knownGates.
@@ -181,6 +215,12 @@ class MeasureSpec extends SparkTestBase {
     val ranks = sourceHits("row_number().over").filter(h => h.startsWith(sim) || h.startsWith(pq))
     assert(ranks.size === 1,
       s"rank per query through Similarity.rankPerQuery, found:\n${ranks.mkString("\n")}")
+  }
+
+  test("source sweep: graft.Bench has no timing loop of its own") {
+    val hits = sourceHits("System.nanoTime").filter(_.startsWith("graft/Bench.scala:"))
+    assert(hits.isEmpty,
+      s"time headline gates through graft.tools.TimeQueries.measure, found:\n${hits.mkString("\n")}")
   }
 
   test("source sweep: temp dirs are created in src/main only by Measure.tempDir") {
