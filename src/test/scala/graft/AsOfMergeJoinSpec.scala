@@ -90,6 +90,19 @@ class AsOfMergeJoinSpec extends SparkTestBase {
     assert(s.contains("Sort ["), s"merge inputs must be sorted:\n$s")
   }
 
+  test("asof installs nothing on the session: the strategy comes from GraftExtensions") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val out = AsOfJoin.asof(trades, quotes, Seq("sym"), "t_ts", "q_ts")
+    assert(out.collect().length === 6)
+    assert(spark.experimental.extraStrategies.isEmpty,
+      s"asof touched the session: ${spark.experimental.extraStrategies}")
+    val plan = out.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+      case other => other.toString
+    }
+    assert(plan.contains("AsOfMergeJoin"), plan)
+  }
+
   test("left-outer cardinality: every left row survives exactly once") {
     // 200 trades across 5 symbols, quotes only for 3 of them.
     val t = spark.range(200).select(

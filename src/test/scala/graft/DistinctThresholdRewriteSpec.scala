@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.plans.DistinctThresholdRewrite
 
 /** [[graft.plans.DistinctThresholdRewrite]]: the HAVING
   * count(DISTINCT x) >= 2 → min(x) <> max(x) optimizer rule. Verifies
@@ -12,16 +11,22 @@ import graft.plans.DistinctThresholdRewrite
   */
 class DistinctThresholdRewriteSpec extends SparkTestBase {
 
-  private def withRule[A](f: => A): A = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ DistinctThresholdRewrite
-    spark.conf.set(DistinctThresholdRewrite.EnabledKey, "true")
+  private val ExcludedRules = "spark.sql.optimizer.excludedRules"
+
+  /** `f` with the rule switched off through Spark's own excluded-rules
+    * conf: the un-rewritten baseline every rewrite is compared to. */
+  private def unrewritten[A](f: => A): A = {
+    spark.conf.set(ExcludedRules, "graft.plans.DistinctThresholdRewrite")
     try f
-    finally {
-      spark.conf.set(DistinctThresholdRewrite.EnabledKey, "false")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == DistinctThresholdRewrite)
-    }
+    finally spark.conf.unset(ExcludedRules)
+  }
+
+  /** The distinct aggregates left in a frame's optimized plan. */
+  private def distinctAggs(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case a: AggregateExpression if a.isDistinct => a
+    }))
   }
 
   private def fixture() = {
@@ -44,8 +49,8 @@ class DistinctThresholdRewriteSpec extends SparkTestBase {
 
   test("rewrites HAVING count(DISTINCT) >= 2 and preserves semantics") {
     fixture().createOrReplaceTempView("t")
-    val plain = spark.sql(having).collect().map(_.getString(0))
-    val (rewritten, plan) = withRule {
+    val plain = unrewritten(spark.sql(having).collect().map(_.getString(0)))
+    val (rewritten, plan) = {
       val df = spark.sql(having)
       (df.collect().map(_.getString(0)), df.queryExecution.executedPlan.toString)
     }
@@ -65,7 +70,7 @@ class DistinctThresholdRewriteSpec extends SparkTestBase {
     for (cond <- Seq("2 <= count(DISTINCT v)", "count(DISTINCT v) > 1",
         "1 < count(DISTINCT v)")) {
       val q = s"SELECT g FROM t GROUP BY g HAVING $cond ORDER BY g"
-      val (rows, plan) = withRule {
+      val (rows, plan) = {
         val df = spark.sql(q)
         (df.collect().map(_.getString(0)), df.queryExecution.executedPlan.toString)
       }
@@ -81,8 +86,8 @@ class DistinctThresholdRewriteSpec extends SparkTestBase {
     for (cond <- Seq("count(DISTINCT v) <= 1", "count(DISTINCT v) < 2",
         "1 >= count(DISTINCT v)", "2 > count(DISTINCT v)")) {
       val q = s"SELECT g FROM t GROUP BY g HAVING $cond ORDER BY g"
-      val plain = spark.sql(q).collect().map(_.getString(0))
-      val (rows, plan) = withRule {
+      val plain = unrewritten(spark.sql(q).collect().map(_.getString(0)))
+      val (rows, plan) = {
         val df = spark.sql(q)
         (df.collect().map(_.getString(0)), df.queryExecution.executedPlan.toString)
       }
@@ -112,8 +117,8 @@ class DistinctThresholdRewriteSpec extends SparkTestBase {
         // complementary family in the same context (already null-safe)
         "(count(DISTINCT v) <= 1) = (max(v) IS NULL)" -> Seq("g1", "g4", "g5"))) {
       val q = s"SELECT g FROM t GROUP BY g HAVING $cond ORDER BY g"
-      val plain = spark.sql(q).collect().map(_.getString(0)).toSeq
-      val (rows, plan) = withRule {
+      val plain = unrewritten(spark.sql(q).collect().map(_.getString(0)).toSeq)
+      val (rows, plan) = {
         val df = spark.sql(q)
         (df.collect().map(_.getString(0)).toSeq,
           df.queryExecution.executedPlan.toString)
@@ -145,8 +150,8 @@ class DistinctThresholdRewriteSpec extends SparkTestBase {
       "SELECT g FROM t GROUP BY g HAVING count(DISTINCT g, v) >= 2 ORDER BY g")
     for (q <- noFire) {
       val (plainRows, (ruleRows, plan)) = (
-        spark.sql(q).collect().toSeq,
-        withRule {
+        unrewritten(spark.sql(q).collect().toSeq),
+        {
           val df = spark.sql(q)
           (df.collect().toSeq, df.queryExecution.executedPlan.toString)
         })
@@ -156,32 +161,33 @@ class DistinctThresholdRewriteSpec extends SparkTestBase {
   }
 
   test("fires when installed via GraftExtensions (injectOptimizerRule)") {
-    // The gates install through experimental.extraOptimizations; the
-    // plug-in route (spark.sql.extensions) must behave identically.
-    import org.apache.spark.sql.SparkSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
-      assert(s2 ne spark)
-      import s2.implicits._
-      Seq(("g1", Some("a")), ("g1", Some("b")), ("g2", Some("a")),
-        ("g2", Some("a"))).toDF("g", "v").createOrReplaceTempView("t2")
-      s2.conf.set(DistinctThresholdRewrite.EnabledKey, "true")
-      try {
-        val df = s2.sql(
-          "SELECT g FROM t2 GROUP BY g HAVING count(DISTINCT v) >= 2 ORDER BY g")
-        assert(df.collect().map(_.getString(0)).toSeq == Seq("g1"))
-        val plan = df.queryExecution.executedPlan.toString
-        assert(!plan.contains("count("),
-          s"rule did not fire through the extension route:\n$plan")
-      } finally s2.conf.set(DistinctThresholdRewrite.EnabledKey, "false")
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
+    // The shared session comes from Measure.session, which installs
+    // GraftExtensions: the rule is on with nothing set or installed.
+    import spark.implicits._
+    Seq(("g1", Some("a")), ("g1", Some("b")), ("g2", Some("a")),
+      ("g2", Some("a"))).toDF("g", "v").createOrReplaceTempView("t2")
+    val df = spark.sql(
+      "SELECT g FROM t2 GROUP BY g HAVING count(DISTINCT v) >= 2 ORDER BY g")
+    assert(df.collect().map(_.getString(0)).toSeq == Seq("g1"))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("count("),
+      s"rule did not fire through the extension route:\n$plan")
+  }
+
+  test("on in every session; spark.sql.optimizer.excludedRules switches it off") {
+    fixture().createOrReplaceTempView("t")
+    assert(distinctAggs(spark.sql(having)).isEmpty,
+      s"distinct aggregate survived:\n${spark.sql(having).queryExecution.optimizedPlan}")
+    val baseline = unrewritten(distinctAggs(spark.sql(having)))
+    assert(baseline.size === 1, s"excluded rule still fired: $baseline")
+    assert(distinctAggs(spark.sql(having)).isEmpty, "the exclusion outlived its scope")
+  }
+
+  test("a25's optimized plan has no distinct aggregate") {
+    val a25 = SparkEntry.queries("a25_distinct_threshold_rewrite")(spark, "/root/testdata/sf0.001")
+    val plan = a25.queryExecution.optimizedPlan
+    assert(plan.toString.contains("min(l_suppkey") && distinctAggs(a25).isEmpty,
+      s"a25 kept its distinct aggregate:\n$plan")
   }
 
   test("agrees with the distinct spelling on driver data (suppliers per part)") {
@@ -190,8 +196,8 @@ class DistinctThresholdRewriteSpec extends SparkTestBase {
               |HAVING count(DISTINCT l_suppkey) >= 2
               |ORDER BY l_partkey""".stripMargin
     graft.queries.Registry.T(spark, dir, "lineitem").createOrReplaceTempView("li")
-    val plain = spark.sql(q).collect().map(_.getLong(0))
-    val rewritten = withRule(spark.sql(q).collect().map(_.getLong(0)))
+    val plain = unrewritten(spark.sql(q).collect().map(_.getLong(0)))
+    val rewritten = spark.sql(q).collect().map(_.getLong(0))
     assert(plain.nonEmpty && rewritten.toSeq == plain.toSeq)
   }
 }

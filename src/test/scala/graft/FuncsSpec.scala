@@ -66,7 +66,6 @@ class FuncsSpec extends SparkTestBase {
   }
 
   test("SQL UDF registration mirrors the Column helpers") {
-    Funcs.registerSqlFunctions(spark)
     val r = spark.sql(
       "SELECT mask_email('john.doe@corp.com') AS e, mask_name('Smith') AS n").head()
     assert(r.getString(0) === "jo***@***.***" && r.getString(1) === "S****")

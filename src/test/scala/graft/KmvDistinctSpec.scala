@@ -87,7 +87,6 @@ class KmvDistinctSpec extends SparkTestBase {
   }
 
   test("SQL registration: kmv_distinct(hash, k) resolves and aggregates") {
-    KmvDistinct.register(spark)
     hashed(40, 2).createOrReplaceTempView("kmv_in")
     val est = spark.sql("SELECT kmv_distinct(hv, 64) FROM kmv_in").head().getLong(0)
     assert(est === 40L)

@@ -160,6 +160,17 @@ class MeasureSpec extends SparkTestBase {
       s"build sessions through graft.tools.Measure.session, found:\n${hits.mkString("\n")}")
   }
 
+  test("source sweep: extensions are installed in src/main only by the session factory") {
+    val hits = sourceHits("withExtensions")
+    assert(hits.size === 1 && hits.head.startsWith("graft/tools/Measure.scala:"),
+      s"install graft.plans.GraftExtensions through Measure.session, found:\n${hits.mkString("\n")}")
+    for (token <- Seq("experimental.", "registerFunction", "TEMPORARY FUNCTION")) {
+      val other = sourceHits(token)
+      assert(other.isEmpty,
+        s"inject functions, rules and strategies through GraftExtensions, found $token at:\n${other.mkString("\n")}")
+    }
+  }
+
   test("source sweep: streams are started and awaited in src/main only by the AvailableNow harness") {
     for (token <- Seq("Trigger.AvailableNow", "awaitTermination")) {
       val hits = sourceHits(token)

@@ -110,7 +110,6 @@ class PlansStreamingSpec extends SparkTestBase {
   }
 
   test("jaccard_sorted registers as a SQL function, disjoint and identical cases") {
-    graft.plans.SortedJaccard.register(spark)
     val same = spark.sql(
       "SELECT jaccard_sorted(array('a','b'), array('a','b')) AS j").head().getDouble(0)
     assert(same === 1.0)
@@ -127,7 +126,6 @@ class PlansStreamingSpec extends SparkTestBase {
   }
 
   test("cosine_similarity registers as a SQL function") {
-    CosineSimilarity.register(spark)
     val sim = spark.sql(
       "SELECT cosine_similarity(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS s").head().getDouble(0)
     assert(sim === 1.0)
@@ -137,25 +135,25 @@ class PlansStreamingSpec extends SparkTestBase {
   }
 
   test("GraftExtensions injects cosine_similarity via SparkSessionExtensions") {
-    import org.apache.spark.sql.SparkSession
-    // Build a REAL second session over the same SparkContext with the
-    // extension installed (getOrCreate only applies extensions to newly
-    // created sessions, so clear the defaults around it).
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
-      assert(s2 ne spark)
-      val sim = s2.sql(
-        "SELECT cosine_similarity(array(3.0D, 4.0D), array(3.0D, 4.0D)) AS s")
-        .head().getDouble(0)
-      assert(math.abs(sim - 1.0) < 1e-15)
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
+    // The shared session is built by Measure.session, which installs
+    // GraftExtensions: all eight graft SQL names resolve with no
+    // per-session registration.
+    val r = spark.sql(
+      """SELECT cosine_similarity(array(3.0D, 4.0D), array(3.0D, 4.0D)) AS cos,
+        |  dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS dot,
+        |  euclidean_distance(array(0.0D, 0.0D), array(3.0D, 4.0D)) AS l2,
+        |  jaccard_sorted(array('a', 'b'), array('b', 'c')) AS jac,
+        |  mask_email('john.doe@corp.com') AS email,
+        |  mask_name('Smith') AS name""".stripMargin).head()
+    assert(math.abs(r.getDouble(0) - 1.0) < 1e-15)
+    assert(r.getDouble(1) === 11.0 && r.getDouble(2) === 5.0 && r.getDouble(3) === 1.0 / 3.0)
+    assert(r.getString(4) === "jo***@***.***" && r.getString(5) === "S****")
+    val agg = spark.sql(
+      """SELECT kmv_distinct(id % 7, 64) AS kmv,
+        |  topk_by_score(CAST(id AS DOUBLE), id, 2) AS top FROM range(20)""".stripMargin)
+      .selectExpr("kmv", "transform(top, t -> t.id) AS ids").head()
+    assert(agg.getLong(0) === 7L)
+    assert(agg.getSeq[Long](1) === Seq(19L, 18L))
   }
 
   test("RangeJoinRewrite turns a BETWEEN nested-loop join into a bucketed equi-join") {
@@ -171,8 +169,6 @@ class PlansStreamingSpec extends SparkTestBase {
     val expected = theta.collect().toSeq // rule OFF: nested-loop baseline
     val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RangeJoinRewrite
     spark.conf.set(RangeJoinRewrite.BucketSizeKey, "32")
     try {
       val rewritten = theta
@@ -184,8 +180,6 @@ class PlansStreamingSpec extends SparkTestBase {
         s"expected an equi-join on the bucket:\n$plan")
     } finally {
       spark.conf.unset(RangeJoinRewrite.BucketSizeKey)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq RangeJoinRewrite)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
     }
   }
@@ -194,8 +188,6 @@ class PlansStreamingSpec extends SparkTestBase {
     import graft.plans.RangeJoinRewrite
     val a = Seq((1L, 5L)).toDF("pid", "p")
     val b = Seq((1L, 0L, 9L)).toDF("iid", "lo", "hi")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RangeJoinRewrite
     try {
       // Conf unset → rule is a no-op even when installed.
       val off = a.join(b, col("p") >= col("lo") && col("p") <= col("hi"))
@@ -207,11 +199,7 @@ class PlansStreamingSpec extends SparkTestBase {
       val matched = a.join(b, col("p") >= col("lo") && col("p") <= col("hi"))
       assert(matched.queryExecution.optimizedPlan.toString.contains("_bucket_l"))
       assert(matched.collect().map(r => (r.getLong(0), r.getLong(2))).toSeq === Seq((1L, 1L)))
-    } finally {
-      spark.conf.unset(RangeJoinRewrite.BucketSizeKey)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq RangeJoinRewrite)
-    }
+    } finally spark.conf.unset(RangeJoinRewrite.BucketSizeKey)
   }
 
   test("CosineSimilarity rejects non-array-double inputs at analysis") {

@@ -74,7 +74,6 @@ class TopKByScoreSpec extends SparkTestBase {
   }
 
   test("SQL registration: topk_by_score(score, id, k) resolves") {
-    TopKByScore.register(spark)
     sample(4).createOrReplaceTempView("topk_in")
     val n = spark.sql(
       "SELECT g, topk_by_score(score, id, 3) AS top FROM topk_in GROUP BY g")
