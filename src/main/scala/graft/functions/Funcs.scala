@@ -42,23 +42,9 @@ object Funcs {
       .otherwise(concat(substring(c, 1, 2), lit("***@***.***")))
 
   /** Name masking: first char + repeat('*', length-1)
-    * (`governance/access_controls.sql:65-70`). */
+    * (`governance/access_controls.sql:65-70`). [[graft.plans.GraftExtensions]]
+    * serves this and [[maskEmail]] to SQL as `mask_name` / `mask_email`. */
   def maskName(c: Column): Column =
     when(c.isNull || length(c) === 0, c)
       .otherwise(concat(substring(c, 1, 1), repeat(lit("*"), (length(c) - 1).cast(IntegerType))))
-
-  /** Register `mask_email` / `mask_name` as SQL scalar functions on the
-    * session (SQL-UDF surface of `access_controls.sql:50-70`). */
-  def registerSqlFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sql(
-      """CREATE OR REPLACE TEMPORARY FUNCTION mask_email(e STRING) RETURNS STRING
-        |RETURN CASE WHEN e IS NULL THEN NULL
-        |  ELSE concat(substring(e, 1, 2), '***@***.***') END
-        |""".stripMargin)
-    spark.sql(
-      """CREATE OR REPLACE TEMPORARY FUNCTION mask_name(n STRING) RETURNS STRING
-        |RETURN CASE WHEN n IS NULL OR length(n) = 0 THEN n
-        |  ELSE concat(substring(n, 1, 1), repeat('*', length(n) - 1)) END
-        |""".stripMargin)
-  }
 }

@@ -118,7 +118,6 @@ object AccessControls {
     * query the view, never the base table). */
   def createMaskedPolicyView(spark: SparkSession, dimPolicyTable: String,
       viewName: String): Unit = {
-    Funcs.registerSqlFunctions(spark)
     val maskedCols = spark.read.table(dimPolicyTable).columns.toSeq.map {
       case c if PolicyPiiNameCols.contains(c) => s"mask_name($c) AS $c"
       case c if c == PolicyPiiEmailCol => s"mask_email($c) AS $c"

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, IntegerType, ShortType, ByteType, StringType}
 import org.apache.spark.util.sketch.BloomFilter
@@ -38,10 +38,17 @@ object BloomPrune {
   /** One pass over `dim` building the sketch. `expectedItems` is the
     * caller's cardinality estimate — oversizing only wastes
     * `1.2 bytes/key / fpp-decade`; undersizing degrades fpp, never
-    * correctness. */
+    * correctness. The aggregate is `dim.stat.bloomFilter`'s, read here
+    * directly because it is NULL over no rows: an empty `dim` gives the
+    * empty filter, which no key passes. */
   def buildFilter(dim: DataFrame, keyCol: String, expectedItems: Long,
-      fpp: Double = 0.01): BloomFilter =
-    dim.stat.bloomFilter(keyCol, expectedItems, fpp)
+      fpp: Double = 0.01): BloomFilter = {
+    val numBits = BloomFilter.optimalNumOfBits(expectedItems, fpp)
+    val bytes = dim.select(GraftSqlBridge.bloomFilterAgg(col(keyCol), expectedItems, numBits))
+      .head().getAs[Array[Byte]](0)
+    if (bytes == null) BloomFilter.create(expectedItems, numBits)
+    else BloomFilter.readFrom(bytes)
+  }
 
   /** Keep the fact rows whose key MIGHT be in the sketch (plus nothing
     * with a NULL key — an equi-join never matches NULL). No false
@@ -57,7 +64,6 @@ object BloomPrune {
     * ships serialized in the plan fragment, deserialized once per
     * task. */
   def prune(fact: DataFrame, keyCol: String, bf: BloomFilter): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
     val probe = fact.schema(keyCol).dataType match {
       case LongType | IntegerType | ShortType | ByteType =>
         GraftSqlBridge.column(graft.plans.BloomMightContain(
@@ -71,13 +77,13 @@ object BloomPrune {
     fact.filter(col(keyCol).isNotNull && probe)
   }
 
-  /** Bloom-prune `fact`, then run the EXACT equi-join against `dim` —
-    * false positives die in the join, so the result is identical to the
-    * un-pruned join; only the shuffled volume changes. */
+  /** Bloom-prune `fact`, then run the EXACT inner equi-join against
+    * `dim` — false positives die in the join, so the result is identical
+    * to the un-pruned join; only the shuffled volume changes. Inner only:
+    * an outer or anti join must keep the fact rows the prune drops. */
   def prunedEquiJoin(fact: DataFrame, factKey: String, dim: DataFrame,
-      dimKey: String, expectedItems: Long, fpp: Double = 0.01,
-      joinType: String = "inner"): DataFrame = {
+      dimKey: String, expectedItems: Long, fpp: Double = 0.01): DataFrame = {
     val bf = buildFilter(dim, dimKey, expectedItems, fpp)
-    prune(fact, factKey, bf).join(dim, col(factKey) === col(dimKey), joinType)
+    prune(fact, factKey, bf).join(dim, col(factKey) === col(dimKey))
   }
 }

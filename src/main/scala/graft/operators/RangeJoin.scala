@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, If, IntegralDivide, LessThan, Literal, Remainder, Subtract}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Point-in-interval (range) join without the nested-loop trap.
   *
@@ -23,16 +25,26 @@ import org.apache.spark.sql.functions._
   * literature); here it is explicit dataframe algebra Catalyst fully
   * optimizes.
   *
-  * All-integer bucket arithmetic (`pmod`-based floordiv), exact for any
-  * long domain including negatives — no double rounding at nanosecond
+  * All-integer bucket arithmetic ([[bucket]]), exact for any long
+  * domain including negatives — no double rounding at nanosecond
   * magnitudes.
   */
 object RangeJoin {
 
-  /** Exact floor division for long columns (integer `div` truncates
-    * toward zero, which mis-buckets negative values). */
+  /** The bucket of `x` for width `b > 0`: `Math.floorDiv(x, b)` as a
+    * Catalyst expression over `x` cast to LONG. Integer `div` truncates
+    * toward zero, so a negative `x` off a bucket edge steps down by one.
+    * Nothing overflows, `Long.MinValue` included (`x - pmod(x, b)` does
+    * within `b` of it). [[graft.plans.RangeJoinRewrite]] buckets with it
+    * too. */
+  private[graft] def bucket(x: Expression, b: Long): Expression = {
+    val xl = Cast(x, LongType)
+    Subtract(new IntegralDivide(xl, Literal(b)),
+      If(LessThan(Remainder(xl, Literal(b)), Literal(0L)), Literal(1L), Literal(0L)))
+  }
+
   private def floorDiv(c: Column, b: Long): Column =
-    ((c - pmod(c, lit(b))) / b).cast("long")
+    GraftSqlBridge.column(bucket(GraftSqlBridge.expression(c), b))
 
   /** Join each point row to every interval row whose `[loCol, hiCol]`
     * (inclusive) contains `pointCol`. `extraKeys` are equi-join keys

@@ -10,9 +10,9 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** Backward (inclusive) AS-OF join as a first-class operator: logical
   * node → planner strategy → physical partition-wise merge — the
-  * whole-operator extension route (`SparkSessionExtensions` /
-  * `experimental.extraStrategies`) for semantics Spark's built-in
-  * operators don't carry natively.
+  * whole-operator extension route (`SparkSessionExtensions`, installed
+  * by [[GraftExtensions]]) for semantics Spark's built-in operators
+  * don't carry natively.
   *
   * Each left row (key, ts) is joined to the right row with the same key
   * and the GREATEST right ts ≤ left ts, or nulls when no such row
@@ -56,9 +56,8 @@ case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinPlan]] into [[AsOfMergeJoinExec]]. Registered via
-  * [[GraftExtensions]] (`injectPlannerStrategy`) or lazily through
-  * [[AsOfJoin.asof]]'s `experimental.extraStrategies` hook. */
+/** Plans [[AsOfJoinPlan]] into [[AsOfMergeJoinExec]]. Installed by
+  * [[GraftExtensions]] (`injectPlannerStrategy`). */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinPlan(l, r, lk, rk, lts, rts, fwd, tol) =>
@@ -235,8 +234,9 @@ object AsOfJoin {
     * to the next-nearest row. ALL right columns come back
     * (nullable). Output carries left.output ++ right.output verbatim,
     * so rename right-side columns that collide with left names BEFORE
-    * joining. Lazily registers [[AsOfJoinStrategy]] on the session
-    * (idempotent), so no spark.sql.extensions config is needed. */
+    * joining. The session must carry [[GraftExtensions]], whose
+    * [[AsOfJoinStrategy]] plans the node; every session
+    * [[graft.tools.Measure.session]] builds does. */
   def asof(left: DataFrame, right: DataFrame,
       leftKeyCols: Seq[String], rightKeyCols: Seq[String],
       leftTsCol: String, rightTsCol: String,
@@ -251,9 +251,6 @@ object AsOfJoin {
         s"asof: direction must be 'backward' or 'forward', got '$other'")
     }
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     val lPlan = GraftSqlBridge.analyzedPlan(left)
     val rPlan = GraftSqlBridge.analyzedPlan(right)
     def attr(p: LogicalPlan, n: String, side: String): Attribute =

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -62,8 +62,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
 object CosineSimilarity {
   /** Column API: cosine similarity over two array<double> columns. */
   def apply(a: Column, b: Column): Column = DoublePairKernel.column(a, b)(CosineSimilarity(_, _))
-
-  /** Register as the SQL function `cosine_similarity` on the session. */
-  def register(spark: SparkSession): Unit =
-    DoublePairKernel.register(spark, "cosine_similarity")(CosineSimilarity(_, _))
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Optimizer rule: rewrite a `HAVING count(DISTINCT x) >= 2` threshold
@@ -39,17 +38,12 @@ import org.apache.spark.sql.types._
   * aggregates are left alone. The rewritten plan contains no distinct
   * aggregate, so the rule is idempotent under fixed-point.
   *
-  * OFF by default: fires only when `spark.graft.rewriteDistinctThreshold`
-  * is `true`. Install per-session via
-  * `spark.experimental.extraOptimizations :+= DistinctThresholdRewrite`
-  * or the [[GraftExtensions]] plug-in.
+  * On in every session [[GraftExtensions]] builds: the rewrite preserves
+  * results, so it needs no switch of its own. Spark's
+  * `spark.sql.optimizer.excludedRules=graft.plans.DistinctThresholdRewrite`
+  * turns it off, which is how the specs get the un-rewritten baseline.
   */
 object DistinctThresholdRewrite extends Rule[LogicalPlan] {
-
-  val EnabledKey = "spark.graft.rewriteDistinctThreshold"
-
-  private def enabled: Boolean =
-    SQLConf.get.getConfString(EnabledKey, "false").toBoolean
 
   /** Types where "two distinct values exist" ⟺ "min <> max": total
     * order consistent with equality. Float/double excluded — distinct
@@ -102,8 +96,7 @@ object DistinctThresholdRewrite extends Rule[LogicalPlan] {
   private def isThresholdOf(cmp: Expression, c: Attribute): Boolean =
     thresholdKind(cmp, c).isDefined
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       case p @ Project(projList,
           Filter(cond, agg @ Aggregate(group, aggExprs, child, hint))) =>
@@ -151,5 +144,4 @@ object DistinctThresholdRewrite extends Rule[LogicalPlan] {
             Filter(newCond, Aggregate(group, newAggExprs, child, hint)))
         }
     }
-  }
 }

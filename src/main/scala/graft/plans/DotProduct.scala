@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -60,8 +60,4 @@ case class DotProduct(left: Expression, right: Expression)
 object DotProduct {
   /** Column API: dot product over two array<double> columns. */
   def apply(a: Column, b: Column): Column = DoublePairKernel.column(a, b)(DotProduct(_, _))
-
-  /** Register as the SQL function `dot_product` on the session. */
-  def register(spark: SparkSession): Unit =
-    DoublePairKernel.register(spark, "dot_product")(DotProduct(_, _))
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -41,9 +41,4 @@ private[plans] object DoublePairKernel {
   /** Column API for a kernel over two array<double> columns. */
   def column(a: Column, b: Column)(kernel: (Expression, Expression) => Expression): Column =
     GraftSqlBridge.column(kernel(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
-  /** Register a kernel as the SQL function `name` on the session. */
-  def register(spark: SparkSession, name: String)(
-      kernel: (Expression, Expression) => Expression): Unit =
-    GraftSqlBridge.registerFunction(spark, name, exprs => kernel(exprs(0), exprs(1)))
 }

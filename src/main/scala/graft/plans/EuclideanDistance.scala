@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -67,8 +67,4 @@ case class EuclideanDistance(left: Expression, right: Expression)
 object EuclideanDistance {
   /** Column API: L2 distance over two array<double> columns. */
   def apply(a: Column, b: Column): Column = DoublePairKernel.column(a, b)(EuclideanDistance(_, _))
-
-  /** Register as the SQL function `euclidean_distance` on the session. */
-  def register(spark: SparkSession): Unit =
-    DoublePairKernel.register(spark, "euclidean_distance")(EuclideanDistance(_, _))
 }

@@ -3,7 +3,7 @@ package graft.plans
 import java.nio.ByteBuffer
 import java.util.{TreeSet => JTreeSet}
 
-import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -139,8 +139,4 @@ object KmvDistinct {
     }
     KmvDistinct(exprs.head, k)
   }
-
-  /** Register as the SQL aggregate `kmv_distinct(hash, k)` on the session. */
-  def register(spark: SparkSession): Unit =
-    GraftSqlBridge.registerFunction(spark, "kmv_distinct", build)
 }

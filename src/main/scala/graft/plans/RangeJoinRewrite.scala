@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
+import graft.operators.RangeJoin
+
 /** Optimizer rule: rewrite a pure point-in-interval inner join into the
   * bucketed equi-join shape of [[graft.operators.RangeJoin]] —
   * AUTOMATICALLY, so `points JOIN intervals ON p >= lo AND p <= hi`
@@ -19,22 +21,22 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   *
   *   Project(original output)
   *     Join Inner, (_bucket_l = _bucket_r) AND original condition
-  *       Project(left.*, floordiv(p, B) AS _bucket_l)
-  *       Generate(explode(sequence(floordiv(lo,B), floordiv(hi,B))),
+  *       Project(left.*, bucket(p, B) AS _bucket_l)
+  *       Generate(explode(sequence(bucket(lo,B), bucket(hi,B))),
   *                right.*) AS _bucket_r
   *
   * which the planner turns into a shuffled (or broadcast-hash) equi-join
   * with the BETWEEN as residual — linear shuffle instead of O(n·m)
-  * comparisons, identical semantics (`floordiv` is exact pmod-based
-  * floor division, negatives included; the residual predicate kills
+  * comparisons, identical semantics (`bucket` is
+  * [[graft.operators.RangeJoin.bucket]], exact floor division for every
+  * long, negatives included; the residual predicate kills
   * bucket collisions; malformed lo > hi intervals yield an empty
   * sequence and so — correctly — no matches, exactly like the BETWEEN).
   *
-  * OFF by default: fires only when `spark.graft.rangeJoin.bucketSize`
-  * is set > 0 (the width is a data-dependent tuning choice the engine
-  * cannot guess). Install per-session via
-  * `spark.experimental.extraOptimizations :+= RangeJoinRewrite` or the
-  * [[GraftExtensions]] plug-in; the rewritten condition no longer
+  * Installed in every session by [[GraftExtensions]], and a no-op until
+  * `spark.graft.rangeJoin.bucketSize` is set > 0: the width depends on
+  * the data, and a fixed one would explode every integral BETWEEN join
+  * (nanosecond intervals included). The rewritten condition no longer
   * matches the pattern, so the rule is idempotent under fixed-point.
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] {
@@ -49,12 +51,6 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  /** Exact floor division as a Catalyst expression: (x - pmod(x,b)) div b. */
-  private def floorDiv(e: Expression, b: Long): Expression = {
-    val x = Cast(e, LongType)
-    new IntegralDivide(Subtract(x, new Pmod(x, Literal(b))), Literal(b))
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val b = bucketSize
     if (b <= 0) plan
@@ -67,7 +63,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
             p.references.nonEmpty && p.references.subsetOf(left.outputSet) &&
             (lo.references ++ hi.references).nonEmpty &&
             (lo.references ++ hi.references).subsetOf(right.outputSet) =>
-        val bucketL = Alias(floorDiv(p, b), "_bucket_l")()
+        val bucketL = Alias(RangeJoin.bucket(p, b), "_bucket_l")()
         val newLeft = Project(left.output :+ bucketL, left)
         val bucketR = AttributeReference("_bucket_r", LongType, nullable = true)()
         val gen = Generate(
@@ -75,7 +71,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
           // expression stays unresolved post-analysis and plan
           // validation rejects the rewrite (integral sequences never
           // USE the zone, but resolution requires one).
-          Explode(Sequence(floorDiv(lo, b), floorDiv(hi, b), Some(Literal(1L)),
+          Explode(Sequence(RangeJoin.bucket(lo, b), RangeJoin.bucket(hi, b), Some(Literal(1L)),
             Some(SQLConf.get.sessionLocalTimeZone))),
           unrequiredChildIndex = Nil, outer = false, qualifier = None,
           generatorOutput = Seq(bucketR), child = right)

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -85,9 +85,4 @@ object SortedJaccard {
   def apply(a: Column, b: Column): Column =
     GraftSqlBridge.column(SortedJaccard(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
-  /** Register as the SQL function `jaccard_sorted` on the session. */
-  def register(spark: SparkSession): Unit =
-    GraftSqlBridge.registerFunction(spark, "jaccard_sorted",
-      exprs => SortedJaccard(exprs(0), exprs(1)))
 }

@@ -3,7 +3,7 @@ package graft.plans
 import java.nio.ByteBuffer
 import java.util.{Comparator, TreeSet => JTreeSet}
 
-import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -158,10 +158,4 @@ object TopKByScore {
     }
     TopKByScore(exprs(0), exprs(1), k)
   }
-
-  /** Register as the SQL aggregate `topk_by_score(score, id, k)`.
-    * Contract: (score, id) pairs distinct per group — duplicate pairs
-    * collapse to one entry, unlike the row_number window spelling. */
-  def register(spark: SparkSession): Unit =
-    GraftSqlBridge.registerFunction(spark, "topk_by_score", build)
 }

@@ -977,11 +977,12 @@ object RelationalQueries {
       import s.implicits._
       // The OPTIMIZER-RULE form of j11 (plans/RangeJoinRewrite): the
       // query below is the naive BETWEEN theta-join a user would write;
-      // the injected rule rewrites it to the bucketed equi-join during
-      // optimization. localCheckpoint materializes while the rule is
-      // installed (the driver's write happens after this fn returns, by
-      // which time the session is restored to leave other queries'
-      // plans untouched). PlansStreamingSpec asserts the plan shape.
+      // the session's rule rewrites it to the bucketed equi-join during
+      // optimization once a bucket width is set. localCheckpoint
+      // materializes while the width is set (the driver's write happens
+      // after this fn returns, by which time the width is unset again so
+      // other queries' plans stay untouched). PlansStreamingSpec asserts
+      // the plan shape.
       import graft.plans.RangeJoinRewrite
       val bands = Seq(
         (0, "low", 1, 10), (1, "mid", 5, 25),
@@ -989,8 +990,6 @@ object RelationalQueries {
         .toDF("band_id", "band_name", "lo", "hi")
       val pts = T(s, dir, "lineitem")
         .select(col("l_quantity").cast("int").as("qty"))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ RangeJoinRewrite
       s.conf.set(RangeJoinRewrite.BucketSizeKey, "8")
       try {
         pts.join(bands, col("qty") >= col("lo") && col("qty") <= col("hi"))
@@ -999,11 +998,7 @@ object RelationalQueries {
             sum(col("qty").cast("decimal(18,2)")).cast("double").as("sum_qty"))
           .orderBy("band_id")
           .localCheckpoint(true)
-      } finally {
-        s.conf.unset(RangeJoinRewrite.BucketSizeKey)
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations.filterNot(_ eq RangeJoinRewrite)
-      }
+      } finally s.conf.unset(RangeJoinRewrite.BucketSizeKey)
     }, Some("""WITH bands(band_id, band_name, lo, hi) AS (VALUES
               |  (0, 'low', 1, 10), (1, 'mid', 5, 25),
               |  (2, 'high', 20, 50), (3, 'all', 1, 50))
@@ -1437,35 +1432,20 @@ object RelationalQueries {
       // The OPTIMIZER-RULE form of q95's min≠max doctrine
       // (plans/DistinctThresholdRewrite): the HAVING below is the
       // natural count(DISTINCT)-threshold spelling a user writes; the
-      // injected rule rewrites it to min(x) <> max(x) during
+      // session's rule rewrites it to min(x) <> max(x) during
       // optimization, deleting the per-(group, value) dedup level —
       // the shuffle carries one row per part, not one per (part,
-      // supplier). localCheckpoint materializes while the rule is
-      // installed (the j12 pattern: the driver's write happens after
-      // this fn returns, with the session restored so other plans stay
-      // untouched). DistinctThresholdRewriteSpec pins semantics (nulls,
+      // supplier). DistinctThresholdRewriteSpec pins semantics (nulls,
       // no-fire guards) and the plan shape.
-      import graft.plans.DistinctThresholdRewrite
       T(s, dir, "lineitem").createOrReplaceTempView("a25_lineitem")
       T(s, dir, "part").createOrReplaceTempView("a25_part")
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ DistinctThresholdRewrite
-      s.conf.set(DistinctThresholdRewrite.EnabledKey, "true")
-      try {
-        s.sql("""SELECT p_brand, count(*) AS n_multi_parts
-                |FROM (SELECT l_partkey FROM a25_lineitem
-                |      GROUP BY l_partkey
-                |      HAVING count(DISTINCT l_suppkey) >= 2) m
-                |JOIN a25_part ON l_partkey = p_partkey
-                |GROUP BY p_brand
-                |ORDER BY p_brand""".stripMargin)
-          .localCheckpoint(true)
-      } finally {
-        s.conf.set(DistinctThresholdRewrite.EnabledKey, "false")
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations
-            .filterNot(_ == DistinctThresholdRewrite)
-      }
+      s.sql("""SELECT p_brand, count(*) AS n_multi_parts
+              |FROM (SELECT l_partkey FROM a25_lineitem
+              |      GROUP BY l_partkey
+              |      HAVING count(DISTINCT l_suppkey) >= 2) m
+              |JOIN a25_part ON l_partkey = p_partkey
+              |GROUP BY p_brand
+              |ORDER BY p_brand""".stripMargin)
     }, Some("""SELECT p_brand, count(*) AS n_multi_parts
              |FROM (SELECT l_partkey FROM lineitem
              |      GROUP BY l_partkey
@@ -1813,7 +1793,6 @@ object RelationalQueries {
              |FROM part ORDER BY p_partkey""".stripMargin)),
 
     "f22_sql_udf_masking" -> Q((s, dir) => {
-      Funcs.registerSqlFunctions(s)
       T(s, dir, "customer").createOrReplaceTempView("graft_cust_f22")
       s.sql("""SELECT c_custkey, mask_name(c_name) AS masked_name,
               |  mask_email(concat(c_name, '@corp.io')) AS masked_email

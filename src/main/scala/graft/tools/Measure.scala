@@ -8,6 +8,8 @@ import org.apache.spark.graftbus.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
+import graft.plans.GraftExtensions
+
 /** The one place every entry point's cross-cutting run policy lives:
   * how a local session is built, how a series of timings is summarized,
   * how the host epoch is calibrated, and how Spark's own execution
@@ -29,7 +31,15 @@ object Measure {
     *   - UTC session time zone (`Registry.T` requires it);
     *   - TIMESTAMP(NANOS) parquet read as nanos-since-epoch longs;
     *   - no web UI;
-    *   - shuffle partitions = cores.
+    *   - shuffle partitions = cores;
+    *   - [[graft.plans.GraftExtensions]], the one install route for the
+    *     engine's Catalyst extensions: the SQL functions
+    *     `cosine_similarity`, `dot_product`, `euclidean_distance`,
+    *     `jaccard_sorted`, `kmv_distinct`, `topk_by_score`, `mask_email`
+    *     and `mask_name`; the optimizer rules `DistinctThresholdRewrite`
+    *     (always on) and `RangeJoinRewrite` (idle until
+    *     `spark.graft.rangeJoin.bucketSize` is set); and the as-of merge
+    *     join's planner strategy.
     *
     * With `tempWarehouse` (the default) the catalog lives in a fresh
     * temp directory removed at JVM exit: gates that create managed
@@ -40,6 +50,7 @@ object Measure {
     */
   def session(cpus: Int, tempWarehouse: Boolean = true): SparkSession = {
     val b = SparkSession.builder()
+      .withExtensions(new GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")

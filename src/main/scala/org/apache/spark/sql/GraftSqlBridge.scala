@@ -11,10 +11,14 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
+  /** `c` converted to a Catalyst tree now. [[expression]] defers the
+    * conversion to the next analysis, which is too late for a SQL
+    * function builder: the analyzer calls it mid-run. */
+  def analyzableExpression(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
+  /** The `bloom_filter_agg` aggregate behind `DataFrameStatFunctions.bloomFilter`:
+    * the serialized filter over `c`, NULL over no rows. */
+  def bloomFilterAgg(c: Column, expectedItems: Long, numBits: Long): Column =
+    Column.internalFn("bloom_filter_agg", c, functions.lit(expectedItems), functions.lit(numBits))
   /** Wrap a (resolved) logical plan as a DataFrame — the entry point a
     * custom whole-operator node (e.g. graft.plans.AsOfJoinPlan) needs
     * to surface through the public Dataset API. */

@@ -49,6 +49,30 @@ class ScaleOpsSpec extends SparkTestBase {
     assert(viaBloom.collect().toSeq === plain.collect().toSeq)
   }
 
+  test("prunedEquiJoin with an empty dim equals the plain join: no rows") {
+    import graft.operators.BloomPrune
+    val fact = (1L to 500L).map(i => (i, i * 2)).toDF("fk", "v")
+    val dim = Seq.empty[(Long, String)].toDF("dk", "attr")
+    val plain = fact.join(dim, col("fk") === col("dk"))
+    val viaBloom = BloomPrune.prunedEquiJoin(fact, "fk", dim, "dk", expectedItems = 500L)
+    assert(viaBloom.schema === plain.schema)
+    assert(viaBloom.collect().isEmpty && plain.collect().isEmpty)
+  }
+
+  test("j10_bloom_prune_join: job count on driver data, and no rows on an empty dim") {
+    import graft.tools.Measure
+    val j10 = SparkEntry.queries("j10_bloom_prune_join")
+    val (rows, c) = Measure.counted(spark)(j10(spark, "/root/testdata/sf0.001").count())
+    assert(rows > 0 && c.jobs === 8, s"j10 ran ${c.jobs} jobs")
+    withTempDir("graft_j10_empty") { dir =>
+      for (t <- Seq("orders", "lineitem")) {
+        val full = spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet")
+        full.limit(0).write.parquet(s"$dir/$t.parquet")
+      }
+      assert(j10(spark, dir).count() === 0L)
+    }
+  }
+
   test("bloom prune supports string keys and rejects unsupported types") {
     import graft.operators.BloomPrune
     val fact = Seq("a", "b", "c", "zz").toDF("k")
@@ -59,6 +83,24 @@ class ScaleOpsSpec extends SparkTestBase {
     val bad = Seq(1.5, 2.5).toDF("k")
     intercept[IllegalArgumentException] {
       BloomPrune.prune(bad, "k", bf)
+    }
+  }
+
+  test("range-join bucket is Math.floorDiv for every long, the extremes included") {
+    import graft.operators.RangeJoin
+    import org.apache.spark.sql.GraftSqlBridge
+    val r = new scala.util.Random(41)
+    for (b <- Seq(1L, 7L, 1000L, 1L << 40)) {
+      val xs = Seq(Long.MinValue, Long.MinValue + 1, Long.MaxValue, Long.MaxValue - 1,
+        -1L, 0L, 1L, -b, b, -3 * b, 5 * b, -3 * b + 1, 5 * b - 1,
+        -6080983959558420776L) ++ Seq.fill(2000)(r.nextLong())
+      val got = xs.toDF("x")
+        .select(col("x"), GraftSqlBridge.column(
+          RangeJoin.bucket(GraftSqlBridge.expression(col("x")), b)).as("bucket"))
+        .collect().map(row => row.getLong(0) -> row.getLong(1))
+      val wrong = got.filter { case (x, k) => k != Math.floorDiv(x, b) }
+      assert(got.length === xs.size && wrong.isEmpty,
+        s"b=$b: ${wrong.take(5).mkString(", ")}")
     }
   }
 
