@@ -3,19 +3,22 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Reduce
+
 /** In-engine quality-classifier training: full-batch gradient descent for
   * a linear classifier over embedding features, entirely in DataFrame
   * algebra — the distributed stand-in for the fastText-style quality
   * model every curation pipeline trains (positives = a trusted slice,
   * negatives = the crawl).
   *
-  * Each iteration is ONE map-side-combinable aggregation: rows compute
-  * their residual against the broadcast weight literal, explode the
-  * (intercept-augmented) feature vector, and the per-dimension gradient
-  * sums reduce in a single hash aggregate of dim+1 groups. The weight
-  * vector (65 doubles here) is the only driver-side state — the standard
-  * parameter-server shape, so the data path scales linearly and the
-  * driver never sees a row.
+  * Each iteration is ONE job: rows compute their residual against the
+  * broadcast weight literal, and the dim+1 per-dimension gradient sums
+  * are observed ([[graft.operators.Reduce.observed]]) on one scan of the
+  * cached (intercept-augmented) feature frame, each task's partial sums
+  * merging on the driver — no exchange, no second job to fetch a row.
+  * The weight vector (65 doubles here) is the only driver-side state —
+  * the standard parameter-server shape, so the data path scales linearly
+  * and the driver never sees a row.
   *
   * Link function: SOFTSIGN, p = 0.5 + 0.5·z/(1+|z|), not the logistic
   * sigmoid — deliberately. p must reproduce bit-for-bit on any engine
@@ -74,8 +77,9 @@ object Classifier {
     * Returns dim+1 weights, index 0 = intercept. `yCol` must be 0/1.
     *
     * Iterative-workload shape: the augmented feature frame is projected
-    * ONCE to (xa, y) and persisted MEMORY_AND_DISK for the counts pass
-    * plus all `iters` gradient passes — re-reading the source and
+    * ONCE to (xa, y) and persisted MEMORY_AND_DISK by the counts pass
+    * (whose observed counts ride the write that fills the cache) for all
+    * `iters` gradient passes — re-reading the source and
     * re-deriving [1,x] per iteration pays the scan+decode `iters`+1
     * times for identical bits (values are unchanged by the cache; only
     * where they're read from). At cluster scale the projected frame is
@@ -88,34 +92,37 @@ object Classifier {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val y = col("y")
-      val counts = prepped.agg(
-        sum(when(y === 1.0, lit(1L)).otherwise(lit(0L))).as("npos"),
-        count(lit(1)).as("n")).first()
+      // The counts ride the write that fills the cache: COUNTs, not a
+      // SUM, so an empty frame reads 0 of 0 and reaches the require.
+      val (_, counts) = Reduce.observed(prepped,
+        count(when(y === 1.0, lit(1))).as("npos"), count(lit(1)).as("n"))(scan)
       val (npos, n) = (counts.getLong(0), counts.getLong(1))
-      require(npos > 0 && npos < n, s"need both classes present, got $npos of $n positive")
+      require(npos > 0 && npos < n,
+        s"Classifier.trainSoftsignGD: need both classes present, got $npos of $n positive")
       val cw = posWeight.getOrElse((n - npos).toDouble / npos.toDouble)
       var w: Seq[Double] = Vector.fill(dim + 1)(0.0)
       for (_ <- 1 to iters) {
         val p = softsignProb(marginAug(col("xa"), w))
         val r = (p - y) * when(y === 1.0, lit(cw)).otherwise(lit(1.0))
-        // ONE grand aggregate with dim+1 sum columns, not a posexplode
-        // to (dim+1)·n rows + a (dim+1)-group shuffle: the residual is
-        // projected once per row, each dimension's fixed-point term is
-        // the same floor(r·x_j·10¹²) as before (identical bits), and
-        // partial aggregation reduces the exchange to one buffer row
-        // per map task (guide §2.3 "aggregate before you shuffle").
+        // dim+1 sum columns observed on ONE scan of the cached frame, not
+        // a posexplode to (dim+1)·n rows + a (dim+1)-group shuffle: the
+        // residual is projected once per row, each dimension's term is
+        // floor(r·x_j·10¹²), and each task's buffer merges on the driver
+        // with no exchange.
         val terms = (0 to dim).map { j =>
           (sum(floor((col("r") * element_at(col("xa"), j + 1)) * lit(1.0e12))
             .cast("decimal(38,0)")).cast("double") / lit(1.0e12)).as(s"g$j")
         }
-        val row = prepped.select(r.as("r"), col("xa"))
-          .agg(terms.head, terms.tail: _*).first()
+        val (_, row) = Reduce.observed(prepped.select(r.as("r"), col("xa")), terms: _*)(scan)
         val g = (0 to dim).map(row.getDouble)
         w = w.indices.map(j => w(j) - eta * (g(j) / n.toDouble)).toVector
       }
       w
     } finally prepped.unpersist(blocking = false)
   }
+
+  /** Run a frame's plan to the end and keep nothing: one job, no output. */
+  private def scan(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
   /** Score a frame with trained weights: adds `p` (softsign probability)
     * and `pred` (p ≥ 0.5). Pure projection — no shuffle. */

@@ -95,14 +95,18 @@ object Similarity {
   /** `vec` scored against every centroid of a [[centroidLiteral]] as
     * struct(csim, −cid, cid, cv). Its order is the total key of a
     * `(csim DESC, cid)` ranking: equal csim → smallest cid first, and a
-    * NaN csim sorts greatest. */
-  private def scoredCentroids(vec: Column, carr: Column): Column = {
-    val vv = asDoubleVec(vec)
-    transform(carr, c =>
-      struct(cosine(vv, c.getField("cv")).as("csim"),
-        negate(c.getField("cid")).as("ncid"),
-        c.getField("cid").as("cid"), c.getField("cv").as("cv")))
-  }
+    * NaN csim sorts greatest.
+    *
+    * `vec` is widened to doubles ONCE per row: the widened array is
+    * bound as the variable of a one-element outer `transform`, so the
+    * per-centroid lambda reads it instead of re-widening it k times
+    * (subexpression elimination does not reach into lambda bodies). */
+  private def scoredCentroids(vec: Column, carr: Column): Column =
+    element_at(transform(array(asDoubleVec(vec)), vv =>
+      transform(carr, c =>
+        struct(cosine(vv, c.getField("cv")).as("csim"),
+          negate(c.getField("cid")).as("ncid"),
+          c.getField("cid").as("cid"), c.getField("cv").as("cv")))), 1)
 
   /** The max-cosine centroid struct(csim, ncid, cid, cv) of `vec` — NULL
     * against an empty literal. */

@@ -26,48 +26,71 @@ import org.apache.spark.sql.functions._
   * the scaled double, and across ~10⁴ roundings per iteration a
   * divergent boundary cell is near-certain (observed at sf0.1). The
   * dangling mass is a per-iteration driver scalar — model state like a
-  * GD weight vector, not row data.
+  * GD weight vector, not row data — OBSERVED on the checkpoint each round
+  * already runs ([[Reduce.observed]]), so a round is one job chain with
+  * no aggregate, exchange or driver fetch of its own; the node count and
+  * the dangling count are observed the same way on the one checkpoint of
+  * the vertex set.
   */
 object PageRank {
 
   /** Ranks after `iters` damped rounds. `nodes` must have one row per
-    * vertex (column `idCol`); `edges` columns (src, dst) reference those
-    * ids. Returns (idCol, pr); Σpr ≈ 1. */
+    * vertex (column `idCol`) and at least one row; `edges` columns
+    * (src, dst) reference those ids. Returns (idCol, pr); Σpr ≈ 1. */
   def run(nodes: DataFrame, edges: DataFrame, idCol: String,
       iters: Int, damping: Double = 0.85): DataFrame = {
-    val nD = nodes.count().toDouble
     val e = edges.localCheckpoint(true)
     val outdeg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
       .localCheckpoint(true)
-    var ranks = nodes.select(col(idCol).as("nid"), (lit(1.0) / lit(nD)).as("pr"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters)
-      ranks = round(nodes, e, outdeg, ranks, idCol, nD, damping).localCheckpoint(true)
+    val (verts, sizes) = Reduce.observed(vertices(nodes, idCol, outdeg),
+      count(lit(1)).as("n"), count(when(col("dangling"), lit(1))).as("nd"))(
+      _.localCheckpoint(true))
+    val (n, nDangling) = (sizes.getLong(0), sizes.getLong(1))
+    require(n > 0, "PageRank.run: the node set is empty, so the uniform start 1/|V| is undefined")
+    val nD = n.toDouble
+    // Round 0 is a projection: every rank is 1/|V|, so its dangling mass
+    // is nDangling equal fixed-point terms — the sum the observed
+    // aggregate would compute, exactly (at most 10¹², well inside the
+    // 2⁵³ a double holds exactly).
+    var ranks = verts.select(col("nid"), (lit(1.0) / lit(nD)).as("pr"), col("dangling"))
+    var dm = (nDangling * math.floor((1.0 / nD) * 1.0e12).toLong).toDouble / 1.0e12
+    for (_ <- 1 to iters) {
+      val (next, mass) = Reduce.observed(round(verts, e, outdeg, ranks, nD, dm, damping),
+        coalesce(
+          sum(when(col("dangling"), floor(col("pr") * lit(1.0e12)).cast("decimal(38,0)")))
+            .cast("double") / lit(1.0e12),
+          lit(0.0)).as("dm"))(_.localCheckpoint(true))
+      ranks = next
+      dm = mass.getDouble(0)
+    }
     ranks.select(col("nid").as(idCol), col("pr"))
   }
 
-  /** ONE damped round, pre-checkpoint — exposed so PlanGuardsSpec can pin
-    * the per-iteration plan shape (two rank/degree attach joins, exactly
-    * one dst-keyed aggregate exchange, no cartesian fallback) against the
-    * REAL iteration body rather than a re-derived twin. */
-  private[graft] def round(nodes: DataFrame, e: DataFrame, outdeg: DataFrame,
-      ranks: DataFrame, idCol: String, nD: Double, damping: Double): DataFrame = {
+  /** The vertex set as (nid, dangling): `dangling` marks a node with no
+    * out-edge, whose rank redistributes uniformly. */
+  private[graft] def vertices(nodes: DataFrame, idCol: String, outdeg: DataFrame): DataFrame =
+    nodes.select(col(idCol).as("nid"))
+      .join(outdeg, col("nid") === col("src"), "left")
+      .select(col("nid"), col("src").isNull.as("dangling"))
+
+  /** ONE damped round, pre-checkpoint, given the previous ranks'
+    * dangling mass `dm`; returns (nid, pr, dangling) — exposed so
+    * PlanGuardsSpec can pin the per-iteration plan shape (two
+    * rank/degree attach joins, exactly one dst-keyed aggregate exchange,
+    * no cartesian fallback) against the REAL iteration body rather than
+    * a re-derived twin. */
+  private[graft] def round(verts: DataFrame, e: DataFrame, outdeg: DataFrame,
+      ranks: DataFrame, nD: Double, dm: Double, damping: Double): DataFrame = {
     val inflow = e.join(ranks, col("src") === col("nid"))
       .join(outdeg, "src")
       .select(col("dst"),
         floor((col("pr") / col("deg")) * lit(1.0e12)).cast("decimal(38,0)").as("c"))
       .groupBy("dst")
       .agg((sum(col("c")).cast("double") / lit(1.0e12)).as("inflow"))
-    val dm = ranks.join(outdeg, ranks("nid") === outdeg("src"), "left_anti")
-      .agg(coalesce(
-        sum(floor(col("pr") * lit(1.0e12)).cast("decimal(38,0)")).cast("double") /
-          lit(1.0e12),
-        lit(0.0)))
-      .first().getDouble(0)
-    nodes.select(col(idCol).as("nid"))
-      .join(inflow, col("nid") === col("dst"), "left")
+    verts.join(inflow, col("nid") === col("dst"), "left")
       .select(col("nid"),
         (lit(1.0 - damping) / lit(nD) + lit(damping) *
-          (coalesce(col("inflow"), lit(0.0)) + lit(dm) / lit(nD))).as("pr"))
+          (coalesce(col("inflow"), lit(0.0)) + lit(dm) / lit(nD))).as("pr"),
+        col("dangling"))
   }
 }

@@ -1707,7 +1707,8 @@ object LlmQueries {
     "llm_lr_train" -> Q((s, dir) => {
       // Distributed quality-classifier training (Classifier.scala):
       // 4 full-batch GD iterations, softsign link, class-weighted
-      // residuals, one hash aggregate per iteration. y = (label == 0).
+      // residuals, one job per iteration (observed gradient sums).
+      // y = (label == 0).
       // The oracle unrolls all 4 iterations in chained CTEs and
       // reproduces every weight bit-for-bit.
       import s.implicits._

@@ -3,11 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.llm.Classifier
+import graft.tools.Measure
 
 /** Softsign-GD classifier ([[graft.llm.Classifier]]): learns a linearly
   * separable problem, class weighting defaults to n_neg/n_pos, training
   * is deterministic across runs, the softsign link tracks the true
-  * sigmoid's decisions, and degenerate label sets fail loudly.
+  * sigmoid's decisions, degenerate label sets and empty input fail
+  * loudly, and each GD iteration is one job.
   */
 class ClassifierSpec extends SparkTestBase {
   import spark.implicits._
@@ -71,5 +73,21 @@ class ClassifierSpec extends SparkTestBase {
       Classifier.trainSoftsignGD(df, "x", "y", dim, iters = 1, eta = 1.0)
     }
     assert(ex.getMessage.contains("both classes"))
+  }
+
+  test("empty input fails on purpose, naming the trainer and the class counts") {
+    val ex = intercept[IllegalArgumentException] {
+      Classifier.trainSoftsignGD(separable.filter(lit(false)), "x", "y", dim, iters = 1, eta = 1.0)
+    }
+    assert(ex.getMessage.contains("trainSoftsignGD") &&
+      ex.getMessage.contains("both classes present, got 0 of 0 positive"), ex.getMessage)
+  }
+
+  test("each GD iteration is one job") {
+    val df = separable
+    def jobs(iters: Int): Int = Measure.counted(spark)(
+      Classifier.trainSoftsignGD(df, "x", "y", dim, iters = iters, eta = 2.0))._2.jobs
+    val (two, four) = (jobs(2), jobs(4))
+    assert(four - two === 2, s"jobs at 2 iterations $two, at 4 iterations $four")
   }
 }

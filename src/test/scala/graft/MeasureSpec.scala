@@ -239,4 +239,12 @@ class MeasureSpec extends SparkTestBase {
     assert(hits.nonEmpty && hits.forall(_.startsWith("graft/tools/Measure.scala:")),
       s"create temp dirs through graft.tools.Measure.tempDir, found:\n${hits.mkString("\n")}")
   }
+
+  test("source sweep: global aggregates are observed in src/main only by Reduce.observed") {
+    for (token <- Seq(".observe(", "Observation(")) {
+      val hits = sourceHits(token)
+      assert(hits.nonEmpty && hits.forall(_.startsWith("graft/operators/Reduce.scala:")),
+        s"observe aggregates through graft.operators.Reduce.observed, found $token at:\n${hits.mkString("\n")}")
+    }
+  }
 }

@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.PageRank
+import graft.tools.Measure
 
 /** PageRank ([[graft.operators.PageRank]]): mass conservation, hub
   * ordering on a star graph, symmetry on a cycle, dangling-mass
-  * redistribution, and partitioning-independence.
+  * redistribution, partitioning-independence, an empty node set failing
+  * on purpose, and the jobs one round costs.
   */
 class PageRankSpec extends SparkTestBase {
   import spark.implicits._
@@ -46,5 +48,20 @@ class PageRankSpec extends SparkTestBase {
     val b = PageRank.run(nodes(5).repartition(7), e.repartition(5), "id", iters = 4)
       .orderBy("id").collect().toSeq
     assert(a == b)
+  }
+
+  test("an empty node set fails on purpose, naming PageRank and the cause") {
+    val e = Seq((0L, 1L)).toDF("src", "dst").filter(lit(false))
+    val ex = intercept[IllegalArgumentException](PageRank.run(nodes(0), e, "id", iters = 2))
+    assert(ex.getMessage.contains("PageRank") && ex.getMessage.contains("node set is empty"),
+      ex.getMessage)
+  }
+
+  test("one round costs 6 jobs: the dangling mass rides the round's checkpoint") {
+    val e = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L), (4L, 2L)).toDF("src", "dst")
+    def jobs(iters: Int): Int =
+      Measure.counted(spark)(PageRank.run(nodes(6), e, "id", iters = iters).collect())._2.jobs
+    val (two, four) = (jobs(2), jobs(4))
+    assert(four - two === 2 * 6, s"jobs at 2 rounds $two, at 4 rounds $four")
   }
 }

@@ -398,9 +398,10 @@ class PlanGuardsSpec extends SparkTestBase {
     val e = edges.localCheckpoint(true)
     val outdeg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
       .localCheckpoint(true)
-    val ranks = nodes.select(col("page").as("nid"), lit(1.0 / 200).as("pr"))
+    val verts = PageRank.vertices(nodes, "page", outdeg).localCheckpoint(true)
+    val ranks = verts.select(col("nid"), lit(1.0 / 200).as("pr"), col("dangling"))
       .localCheckpoint(true)
-    val next = PageRank.round(nodes, e, outdeg, ranks, "page", 200.0, 0.85)
+    val next = PageRank.round(verts, e, outdeg, ranks, 200.0, 0.0, 0.85)
     next.collect()
     val plan = next.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop"), plan)
