@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH
   * (banded), SimHash, and n-gram Jaccard verification.
@@ -11,8 +12,9 @@ import org.apache.spark.sql.functions._
   *   - MinHash signatures are computed with `numHashes` MIN aggregates in a
   *     single `groupBy(doc)` pass (map-side partial combine) — NOT by
   *     exploding a (shingle × seed) cross product.
-  *   - Candidate generation is the classic banded-LSH bucket join: docs
-  *     only meet inside a (band, band_hash) bucket, never all-pairs.
+  *   - Candidate generation is the candidate core ([[buckets]],
+  *     [[bucketPairs]], [[withSides]]): docs only meet inside a (band,
+  *     band_hash) bucket, never all-pairs.
   *   - Jaccard verification runs only on LSH candidate pairs.
   * No collect() anywhere; every step is a DataFrame the optimizer can see.
   */
@@ -121,87 +123,108 @@ object Dedup {
       .select(col(idCol), col("bb.band").as("band"), col("bb.band_hash").as("band_hash"))
   }
 
-  /** Candidate near-duplicate pairs: docs sharing any LSH bucket. The join
-    * key is (band, band_hash), so work is proportional to bucket sizes —
-    * the sub-quadratic scale path. Returns distinct (id_a < id_b) pairs.
+  /** Candidate core, (a): group a (member, key…) frame into buckets, one
+    * row per key with its members sorted into `ms`; single-member
+    * buckets are dropped. A member is a bare id or struct(id, …), so it
+    * sorts by id first.
     *
-    * Formulated as ONE aggregation, not a self-join: group to buckets,
-    * sort each bucket's ids, and emit every i<j pair with a
-    * higher-order-function expansion. The expensive signature lineage
-    * (tokenize → shingle → 8×MD5 MinHash) therefore runs exactly ONCE —
-    * a self-join has two consumers of that lineage, and neither
-    * exchange reuse (AQE did not fire it here; measured 5-6× slower at
-    * sf0.1) nor a session-pinned `persist()` (the r3-flagged leak) is
-    * needed when there is only one consumer. One shuffle of the tiny
-    * bands frame (numBands small columns/doc); pair expansion is
-    * partition-local. Skew: a pathological bucket (thousands of
-    * identical docs) holds its ids in one array before expanding — the
-    * same Σ bucket² output a join would stream, but bounded in memory
-    * by the largest bucket; LSH banding exists precisely to keep
-    * buckets small. `distinct` dedups docs colliding in >1 band.
-    * `sort_array` guarantees id_a < id_b. */
+    * The candidate core ((a)–(d)) is the filter stage of every
+    * near-duplicate operator: [[candidatePairs]], [[candidatePairsCapped]],
+    * [[winnowPairs]] and [[Similarity.hyperplanePairs]] are (a)–(c) plus
+    * one final step each, and every verify step attaches its pair sides
+    * through [[withSides]]. Pairs come from ONE aggregation, not a
+    * self-join, so the expensive lineage that produced the keys
+    * (tokenize → shingle → MinHash, or the hyperplane projection) runs
+    * exactly once — a self-join gives that lineage two consumers, and
+    * neither exchange reuse (AQE did not fire it; measured 5-6× slower
+    * at sf0.1) nor a session-pinned `persist()` is needed with one. One
+    * shuffle of the small keyed frame; the expansion is partition-local.
+    * A bucket holds its members in one array before expanding — the same
+    * Σ bucket² output a join would stream, bounded in memory by the
+    * largest bucket, which [[bucketPairs]]' cap bounds in turn. */
+  private[llm] def buckets(df: DataFrame, member: Column, keys: String*): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(member)).as("ms"))
+      .filter(size(col("ms")) > 1)
+
+  /** Candidate core, (b) and (c): one row per emitted pair `p` =
+    * struct(a, b) of two members of a [[buckets]] row, a < b, with
+    * `oversized`, whether that bucket was capped.
+    *
+    * (b) A bucket of at most `maxBucket` members emits every i<j pair.
+    * (c) A larger bucket emits the hot-bucket star instead: its first
+    * `reps` members in md5(id) order (ties by id) are elected
+    * representatives, every member pairs with every representative, and
+    * self-pairs are dropped. Hash order makes the election independent of
+    * id assignment. The star bounds the bucket's emission from n(n−1)/2
+    * to n·reps pairs and keeps every member connected to the bucket, so
+    * [[connectedComponents]] still merges it. The election hashes a
+    * member's id (a struct member's `id` field), and at the default
+    * `maxBucket` it is never computed. */
+  private[llm] def bucketPairs(buckets: DataFrame, maxBucket: Int = Int.MaxValue,
+      reps: Int = 1): DataFrame = {
+    val all = expr(
+      """flatten(transform(ms,
+        |  (x, i) -> transform(slice(ms, i + 2, size(ms)), y -> struct(x AS a, y AS b))))""".stripMargin)
+    // The pair array feeds explode directly: exploding a projected
+    // column lets the optimizer infer a `size(pairs) > 0` filter and
+    // inline the whole expansion into it, building every array twice.
+    val (elected, pairs) = if (maxBucket == Int.MaxValue) (buckets, all) else {
+      val id = buckets.schema("ms").dataType match {
+        case ArrayType(_: StructType, _) => "x.id"
+        case _ => "x"
+      }
+      (buckets.withColumn("_reps", expr(
+        s"""transform(slice(array_sort(transform(ms,
+           |  x -> struct(md5(CAST($id AS STRING)) AS h, x AS m))), 1, $reps), s -> s.m)""".stripMargin)),
+        when(size(col("ms")) > maxBucket, expr(
+          """filter(flatten(transform(ms,
+            |  m -> transform(_reps, r -> struct(least(m, r) AS a, greatest(m, r) AS b)))),
+            |  p -> p.a != p.b)""".stripMargin)).otherwise(all))
+    }
+    elected.select(explode(pairs).as("p"), (size(col("ms")) > maxBucket).as("oversized"))
+  }
+
+  /** Candidate core, (d): attach both sides of every (id_a, id_b) pair
+    * from `sides`, a frame keyed by `idCol`. Each other column `c` of
+    * `sides` arrives twice: `c_a` joined on id_a, `c_b` joined on id_b. */
+  private[graft] def withSides(pairs: DataFrame, sides: DataFrame, idCol: String): DataFrame = {
+    def side(s: String) = sides.select(sides.columns.toIndexedSeq.map(c =>
+      col(c).as(if (c == idCol) s"id_$s" else s"${c}_$s")): _*)
+    pairs.join(side("a"), "id_a").join(side("b"), "id_b")
+  }
+
+  /** Candidate near-duplicate pairs: docs sharing any LSH (band,
+    * band_hash) bucket, so work is proportional to bucket sizes — the
+    * sub-quadratic scale path. The candidate core's [[buckets]] and
+    * every i<j pair ([[bucketPairs]]), then `distinct`, which dedups docs
+    * colliding in more than one band. Returns (id_a < id_b). */
   def candidatePairs(bandDf: DataFrame, idCol: String): DataFrame =
-    bandDf.groupBy("band", "band_hash")
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(explode(expr(
-        """flatten(transform(ids,
-          |  (a, i) -> transform(slice(ids, i + 2, size(ids)),
-          |            b -> struct(a AS id_a, b AS id_b))))""".stripMargin)).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
+    bucketPairs(buckets(bandDf, col(idCol), "band", "band_hash"))
+      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
       .distinct()
 
   /** [[candidatePairs]] with a HOT-BUCKET CAP — the 100 TB skew defense.
     *
     * Pair volume in banded LSH is Σ bucket²; one boilerplate template
     * repeated 10⁶ times puts 10¹² pairs in a single bucket, and no
-    * exact-dedup pre-pass bounds NEAR-identical variants. This variant
-    * bounds every bucket's emission to O(n·reps): buckets at or under
-    * `maxBucket` expand fully (identical to [[candidatePairs]]); an
-    * oversized bucket instead elects `reps` representative documents and
-    * emits only member↔representative pairs — a `reps`-fold star that
-    * keeps every member connected to the bucket (so downstream
-    * [[connectedComponents]]/[[dedupClusters]] still merge it) while
-    * giving each member `reps` independent chances at Jaccard
-    * verification. Representatives are chosen deterministically but
-    * uniformly: the first `reps` ids in md5(id) order (hash order, so the
-    * choice is independent of id-assignment order; ties fall back to the
-    * id). The pair is flagged back: `capped = true` only when EVERY
-    * bucket that produced the pair was oversized — a pair also found in
-    * any normal bucket is a fully-supported candidate.
-    *
-    * Same single-aggregation shape as [[candidatePairs]] (one shuffle of
-    * the bands frame, partition-local expansion); the cap additionally
-    * bounds the per-bucket array expansion memory. Worst case emission
-    * per bucket drops from n(n−1)/2 to n·reps.
+    * exact-dedup pre-pass bounds NEAR-identical variants. Buckets at or
+    * under `maxBucket` expand fully (identical to [[candidatePairs]]); an
+    * oversized bucket emits the candidate core's member↔representative
+    * star ([[bucketPairs]]), giving each member `reps` independent
+    * chances at Jaccard verification. The pair is flagged back:
+    * `capped = true` only when EVERY bucket that produced the pair was
+    * oversized — a pair also found in any normal bucket is a
+    * fully-supported candidate.
     * Returns (id_a, id_b, capped) with id_a < id_b, distinct. */
   def candidatePairsCapped(bandDf: DataFrame, idCol: String,
       maxBucket: Int = 64, reps: Int = 8): DataFrame = {
     require(maxBucket >= 2, s"maxBucket=$maxBucket must be >= 2")
     require(reps >= 1 && reps <= maxBucket,
       s"reps=$reps must be in [1, maxBucket=$maxBucket]")
-    val fullExpr = expr(
-      """flatten(transform(ids,
-        |  (a, i) -> transform(slice(ids, i + 2, size(ids)),
-        |            b -> struct(a AS id_a, b AS id_b))))""".stripMargin)
-    val repsExpr = expr(
-      s"""transform(slice(array_sort(transform(ids,
-         |  x -> struct(md5(CAST(x AS STRING)) AS h, x AS id))), 1, $reps),
-         |  s -> s.id)""".stripMargin)
-    val starExpr = expr(
-      """filter(flatten(transform(ids,
-        |  m -> transform(_reps,
-        |       r -> struct(least(m, r) AS id_a, greatest(m, r) AS id_b)))),
-        |  p -> p.id_a != p.id_b)""".stripMargin)
-    bandDf.groupBy("band", "band_hash")
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .withColumn("_oversized", size(col("ids")) > maxBucket)
-      .withColumn("_reps", repsExpr)
-      .withColumn("_pairs", when(col("_oversized"), starExpr).otherwise(fullExpr))
-      .select(explode(col("_pairs")).as("p"), col("_oversized"))
-      .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .agg(bool_and(col("_oversized")).as("capped"))
+    bucketPairs(buckets(bandDf, col(idCol), "band", "band_hash"), maxBucket, reps)
+      .groupBy(col("p.a").as("id_a"), col("p.b").as("id_b"))
+      .agg(bool_and(col("oversized")).as("capped"))
   }
 
   /** SimHash over whitespace tokens: bit `i` of the signature is set when
@@ -223,7 +246,7 @@ object Dedup {
   }
 
   /** Jaccard verification from per-document shingle ARRAYS: attach each
-    * side's sorted array to the candidate pair, then ONE fused
+    * side's sorted array to the candidate pair ([[withSides]]), then ONE fused
     * merge-scan per pair (codegen'd `graft.plans.SortedJaccard`) — no
     * shingle explode, no per-pair groupBy. Versus [[jaccardPairs]], the
     * shuffle carries |pairs| rows with two arrays each instead of the
@@ -233,15 +256,10 @@ object Dedup {
     * (the [[shingleArray]]→[[minhashSignaturesNative]] pipeline).
     * Equal output to [[jaccardPairs]] (asserted in LlmOpsSpec). */
   def jaccardPairsFromArrays(shingleArrayDf: DataFrame, idCol: String,
-      pairs: DataFrame): DataFrame = {
-    val sorted = shingleArrayDf
-      .select(col(idCol), sort_array(col("shingles")).as("sh"))
-    pairs
-      .join(sorted.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sorted.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
+      pairs: DataFrame): DataFrame =
+    withSides(pairs, shingleArrayDf.select(col(idCol), sort_array(col("shingles")).as("sh")), idCol)
       .select(col("id_a"), col("id_b"),
         graft.plans.SortedJaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-  }
 
   /** Asymmetric containment scores for candidate pairs:
     * `C(A in B) = |A∩B| / |A|` and the reverse. Containment is the
@@ -259,11 +277,8 @@ object Dedup {
     * `array_intersect` is an exact set intersection size. */
   def containmentPairs(shingleArrayDf: DataFrame, idCol: String,
       pairs: DataFrame): DataFrame = {
-    val sorted = shingleArrayDf.select(col(idCol), col("shingles").as("sh"))
     val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    pairs
-      .join(sorted.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sorted.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
+    withSides(pairs, shingleArrayDf.select(col(idCol), col("shingles").as("sh")), idCol)
       .select(col("id_a"), col("id_b"),
         (inter / size(col("sh_a")).cast("double")).as("cont_a_in_b"),
         (inter / size(col("sh_b")).cast("double")).as("cont_b_in_a"))
@@ -279,15 +294,10 @@ object Dedup {
       .union(pairs.select(col("id_b").as(idCol))).distinct()
     val sh = shingleDf.join(broadcast(candidateIds), Seq(idCol), "left_semi")
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-    val inter = pairs
-      .join(sh.select(col(idCol).as("id_a"), col("shingle").as("sh_a")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("shingle").as("sh_b")), "id_b")
+    val inter = withSides(pairs, sh.select(col(idCol), col("shingle").as("sh")), idCol)
       .filter(col("sh_a") === col("sh_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
-    pairs
-      .join(inter, Seq("id_a", "id_b"), "left")
-      .join(sizes.select(col(idCol).as("id_a"), col("n").as("n_a")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("n").as("n_b")), "id_b")
+    withSides(pairs.join(inter, Seq("id_a", "id_b"), "left"), sizes, idCol)
       .select(col("id_a"), col("id_b"),
         (coalesce(col("n_inter"), lit(0L)).cast("double") /
           (col("n_a") + col("n_b") - coalesce(col("n_inter"), lit(0L))).cast("double"))
@@ -659,23 +669,17 @@ object Dedup {
     * banding keeps buckets small) — that bounds the pair expansion at
     * Σ bucket² over buckets of ≤ `maxDf` ids, never all-pairs.
     *
-    * One shuffle groups the (doc, fp) stream by fingerprint (32-byte
-    * keys); the i<j expansion is the same single-aggregation HOF as
-    * [[candidatePairs]]; the final per-pair count is a second hash agg
-    * on the (typically sparse) pair stream. */
+    * The candidate core's [[buckets]] group the (doc, fp) stream by
+    * fingerprint (one shuffle of 32-byte keys) and [[bucketPairs]]
+    * expands every i<j pair; the final per-pair count is a second hash
+    * agg on the (typically sparse) pair stream. */
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 5, w: Int = 4, minShared: Int = 2, maxDf: Int = 50): DataFrame = {
     require(minShared >= 1 && maxDf >= 2, s"minShared=$minShared, maxDf=$maxDf")
-    winnowFingerprints(df, idCol, textCol, k, w)
+    val fps = winnowFingerprints(df, idCol, textCol, k, w)
       .select(col(idCol), explode(col("fingerprints")).as("fp"))
-      .groupBy("fp")
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .filter(size(col("ids")).between(2, maxDf))
-      .select(explode(expr(
-        """flatten(transform(ids,
-          |  (a, i) -> transform(slice(ids, i + 2, size(ids)),
-          |            b -> struct(a AS id_a, b AS id_b))))""".stripMargin)).as("p"))
-      .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+    bucketPairs(buckets(fps, col(idCol), "fp").filter(size(col("ms")) <= maxDf))
+      .groupBy(col("p.a").as("id_a"), col("p.b").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }

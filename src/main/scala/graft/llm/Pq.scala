@@ -62,19 +62,21 @@ object Pq {
     * wrong-length vector, so a row-level `assert_true` fails loudly when
     * `size(vec) ≠ m·subDim`. */
   def subspaces(df: DataFrame, idCol: String, vecCol: String, m: Int, subDim: Int): DataFrame = {
-    val guard = dimGuard(col(vecCol), m, subDim)
+    val guard = dimGuard(col(vecCol), m * subDim, "Pq")
     val vv = Similarity.asDoubleVec(col(vecCol))
     val slices = array((0 until m).map(j => slice(vv, j * subDim + 1, subDim)): _*)
     df.select((col(idCol) + coalesce(guard.cast("long"), lit(0L))).as("vid"),
       posexplode(slices).as(Seq("s", "sv")))
   }
 
-  /** The row-level `size(vec) = m·subDim` check: `zip_with` would
-    * silently null-pad a wrong-length vector, so each caller folds this
-    * NULL-on-success column into a value it emits. */
-  private def dimGuard(vec: Column, m: Int, subDim: Int): Column =
-    assert_true(size(vec) === m * subDim,
-      concat(lit(s"Pq: expected dim ${m * subDim} but vector has "),
+  /** The row-level `size(vec) = dim` check of the vector operators
+    * (PQ, [[Similarity.hyperplaneSig]], [[Similarity.randomProjection]]),
+    * its message led by `who`: `zip_with` would silently null-pad a
+    * wrong-length vector, so each caller folds this NULL-on-success
+    * column into a value it emits. */
+  private[llm] def dimGuard(vec: Column, dim: Int, who: String): Column =
+    assert_true(size(vec) === dim,
+      concat(lit(s"$who: expected dim $dim but vector has "),
         size(vec).cast("string"), lit(" elements")))
 
   /** The nearest centroid id of subvector `sv` among one subspace's
@@ -116,7 +118,7 @@ object Pq {
     * each subspace j, the [[nearestCode]] of the row's j-th slice. Zero
     * shuffle, no explode, no join; the [[dimGuard]] rides every code. */
   def encodeCol(vec: Column, cbv: Codebook, m: Int, subDim: Int): Column = {
-    val guard = coalesce(dimGuard(vec, m, subDim).cast("int"), lit(0))
+    val guard = coalesce(dimGuard(vec, m * subDim, "Pq").cast("int"), lit(0))
     val vv = Similarity.asDoubleVec(vec)
     array((0 until m).map(j =>
       nearestCode(slice(vv, j * subDim + 1, subDim), cbv(j)) + guard): _*)
@@ -163,7 +165,7 @@ object Pq {
       // (s, cid, sv) rows via one posexplode with the cid computed
       // INLINE against the literal codebook — no broadcast join, no
       // (vid, s) exchange; the only shuffle is the m·k-group mean.
-      val guard = coalesce(dimGuard(col(vecCol), m, subDim).cast("int"), lit(0))
+      val guard = coalesce(dimGuard(col(vecCol), m * subDim, "Pq").cast("int"), lit(0))
       val vv = Similarity.asDoubleVec(col(vecCol))
       val slices = array((0 until m).map { j =>
         val sv = slice(vv, j * subDim + 1, subDim)
@@ -240,7 +242,7 @@ object Pq {
     * zero shuffle, same values (same [[l2sq]] fold per (s, cid)). The
     * wrong-length guard rides every lut element. */
   private def lutCol(vec: Column, cbv: Codebook, m: Int, subDim: Int): Column = {
-    val guard = coalesce(dimGuard(vec, m, subDim).cast("double"), lit(0.0))
+    val guard = coalesce(dimGuard(vec, m * subDim, "Pq").cast("double"), lit(0.0))
     val vv = Similarity.asDoubleVec(vec)
     array((0 until m).map { j =>
       val sv = slice(vv, j * subDim + 1, subDim)

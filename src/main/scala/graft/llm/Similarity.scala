@@ -290,9 +290,11 @@ object Similarity {
     * pure function of (k, i), so any engine with md5 regenerates the
     * exact same hyperplanes (the DuckDB oracle recomputes the signs in
     * SQL; no RNG state to ship). */
-  def hyperplaneSign(k: Int, i: Int): Double = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${k}_$i".getBytes("UTF-8"))
+  def hyperplaneSign(k: Int, i: Int): Double = md5Sign(s"${k}_$i")
+
+  /** +1 when the first hex nibble of md5(`seed`) is odd, else −1. */
+  private def md5Sign(seed: String): Double = {
+    val d = java.security.MessageDigest.getInstance("MD5").digest(seed.getBytes("UTF-8"))
     if (((d(0) >> 4) & 1) == 1) 1.0 else -1.0
   }
 
@@ -313,8 +315,8 @@ object Similarity {
     *
     * `dim` MUST equal the actual vector length: `zip_with` pads a
     * shorter side with null, which would turn every projection NULL and
-    * emit all-zero signatures silently. A row-level `assert_true` guard
-    * makes that misconfiguration fail loudly instead. */
+    * emit all-zero signatures silently. A row-level guard
+    * ([[Pq.dimGuard]]) makes that misconfiguration fail loudly instead. */
   def hyperplaneSig(vecCol: Column, dim: Int, nBits: Int = 16): Column = {
     require(nBits <= 32, "signature packs into an int/long")
     // (1L << k, plane_k): the bit weight rides inside the literal so the
@@ -325,21 +327,14 @@ object Similarity {
     val sig = aggregate(planes, lit(0L), (acc, p) =>
       acc + when(dot(asDoubleVec(vecCol), p.getField("_2")) >= 0,
         p.getField("_1")).otherwise(lit(0L)))
-    val dimGuard = assert_true(size(vecCol) === dim,
-      concat(lit(s"hyperplaneSig: dim=$dim but vector has "),
-        size(vecCol).cast("string"), lit(" elements")))
-    sig + coalesce(dimGuard.cast("long"), lit(0L))
+    sig + coalesce(Pq.dimGuard(vecCol, dim, "hyperplaneSig").cast("long"), lit(0L))
   }
 
   /** Deterministic ±1 sign for the random-projection matrix cell
     * (j, i) — md5 parity over the `rp_` seed family, DISJOINT from
     * [[hyperplaneSign]]'s `k_i` family so the LSH bits and the reduced
     * coordinates stay independent. */
-  def rpSign(j: Int, i: Int): Double = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"rp_${j}_$i".getBytes("UTF-8"))
-    if (((d(0) >> 4) & 1) == 1) 1.0 else -1.0
-  }
+  def rpSign(j: Int, i: Int): Double = md5Sign(s"rp_${j}_$i")
 
   /** Johnson–Lindenstrauss random projection (Achlioptas '01 dense ±1
     * variant): dim-d vectors reduce to `k` coordinates `y_j =
@@ -365,10 +360,7 @@ object Similarity {
     require(k >= 1, "need at least one output coordinate")
     val planes = typedLit(Seq.tabulate(k)(j => Seq.tabulate(dim)(i => rpSign(j, i))))
     val scale = lit(math.sqrt(k.toDouble))
-    val dimGuard = assert_true(size(vecCol) === dim,
-      concat(lit(s"randomProjection: dim=$dim but vector has "),
-        size(vecCol).cast("string"), lit(" elements")))
-    when(coalesce(dimGuard.cast("boolean"), lit(true)),
+    when(coalesce(Pq.dimGuard(vecCol, dim, "randomProjection").cast("boolean"), lit(true)),
       transform(planes, p => dot(asDoubleVec(vecCol), p) / scale))
   }
 
@@ -376,33 +368,28 @@ object Similarity {
     * signature splits into `nBits/bandBits` bands; vectors meet when any
     * band agrees EXACTLY (the classic OR-of-ANDs amplification), then
     * survivors are verified by full-signature Hamming distance ≤
-    * `maxHamming` — `bit_count(xor)`, both codegen'd built-ins. Uses the
-    * same single-aggregation bucket expansion as
-    * [[Dedup.candidatePairs]], but carries the full signature INTO the
-    * bucket structs, so verification is inline on the expanded pair —
-    * the `sigs` lineage (and the 16×dim dot-product projection feeding
-    * it) is evaluated exactly ONCE, with one shuffle of the tiny
-    * (id, sig, band, value) frame and Σ bucket² pair output — never
-    * all-pairs, no re-join, no persist.
+    * `maxHamming` — `bit_count(xor)`, both codegen'd built-ins. The
+    * candidate core ([[Dedup.buckets]], [[Dedup.bucketPairs]]) with
+    * struct(id, sig) members: the signature rides INTO the bucket, so
+    * verification is inline on the expanded pair and the `sigs` lineage
+    * (and the 16×dim dot-product projection feeding it) is evaluated
+    * exactly ONCE — no re-join, no persist.
     *
     * SCALE WARNING (r9 stress finding): `bandBits` fixes the bucket
     * count at 2^bandBits per band, so Σ bucket² grows QUADRATICALLY in
     * the corpus once buckets saturate — the default 4-bit bands (16
     * buckets) took 45 s at a 20k-vector corpus vs 1.9 s at 2k (≈24× for
     * 10×). At scale either raise `bandBits` with a wider signature, or
-    * set `maxBucket`/`reps` to bound oversized buckets with the same
-    * member↔representative star expansion as
-    * [[Dedup.candidatePairsCapped]] (md5-order election, connectivity
-    * preserved, O(n·reps) emission; star pairs still Hamming-verified).
+    * set `maxBucket`/`reps` to bound oversized buckets with the core's
+    * member↔representative star (star pairs are still Hamming-verified).
     * The default (`maxBucket = Int.MaxValue`) keeps the exact expansion. */
   def hyperplanePairs(sigs: DataFrame, idCol: String, sigCol: String,
       nBits: Int = 16, bandBits: Int = 4, maxHamming: Int = 4,
       maxBucket: Int = Int.MaxValue, reps: Int = 8): DataFrame = {
     require(nBits % bandBits == 0, "bandBits must divide nBits")
     require(reps >= 1, s"reps=$reps must be >= 1")
-    val nBands = nBits / bandBits
     val mask = (1L << bandBits) - 1
-    val bandStructs = (0 until nBands).map { b =>
+    val bandStructs = (0 until nBits / bandBits).map { b =>
       struct(lit(b).as("band"),
         shiftright(col(sigCol), b * bandBits).bitwiseAND(lit(mask))
           .cast("string").as("band_hash"))
@@ -411,36 +398,10 @@ object Similarity {
       .select(col(idCol), col(sigCol), explode(array(bandStructs: _*)).as("bb"))
       .select(col(idCol), col(sigCol),
         col("bb.band").as("band"), col("bb.band_hash").as("band_hash"))
-    // sort_array on struct(id, sig) orders by id first → id_a < id_b,
-    // matching Dedup.candidatePairs' pair canonicalization.
-    val fullExpr = expr(
-      """flatten(transform(ms,
-        |  (a, i) -> transform(slice(ms, i + 2, size(ms)),
-        |            b -> struct(a.id AS id_a, b.id AS id_b,
-        |                        a.sig AS sig_a, b.sig AS sig_b))))""".stripMargin)
-    val pairsCol =
-      if (maxBucket == Int.MaxValue) fullExpr
-      else when(size(col("ms")) > maxBucket, expr(
-        """filter(flatten(transform(ms,
-          |  m -> transform(_reps,
-          |       r -> struct(least(m.id, r.id) AS id_a,
-          |                   greatest(m.id, r.id) AS id_b,
-          |                   m.sig AS sig_a, r.sig AS sig_b)))),
-          |  p -> p.id_a != p.id_b)""".stripMargin)).otherwise(fullExpr)
-    val buckets = bands.groupBy("band", "band_hash")
-      .agg(sort_array(collect_list(struct(col(idCol).as("id"), col(sigCol).as("sig"))))
-        .as("ms"))
-      .filter(size(col("ms")) > 1)
-    val withReps =
-      if (maxBucket == Int.MaxValue) buckets
-      else buckets.withColumn("_reps", expr(
-        s"""transform(slice(array_sort(transform(ms,
-           |  x -> struct(md5(CAST(x.id AS STRING)) AS h, x AS m))), 1, $reps),
-           |  s -> s.m)""".stripMargin))
-    withReps
-      .select(explode(pairsCol).as("p"))
-      .select(col("p.id_a"), col("p.id_b"),
-        bit_count(col("p.sig_a").bitwiseXOR(col("p.sig_b"))).as("hamming"))
+    val member = struct(col(idCol).as("id"), col(sigCol).as("sig"))
+    Dedup.bucketPairs(Dedup.buckets(bands, member, "band", "band_hash"), maxBucket, reps)
+      .select(col("p.a.id").as("id_a"), col("p.b.id").as("id_b"),
+        bit_count(col("p.a.sig").bitwiseXOR(col("p.b.sig"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * NOTE — intentional divergence, documented: the reference's MERGE closes
   * the old version of a changed row but never inserts the NEW version (its
   * playbook admits the simplification, `MIGRATION_PLAYBOOK.md:219-221`).
-  * A correct SCD2 needs both; `insertNewVersions=true` (default) fixes
-  * the gap, `false` reproduces the reference bug-for-bug.
+  * A correct SCD2 needs both, and this merge always inserts the new
+  * version.
   *
   * Scale shape: ONE shuffle of `current` and `source` on the key drives
   * every row fate (kept / closed / new-version / brand-new); closed-out
@@ -38,8 +38,7 @@ object Scd2 {
       target: DataFrame,
       source: DataFrame,
       keyCols: Seq[String],
-      trackedCols: Seq[String],
-      insertNewVersions: Boolean = true): DataFrame = {
+      trackedCols: Seq[String]): DataFrame = {
 
     require(target.columns.sorted.sameElements(source.columns.sorted),
       s"target/source schemas differ: ${target.columns.toSeq} vs ${source.columns.toSeq}")
@@ -80,11 +79,11 @@ object Scd2 {
 
     // ONE pass over the joined stream: each row emits its 0-2 output
     // rows (keep → the target row; insert → the source row; close →
-    // the closed-out target row plus, by default, the source's new
-    // version) through a single explode. The previous four-branch
-    // union re-instantiated the sort-merge join per branch —
-    // ReuseExchange dedupes only the exchanges, so the sort+merge and
-    // fate evaluation ran four times over the same shuffled bytes
+    // the closed-out target row plus the source's new version) through
+    // a single explode. The previous four-branch union re-instantiated
+    // the sort-merge join per branch — ReuseExchange dedupes only the
+    // exchanges, so the sort+merge and fate evaluation ran four times
+    // over the same shuffled bytes
     // (measured in st20: 1.14 M shuffle-read records for 0.76 M
     // written). A keep-fate row always has a target side — the fates
     // are keyed on side PRESENCE above, so keep ⇒ t present and
@@ -96,14 +95,12 @@ object Scd2 {
       case "effective_end_date" => col("s.effective_start_date").as("effective_end_date")
       case c => col(s"t.$c").as(c)
     }: _*)
-    val closeRows =
-      if (insertNewVersions) array(closedRow, newRow) else array(closedRow)
 
     val emitted = joined
       .select(explode(
         when(col("__fate") === "keep", array(keepRow))
           .when(col("__fate") === "insert", array(newRow))
-          .otherwise(closeRows)).as("__r"))
+          .otherwise(array(closedRow, newRow))).as("__r"))
       .select(targetCols.map(c => col(s"__r.$c").as(c)): _*)
 
     history.unionByName(emitted)

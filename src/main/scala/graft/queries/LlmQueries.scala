@@ -62,12 +62,10 @@ object LlmQueries {
         explode(expr("sequence(0, 3)")).as("band"))
       .select(col("doc_id"), col("band"),
         Multimodal.phashBand("band").as("band_hash"))
-    val pairs = Dedup.candidatePairsCapped(bands, "doc_id",
-        maxBucket = 64, reps = 8)
-      .join(hashed.select(col("doc_id").as("id_a"), col("phash").as("ph_a")), "id_a")
-      .join(hashed.select(col("doc_id").as("id_b"), col("phash").as("ph_b")), "id_b")
+    val pairs = Dedup.withSides(Dedup.candidatePairsCapped(bands, "doc_id", maxBucket = 64, reps = 8),
+        hashed.select("doc_id", "phash"), "doc_id")
       .select(col("id_a"), col("id_b"),
-        bit_count(col("ph_a").bitwiseXOR(col("ph_b"))).cast("int").as("hamming"),
+        bit_count(col("phash_a").bitwiseXOR(col("phash_b"))).cast("int").as("hamming"),
         col("capped"))
       .filter(col("hamming") <= 6)
     (hashed, pairs)
@@ -155,11 +153,10 @@ object LlmQueries {
         col("samples"))
       .select(col("doc_id"), col("band"),
         Multimodal.audioWindowKey("band").as("band_hash"))
-    Dedup.candidatePairsCapped(bands, "doc_id", maxBucket = 64, reps = 8)
-      .join(decoded.select(col("doc_id").as("id_a"), col("samples").as("sa")), "id_a")
-      .join(decoded.select(col("doc_id").as("id_b"), col("samples").as("sb")), "id_b")
+    Dedup.withSides(Dedup.candidatePairsCapped(bands, "doc_id", maxBucket = 64, reps = 8),
+        decoded.select("doc_id", "samples"), "doc_id")
       .select(col("id_a"), col("id_b"),
-        expr("""aggregate(zip_with(sa, sb, (x, y) -> CAST(abs(x - y) AS BIGINT)),
+        expr("""aggregate(zip_with(samples_a, samples_b, (x, y) -> CAST(abs(x - y) AS BIGINT)),
                |  CAST(0 AS BIGINT), (a, v) -> a + v) DIV 128""".stripMargin)
           .as("mad"),
         col("capped"))

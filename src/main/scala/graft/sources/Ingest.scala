@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.streaming.AvailableNow
 
@@ -104,7 +104,7 @@ object Ingest {
     *      (cloudFiles' inference default for evolved columns without
     *      hints);
     *   3. widen the bronze table via `ALTER TABLE ADD COLUMNS`
-    *      ([[Tables.append]]'s additive-evolution path — metadata-only,
+    *      ([[Tables.addColumns]], [[Tables.append]]'s step — metadata-only,
     *      the table is never rewritten; historical parquet files simply
     *      read NULL for the new columns);
     *   4. resume the stream UNDER THE SAME CHECKPOINT with the evolved
@@ -120,7 +120,7 @@ object Ingest {
       baseSchema: StructType, table: String, checkpointDir: String,
       batchId: Option[Long] = None): StructType = {
     // The bronze schema is read once, and again only after an ALTER
-    // widened it (Tables.append's rule).
+    // widened it (Tables.addColumns).
     val existing =
       if (spark.catalog.tableExists(table)) Some(spark.read.table(table).schema) else None
     // Known columns ALWAYS keep their declared order/types — CSV reads
@@ -132,18 +132,10 @@ object Ingest {
     val known = knownFields.map(f => f.name.toLowerCase -> f.dataType).toMap
     val discovered = discoverCsvColumns(spark, sourceDir)
       .getOrElse(baseSchema.fieldNames.toSeq)
-    val newCols = discovered.filterNot(d => known.contains(d.toLowerCase))
-    val evolved = StructType(
-      knownFields.map(f => org.apache.spark.sql.types.StructField(f.name, f.dataType)) ++
-      newCols.map(org.apache.spark.sql.types.StructField(_,
-        org.apache.spark.sql.types.StringType)))
-    val target = existing.map { schema =>
-      if (newCols.isEmpty) schema else {
-        val colsDdl = newCols.map(n => s"`$n` STRING").mkString(", ")
-        spark.sql(s"ALTER TABLE $table ADD COLUMNS ($colsDdl)")
-        spark.read.table(table).schema
-      }
-    }
+    val added = discovered.filterNot(d => known.contains(d.toLowerCase))
+      .map(StructField(_, StringType))
+    val evolved = StructType(knownFields.map(f => StructField(f.name, f.dataType)) ++ added)
+    val target = existing.map(Tables.addColumns(spark, table, _, added))
     val bid = batchId.getOrElse(System.currentTimeMillis() / 1000)
     val raw = spark.readStream.schema(evolved).option("header", "true").csv(sourceDir)
     val withMeta = addMetadataColumns(raw, lit(bid))

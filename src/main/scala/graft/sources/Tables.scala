@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.operators.Scd2
 
@@ -41,20 +42,26 @@ object Tables {
       return
     }
     val existing = spark.read.table(table).schema
-    val newFields = df.schema.fields.filterNot(f =>
-      existing.fieldNames.exists(_.equalsIgnoreCase(f.name)))
-    val target = if (newFields.isEmpty) existing else {
-      val colsDdl = newFields
-        .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-      spark.sql(s"ALTER TABLE $table ADD COLUMNS ($colsDdl)")
-      spark.read.table(table).schema
-    }
+    val target = addColumns(spark, table, existing, df.schema.fields.toSeq.filterNot(f =>
+      existing.fieldNames.exists(_.equalsIgnoreCase(f.name))))
     val aligned = df.select(target.fields.map { f =>
       if (df.schema.fieldNames.exists(_.equalsIgnoreCase(f.name))) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }.toIndexedSeq: _*)
     aligned.write.mode("append").format("parquet").saveAsTable(table)
   }
+
+  /** Additive schema evolution, the one widen step: `ALTER TABLE … ADD
+    * COLUMNS` for `newFields` (metadata only; old files read NULL for
+    * them), then the table's schema re-read. With no new fields the
+    * table is untouched and `existing` is returned as it is. */
+  private[sources] def addColumns(spark: SparkSession, table: String,
+      existing: StructType, newFields: Seq[StructField]): StructType =
+    if (newFields.isEmpty) existing else {
+      val colsDdl = newFields.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
+      spark.sql(s"ALTER TABLE $table ADD COLUMNS ($colsDdl)")
+      spark.read.table(table).schema
+    }
 
   /** Partitioned overwrite for partition-pruned reads
     * (`fact_claims.py:99-104`: `partitionBy("property_state")`). */

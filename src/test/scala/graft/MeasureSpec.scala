@@ -139,8 +139,8 @@ class MeasureSpec extends SparkTestBase {
     assert(BusAccess.listenerCount(sc) === before)
   }
 
-  /** `file:line` of every line under src/main/scala containing `token`. */
-  private def sourceHits(token: String): List[String] = {
+  /** `file:line` of every line under src/main/scala that `hit` accepts. */
+  private def sourceLines(hit: String => Boolean): List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
     val walk = Files.walk(root)
@@ -148,10 +148,19 @@ class MeasureSpec extends SparkTestBase {
       .filter(p => p.toString.endsWith(".scala"))
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains(token) => s"${root.relativize(p)}:${i + 1}"
+          case (line, i) if hit(line) => s"${root.relativize(p)}:${i + 1}"
         }
       }.toList
     finally walk.close()
+  }
+
+  /** `file:line` of every line under src/main/scala containing `token`. */
+  private def sourceHits(token: String): List[String] = sourceLines(_.contains(token))
+
+  /** [[sourceHits]] outside comment lines. */
+  private def codeHits(token: String): List[String] = sourceLines { line =>
+    val t = line.trim
+    line.contains(token) && !Seq("//", "/*", "*").exists(t.startsWith)
   }
 
   test("source sweep: SparkSession.builder appears in src/main only in the factory") {
@@ -238,6 +247,30 @@ class MeasureSpec extends SparkTestBase {
     val hits = sourceHits("createTempDirectory")
     assert(hits.nonEmpty && hits.forall(_.startsWith("graft/tools/Measure.scala:")),
       s"create temp dirs through graft.tools.Measure.tempDir, found:\n${hits.mkString("\n")}")
+  }
+
+  test("source sweep: tables are widened in src/main only by Tables.addColumns") {
+    val hits = codeHits("ADD COLUMNS")
+    assert(hits.size === 1 && hits.head.startsWith("graft/sources/Tables.scala:"),
+      s"widen tables through graft.sources.Tables.addColumns, found:\n${hits.mkString("\n")}")
+  }
+
+  test("source sweep: near-dup pairs expand, elect and attach through one core") {
+    // videoVerifiedPairs keeps its own frame-aligned side join.
+    val file = "graft/queries/LlmQueries.scala"
+    val lines = Files.readAllLines(Paths.get("src/main/scala", file)).asScala
+    val from = lines.indexWhere(_.contains("def videoVerifiedPairs(")) + 1
+    val to = lines.indexWhere(_.contains("def "), from)
+    val video = (from to to).map(i => s"$file:$i").toSet
+    val spellings = Seq(
+      "i + 2, size(" -> "the i<j pair expansion",
+      "AS STRING)) AS h" -> "the md5(id) representative election",
+      "), \"id_a\")" -> "the pair-side attach")
+    for ((token, what) <- spellings) {
+      val hits = codeHits(token).filterNot(video)
+      assert(hits.size === 1 && hits.head.startsWith("graft/llm/Dedup.scala:"),
+        s"spell $what once, in the Dedup candidate core, found:\n${hits.mkString("\n")}")
+    }
   }
 
   test("source sweep: global aggregates are observed in src/main only by Reduce.observed") {

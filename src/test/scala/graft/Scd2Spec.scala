@@ -109,15 +109,6 @@ class Scd2Spec extends SparkTestBase {
       && ins(0).getAs[String]("policy_id") == null)
   }
 
-  test("merge with insertNewVersions=false reproduces the reference gap") {
-    val target = dim(("P1", "ACTIVE", "2024-01-01", None, true))
-    val source = dim(("P1", "CANCELLED", "2024-06-01", None, true))
-    val out = Scd2.merge(target, source, Seq("policy_id"), Seq("status"),
-      insertNewVersions = false)
-    assert(out.count() === 1)
-    assert(!out.head().getAs[Boolean]("is_current")) // closed but no new version
-  }
-
   test("scd2Apply: first load, then incremental history-append") {
     val table = "graft_test.scd2_dim"
     Tables.ensureDatabase(spark, "graft_test")
