@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * link-centrality signal crawl-curation pipelines use to weight domains
   * and documents before sampling training data.
   *
-  * Per iteration: contributions `pr/outdeg` flow along edges (one join
-  * keyed on src), reduce per destination (one hash aggregate keyed on
+  * Per iteration: contributions `pr/deg` flow along edges (one join
+  * keyed on src: the ranks frame carries each vertex's out-degree `deg`
+  * beside its rank), reduce per destination (one hash aggregate keyed on
   * dst — PageRank's irreducible communication pattern), and dangling
   * mass redistributes uniformly. At scale, hash-partition `edges` by src
   * ONCE up front: the per-iteration ranks join then reuses that
@@ -40,9 +41,7 @@ object PageRank {
   def run(nodes: DataFrame, edges: DataFrame, idCol: String,
       iters: Int, damping: Double = 0.85): DataFrame = {
     val e = edges.localCheckpoint(true)
-    val outdeg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-      .localCheckpoint(true)
-    val (verts, sizes) = Reduce.observed(vertices(nodes, idCol, outdeg),
+    val (verts, sizes) = Reduce.observed(vertices(nodes, idCol, e),
       count(lit(1)).as("n"), count(when(col("dangling"), lit(1))).as("nd"))(
       _.localCheckpoint(true))
     val (n, nDangling) = (sizes.getLong(0), sizes.getLong(1))
@@ -52,10 +51,10 @@ object PageRank {
     // is nDangling equal fixed-point terms — the sum the observed
     // aggregate would compute, exactly (at most 10¹², well inside the
     // 2⁵³ a double holds exactly).
-    var ranks = verts.select(col("nid"), (lit(1.0) / lit(nD)).as("pr"), col("dangling"))
+    var ranks = verts.select(col("nid"), (lit(1.0) / lit(nD)).as("pr"), col("deg"), col("dangling"))
     var dm = (nDangling * math.floor((1.0 / nD) * 1.0e12).toLong).toDouble / 1.0e12
     for (_ <- 1 to iters) {
-      val (next, mass) = Reduce.observed(round(verts, e, outdeg, ranks, nD, dm, damping),
+      val (next, mass) = Reduce.observed(round(verts, e, ranks, nD, dm, damping),
         coalesce(
           sum(when(col("dangling"), floor(col("pr") * lit(1.0e12)).cast("decimal(38,0)")))
             .cast("double") / lit(1.0e12),
@@ -66,23 +65,24 @@ object PageRank {
     ranks.select(col("nid").as(idCol), col("pr"))
   }
 
-  /** The vertex set as (nid, dangling): `dangling` marks a node with no
-    * out-edge, whose rank redistributes uniformly. */
-  private[graft] def vertices(nodes: DataFrame, idCol: String, outdeg: DataFrame): DataFrame =
+  /** The vertex set as (nid, deg, dangling): `deg` is the out-degree as
+    * a double, NULL for a `dangling` node — one with no out-edge, whose
+    * rank redistributes uniformly. */
+  private[graft] def vertices(nodes: DataFrame, idCol: String, edges: DataFrame): DataFrame =
     nodes.select(col(idCol).as("nid"))
-      .join(outdeg, col("nid") === col("src"), "left")
-      .select(col("nid"), col("src").isNull.as("dangling"))
+      .join(edges.groupBy("src").agg(count(lit(1)).cast("double").as("deg")),
+        col("nid") === col("src"), "left")
+      .select(col("nid"), col("deg"), col("src").isNull.as("dangling"))
 
   /** ONE damped round, pre-checkpoint, given the previous ranks'
-    * dangling mass `dm`; returns (nid, pr, dangling) — exposed so
-    * PlanGuardsSpec can pin the per-iteration plan shape (two
-    * rank/degree attach joins, exactly one dst-keyed aggregate exchange,
-    * no cartesian fallback) against the REAL iteration body rather than
-    * a re-derived twin. */
-  private[graft] def round(verts: DataFrame, e: DataFrame, outdeg: DataFrame,
+    * dangling mass `dm`; returns (nid, pr, deg, dangling) — exposed so
+    * PlanGuardsSpec can pin the per-iteration plan shape (one rank
+    * attach join, exactly one dst-keyed aggregate exchange, no cartesian
+    * fallback) against the REAL iteration body rather than a re-derived
+    * twin. */
+  private[graft] def round(verts: DataFrame, e: DataFrame,
       ranks: DataFrame, nD: Double, dm: Double, damping: Double): DataFrame = {
     val inflow = e.join(ranks, col("src") === col("nid"))
-      .join(outdeg, "src")
       .select(col("dst"),
         floor((col("pr") / col("deg")) * lit(1.0e12)).cast("decimal(38,0)").as("c"))
       .groupBy("dst")
@@ -91,6 +91,6 @@ object PageRank {
       .select(col("nid"),
         (lit(1.0 - damping) / lit(nD) + lit(damping) *
           (coalesce(col("inflow"), lit(0.0)) + lit(dm) / lit(nD))).as("pr"),
-        col("dangling"))
+        col("deg"), col("dangling"))
   }
 }

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import scala.collection.mutable
-import scala.concurrent.Future
+import scala.concurrent.{Await, Promise}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,28 +28,29 @@ object Runner {
     * without running them (fail-fast per subtree, like Workflows) while
     * independent branches continue.
     *
-    * Each stage runs on its own pool thread ([[graft.tools.Overlap]]):
-    * the threads mostly block on Spark jobs, and Spark's scheduler shares
-    * out the task slots. A stage thread carries a copy of the caller's
-    * job properties, so the caller's job group stays visible, and labels
-    * its jobs with the stage name as the job description. A dependency
-    * cycle fails before any stage runs, naming the cycle; a run longer
-    * than [[graft.tools.Overlap.MaxWait]] fails with a TimeoutException. */
+    * Each stage is one thunk of one [[graft.tools.Overlap.all]] call: it
+    * waits for its dependencies' results, then runs or skips. The threads
+    * mostly block on Spark jobs, and Spark's scheduler shares out the
+    * task slots. A stage thread carries a copy of the caller's job
+    * properties, so the caller's job group stays visible, and labels its
+    * jobs with the stage name as the job description. A dependency cycle
+    * fails before any stage runs, naming the cycle; a run longer than
+    * [[graft.tools.Overlap.MaxWait]] fails with a TimeoutException. */
   def run(spark: SparkSession, stages: Seq[Stage]): Seq[StageResult] = {
     val byName = stages.map(s => s.name -> s).toMap
     require(byName.size == stages.size, "duplicate stage names")
     stages.foreach(s => s.deps.foreach(d =>
       require(byName.contains(d), s"stage ${s.name} depends on unknown stage $d")))
-    Overlap.await(stages.size) { implicit ec =>
-      val done = topological(stages, byName).foldLeft(Map.empty[String, Future[StageResult]]) {
-        (started, st) => started + (st.name -> Future.sequence(st.deps.map(started)).flatMap { deps =>
-          if (deps.exists(!_.ok))
-            Future.successful(StageResult(st.name, ok = false, 0.0, Some("skipped: upstream failure")))
-          else Future(exec(spark, st))
-        })
-      }
-      Future.traverse(stages)(s => done(s.name))
-    }
+    requireAcyclic(stages, byName)
+    val done = stages.map(s => s.name -> Promise[StageResult]()).toMap
+    Overlap.all(stages.map(st => () => {
+      val deps = st.deps.map(d => Await.result(done(d).future, Overlap.MaxWait))
+      val result =
+        if (deps.exists(!_.ok)) StageResult(st.name, ok = false, 0.0, Some("skipped: upstream failure"))
+        else exec(spark, st)
+      done(st.name).success(result)
+      result
+    }))
   }
 
   private def exec(spark: SparkSession, st: Stage): StageResult = {
@@ -62,17 +63,16 @@ object Runner {
     }
   }
 
-  /** `stages` ordered so that every stage follows its dependencies. */
-  private def topological(stages: Seq[Stage], byName: Map[String, Stage]): Seq[Stage] = {
-    val ordered = mutable.LinkedHashSet.empty[String]
-    def visit(name: String, path: List[String]): Unit = if (!ordered.contains(name)) {
+  /** Fail, naming the cycle, if the dependencies form one. */
+  private def requireAcyclic(stages: Seq[Stage], byName: Map[String, Stage]): Unit = {
+    val visited = mutable.Set.empty[String]
+    def visit(name: String, path: List[String]): Unit = if (!visited.contains(name)) {
       require(!path.contains(name), "stage dependency cycle: " +
         (name :: path.takeWhile(_ != name) ::: List(name)).reverse.mkString(" -> "))
       byName(name).deps.foreach(visit(_, name :: path))
-      ordered += name
+      visited += name
     }
     stages.foreach(s => visit(s.name, Nil))
-    ordered.toSeq.map(byName)
   }
 
   /** The full medallion pipeline over a directory of raw CSVs

@@ -148,36 +148,14 @@ case class AsOfMergeJoinExec(
       val outProj = UnsafeProjection.create(allOut,
         leftOut ++ rightOut.map(_.withNullability(true)))
 
-      if (forward) {
-        // Forward (smallest right ts ≥ left ts): no candidate buffering
-        // at all — skip right rows strictly before the left position;
-        // the row the scan stops on IS the match when keys agree (and
-        // may serve several left rows, so it is never consumed here).
-        new Iterator[InternalRow] {
-          private var rRow: InternalRow = _
-          private var rPos: UnsafeRow = _
-          private def advanceRight(): Unit = {
-            if (rIter.hasNext) { rRow = rIter.next(); rPos = rPosProj(rRow) }
-            else { rRow = null; rPos = null }
-          }
-          advanceRight()
-          override def hasNext: Boolean = lIter.hasNext
-          override def next(): InternalRow = {
-            val lRow = lIter.next()
-            val lPos = lPosProj(lRow)
-            var scanning = rRow != null
-            while (scanning) {
-              val kc = keyOrd.compare(rPos, lPos)
-              if (kc < 0 || (kc == 0 && tsOrd.compare(rPos, lPos) < 0)) {
-                advanceRight(); scanning = rRow != null
-              } else scanning = false
-            }
-            val matched = rRow != null && keyOrd.compare(rPos, lPos) == 0 &&
-              (!hasTol || rPos.getLong(tsIdx) - lPos.getLong(tsIdx) <= tolV)
-            outProj(joined(lRow, if (matched) rRow else nullRight))
-          }
-        }
-      } else new Iterator[InternalRow] {
+      // One merge loop for both directions. Per left row, pass the right
+      // rows before its position: on an earlier key, or on its key and
+      // earlier in time (forward), or no later (backward). Forward needs
+      // no buffering: the row the scan stops on IS the candidate, and may
+      // serve several left rows, so it is never consumed here. Backward's
+      // candidate is the last passed row on the left row's key, copied
+      // because it outlives the buffers.
+      new Iterator[InternalRow] {
         private var rRow: InternalRow = _
         private var rPos: UnsafeRow = _
         private var candRow: InternalRow = _
@@ -188,8 +166,7 @@ case class AsOfMergeJoinExec(
             rRow = rIter.next()
             // NO copy: the projection buffer stays valid until the next
             // advance and the sorter's row buffer until the next
-            // rIter.next() — exactly the lifetime needed. Copies happen
-            // only on candidate capture.
+            // rIter.next() — exactly the lifetime needed.
             rPos = rPosProj(rRow)
           } else { rRow = null; rPos = null }
         }
@@ -203,19 +180,22 @@ case class AsOfMergeJoinExec(
           var scanning = rRow != null
           while (scanning) {
             val kc = keyOrd.compare(rPos, lPos)
-            if (kc < 0) {
-              // Right is on an earlier key: its candidate can never
-              // match a current-or-later left key.
-              candRow = null; candPos = null
-              advanceRight(); scanning = rRow != null
-            } else if (kc == 0 && tsOrd.compare(rPos, lPos) <= 0) {
-              // Capture: these outlive the buffers, so copy both.
-              candRow = rRow.copy(); candPos = rPos.copy()
+            val before = kc < 0 || (kc == 0 && {
+              val tc = tsOrd.compare(rPos, lPos)
+              if (forward) tc < 0 else tc <= 0
+            })
+            if (before) {
+              if (!forward) {
+                if (kc == 0) { candRow = rRow.copy(); candPos = rPos.copy() }
+                else { candRow = null; candPos = null }
+              }
               advanceRight(); scanning = rRow != null
             } else scanning = false
           }
-          val matched = candRow != null && keyOrd.compare(candPos, lPos) == 0 &&
-            (!hasTol || lPos.getLong(tsIdx) - candPos.getLong(tsIdx) <= tolV)
+          if (forward) { candRow = rRow; candPos = rPos }
+          val matched = candRow != null && keyOrd.compare(candPos, lPos) == 0 && (!hasTol ||
+            (if (forward) candPos.getLong(tsIdx) - lPos.getLong(tsIdx)
+             else lPos.getLong(tsIdx) - candPos.getLong(tsIdx)) <= tolV)
           outProj(joined(lRow, if (matched) candRow else nullRight))
         }
       }

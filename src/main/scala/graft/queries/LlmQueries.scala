@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.llm.{Bpe, Classifier, Dedup, Multimodal, Pq, Similarity, Splits, TextOps}
 import graft.operators.{CountMin, HistQuantile, PageRank, RobustStats}
+import graft.tools.Overlap
 import Registry.T
 
 /** Driver-gradable queries for the LLM training-data pipeline operators
@@ -307,7 +308,7 @@ object LlmQueries {
        |  FROM vph, range(4) b(b))""".stripMargin
 
   // -- shared DuckDB fragments ------------------------------------------
-  private val normSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+  private[queries] val normSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
   private[queries] val toksCte =
     s"toks AS (SELECT doc_id, string_split($normSql, ' ') AS t FROM documents)"
   // sh/sh5/sigs are MATERIALIZED: DuckDB inlines CTEs per reference,
@@ -351,6 +352,34 @@ object LlmQueries {
        |        '\\b(the|a|an|and|of|to|in|is|it)\\b')) AS DOUBLE) /
        |      NULLIF(CAST(len(string_split($normSql, ' ')) AS DOUBLE), 0)
        |      AS stopword_ratio""".stripMargin
+
+  /** TextOps.langId's prediction as one DuckDB CASE: llm_lang_id and
+    * llm_langid_eval. */
+  private val langCaseSql =
+    """CASE
+      |    WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
+      |    WHEN len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b')) >
+      |           len(regexp_extract_all(lower(text), '\b(the|and|is|of|to)\b'))
+      |     AND len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b')) >=
+      |           len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b'))
+      |     AND len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b')) >=
+      |           len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b'))
+      |      THEN 'de'
+      |    WHEN len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b')) >
+      |           len(regexp_extract_all(lower(text), '\b(the|and|is|of|to)\b'))
+      |     AND len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b')) >=
+      |           len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b'))
+      |     AND len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b')) >=
+      |           len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b'))
+      |      THEN 'fr'
+      |    WHEN len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b')) >
+      |           len(regexp_extract_all(lower(text), '\b(the|and|is|of|to)\b'))
+      |     AND len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b')) >=
+      |           len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b'))
+      |     AND len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b')) >=
+      |           len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b'))
+      |      THEN 'es'
+      |    ELSE 'en' END""".stripMargin
 
   /** Statistics CTE `stats` over `from`, then the `keep(doc_id)` set at the
     * curation thresholds (the null-safe spelling below); qualKeepAllCtes and
@@ -507,7 +536,7 @@ object LlmQueries {
     // diverge under a future regex edit).
     val toks =
       s"""toks AS MATERIALIZED (SELECT doc_id, word FROM (
-         |  SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS word
+         |  SELECT doc_id, unnest(string_split($normSql, ' ')) AS word
          |  FROM documents) u WHERE word <> '')""".stripMargin
     val iters = (1 to k).map { t =>
       s"""pr$t AS MATERIALIZED (
@@ -1221,36 +1250,13 @@ object LlmQueries {
     "llm_lang_id" -> Q((s, dir) =>
       TextOps.langId(T(s, dir, "documents").select("doc_id", "lang", "text"))
         .drop("text").orderBy("doc_id"),
-      Some("""SELECT doc_id, lang,
+      Some(raw"""SELECT doc_id, lang,
              |  len(regexp_extract_all(lower(text), '\b(the|and|is|of|to)\b')) AS score_en,
              |  len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b')) AS score_de,
              |  len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b')) AS score_fr,
              |  len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b')) AS score_es,
              |  len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS score_zh,
-             |  CASE
-             |    WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
-             |    WHEN len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b')) >
-             |           len(regexp_extract_all(lower(text), '\b(the|and|is|of|to)\b'))
-             |     AND len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b')) >=
-             |           len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b'))
-             |     AND len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b')) >=
-             |           len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b'))
-             |      THEN 'de'
-             |    WHEN len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b')) >
-             |           len(regexp_extract_all(lower(text), '\b(the|and|is|of|to)\b'))
-             |     AND len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b')) >=
-             |           len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b'))
-             |     AND len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b')) >=
-             |           len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b'))
-             |      THEN 'fr'
-             |    WHEN len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b')) >
-             |           len(regexp_extract_all(lower(text), '\b(the|and|is|of|to)\b'))
-             |     AND len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b')) >=
-             |           len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b'))
-             |     AND len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b')) >=
-             |           len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b'))
-             |      THEN 'es'
-             |    ELSE 'en' END AS predicted_lang
+             |  $langCaseSql AS predicted_lang
              |FROM documents ORDER BY doc_id""".stripMargin)),
 
     "llm_langid_eval" -> Q((s, dir) => {
@@ -1264,30 +1270,7 @@ object LlmQueries {
       pred.groupBy("lang", "predicted_lang")
         .agg(count(lit(1)).as("n"))
         .orderBy("lang", "predicted_lang")
-    }, Some("""SELECT lang, CASE
-              |    WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
-              |    WHEN len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b')) >
-              |           len(regexp_extract_all(lower(text), '\b(the|and|is|of|to)\b'))
-              |     AND len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b')) >=
-              |           len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b'))
-              |     AND len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b')) >=
-              |           len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b'))
-              |      THEN 'de'
-              |    WHEN len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b')) >
-              |           len(regexp_extract_all(lower(text), '\b(the|and|is|of|to)\b'))
-              |     AND len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b')) >=
-              |           len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b'))
-              |     AND len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b')) >=
-              |           len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b'))
-              |      THEN 'fr'
-              |    WHEN len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b')) >
-              |           len(regexp_extract_all(lower(text), '\b(the|and|is|of|to)\b'))
-              |     AND len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b')) >=
-              |           len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das|nicht)\b'))
-              |     AND len(regexp_extract_all(lower(text), '\b(el|los|y|es|una|que)\b')) >=
-              |           len(regexp_extract_all(lower(text), '\b(le|les|et|est|dans|une)\b'))
-              |      THEN 'es'
-              |    ELSE 'en' END AS predicted_lang, count(*) AS n
+    }, Some(raw"""SELECT lang, $langCaseSql AS predicted_lang, count(*) AS n
               |FROM documents GROUP BY 1, 2 ORDER BY lang, predicted_lang""".stripMargin)),
 
     "llm_token_counts" -> Q((s, dir) =>
@@ -1855,7 +1838,7 @@ object LlmQueries {
         .map(w => s"(CASE WHEN regexp_matches(norm, '\\b$w\\b') THEN 1 ELSE 0 END)")
         .mkString(" + ")
       s"""WITH d AS (SELECT doc_id, text,
-         |  trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm FROM documents),
+         |  $normSql AS norm FROM documents),
          |t AS (SELECT doc_id, norm, string_split(norm, ' ') AS toks,
          |  string_split(text, chr(10)) AS lines FROM d),
          |m AS (SELECT doc_id,
@@ -1954,7 +1937,7 @@ object LlmQueries {
         .orderBy("source")
     }, Some(
       s"""WITH d AS (SELECT source,
-         |  len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS n_toks
+         |  len(string_split($normSql, ' ')) AS n_toks
          |  FROM documents),
          |s AS (SELECT source, count(*) AS n_docs, CAST(SUM(n_toks) AS BIGINT) AS n_tokens
          |  FROM d GROUP BY source),
@@ -2546,13 +2529,13 @@ object LlmQueries {
       // sub-quadratic banded chains; the union is one extra cheap
       // shuffle and Dedup.dedupClusters takes the edge frame as-is.
       // The two modality chains are independent until the union; their
-      // eager checkpoints materialize CONCURRENTLY (Registry.inParallel,
+      // eager checkpoints materialize CONCURRENTLY (Overlap.all,
       // guide §2.6) instead of back-to-back — the r14 sequence paid
       // text-chain wall + image-chain wall.
-      val chains = Registry.inParallel(
+      val chains = Overlap.all(Seq(
         () => Dedup.candidatePairs(lshPrologue(s, dir)._2, "doc_id").localCheckpoint(true),
         () => phashVerifiedPairs(s, dir)._2
-          .select("id_a", "id_b").localCheckpoint(true))
+          .select("id_a", "id_b").localCheckpoint(true)))
       val textPairs = chains(0)
       val imgPairs = chains(1)
       val edges = textPairs.unionByName(imgPairs).distinct()
@@ -2614,21 +2597,21 @@ object LlmQueries {
       // and one distinct — no modality is recomputed and nothing
       // quadratic appears at any corpus scale.
       // The four modality chains are independent until the union: build
-      // them CONCURRENTLY (Registry.inParallel, guide §2.6) so the three
+      // them CONCURRENTLY (Overlap.all, guide §2.6) so the three
       // eager media checkpoints buried inside the helpers (image dHash,
       // audio decode, video frame hashes) overlap each other and the
       // text chain instead of running back-to-back; the union is then
       // checkpointed once as before (its job computes all four pair
       // chains in one DAG — AQE schedules those independent stages
       // concurrently already).
-      val legs = Registry.inParallel(
+      val legs = Overlap.all(Seq(
         () => Dedup.candidatePairs(lshPrologue(s, dir)._2, "doc_id").withColumn("m", lit("text")),
         () => phashVerifiedPairs(s, dir)._2
           .select("id_a", "id_b").withColumn("m", lit("image")),
         () => audioVerifiedPairs(s, dir)
           .select("id_a", "id_b").withColumn("m", lit("audio")),
         () => videoVerifiedPairs(s, dir)
-          .select("id_a", "id_b").withColumn("m", lit("video")))
+          .select("id_a", "id_b").withColumn("m", lit("video"))))
       val tagged = legs.reduce(_ unionByName _).localCheckpoint(true)
       val edges = tagged.select("id_a", "id_b").distinct()
       val deg = tagged
@@ -3640,15 +3623,15 @@ object LlmQueries {
         |END""".stripMargin)
       // `sizes` (token mass per doc, consumed only by the accounting
       // rows) and the url-dedup head of the chain are independent:
-      // materialize them concurrently (Registry.inParallel, guide §2.6).
-      val heads = Registry.inParallel(
+      // materialize them concurrently (Overlap.all, guide §2.6).
+      val heads = Overlap.all(Seq(
         () => docs.select(col("doc_id"),
             size(TextOps.tokens(col("text"))).cast("long").as("ntok"))
           .localCheckpoint(true),
         () => corpus
           .select(col("doc_id"), TextOps.normalizeUrl(url).as("url_norm"))
           .groupBy("url_norm").agg(min(col("doc_id")).as("doc_id"))
-          .select("doc_id").localCheckpoint(true))
+          .select("doc_id").localCheckpoint(true)))
       val sizes = heads(0)
       val urlKeptIds = heads(1)
       val urlKept = corpus.join(urlKeptIds, "doc_id")
@@ -3882,7 +3865,7 @@ object LlmQueries {
              |    ' ' || replace((SELECT pair FROM top$t), ' ', '') || ' ')) AS symstr, freq
              |  FROM w${t - 1})""".stripMargin
         s"""WITH toks AS (SELECT unnest(string_split(
-           |    trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS w FROM documents),
+           |    $normSql, ' ')) AS w FROM documents),
            |wf AS (SELECT w, count(*) AS freq FROM toks WHERE length(w) >= 2 GROUP BY w),
            |w0 AS (SELECT array_to_string(list_transform(range(1, length(w) + 1),
            |    i -> substr(w, i, 1)), '  ') AS symstr, freq FROM wf),
@@ -4017,7 +4000,7 @@ object LlmQueries {
           .map(j => s"CASE WHEN x.h$j = y.h$j THEN 1 ELSE 0 END")
           .mkString(" + ")
         s"""WITH stoks AS (SELECT source, string_split(
-           |    trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+           |    $normSql, ' ') AS t
            |  FROM documents),
            |ssh AS (SELECT DISTINCT source, shingle FROM (
            |  SELECT source, unnest(
@@ -4062,7 +4045,7 @@ object LlmQueries {
           "doc_id", "text", k = 5, w = 4, minShared = 2, maxDf = 50)
         .orderBy("id_a", "id_b"),
       Some(s"""WITH nrm AS (SELECT doc_id,
-              |    trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS nt
+              |    $normSql AS nt
               |  FROM documents),
               |g AS (SELECT doc_id, list_transform(
               |    range(1, greatest(length(nt) - 5 + 1, 0) + 1),

@@ -1,10 +1,6 @@
 package graft.queries
 
-import scala.concurrent.Future
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-
-import graft.tools.Overlap
 
 /** One driver-gradable query: a Spark implementation plus (usually) an
   * equivalent DuckDB oracle SQL over the same parquet tables.
@@ -91,22 +87,6 @@ object Registry {
     val target = (bytes / 65536).min(BigInt(par * 2)).max(BigInt(1)).toInt
     df.repartition(target)
   }
-
-  /** Materialize INDEPENDENT eager sub-chains concurrently (guide §2.6
-    * "overlap independent jobs"): Spark's scheduler happily runs several
-    * jobs at once inside one application — the multimodal gates' chains
-    * were sequential only because each ends in an eager
-    * `localCheckpoint` and the driver called them one after another.
-    * The call returns when every thunk has finished, preserving order.
-    * Determinism is untouched — each chain's result is a pure function
-    * of its input, only the materialization overlaps.
-    *
-    * Each thunk runs on its own thread with the CALLER's job properties
-    * installed, and the wait is bounded ([[graft.tools.Overlap.await]]). */
-  def inParallel[A](fs: (() => A)*): IndexedSeq[A] =
-    Overlap.await(fs.size) { implicit ec =>
-      Future.traverse(fs.toIndexedSeq)(f => Future(f()))
-    }
 
   /** Cast every DECIMAL column of a terminal gate projection to DOUBLE.
     *

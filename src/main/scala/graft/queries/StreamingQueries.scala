@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import graft.llm.{Dedup, Multimodal}
 import graft.sources.Tables
 import graft.streaming.AvailableNow
-import graft.tools.Measure
+import graft.tools.{Measure, Overlap}
 import Registry.T
 
 /** Structured-Streaming queries (SURVEY §2.9 ST1-ST4 + beyond-parity
@@ -82,12 +82,12 @@ object StreamingQueries {
         probe: Seq[DataFrame] => DataFrame): (DataFrame, Long) => Unit = (batch, _) => {
       val built = state(batch)
       require(built.size == tables.size - 1, s"graft_$tag: one state frame per state table")
-      val frames = Registry.inParallel(built.map(f => () => f.localCheckpoint(true)): _*)
+      val frames = Overlap.all(built.map(f => () => f.localCheckpoint(true)))
       val ids = batch.select(key)
       val kept = (if (s.catalog.tableExists(apply(tables.head)))
         ids.join(probe(frames), Seq(key), "left_anti") else ids).localCheckpoint(true)
-      Registry.inParallel((kept +: frames.map(_.join(kept, Seq(key), "left_semi")))
-        .zip(tables).map { case (f, t) => () => f.write.mode("append").saveAsTable(apply(t)) }: _*)
+      Overlap.all((kept +: frames.map(_.join(kept, Seq(key), "left_semi")))
+        .zip(tables).map { case (f, t) => () => f.write.mode("append").saveAsTable(apply(t)) })
     }
   }
 
@@ -443,7 +443,7 @@ object StreamingQueries {
         .groupBy("keep", "first_reason").agg(count(lit(1)).as("cnt")))
         .orderBy("keep", "first_reason")
     }, Some(s"""WITH st AS (SELECT doc_id,
-               |    len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
+               |    len(string_split(${LlmQueries.normSql}, ' '))
                |      AS n_tokens,
                |    CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) /
                |      NULLIF(CAST(length(text) AS DOUBLE), 0) AS punct_ratio,
@@ -1133,7 +1133,7 @@ object StreamingQueries {
         // Three independent sinks over already-checkpointed
         // frames: overlap the writes (guide §2.6) instead of
         // paying three sequential write-job latencies per batch.
-        Registry.inParallel(
+        Overlap.all(Seq(
           () => tag(d.select("doc_id"), "accepted")
             .unionByName(tag(urlDrop, "url_dup"))
             .unionByName(tag(qualDrop, "quality"))
@@ -1144,7 +1144,7 @@ object StreamingQueries {
             .select("url_norm")
             .write.mode("append").saveAsTable(g("accepted_urls")),
           () => nb.join(d.select("doc_id"), Seq("doc_id"), "left_semi")
-            .write.mode("append").saveAsTable(g("accepted_bands")))
+            .write.mode("append").saveAsTable(g("accepted_bands"))))
       }
       g.read("outcomes").orderBy("doc_id")
     }, Some(s"""WITH ${LlmQueries.toksCte}, ${LlmQueries.shCte},

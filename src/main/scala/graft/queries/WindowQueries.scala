@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Windowed
@@ -21,6 +22,55 @@ object WindowQueries {
   // events.ts nanos → exact epoch seconds (integer division, no float).
   private val tsSec = expr("ts div 1000000000").cast("long")
   private val tsSecSql = "CAST(floor(date_part('epoch', ts)) AS BIGINT)"
+
+  /** The as-of family's two sides: clicks (event_id, user_id, ts_sec) and
+    * views collapsed to one row per (user_id, ts_sec), the max event id
+    * as `view_event_id`. Two views in the same second are an as-of tie
+    * with engine-unspecified winners; collapsing them on BOTH sides makes
+    * the match total-order deterministic. */
+  private def clicksViews(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val ev = T(s, dir, "events").withColumn("ts_sec", tsSec)
+    val clicks = ev.filter(col("event_type") === "click")
+      .select("event_id", "user_id", "ts_sec")
+    val views = ev.filter(col("event_type") === "view")
+      .groupBy("user_id", "ts_sec")
+      .agg(max(col("event_id")).as("view_event_id"))
+    (clicks, views)
+  }
+
+  /** Clicks as-of joined to views through the custom merge exec
+    * (plans/AsOfJoin), as (event_id, user_id, click_sec, view_event_id,
+    * view_sec) in event_id order. */
+  private def mergeAsof(s: SparkSession, dir: String, direction: String = "backward",
+      tolerance: Option[Long] = None): DataFrame = {
+    val (clicks, views) = clicksViews(s, dir)
+    graft.plans.AsOfJoin.asof(clicks,
+        views.select(col("user_id").as("v_user_id"), col("ts_sec").as("v_ts_sec"),
+          col("view_event_id")),
+        Seq("user_id"), Seq("v_user_id"), "ts_sec", "v_ts_sec", direction, tolerance)
+      .select(col("event_id"), col("user_id"),
+        col("ts_sec").as("click_sec"),
+        col("view_event_id"), col("v_ts_sec").as("view_sec"))
+      .orderBy("event_id")
+  }
+
+  /** The as-of family's oracle: the same clicks and collapsed views, then
+    * DuckDB's native ASOF JOIN with `inequality` (`<=` backward, `>=`
+    * forward) and the select-list tail `payload`. */
+  private def asofOracle(inequality: String,
+      payload: String = "  v.view_event_id, v.ts_sec AS view_sec"): String =
+    s"""WITH ev AS (SELECT event_id, user_id, event_type,
+       |    $tsSecSql AS ts_sec FROM events),
+       |clicks AS (SELECT event_id, user_id, ts_sec FROM ev
+       |  WHERE event_type = 'click'),
+       |views AS (SELECT user_id, ts_sec,
+       |    MAX(event_id) AS view_event_id FROM ev
+       |  WHERE event_type = 'view' GROUP BY user_id, ts_sec)
+       |SELECT c.event_id, c.user_id, c.ts_sec AS click_sec,
+       |$payload
+       |FROM clicks c ASOF LEFT JOIN views v
+       |  ON c.user_id = v.user_id AND v.ts_sec $inequality c.ts_sec
+       |ORDER BY c.event_id""".stripMargin
 
   val defs: Seq[(String, Q)] = Seq(
 
@@ -78,17 +128,9 @@ object WindowQueries {
       // pattern (one shuffle, no range-join explosion); the oracle is
       // DuckDB's NATIVE ASOF JOIN — two independent formulations of the
       // same semantics.
-      val ev = T(s, dir, "events").withColumn("ts_sec", tsSec)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts_sec")
-      // One view per (user, second): two views in the same second are an
-      // as-of tie with engine-unspecified winners — collapse to the max
-      // event id on BOTH sides so the match is total-order deterministic.
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts_sec")
-        .agg(max(col("event_id")).as("view_event_id"))
+      val (clicks, views) = clicksViews(s, dir)
       // No tieBreak needed: views are pre-collapsed to one row per
-      // (user_id, ts_sec) above, so right-side (key, ts) ties cannot
+      // (user_id, ts_sec), so right-side (key, ts) ties cannot
       // occur. (tieBreak names RIGHT-frame columns — see asofJoin doc.)
       Windowed.asofJoin(clicks, views, Seq("user_id"),
         leftTs = "ts_sec", rightTs = "ts_sec",
@@ -98,127 +140,39 @@ object WindowQueries {
           col("asof_view_event_id").as("view_event_id"),
           col("asof_ts_sec").as("view_sec"))
         .orderBy("event_id")
-    }, Some(s"""WITH ev AS (SELECT event_id, user_id, event_type,
-               |    $tsSecSql AS ts_sec FROM events),
-               |clicks AS (SELECT event_id, user_id, ts_sec FROM ev
-               |  WHERE event_type = 'click'),
-               |views AS (SELECT user_id, ts_sec,
-               |    MAX(event_id) AS view_event_id FROM ev
-               |  WHERE event_type = 'view' GROUP BY user_id, ts_sec)
-               |SELECT c.event_id, c.user_id, c.ts_sec AS click_sec,
-               |  v.view_event_id, v.ts_sec AS view_sec
-               |FROM clicks c ASOF LEFT JOIN views v
-               |  ON c.user_id = v.user_id AND v.ts_sec <= c.ts_sec
-               |ORDER BY c.event_id""".stripMargin), bench = true),
+    }, Some(asofOracle("<=")), bench = true),
 
-    "j14_asof_merge_exec" -> Q((s, dir) => {
-      // The SAME as-of scenario as j8, but through the CUSTOM physical
-      // operator (plans/AsOfJoin: logical node → planner strategy →
-      // partition-wise merge exec) instead of the composed union+window
-      // spelling. Three independent formulations of one semantics now
-      // gate against each other: the window composition (j8), this
-      // merge exec, and DuckDB's native ASOF JOIN (the shared oracle).
-      // Plan: both sides hash-cluster + sort on (user, ts); ONE forward
-      // merge pass, no window machinery (pinned in AsOfMergeJoinSpec).
-      val ev = T(s, dir, "events").withColumn("ts_sec", tsSec)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts_sec")
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts_sec")
-        .agg(max(col("event_id")).as("view_event_id"))
-        .select(col("user_id").as("v_user_id"), col("ts_sec").as("v_ts_sec"),
-          col("view_event_id"))
-      graft.plans.AsOfJoin.asof(clicks, views,
-          Seq("user_id"), Seq("v_user_id"), "ts_sec", "v_ts_sec")
-        .select(col("event_id"), col("user_id"),
-          col("ts_sec").as("click_sec"),
-          col("view_event_id"), col("v_ts_sec").as("view_sec"))
-        .orderBy("event_id")
-    }, Some(s"""WITH ev AS (SELECT event_id, user_id, event_type,
-               |    $tsSecSql AS ts_sec FROM events),
-               |clicks AS (SELECT event_id, user_id, ts_sec FROM ev
-               |  WHERE event_type = 'click'),
-               |views AS (SELECT user_id, ts_sec,
-               |    MAX(event_id) AS view_event_id FROM ev
-               |  WHERE event_type = 'view' GROUP BY user_id, ts_sec)
-               |SELECT c.event_id, c.user_id, c.ts_sec AS click_sec,
-               |  v.view_event_id, v.ts_sec AS view_sec
-               |FROM clicks c ASOF LEFT JOIN views v
-               |  ON c.user_id = v.user_id AND v.ts_sec <= c.ts_sec
-               |ORDER BY c.event_id""".stripMargin)),
+    // The SAME as-of scenario as j8, but through the CUSTOM physical
+    // operator (plans/AsOfJoin: logical node → planner strategy →
+    // partition-wise merge exec) instead of the composed union+window
+    // spelling. Three independent formulations of one semantics now
+    // gate against each other: the window composition (j8), this
+    // merge exec, and DuckDB's native ASOF JOIN (the shared oracle).
+    // Plan: both sides hash-cluster + sort on (user, ts); ONE merge
+    // pass, no window machinery (pinned in AsOfMergeJoinSpec).
+    "j14_asof_merge_exec" -> Q((s, dir) => mergeAsof(s, dir), Some(asofOracle("<="))),
 
-    "j15_asof_forward" -> Q((s, dir) => {
-      // FORWARD as-of through the custom merge exec: each click matched
-      // to the user's NEXT view at-or-after it (the attribution-window
-      // dual of j14's lookback). The forward merge buffers NOTHING —
-      // the scan skips right rows strictly before the left position and
-      // the row it stops on is the match. Oracle: DuckDB ASOF with the
-      // >= inequality (its native forward direction).
-      val ev = T(s, dir, "events").withColumn("ts_sec", tsSec)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts_sec")
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts_sec")
-        .agg(max(col("event_id")).as("view_event_id"))
-        .select(col("user_id").as("v_user_id"), col("ts_sec").as("v_ts_sec"),
-          col("view_event_id"))
-      graft.plans.AsOfJoin.asof(clicks, views,
-          Seq("user_id"), Seq("v_user_id"), "ts_sec", "v_ts_sec",
-          direction = "forward")
-        .select(col("event_id"), col("user_id"),
-          col("ts_sec").as("click_sec"),
-          col("view_event_id"), col("v_ts_sec").as("view_sec"))
-        .orderBy("event_id")
-    }, Some(s"""WITH ev AS (SELECT event_id, user_id, event_type,
-               |    $tsSecSql AS ts_sec FROM events),
-               |clicks AS (SELECT event_id, user_id, ts_sec FROM ev
-               |  WHERE event_type = 'click'),
-               |views AS (SELECT user_id, ts_sec,
-               |    MAX(event_id) AS view_event_id FROM ev
-               |  WHERE event_type = 'view' GROUP BY user_id, ts_sec)
-               |SELECT c.event_id, c.user_id, c.ts_sec AS click_sec,
-               |  v.view_event_id, v.ts_sec AS view_sec
-               |FROM clicks c ASOF LEFT JOIN views v
-               |  ON c.user_id = v.user_id AND v.ts_sec >= c.ts_sec
-               |ORDER BY c.event_id""".stripMargin)),
+    // FORWARD as-of through the custom merge exec: each click matched
+    // to the user's NEXT view at-or-after it (the attribution-window
+    // dual of j14's lookback). The forward merge buffers NOTHING — the
+    // scan skips right rows strictly before the left position and the
+    // row it stops on is the match. Oracle: DuckDB ASOF with the >=
+    // inequality (its native forward direction).
+    "j15_asof_forward" -> Q((s, dir) => mergeAsof(s, dir, direction = "forward"),
+      Some(asofOracle(">="))),
 
-    "j16_asof_tolerance" -> Q((s, dir) => {
-      // Attribution-window as-of: latest view within ONE HOUR before
-      // the click, else NULL — merge_asof's `tolerance` knob (no
-      // fallback to the next-nearest row). The window check happens
-      // inside the merge, so out-of-window rows cost nothing
-      // downstream. Oracle: unbounded DuckDB ASOF, then CASE-null the
-      // payload beyond the window — provably the same semantics.
-      val ev = T(s, dir, "events").withColumn("ts_sec", tsSec)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts_sec")
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts_sec")
-        .agg(max(col("event_id")).as("view_event_id"))
-        .select(col("user_id").as("v_user_id"), col("ts_sec").as("v_ts_sec"),
-          col("view_event_id"))
-      graft.plans.AsOfJoin.asof(clicks, views,
-          Seq("user_id"), Seq("v_user_id"), "ts_sec", "v_ts_sec",
-          tolerance = Some(3600L))
-        .select(col("event_id"), col("user_id"),
-          col("ts_sec").as("click_sec"),
-          col("view_event_id"), col("v_ts_sec").as("view_sec"))
-        .orderBy("event_id")
-    }, Some(s"""WITH ev AS (SELECT event_id, user_id, event_type,
-               |    $tsSecSql AS ts_sec FROM events),
-               |clicks AS (SELECT event_id, user_id, ts_sec FROM ev
-               |  WHERE event_type = 'click'),
-               |views AS (SELECT user_id, ts_sec,
-               |    MAX(event_id) AS view_event_id FROM ev
-               |  WHERE event_type = 'view' GROUP BY user_id, ts_sec)
-               |SELECT c.event_id, c.user_id, c.ts_sec AS click_sec,
-               |  CASE WHEN c.ts_sec - v.ts_sec <= 3600
-               |    THEN v.view_event_id END AS view_event_id,
-               |  CASE WHEN c.ts_sec - v.ts_sec <= 3600
-               |    THEN v.ts_sec END AS view_sec
-               |FROM clicks c ASOF LEFT JOIN views v
-               |  ON c.user_id = v.user_id AND v.ts_sec <= c.ts_sec
-               |ORDER BY c.event_id""".stripMargin)),
+    // Attribution-window as-of: latest view within ONE HOUR before the
+    // click, else NULL — merge_asof's `tolerance` knob (no fallback to
+    // the next-nearest row). The window check happens inside the merge,
+    // so out-of-window rows cost nothing downstream. Oracle: unbounded
+    // DuckDB ASOF, then CASE-null the payload beyond the window —
+    // provably the same semantics.
+    "j16_asof_tolerance" -> Q((s, dir) => mergeAsof(s, dir, tolerance = Some(3600L)),
+      Some(asofOracle("<=",
+        """  CASE WHEN c.ts_sec - v.ts_sec <= 3600
+          |    THEN v.view_event_id END AS view_event_id,
+          |  CASE WHEN c.ts_sec - v.ts_sec <= 3600
+          |    THEN v.ts_sec END AS view_sec""".stripMargin))),
 
     "w4_sessionize" -> Q((s, dir) => {
       // Gap-based sessionization (30-min gap) + per-session rollup: the

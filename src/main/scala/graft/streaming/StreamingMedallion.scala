@@ -1,8 +1,5 @@
 package graft.streaming
 
-import scala.concurrent.Future
-import scala.util.{Failure, Success}
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -64,23 +61,15 @@ object StreamingMedallion {
     AvailableNow.eachBatch(withMeta, checkpointDir)((bronze, _) => writeBatch(bronze, db))
   }
 
-  /** The three writes of one parsed micro-batch, overlapped. All of them
-    * finish before the first failure is rethrown (the others attached as
-    * suppressed), so none is interrupted mid-commit. */
+  /** The three writes of one parsed micro-batch, overlapped
+    * ([[Overlap.all]]): all of them finish before the first failure is
+    * rethrown, so none is interrupted mid-commit. */
   private def writeBatch(bronze: DataFrame, db: String): Unit = {
     val silver = SilverTransforms.transformPolicies(bronze)
-    val writes: Seq[() => Unit] = Seq(
+    Overlap.all(Seq(
       () => Tables.append(bronze, s"$db.bronze_policies"),
       () => Tables.append(silver, s"$db.silver_policies"),
       () => Tables.scd2Apply(bronze.sparkSession, s"$db.dim_policy",
-        dimPolicy(silver), Seq("policy_id"), Scd2.policyTrackedCols))
-    val outcomes = Overlap.await(writes.size) { implicit ec =>
-      Future.traverse(writes)(w => Future(w()).transform(Success(_)))
-    }
-    val failures = outcomes.collect { case Failure(e) => e }
-    failures.headOption.foreach { first =>
-      failures.tail.foreach(first.addSuppressed)
-      throw first
-    }
+        dimPolicy(silver), Seq("policy_id"), Scd2.policyTrackedCols)))
   }
 }

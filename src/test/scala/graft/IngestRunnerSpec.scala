@@ -44,6 +44,9 @@ class IngestRunnerSpec extends SparkTestBase {
     Ingest.ingestBatch(spark, s"$dir/raw_policies.csv", Schemas.rawPolicies,
       "graft_test.bronze_policies", batchId = Some(8L))
     assert(spark.read.table("graft_test.bronze_policies").count() === 4)
+    // The count is of this call's rows, not of every row sharing its batch id.
+    assert(Ingest.ingestBatch(spark, s"$dir/raw_policies.csv", Schemas.rawPolicies,
+      "graft_test.bronze_policies", batchId = Some(8L)) === 2)
   }
 
   test("append evolves the schema additively (mergeSchema parity, ingest_policies.py:92)") {

@@ -273,6 +273,15 @@ class MeasureSpec extends SparkTestBase {
     }
   }
 
+  test("source sweep: threads and futures are started in src/main only by Overlap") {
+    for (token <- Seq("Executors.", "ExecutionContext", "Future.traverse", "Future.sequence")) {
+      val hits = sourceHits(token)
+      assert(hits.forall(_.startsWith("graft/tools/Overlap.scala:")),
+        s"overlap work through graft.tools.Overlap.all, found $token at:\n${hits.mkString("\n")}")
+    }
+    assert(sourceHits("Executors.").nonEmpty)
+  }
+
   test("source sweep: global aggregates are observed in src/main only by Reduce.observed") {
     for (token <- Seq(".observe(", "Observation(")) {
       val hits = sourceHits(token)

@@ -386,21 +386,23 @@ class PlanGuardsSpec extends SparkTestBase {
       s"source rollup must map-side combine:\n$plan")
   }
 
-  test("PageRank round: two attach joins, exactly one dst-keyed agg exchange, no cartesian") {
+  test("PageRank round: one attach join, exactly one dst-keyed agg exchange, no cartesian") {
     import graft.operators.PageRank
     val nodes = (1L to 200L).toDF("nid_src").select(col("nid_src").as("page"))
     val edges = (1L to 600L).map(i => (i % 200 + 1, (i * 7) % 200 + 1))
       .toDF("src", "dst").filter(col("src") =!= col("dst"))
     val e = edges.localCheckpoint(true)
-    val outdeg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
+    val verts = PageRank.vertices(nodes, "page", e).localCheckpoint(true)
+    val ranks = verts.select(col("nid"), lit(1.0 / 200).as("pr"), col("deg"), col("dangling"))
       .localCheckpoint(true)
-    val verts = PageRank.vertices(nodes, "page", outdeg).localCheckpoint(true)
-    val ranks = verts.select(col("nid"), lit(1.0 / 200).as("pr"), col("dangling"))
-      .localCheckpoint(true)
-    val next = PageRank.round(verts, e, outdeg, ranks, 200.0, 0.0, 0.85)
+    val next = PageRank.round(verts, e, ranks, 200.0, 0.0, 0.85)
     next.collect()
     val plan = next.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop"), plan)
+    // The edges attach rank and out-degree in ONE join on src; the other
+    // join folds the inflow back into the vertex set.
+    val joins = "(BroadcastHash|ShuffledHash|SortMerge)Join".r.findAllIn(plan).length
+    assert(joins === 2, s"one attach join plus the inflow join, got $joins:\n$plan")
     // PageRank's irreducible communication: ONE exchange keyed on dst for
     // the inflow reduce. A second dst exchange means the contribution
     // stream shuffles twice per iteration — fatal at a 100 TB edge list.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.queries.Registry
+import graft.tools.Overlap
 
 class RegistrySpec extends SparkTestBase {
   import spark.implicits._
@@ -109,13 +110,13 @@ class RegistrySpec extends SparkTestBase {
       for (v <- Seq("first", "second")) {
         sc.setLocalProperty(key, v)
         sc.setJobGroup(s"group-$v", "inParallel spec")
-        val seen = Registry.inParallel(
+        val seen = Overlap.all(
           (1 to 4).map(i => () => (i, sc.getLocalProperty(key),
-            sc.getLocalProperty("spark.jobGroup.id"))): _*)
+            sc.getLocalProperty("spark.jobGroup.id"))))
         assert(seen === (1 to 4).map(i => (i, v, s"group-$v")))
       }
       // A thunk's own property changes stay on its thread.
-      Registry.inParallel(() => sc.setLocalProperty(key, "thunk"))
+      Overlap.all(Seq(() => sc.setLocalProperty(key, "thunk")))
       assert(sc.getLocalProperty(key) === "second")
     } finally {
       sc.setLocalProperty(key, null)
@@ -128,13 +129,13 @@ class RegistrySpec extends SparkTestBase {
     val key = "graft.test.inParallel.nested"
     sc.setLocalProperty(key, "outer")
     try {
-      val out = Registry.inParallel((1 to 3).map(i => () =>
-        Registry.inParallel((1 to 3).map(j => () =>
-          (i * 10 + j, sc.getLocalProperty(key))): _*)): _*)
+      val out = Overlap.all((1 to 3).map(i => () =>
+        Overlap.all((1 to 3).map(j => () =>
+          (i * 10 + j, sc.getLocalProperty(key))))))
       assert(out.flatten === (for (i <- 1 to 3; j <- 1 to 3) yield (i * 10 + j, "outer")))
       // Jobs run from nested thunks complete and return their values.
-      assert(Registry.inParallel(() =>
-        Registry.inParallel(() => spark.range(7).count()).head) === IndexedSeq(7L))
+      assert(Overlap.all(Seq(() =>
+        Overlap.all(Seq(() => spark.range(7).count())).head)) === IndexedSeq(7L))
     } finally sc.setLocalProperty(key, null)
   }
 }
