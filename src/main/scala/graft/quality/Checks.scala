@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Data-quality check framework.
@@ -13,11 +13,10 @@ import org.apache.spark.sql.functions._
   * Scale note: the reference triggers 2-3 Spark jobs *per check* (a
   * `filter.count` plus `count` each — ≥12 jobs per table,
   * `clean_policies.py:122` + `data_quality_checks.py:16-17`). At 100 TB
-  * that is 12 full scans. The per-check methods here keep the reference
-  * API (each is a single fused aggregate where possible);
-  * [[Checks.fusedProfile]] collapses every column-level counter into ONE
-  * aggregate pass (single scan, map-side partial aggregation, no shuffle
-  * beyond a 1-row result) and is the preferred path at scale.
+  * that is 12 full scans. [[Checks.fusedProfile]] collapses every
+  * column-level counter into ONE aggregate pass (single scan, map-side
+  * partial aggregation, no shuffle beyond a 1-row result); the per-check
+  * methods keep the reference API as that profile over one column.
   */
 object Checks {
 
@@ -39,40 +38,17 @@ object Checks {
   final case class CompositeKeyResult(check: String, columns: Seq[String], passed: Boolean,
       duplicateCount: Long, totalCount: Long) extends CheckResult
 
-  /** The not_null rule, shared by [[checkNotNull]] and [[fusedProfile]]:
-    * passes with no NULLs; the NULL share is a percentage rounded to two
-    * places (0 on an empty frame). */
-  private def notNullResult(column: String, nulls: Long, total: Long): NotNullResult =
-    NotNullResult("not_null", column, nulls == 0, nulls, total,
-      math.round(nulls.toDouble / math.max(total, 1L) * 10000.0) / 100.0)
-
-  /** The unique rule, shared by [[checkUnique]] and [[fusedProfile]]:
-    * count_distinct skips NULLs but the reference's
-    * `select(col).distinct().count()` counts a NULL group, so a column
-    * holding a NULL (`hasNull` 1) has one more distinct value. */
-  private def uniqueResult(column: String, total: Long, distinct: Long,
-      hasNull: Long): UniqueResult = {
-    val d = distinct + hasNull
-    UniqueResult("unique", column, total - d == 0, total - d, total, d)
-  }
+  /** The one result of a single-column spec, typed by the caller. */
+  private def one[R <: CheckResult](df: DataFrame, spec: ColumnSpec): R =
+    fusedProfile(df, Seq(spec)).values.head.asInstanceOf[R]
 
   /** dbt `not_null` test (`data_quality_checks.py:14-25`). */
-  def checkNotNull(df: DataFrame, column: String): NotNullResult = {
-    val Row(nulls: Long, total: Long) = df
-      .agg(count(when(col(column).isNull, lit(1))).as("nulls"), count(lit(1)).as("total"))
-      .head()
-    notNullResult(column, nulls, total)
-  }
+  def checkNotNull(df: DataFrame, column: String): NotNullResult =
+    one(df, ColumnSpec(column, notNull = true))
 
-  /** dbt `unique` test (`data_quality_checks.py:28-40`). One job: the
-    * same aggregate counts distinct values and detects null presence. */
-  def checkUnique(df: DataFrame, column: String): UniqueResult = {
-    val Row(total: Long, distinct: Long, hasNull: Int) = df
-      .agg(count(lit(1)).as("total"), count_distinct(col(column)).as("distinct"),
-        coalesce(max(when(col(column).isNull, lit(1)).otherwise(0)), lit(0)).as("hasnull"))
-      .head()
-    uniqueResult(column, total, distinct, hasNull)
-  }
+  /** dbt `unique` test (`data_quality_checks.py:28-40`). */
+  def checkUnique(df: DataFrame, column: String): UniqueResult =
+    one(df, ColumnSpec(column, unique = true))
 
   final case class ApproxDistinctResult(check: String, column: String, passed: Boolean,
       approxDistinct: Long, totalCount: Long, tolerance: Double,
@@ -98,22 +74,8 @@ object Checks {
 
   /** dbt `accepted_values` test with a 10-value sample of offenders
     * (`data_quality_checks.py:43-64`). */
-  def checkAcceptedValues(df: DataFrame, column: String, accepted: Seq[String]): AcceptedValuesResult = {
-    // invalid + total fused into one aggregate (the reference scans 3×;
-    // SURVEY §7.6). The bounded 10-row offender sample is a second,
-    // filtered job only when a failure is already known.
-    val Row(invalidCount: Long, total: Long) = df.agg(
-      count(when(!col(column).isin(accepted: _*), lit(1))).as("invalid"),
-      count(lit(1)).as("total")).head()
-    val sample =
-      if (invalidCount > 0)
-        df.filter(!col(column).isin(accepted: _*))
-          .select(col(column).cast("string")).distinct().limit(10)
-          .collect().map(_.getString(0)).toSeq
-      else Seq.empty
-    AcceptedValuesResult("accepted_values", column, invalidCount == 0,
-      invalidCount, total, accepted, sample)
-  }
+  def checkAcceptedValues(df: DataFrame, column: String, accepted: Seq[String]): AcceptedValuesResult =
+    one(df, ColumnSpec(column, acceptedValues = Some(accepted)))
 
   /** dbt `relationships` (referential-integrity) test via left_anti join
     * (`data_quality_checks.py:67-79`). */
@@ -135,12 +97,14 @@ object Checks {
     RowCountRangeResult("row_count_range", minRows <= c && c <= maxRows, c, minRows, maxRows)
   }
 
-  /** Composite-key uniqueness (`data_quality_checks.py:94-105`). */
+  /** Composite-key uniqueness (`data_quality_checks.py:94-105`), judged
+    * by the unique rule over the key struct in one aggregate. A struct is
+    * never NULL, so a key with NULL fields is one value, as in the
+    * reference's `select(keys).distinct().count()`. */
   def checkCompositeKey(df: DataFrame, keyColumns: Seq[String]): CompositeKeyResult = {
-    val total = df.count()
-    val distinct = df.select(keyColumns.map(col): _*).distinct().count()
-    CompositeKeyResult("composite_key_unique", keyColumns, total == distinct,
-      total - distinct, total)
+    val u = one[UniqueResult](df.select(struct(keyColumns.map(col): _*).as("__key")),
+      ColumnSpec("__key", unique = true))
+    CompositeKeyResult("composite_key_unique", keyColumns, u.passed, u.duplicateCount, u.totalCount)
   }
 
   /** SCD2 invariant audit — the DQ twin of [[graft.operators.Scd2]]: a
@@ -207,43 +171,49 @@ object Checks {
       unique: Boolean = false,
       acceptedValues: Option[Seq[String]] = None)
 
-  /** One-pass DQ profile: every per-column counter (nulls, distinct,
+  /** One-pass DQ profile, and the only evaluator of the not_null, unique
+    * and accepted_values rules: every per-column counter (nulls, distinct,
     * invalid-value count) plus the table total computed in a SINGLE
     * aggregate over the data — the 100 TB replacement for the reference's
     * one-job-per-check pattern. Exact distinct counts shuffle by nature;
     * [[checkApproxDistinct]] is the HLL path when a small
-    * uniqueness-error tolerance is acceptable at scale.
+    * uniqueness-error tolerance is acceptable at scale. Only a failing
+    * accepted_values column reads the data again, for a sample of at
+    * most 10 distinct offenders.
     */
   def fusedProfile(df: DataFrame, specs: Seq[ColumnSpec]): Map[String, CheckResult] = {
-    val aggs = Seq(count(lit(1)).as("__total")) ++ specs.flatMap { s =>
+    def invalid(s: ColumnSpec): Option[Column] = s.acceptedValues.map(vs => !col(s.column).isin(vs: _*))
+    val aggs = count(lit(1)).as("__total") +: specs.flatMap { s =>
       val c = col(s.column)
       val n = s.column
       Seq(
-        if (s.notNull) Some(count(when(c.isNull, lit(1))).as(s"__nulls__$n")) else None,
-        if (s.unique) Some(count_distinct(c).as(s"__distinct__$n")) else None,
-        if (s.unique) Some(max(when(c.isNull, lit(1)).otherwise(lit(0))).as(s"__hasnull__$n")) else None,
-        s.acceptedValues.map(vs =>
-          count(when(!c.isin(vs: _*), lit(1))).as(s"__invalid__$n"))
-      ).flatten
+        Option.when(s.notNull || s.unique)(count(when(c.isNull, lit(1))).as(s"__nulls__$n")),
+        Option.when(s.unique)(count_distinct(c).as(s"__distinct__$n")),
+        invalid(s).map(bad => count(when(bad, lit(1))).as(s"__invalid__$n"))).flatten
     }
     val row = df.agg(aggs.head, aggs.tail: _*).head()
-    def l(name: String): Long = row.getAs[Any](name) match {
-      case x: Long => x; case x: Int => x.toLong; case _ => 0L
-    }
-    val total = l("__total")
+    val total = row.getAs[Long]("__total")
     specs.flatMap { s =>
       val n = s.column
-      val notNullRes =
-        if (s.notNull) Some(s"not_null_$n" -> notNullResult(n, l(s"__nulls__$n"), total)) else None
-      val uniqueRes = if (s.unique)
-        Some(s"unique_$n" -> uniqueResult(n, total, l(s"__distinct__$n"), l(s"__hasnull__$n")))
-      else None
-      val acceptedRes = s.acceptedValues.map { vs =>
-        val inv = l(s"__invalid__$n")
-        s"accepted_values_$n" -> AcceptedValuesResult("accepted_values", n, inv == 0,
-          inv, total, vs, Seq.empty)
-      }
-      Seq(notNullRes, uniqueRes, acceptedRes).flatten
+      lazy val nulls = row.getAs[Long](s"__nulls__$n")
+      Seq(
+        // The NULL share is a percentage rounded to two places (0 on an empty frame).
+        Option.when(s.notNull)(s"not_null_$n" -> NotNullResult("not_null", n, nulls == 0, nulls,
+          total, math.round(nulls.toDouble / math.max(total, 1L) * 10000.0) / 100.0)),
+        // count_distinct skips NULLs but the reference's
+        // `select(col).distinct().count()` counts the NULL group.
+        Option.when(s.unique) {
+          val d = row.getAs[Long](s"__distinct__$n") + (if (nulls > 0) 1L else 0L)
+          s"unique_$n" -> UniqueResult("unique", n, total == d, total - d, total, d)
+        },
+        invalid(s).map { bad =>
+          val inv = row.getAs[Long](s"__invalid__$n")
+          val sample = if (inv == 0) Seq.empty[String]
+            else df.filter(bad).select(col(n).cast("string")).distinct().limit(10)
+              .collect().map(_.getString(0)).toSeq
+          s"accepted_values_$n" -> AcceptedValuesResult("accepted_values", n, inv == 0, inv,
+            total, s.acceptedValues.get, sample)
+        }).flatten
     }.toMap
   }
 
@@ -262,20 +232,17 @@ object Checks {
   /** Post-pipeline DQ sweep (reference
     * `notebooks/run_data_quality_checks.py:49-132`): for each
     * (table, keyColumn), assert the table exists, is non-empty, and has
-    * no NULL primary keys — one fused aggregate per table, machine-
-    * readable results for a job-failing gate. */
+    * no NULL primary keys — the key's not_null profile, one aggregate per
+    * table, machine-readable results for a job-failing gate. */
   def sweepTables(spark: org.apache.spark.sql.SparkSession,
       tables: Seq[(String, String)]): Seq[TableSweepResult] =
     tables.map { case (table, keyCol) =>
       if (!spark.catalog.tableExists(table))
         TableSweepResult(table, exists = false, 0L, 0L, passed = false)
       else {
-        val df = spark.read.table(table)
-        val Row(total: Long, nullKeys: Long) = df.agg(
-          count(lit(1)).as("total"),
-          count(when(col(keyCol).isNull, lit(1))).as("null_keys")).head()
-        TableSweepResult(table, exists = true, total, nullKeys,
-          passed = total > 0 && nullKeys == 0)
+        val nn = one[NotNullResult](spark.read.table(table), ColumnSpec(keyCol, notNull = true))
+        TableSweepResult(table, exists = true, nn.totalCount, nn.nullCount,
+          passed = nn.totalCount > 0 && nn.passed)
       }
     }
 }

@@ -1,7 +1,7 @@
 package graft.quality
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Schema-contract enforcement between layers.
   *
@@ -27,37 +27,31 @@ object SchemaValidator {
       compatible: Boolean)
 
   /** Validate a DataFrame against an expected schema; `strict` forbids
-    * extra columns (`schema_validator.py:13-57`). */
+    * extra columns (`schema_validator.py:13-57`). The [[compareSchemas]]
+    * diff of expected against actual: missing columns are only in the
+    * expected schema, extra ones only in the frame. */
   def validateSchema(df: DataFrame, expected: StructType, strict: Boolean = false): ValidationResult = {
-    val actual = df.schema.fields.map(f => f.name -> f).toMap
-    val exp = expected.fields.map(f => f.name -> f).toMap
-    val missing = (exp.keySet -- actual.keySet).toSeq.sorted
-    val extra = (actual.keySet -- exp.keySet).toSeq.sorted
-    val mismatches = exp.toSeq.sortBy(_._1).flatMap { case (name, ef) =>
-      actual.get(name).collect {
-        case af if af.dataType != ef.dataType =>
-          TypeMismatch(name, ef.dataType.toString, af.dataType.toString)
-      }
-    }
-    val basePassed = missing.isEmpty && mismatches.isEmpty
-    ValidationResult(if (strict) basePassed && extra.isEmpty else basePassed,
-      missing, extra, mismatches)
+    val d = compareSchemas(expected, df.schema)
+    ValidationResult(d.compatible && (!strict || d.onlyInB.isEmpty),
+      d.onlyInA, d.onlyInB, d.typeDifferences)
   }
 
-  /** Diff two schemas incl. nullability (`schema_validator.py:60-94`). */
+  /** Diff two schemas incl. nullability (`schema_validator.py:60-94`); the
+    * one schema diff of the DQ and reconciliation layers. */
   def compareSchemas(a: StructType, b: StructType): SchemaDiff = {
     val fa = a.fields.map(f => f.name -> f).toMap
     val fb = b.fields.map(f => f.name -> f).toMap
-    val onlyA = (fa.keySet -- fb.keySet).toSeq.sorted
-    val onlyB = (fb.keySet -- fa.keySet).toSeq.sorted
-    val common = (fa.keySet & fb.keySet).toSeq.sorted
+    def only(x: Map[String, StructField], y: Map[String, StructField]) =
+      (x.keySet -- y.keySet).toSeq.sorted
+    val onlyA = only(fa, fb)
+    val common = fa.keySet.intersect(fb.keySet).toSeq.sorted
     val typeDiffs = common.flatMap { n =>
       if (fa(n).dataType != fb(n).dataType)
         Some(TypeMismatch(n, fa(n).dataType.toString, fb(n).dataType.toString))
       else None
     }
     val nullableDiffs = common.filter(n => fa(n).nullable != fb(n).nullable)
-    SchemaDiff(onlyA, onlyB, typeDiffs, nullableDiffs,
+    SchemaDiff(onlyA, only(fb, fa), typeDiffs, nullableDiffs,
       onlyA.isEmpty && typeDiffs.isEmpty)
   }
 }

@@ -1,7 +1,10 @@
 package graft.validation
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.quality.SchemaValidator
 
 /** Migration reconciliation harness — the reference's correctness oracle
   * and half its public API (SURVEY §2.11).
@@ -38,37 +41,60 @@ object Reconciler {
 
   /** Per-column SUM comparison within relative tolerance (default 1e-4,
     * `reconciliation.py:58-92`; acceptance gate `MIGRATION_PLAYBOOK.md:244`).
-    * One aggregate pass per side for ALL columns. */
+    * One aggregate pass per side for ALL columns; an empty side's NULL
+    * sum reads 0.0. */
   def compareAggregates(source: DataFrame, target: DataFrame, columns: Seq[String],
       tolerance: Double = 1e-4): Seq[AggregateResult] = {
-    def sums(df: DataFrame): Map[String, Double] = {
-      val aggs = columns.map(c => sum(col(c).cast("double")).as(c))
+    def sums(df: DataFrame): Seq[Double] = {
+      val aggs = columns.map(c => sum(col(c).cast("double")))
       val row: Row = df.agg(aggs.head, aggs.tail: _*).head()
-      columns.map(c => c -> Option(row.getAs[Any](c)).map(_.toString.toDouble).getOrElse(0.0)).toMap
+      columns.indices.map(i => if (row.isNullAt(i)) 0.0 else row.getDouble(i))
     }
     val s = sums(source); val t = sums(target)
-    columns.map { c =>
-      val (a, b) = (s(c), t(c))
+    columns.indices.map { i =>
+      val (a, b) = (s(i), t(i))
       val rel = if (a == 0.0 && b == 0.0) 0.0
         else math.abs(a - b) / math.max(math.abs(a), math.abs(b))
-      AggregateResult(c, a, b, rel, rel <= tolerance)
+      AggregateResult(columns(i), a, b, rel, rel <= tolerance)
     }
   }
 
-  /** Categorical distribution diff as a DataFrame: full-outer join of the
-    * two `groupBy(col).count()` frames. Never collects the distributions;
-    * at 100 TB this is two shuffles and a join, not a driver dict.
-    * Returns one row per value with both counts and a match flag. */
-  def distributionDiff(source: DataFrame, target: DataFrame, column: String): DataFrame = {
-    val s = source.groupBy(col(column).as("value")).agg(count(lit(1)).as("source_count"))
-    val t = target.groupBy(col(column).as("value")).agg(count(lit(1)).as("target_count"))
-    s.join(t, Seq("value"), "full_outer")
-      .select(col("value"),
-        coalesce(col("source_count"), lit(0L)).as("source_count"),
-        coalesce(col("target_count"), lit(0L)).as("target_count"),
-        (coalesce(col("source_count"), lit(0L)) === coalesce(col("target_count"), lit(0L)))
-          .as("matched"))
+  /** The multiset-count core of [[distributionDiff]] and [[TableDiff.diff]]:
+    * each side grouped by `key` and counted, the two count frames
+    * full-outer joined NULL-safely (so the NULL group meets itself, as a
+    * driver dict's `None` key does), a missing count read as 0. Columns
+    * `key`, `left`, `right`; one row per key present on either side.
+    *
+    * The key is grouped inside a one-field struct: a struct is never
+    * NULL and a NULL field equals a NULL field, so a plain equi-join is
+    * NULL-safe and reuses the aggregates' hash partitioning. A `<=>` join
+    * would shuffle both count frames again, on (coalesce(key), isnull(key)). */
+  private[validation] def countDiff(left: DataFrame, right: DataFrame, key: Column): DataFrame = {
+    def counts(df: DataFrame, k: String, n: String) =
+      df.groupBy(struct(key.as("k")).as(k)).agg(count(lit(1)).as(n))
+    counts(left, "lk", "ln").join(counts(right, "rk", "rn"), col("lk") === col("rk"), "full_outer")
+      .select(coalesce(col("lk"), col("rk")).getField("k").as("key"),
+        coalesce(col("ln"), lit(0L)).as("left"), coalesce(col("rn"), lit(0L)).as("right"))
   }
+
+  /** One job over a [[countDiff]] frame: keys only on the left, only on
+    * the right, and on both sides with different counts. */
+  private[validation] def countTally(diff: DataFrame): (Long, Long, Long) = {
+    val (l, r) = (col("left"), col("right"))
+    val Row(onlyL: Long, onlyR: Long, both: Long) = diff.agg(
+      count(when(r === 0, lit(1))), count(when(l === 0, lit(1))),
+      count(when(l > 0 && r > 0 && l =!= r, lit(1)))).head()
+    (onlyL, onlyR, both)
+  }
+
+  /** Categorical distribution diff as a DataFrame: the [[countDiff]] of
+    * the column. Never collects the distributions; at 100 TB this is two
+    * shuffles and a join, not a driver dict. Returns one row per value
+    * (NULL included) with both counts and a match flag. */
+  def distributionDiff(source: DataFrame, target: DataFrame, column: String): DataFrame =
+    countDiff(source, target, col(column))
+      .select(col("key").as("value"), col("left").as("source_count"),
+        col("right").as("target_count"), (col("left") === col("right")).as("matched"))
 
   /** Distribution DRIFT via Pearson's chi-squared statistic: expected
     * target counts are the source proportions scaled to the target
@@ -100,23 +126,21 @@ object Reconciler {
   }
 
   /** Exact distribution equality verdict (`reconciliation.py:94-130`),
-    * computed from the join diff in one aggregate. */
+    * tallied from the count diff in one aggregate: every value whose
+    * counts differ is a mismatch. */
   def compareDistributions(source: DataFrame, target: DataFrame, column: String): DistributionResult = {
-    val diff = distributionDiff(source, target, column)
-    val Row(onlyS: Long, onlyT: Long, mism: Long) = diff.agg(
-      count(when(col("target_count") === 0 && col("source_count") > 0, lit(1))).as("only_s"),
-      count(when(col("source_count") === 0 && col("target_count") > 0, lit(1))).as("only_t"),
-      count(when(!col("matched"), lit(1))).as("mism")).head()
+    val (onlyS, onlyT, both) = countTally(countDiff(source, target, col(column)))
+    val mism = onlyS + onlyT + both
     DistributionResult(column, mism == 0, onlyS, onlyT, mism)
   }
 
   /** Column-set compatibility ignoring `_`-prefixed metadata columns
-    * (`reconciliation.py:132-155` deliberately ignores lineage columns). */
+    * (`reconciliation.py:132-155` deliberately ignores lineage columns):
+    * the [[SchemaValidator.compareSchemas]] diff, judged on names only. */
   def compareSchemas(source: DataFrame, target: DataFrame): SchemaResult = {
-    def cols(df: DataFrame) = df.columns.filterNot(_.startsWith("_")).toSet
-    val s = cols(source); val t = cols(target)
-    SchemaResult((s -- t).isEmpty && (t -- s).isEmpty,
-      (s -- t).toSeq.sorted, (t -- s).toSeq.sorted)
+    def fields(df: DataFrame) = StructType(df.schema.filterNot(_.name.startsWith("_")))
+    val d = SchemaValidator.compareSchemas(fields(source), fields(target))
+    SchemaResult(d.onlyInA.isEmpty && d.onlyInB.isEmpty, d.onlyInA, d.onlyInB)
   }
 
   /** Text report rollup (`reconciliation.py:157-180`). */

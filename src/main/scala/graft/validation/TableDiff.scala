@@ -34,38 +34,24 @@ object TableDiff {
     md5(concat_ws("|", cols.map(c =>
       coalesce(col(c).cast("string"), lit("_null_"))): _*))
 
-  private def hashCounts(df: DataFrame, cols: Seq[String], cntName: String): DataFrame =
-    df.select(rowHash(cols).as("row_hash"))
-      .groupBy("row_hash")
-      .agg(count(lit(1)).as(cntName))
-
   /** All row hashes whose multiplicity differs between the sides:
     * (row_hash, left_count, right_count), absent = 0. Empty result ⇔
     * the two tables are equal as MULTISETS of the compare columns. */
   def diff(left: DataFrame, right: DataFrame, cols: Seq[String]): DataFrame =
-    hashCounts(left, cols, "left_count")
-      .join(hashCounts(right, cols, "right_count"), Seq("row_hash"), "full_outer")
-      .select(col("row_hash"),
-        coalesce(col("left_count"), lit(0L)).as("left_count"),
-        coalesce(col("right_count"), lit(0L)).as("right_count"))
-      .filter(col("left_count") =!= col("right_count"))
+    Reconciler.countDiff(left, right, rowHash(cols))
+      .filter(col("left") =!= col("right"))
+      .select(col("key").as("row_hash"), col("left").as("left_count"),
+        col("right").as("right_count"))
 
   final case class DiffSummary(equal: Boolean, onlyLeft: Long, onlyRight: Long,
       countMismatches: Long)
 
   /** One-line verdict: hashes only on the left (dropped rows), only on
     * the right (spurious rows), and present-both-but-multiplicity-
-    * differs (duplicated rows). One job over the diff frame. */
+    * differs (duplicated rows). One job over the count diff. */
   def summarize(left: DataFrame, right: DataFrame, cols: Seq[String]): DiffSummary = {
-    val d = diff(left, right, cols)
-      .agg(
-        count(when(col("right_count") === 0, lit(1))).as("only_left"),
-        count(when(col("left_count") === 0, lit(1))).as("only_right"),
-        count(when(col("left_count") > 0 && col("right_count") > 0, lit(1)))
-          .as("count_mismatches"))
-      .head()
-    DiffSummary(d.getLong(0) == 0 && d.getLong(1) == 0 && d.getLong(2) == 0,
-      d.getLong(0), d.getLong(1), d.getLong(2))
+    val (onlyL, onlyR, both) = Reconciler.countTally(Reconciler.countDiff(left, right, rowHash(cols)))
+    DiffSummary(onlyL == 0 && onlyR == 0 && both == 0, onlyL, onlyR, both)
   }
 
   /** Recover the actual offending rows on one side: semi-join the side

@@ -92,6 +92,12 @@ class ChecksSpec extends SparkTestBase {
     assert(Checks.checkCompositeKey(ok, Seq("k1", "k2")).passed)
     val r = Checks.checkCompositeKey(dup, Seq("k1", "k2"))
     assert(!r.passed && r.duplicateCount === 1)
+    // NULL-bearing keys count like distinct(): 4 distinct keys over 6 rows, in one aggregate.
+    val nullKeys = Seq[(Option[Int], Option[String])]((Some(1), None), (Some(1), None),
+      (Some(1), Some("a")), (None, None), (None, None), (Some(2), Some("b"))).toDF("k1", "k2")
+    val (nk, nkC) = Measure.counted(spark)(Checks.checkCompositeKey(nullKeys, Seq("k1", "k2")))
+    assert(nk === Checks.CompositeKeyResult("composite_key_unique", Seq("k1", "k2"), false, 2L, 6L))
+    assert(nkC.jobs === 3)
   }
 
   test("fusedProfile matches the standalone checks in one pass") {
@@ -110,20 +116,42 @@ class ChecksSpec extends SparkTestBase {
     assert(nn.nullCount === 1)
   }
 
+  test("fusedProfile's accepted_values carries the offender sample; a passing column runs no sample job") {
+    val df = Seq("A", "B", "X", "Y", "X").toDF("status")
+    def sorted(r: Checks.CheckResult) = r match {
+      case a: Checks.AcceptedValuesResult => a.copy(sampleInvalidValues = a.sampleInvalidValues.sorted)
+      case other => other
+    }
+    val (fused, fusedC) = Measure.counted(spark)(Checks.fusedProfile(df,
+      Seq(Checks.ColumnSpec("status", acceptedValues = Some(Seq("A", "B"))))))
+    val (alone, aloneC) = Measure.counted(spark)(Checks.checkAcceptedValues(df, "status", Seq("A", "B")))
+    assert(sorted(fused("accepted_values_status")) === sorted(alone))
+    assert(alone.invalidCount === 3 && alone.sampleInvalidValues.sorted === Seq("X", "Y"))
+    val (passing, passC) = Measure.counted(spark)(
+      Checks.checkAcceptedValues(df, "status", Seq("A", "B", "X", "Y")))
+    assert(passing.passed && passing.sampleInvalidValues.isEmpty)
+    assert((fusedC.jobs, aloneC.jobs, passC.jobs) === ((4, 4, 2)))
+  }
+
   test("sweepTables flags missing, empty, and null-key tables") {
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_sweep")
     Seq((Some(1), "a"), (None, "b")).toDF("id", "v")
       .write.mode("overwrite").saveAsTable("graft_sweep.has_null_key")
     Seq((1, "a")).toDF("id", "v")
       .write.mode("overwrite").saveAsTable("graft_sweep.clean")
+    Seq.empty[(Int, String)].toDF("id", "v")
+      .write.mode("overwrite").saveAsTable("graft_sweep.empty")
     val results = Checks.sweepTables(spark, Seq(
       ("graft_sweep.clean", "id"),
+      ("graft_sweep.empty", "id"),
       ("graft_sweep.has_null_key", "id"),
       ("graft_sweep.does_not_exist", "id"))).map(r => r.table -> r).toMap
     assert(results("graft_sweep.clean").passed)
     val nk = results("graft_sweep.has_null_key")
     assert(!nk.passed && nk.nullKeyCount === 1)
     assert(!results("graft_sweep.does_not_exist").exists)
+    val empty = results("graft_sweep.empty")
+    assert(empty.exists && empty.rowCount === 0 && !empty.passed)
   }
 
   test("validatePolicies green on clean silver policies") {

@@ -157,11 +157,14 @@ class MeasureSpec extends SparkTestBase {
   /** `file:line` of every line under src/main/scala containing `token`. */
   private def sourceHits(token: String): List[String] = sourceLines(_.contains(token))
 
-  /** [[sourceHits]] outside comment lines. */
-  private def codeHits(token: String): List[String] = sourceLines { line =>
+  /** [[sourceLines]] outside comment lines. */
+  private def codeLines(hit: String => Boolean): List[String] = sourceLines { line =>
     val t = line.trim
-    line.contains(token) && !Seq("//", "/*", "*").exists(t.startsWith)
+    hit(line) && !Seq("//", "/*", "*").exists(t.startsWith)
   }
+
+  /** [[sourceHits]] outside comment lines. */
+  private def codeHits(token: String): List[String] = codeLines(_.contains(token))
 
   test("source sweep: SparkSession.builder appears in src/main only in the factory") {
     val hits = sourceHits("SparkSession.builder")
@@ -287,6 +290,25 @@ class MeasureSpec extends SparkTestBase {
       val hits = sourceHits(token)
       assert(hits.nonEmpty && hits.forall(_.startsWith("graft/operators/Reduce.scala:")),
         s"observe aggregates through graft.operators.Reduce.observed, found $token at:\n${hits.mkString("\n")}")
+    }
+  }
+
+  test("source sweep: DQ rules, count diffs and schema diffs are each spelled once") {
+    // A rule over a column parameter (`c`, `col(column)`, `col(s.column)`),
+    // not over a named column of one gate.
+    val param = """(c|col\([A-Za-z_.]+\))"""
+    val dq = Seq("graft/quality/", "graft/validation/")
+    val spellings = Seq(
+      (s"count\\(when\\($param\\.isNull", dq, "graft/quality/Checks.scala:", "the not_null NULL count"),
+      (s"count_distinct\\($param\\)", dq, "graft/quality/Checks.scala:", "the unique distinct count"),
+      (s"!$param\\.isin\\(", dq, "graft/quality/Checks.scala:", "the accepted_values predicate"),
+      ("\"full_outer\"", Seq("graft/validation/"), "graft/validation/", "the count diff's full-outer join"),
+      (" -- ", Seq(""), "graft/quality/SchemaValidator.scala:", "the field-name set difference"))
+    for ((pattern, scope, home, what) <- spellings) {
+      val re = pattern.r
+      val hits = codeLines(re.findFirstIn(_).isDefined).filter(h => scope.exists(h.startsWith))
+      assert(hits.size === 1 && hits.head.startsWith(home),
+        s"spell $what once, in ${home.stripSuffix(":")}; found:\n${hits.mkString("\n")}")
     }
   }
 }

@@ -281,6 +281,19 @@ class PlanGuardsSpec extends SparkTestBase {
       s"bucketed join must not shuffle either side:\n$plan")
   }
 
+  test("count diffs shuffle each side once: the full-outer join reuses the aggregates' partitioning") {
+    import graft.validation.{Reconciler, TableDiff}
+    val df = spark.read.parquet(s"$dir/t.parquet")
+    val other = df.filter(col("id") % 3 =!= 0)
+    for (out <- Seq(Reconciler.distributionDiff(df, other, "bucket"),
+        TableDiff.diff(df, other, Seq("id", "name")))) {
+      out.collect()
+      val plan = out.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
+      assert(exchanges === 2, s"expected one shuffle per side:\n$plan")
+    }
+  }
+
   test("invertedIndex aggregates with map-side partials in ONE exchange") {
     // The 100 TB claim: the exploded token stream collapses to local
     // term stats BEFORE the shuffle (partial_count/partial_collect_set

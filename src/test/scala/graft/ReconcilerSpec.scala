@@ -43,6 +43,27 @@ class ReconcilerSpec extends SparkTestBase {
     assert(Reconciler.compareDistributions(a, a, "st").matched)
   }
 
+  test("a column holding NULLs matches itself: the NULL group is one value") {
+    val a = Seq(Some("O"), None, None).toDF("st")
+    assert(Reconciler.compareDistributions(a, a, "st") ===
+      Reconciler.DistributionResult("st", true, 0L, 0L, 0L))
+    val nulls = Reconciler.distributionDiff(a, a, "st").filter(col("value").isNull).collect()
+    assert(nulls.map(r => (r.getAs[Long]("source_count"), r.getAs[Long]("target_count"),
+      r.getAs[Boolean]("matched"))).toSeq === Seq((2L, 2L, true)))
+    val chi = Reconciler.distributionDriftChi2(a, a, "st").head()
+    assert(chi.getAs[Double]("chi2") === 0.0 && chi.getAs[Long]("new_categories") === 0L)
+  }
+
+  test("empty inputs: zero sums, matched distributions, an equal table diff") {
+    import graft.validation.TableDiff
+    val e = Seq.empty[(Option[Double], Option[String])].toDF("x", "st")
+    assert(Reconciler.compareAggregates(e, e, Seq("x")) ===
+      Seq(Reconciler.AggregateResult("x", 0.0, 0.0, 0.0, true)))
+    assert(Reconciler.compareDistributions(e, e, "st") ===
+      Reconciler.DistributionResult("st", true, 0L, 0L, 0L))
+    assert(TableDiff.summarize(e, e, Seq("x", "st")) === TableDiff.DiffSummary(true, 0L, 0L, 0L))
+  }
+
   test("compareSchemas ignores _-prefixed metadata columns") {
     val a = Seq((1, "x")).toDF("id", "v").withColumn("_batch_id", lit(1L))
     val b = Seq((1, "x")).toDF("id", "v").withColumn("_cleaned_timestamp", lit("t"))
